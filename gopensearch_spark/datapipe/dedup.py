@@ -516,11 +516,16 @@ def minhash_lsh_pairs(
     # pure function of the input relation — repeated calls over the same
     # corpus (bench reps, recall gates that pair an LSH pass with an
     # exact pass) must not recompute it. Keys normalize away expression
-    # ids, so the same read+select reconstructed per call hits. Caveat:
+    # ids, so the same read+select reconstructed per call hits; the
+    # plan text omits a file scan's path, so the input files join the
+    # key (two same-schema inputs must not share signatures). Caveat:
     # the cache cannot see files changing UNDER an identical path+plan
     # mid-session; bounded to _SIG_CACHE_MAX relations (FIFO unpersist).
     key = _plan_key(df)
-    ckey = (key, num_perm, shingle_n, text_col, id_col) if key is not None else None
+    ckey = (
+        (key, tuple(sorted(df.inputFiles())), num_perm, shingle_n, text_col, id_col)
+        if key is not None else None
+    )
     hit = _sig_cache.get(ckey) if ckey is not None else None
     if hit is None:
         sigs = minhash_signatures(df, num_perm, shingle_n, text_col, id_col).cache()

@@ -165,6 +165,27 @@ def _metric_exprs(ctx: CompileContext, aggs: dict[str, model.Aggregate]) -> list
     return exprs
 
 
+def _nested_struct(fields: list[tuple[list[str], Column]]) -> Column:
+    """A struct holding each (path, column) at its path, so fields that
+    share a leaf name (user.name, owner.name) keep distinct parents. A
+    whole field wins over a path inside it (user beats user.name)."""
+    tree: dict = {}
+    for parts, col in fields:
+        node = tree
+        for p in parts[:-1]:
+            node = node.setdefault(p, {})
+            if not isinstance(node, dict):
+                break
+        else:
+            node[parts[-1]] = col
+
+    def build(node: dict) -> Column:
+        return F.struct(*[(build(v) if isinstance(v, dict) else v).alias(k)
+                          for k, v in node.items()])
+
+    return build(tree)
+
+
 def _top_hits_arrays(
     ctx: CompileContext, filtered: DataFrame, keyc: Column,
     th_subs: dict[str, model.TopHits],
@@ -211,9 +232,12 @@ def _top_hits_arrays(
             sorted_fields = [s.field for s in th.sort]
         if ctx.id_col and ctx.id_col not in sorted_fields:
             ordcols.append(F.asc(ctx.id_col))  # deterministic total order
-        for c in src:
-            proj.append(F.col(c))
-        if ctx.id_col and ctx.id_col not in src:
+        # each _source field rides a stable alias; the hit struct is
+        # rebuilt from the aliases with dotted paths nested, as ES
+        # returns them (user.name -> {"user": {"name": ...}})
+        for i, c in enumerate(src):
+            proj.append(F.col(c).alias(f"__src_{i}"))
+        if ctx.id_col:
             proj.append(F.col(ctx.id_col))
         narrowed = ensure_parallelism(filtered.select(*proj), factor=1,
                                       bytes_per_partition=1 << 20)
@@ -226,7 +250,8 @@ def _top_hits_arrays(
             F.transform(
                 F.sort_array(F.collect_list(F.struct(
                     F.col("__rn").alias("rn"),
-                    F.struct(*[F.col(c) for c in src]).alias("hit"),
+                    _nested_struct([(c.split("."), F.col(f"__src_{i}"))
+                                    for i, c in enumerate(src)]).alias("hit"),
                 ))),
                 lambda x: x["hit"],
             ).alias(label)

@@ -1033,8 +1033,10 @@ class Engine:
 
     def _pure_match(self, d: model.Dsl, spec: IndexSpec) -> model.Match | None:
         """The query is EXACTLY one `match` on the indexed text field with
-        no other clause, agg, or sort — the shape the block-max WAND
-        engine serves without materializing the full scoring relation."""
+        no other clause, agg, or sort — the shape ``wand.match_topk``
+        serves as a bare top-k without the general path's relation: from
+        flat postings on the JVM below ``wand.FLAT_TOPK_MAX_POSTINGS``
+        total postings, from the block-max WAND kernel at or above it."""
         q = d.query
         if q is None or d.aggs or d.sort or not spec.index_dir:
             return None
@@ -1157,25 +1159,25 @@ class Engine:
         )
         m = None if needs_general else self._pure_match(d, spec)
         if m is not None:
-            # serve straight from the compressed block index: block-max
-            # skipping bounds the decode to candidate blocks, and only
-            # top-k ids reach the doc join — at 10^12 docs this never
-            # materializes a head term's full posting list (the general
-            # path below must, because filters need the whole relation).
-            from gopensearch_spark.search import wand_match
+            # serve a bare top-k straight from the index: only top-k ids
+            # reach the doc join. match_topk picks the JVM-only flat plan
+            # or the block-max WAND kernel by the query's total postings
+            # (the general path below must materialize the whole scoring
+            # relation, because filters need it).
+            from gopensearch_spark.search.wand import match_topk
 
             size = 10 if d.size is None else d.size
             mode = "and" if m.operator.upper() == "AND" else "or"
             if track:
                 # exact total needs the full (unordered) match relation —
                 # a count-only aggregate, no corpus-wide sort; the hit
-                # page still serves from the block index below
+                # page is still the bare top-k below
                 from gopensearch_spark.search import bm25_scores
 
                 self._last_prelimit = bm25_scores(
                     self.spark, spec.index_dir, m.query, mode=mode
                 )
-            top = wand_match(
+            top = match_topk(
                 self.spark, spec.index_dir, m.query,
                 k=size + (d.from_ or 0), mode=mode,
             ).withColumnRenamed("doc_id", "__ft_doc_id")
@@ -2380,6 +2382,7 @@ class Engine:
         formula the scoring engines use. The total equals the doc's
         search score bit-for-bit (pinned in pytest)."""
         import math as _math
+        from collections import Counter
 
         from gopensearch_spark.analysis import normalize_query_terms, term_freqs
         from gopensearch_spark.search.bm25 import B, K1, idf
@@ -2393,7 +2396,10 @@ class Engine:
         if strip_keyword(field) != spec.text_field or not spec.index_dir:
             raise ValueError(
                 f"explain requires the indexed text field {spec.text_field!r}")
-        terms = sorted(set(normalize_query_terms(m.query)))
+        # a repeated query term contributes once per occurrence, as in
+        # the scoring engines (idf weighted by its query count)
+        counts = Counter(normalize_query_terms(m.query))
+        terms = sorted(counts)
         mode_and = m.operator.upper() == "AND"
         found, text = self._fetch_doc_text(index, doc_id)
         resp = {"_index": index, "_id": str(doc_id), "matched": False}
@@ -2418,12 +2424,12 @@ class Engine:
             df_t = dfs.get(t, 0)
             i = idf(n_docs, df_t)
             w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            c = i * w
+            c = counts[t] * i * w
             total += c
             details.append({
                 "value": c,
                 "description": (
-                    f"weight(text:{t}) tf={tf} df={df_t} "
+                    f"weight(text:{t}) query_count={counts[t]} tf={tf} df={df_t} "
                     f"idf={i:.10g} dl={dl} avgdl={avgdl:.10g} "
                     f"k1={K1} b={B}"),
             })

@@ -151,8 +151,8 @@ def _shape_agg(kind: str, rws) -> dict:
             for sublabel, v in d.items():
                 if isinstance(v, list):
                     b[sublabel] = {"hits": {"hits": [
-                        {"_source": {k: _json_safe(x)
-                                     for k, x in h.asDict().items()}}
+                        {"_source": {k: _json_safe(x) for k, x
+                                     in h.asDict(recursive=True).items()}}
                         for h in (v or [])
                     ]}}
                 else:

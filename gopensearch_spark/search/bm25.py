@@ -20,11 +20,24 @@ Plan shape (verified via .explain in tests):
   -> TakeOrderedAndProject(k)
 No pandas UDF, no driver-side data, one shuffle (the doc_id agg) whose
 input is only the query terms' postings.
+
+A term repeated in the query contributes once per occurrence (its idf
+is weighted by the count), as FTS5 and Lucene's per-token clauses score
+it; AND still requires each distinct term once.
+
+Plan rule for a pure ``match`` top-k (``wand.match_topk``): this
+relation, ordered and limited, serves every query whose total postings
+(the sum of its terms' dfs) stay below ``wand.FLAT_TOPK_MAX_POSTINGS``.
+Up to there it was measured to beat the WAND kernel, whose
+Python-worker round trip and decode cost more than scoring the
+postings on the JVM.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,13 +93,14 @@ def bm25_scores(
     from gopensearch_spark.analysis import normalize_query_terms
     from gopensearch_spark.search.readers import corpus_stats, index_table, term_dfs
 
-    terms = sorted(set(normalize_query_terms(query)))
+    counts = Counter(normalize_query_terms(query))
+    terms = sorted(counts)
     if not terms:
         raise ValueError("empty query after tokenization")
     stats = corpus_stats(index_dir)
     n_docs, avgdl = stats["n_docs"], stats["avg_doc_len"]
     all_dfs = term_dfs(spark, index_dir, terms)
-    idfs = {t: idf(n_docs, d) for t, d in all_dfs.items() if d > 0}
+    idfs = {t: counts[t] * idf(n_docs, d) for t, d in all_dfs.items() if d > 0}
     if not idfs or (mode == "and" and len(idfs) < len(terms)):
         # absent term: AND can never satisfy all terms; OR over only
         # absent terms matches nothing

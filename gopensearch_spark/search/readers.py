@@ -5,8 +5,10 @@ files and re-reading footers — pure latency on repeated queries against
 the same index. Reusing one DataFrame handle per (session, index_dir,
 table) keeps Spark's FileIndex/schema cache warm; the plan on top is
 rebuilt per query as usual, so correctness is unaffected. Corpus stats
-(a tiny driver-side JSON) are memoized with an mtime guard so a
-rebuilt/extended index invalidates cleanly.
+(a tiny driver-side JSON) are memoized with an mtime guard, and that
+guard is the index's version: when ``corpus_stats.json`` changes under
+a cached entry (a rebuild by another process that never called
+``invalidate`` here), every cached handle on that directory is dropped.
 """
 
 from __future__ import annotations
@@ -17,9 +19,29 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
 
+
+class TermDfs(dict):
+    """term -> df memo of one index version. A ``complete`` map holds
+    every indexed term (``warm_index`` loads it), so any other term is
+    known to be absent: it is "in" the map with df 0."""
+
+    def __init__(self, items=(), complete: bool = False):
+        super().__init__(items)
+        self.complete = complete
+
+    def __contains__(self, term) -> bool:
+        return self.complete or dict.__contains__(self, term)
+
+    def __missing__(self, term) -> int:
+        if self.complete:
+            return 0
+        raise KeyError(term)
+
+
+# every cache below is keyed on the RESOLVED generation dir
 _DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_STATS_CACHE: dict[str, tuple[float, dict]] = {}
-_TERM_DF_CACHE: dict[tuple[int, str], dict[str, int]] = {}
+_STATS_CACHE: dict[str, tuple[int, dict]] = {}
+_TERM_DF_CACHE: dict[tuple[int, str], TermDfs] = {}
 _HOT_BLOCKS: dict[tuple[int, str], DataFrame] = {}
 
 
@@ -34,13 +56,27 @@ def warm_index(spark: SparkSession, index_dir: str) -> DataFrame:
     kernel stage over cached batches (InMemoryTableScan prunes batches
     on the pushed term predicate via per-batch column stats). The warm
     is explicit opt-in — a 10^12-doc index does not fit executor
-    memory, but the exact same call scales to 'pin the head-term
-    term_buckets of a hot shard', and MEMORY_AND_DISK degrades
-    gracefully. Writers invalidate() this cache like every other
-    handle."""
+    memory, and MEMORY_AND_DISK degrades gracefully for the blocks.
+
+    The warm also pins the index's full term -> df map on the driver
+    (one Arrow collect, see ``_load_term_dfs``), so ``term_dfs``
+    answers every term with no Spark job. That makes a query's total
+    postings (the sum of its terms' dfs) free before planning, and
+    ``wand.match_topk`` plans a pure ``match`` by it: below
+    ``wand.FLAT_TOPK_MAX_POSTINGS`` the JVM-only flat ``bm25_scores``
+    relation serves the top-k (no Python worker), at or above it the
+    block-max WAND kernel does. Unlike the blocks, the map does not
+    spill: it costs driver memory in proportion to the vocabulary
+    (about 130 bytes a term in CPython, ~13 MB for 100k terms, plus
+    the pandas frame while it is collected), so an index whose
+    vocabulary does not fit the driver must not be warmed.
+    Writers invalidate() both caches like every other handle."""
     from pyspark.storagelevel import StorageLevel
 
+    corpus_stats(index_dir)  # version check: drops warm state of an older version
     key = (id(spark), resolve_index_dir(index_dir))
+    if not _TERM_DF_CACHE.get(key, TermDfs()).complete:
+        _TERM_DF_CACHE[key] = _load_term_dfs(spark, index_dir)
     df = _HOT_BLOCKS.get(key)
     if df is None:
         # sortWithinPartitions(term) is what makes the cache PRUNE: the
@@ -82,33 +118,57 @@ def index_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
 
 
 def corpus_stats(index_dir: str) -> dict:
+    """The index's corpus stats, memoized on the file's mtime. A changed
+    mtime under a cached entry means the directory was rewritten without
+    ``invalidate`` (e.g. by another process): every cached handle, df
+    map and hot relation on it is stale and is dropped here. Query entry
+    points read the stats before any other cache, so this is the one
+    version check they need."""
     resolved = resolve_index_dir(index_dir)
     path = os.path.join(resolved, "corpus_stats.json")
-    mtime = os.path.getmtime(path)
+    mtime = os.stat(path).st_mtime_ns
     hit = _STATS_CACHE.get(resolved)
     if hit is not None and hit[0] == mtime:
         return hit[1]
+    if hit is not None:
+        invalidate(resolved)
     stats = read_corpus_stats(index_dir)
     _STATS_CACHE[resolved] = (mtime, stats)
     return stats
 
 
+def _load_term_dfs(spark: SparkSession, index_dir: str) -> TermDfs:
+    """The complete term -> df map: the term_stats delta rows summed by
+    term (what ``term_dfs`` computes per term), collected through
+    Arrow."""
+    from pyspark.sql import functions as F
+
+    pdf = (
+        index_table(spark, index_dir, "term_stats")
+        .groupBy("term").agg(F.sum("df").alias("df"))
+        .toPandas()
+    )
+    return TermDfs(zip(pdf["term"].tolist(), pdf["df"].astype("int64").tolist()),
+                   complete=True)
+
+
 def term_dfs(spark: SparkSession, index_dir: str, terms: list[str]) -> dict[str, int]:
     """term -> document frequency (delta rows summed on a streaming
-    index), memoized per (session, index). Every query used to run one
-    metrics-sized Spark job to fetch its terms' dfs; repeated queries on
-    a read-mostly index now resolve idfs driver-side. Absent terms cache
-    as 0 (callers drop them). All index writers call ``invalidate``,
-    which clears this cache alongside the DataFrame handles."""
-    key = (id(spark), index_dir)
-    cache = _TERM_DF_CACHE.setdefault(key, {})
+    index), memoized per (session, resolved index dir) and dropped when
+    the index's corpus_stats version changes. A warmed index holds the
+    complete map and never launches a job; otherwise missing terms cost
+    one metrics-sized lookup job, and absent terms cache as 0 (callers
+    drop them). All index writers call ``invalidate``, which clears this
+    cache alongside the DataFrame handles."""
+    stats = corpus_stats(index_dir)  # the version check runs first
+    key = (id(spark), resolve_index_dir(index_dir))
+    cache = _TERM_DF_CACHE.setdefault(key, TermDfs())
     missing = sorted(t for t in set(terms) if t not in cache)
     if missing:
         from pyspark.sql import functions as F
 
         from gopensearch_spark.search.bm25 import term_buckets_for
 
-        stats = corpus_stats(index_dir)
         buckets = sorted(set(term_buckets_for(spark, missing, stats["term_buckets"]).values()))
         found: dict[str, int] = {}
         for r in (

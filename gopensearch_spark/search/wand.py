@@ -24,13 +24,15 @@ tests/test_rank_identity.py).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gopensearch_spark import codecs
-from gopensearch_spark.search.bm25 import K1, B, idf, term_buckets_for
+from gopensearch_spark.search.bm25 import K1, B, bm25_match, idf, term_buckets_for
 
 
 def _block_upper_bound(max_tf: np.ndarray, min_dl: np.ndarray, idf_t: float, avgdl: float) -> np.ndarray:
@@ -302,7 +304,8 @@ def wand_match(
     """Top-k BM25 match over the compressed block index."""
     from gopensearch_spark.analysis import normalize_query_terms
 
-    terms = sorted(set(normalize_query_terms(query)))
+    counts = Counter(normalize_query_terms(query))
+    terms = sorted(counts)
     if not terms:
         raise ValueError("empty query after tokenization")
     from gopensearch_spark.search.readers import (
@@ -313,9 +316,11 @@ def wand_match(
     n_docs, avgdl = stats["n_docs"], stats["avg_doc_len"]
     buckets = sorted(set(term_buckets_for(spark, terms, stats["term_buckets"]).values()))
 
-    # memoized df resolution (delta rows pre-summed; absent terms = 0)
+    # memoized df resolution (delta rows pre-summed; absent terms = 0);
+    # a repeated query term scores once per occurrence, so its weighted
+    # idf also scales every upper bound derived from it
     all_dfs = term_dfs(spark, index_dir, terms)
-    idfs = {t: idf(n_docs, d) for t, d in all_dfs.items() if d > 0}
+    idfs = {t: counts[t] * idf(n_docs, d) for t, d in all_dfs.items() if d > 0}
     if mode == "and" and len(idfs) < len(terms):
         return spark.createDataFrame([], "doc_id long, score double")
     present = sorted(idfs)
@@ -353,3 +358,34 @@ def wand_match(
 
     per_seg = blocks.groupBy("seg_id").applyInPandas(kernel, "doc_id long, score double")
     return per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+# A pure ``match`` top-k with fewer total postings than this takes the
+# flat JVM plan (``match_topk``); the WAND kernel's Python-worker round
+# trip and decode only pay past it. Set to the edge of a crossover check
+# on warm Zipf indexes (100k/400k/1M docs, local[4], top-10, median of
+# 3-5): the flat plan won 41 of 44 queries from 1k to 10.5M postings,
+# and total postings did not predict the three WAND wins (8 head terms
+# in OR at 2.0M and 5.1M). Past 10M postings the WAND side is unmeasured.
+FLAT_TOPK_MAX_POSTINGS = 10_000_000
+
+
+def match_topk(
+    spark: SparkSession,
+    index_dir: str,
+    query: str | list[str],
+    k: int = 10,
+    mode: str = "and",
+) -> DataFrame:
+    """Top-k (doc_id, score) of a ``match``, planned by the query's total
+    postings (the sum of its terms' dfs, free on a warmed index): below
+    ``FLAT_TOPK_MAX_POSTINGS`` the JVM-only flat ``bm25_match`` serves
+    it, with no Python worker; at or above it, ``wand_match`` does. Both
+    rank identically."""
+    from gopensearch_spark.analysis import normalize_query_terms
+    from gopensearch_spark.search.readers import term_dfs
+
+    dfs = term_dfs(spark, index_dir, sorted(set(normalize_query_terms(query))))
+    if sum(dfs.values()) < FLAT_TOPK_MAX_POSTINGS:
+        return bm25_match(spark, index_dir, query, k=k, mode=mode)
+    return wand_match(spark, index_dir, query, k=k, mode=mode)

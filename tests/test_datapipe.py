@@ -343,6 +343,23 @@ def test_minhash_signature_cache_hits_on_reconstructed_df(spark, tmp_path):
     assert calls["n"] == 2  # one per distinct (corpus, params) key
 
 
+def test_minhash_signature_cache_keys_on_input_files(spark, tmp_path):
+    """Two same-schema parquet inputs read in one session have the same
+    plan text; each must still get its own signatures and pairs."""
+    from gopensearch_spark.datapipe import minhash_lsh_pairs
+
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    near = {"a": [(1, base), (2, base + " iota")],
+            "b": [(7, base), (8, base + " kappa"), (9, "one two three four five six")]}
+    got = {}
+    for name, rows in near.items():
+        p = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(p)
+        got[name] = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(
+            spark.read.parquet(p), num_perm=32, bands=8, threshold=0.5).collect()}
+    assert got == {"a": {(1, 2)}, "b": {(7, 8)}}
+
+
 def test_connected_components_self_loop_only_ids(spark):
     """ADVICE r4: an id appearing ONLY in self-pairs (a == b) must still
     come out as its own singleton cluster — the contract is 'every id in

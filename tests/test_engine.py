@@ -620,21 +620,57 @@ def test_percentiles_on_json_field(engine, duck):
     assert got["90.0"] == pytest.approx(exp[1])
 
 
-def test_pure_match_serves_from_block_index(engine):
-    """A bare match query takes the WAND fast path: the executed plan
-    scans blocks, never flat postings, and nothing but top-k ids reach
-    the doc join."""
-    hits, aggs, _ = engine.search_df(
-        "docs", {"query": {"match": {"text": "spark join"}}, "size": 10})
+def test_pure_match_serves_from_block_index(engine, monkeypatch):
+    """A bare match query takes the fast path, planned by the query's
+    total postings: past wand.FLAT_TOPK_MAX_POSTINGS (patched to 0 here)
+    the executed plan scans blocks, never flat postings; below it (the
+    default on this small index) it scans flat postings with no Python
+    worker. Either way only top-k ids reach the doc join."""
+    from gopensearch_spark.search import wand
+
+    body = {"query": {"match": {"text": "spark join"}}, "size": 10}
+    default_hits, aggs, _ = engine.search_df("docs", body)
+    plan = _executed_plan(default_hits)
+    assert "/postings" in plan
+    assert "/blocks" not in plan, plan
+    assert "Python" not in plan and "Pandas" not in plan, plan
+    assert aggs == {}
+    monkeypatch.setattr(wand, "FLAT_TOPK_MAX_POSTINGS", 0)
+    hits, aggs, _ = engine.search_df("docs", body)
     plan = _executed_plan(hits)
     assert "/blocks" in plan
     assert "/postings" not in plan, plan
     assert aggs == {}
+    flat, wand_rows = default_hits.collect(), hits.collect()
+    assert [r["doc_id"] for r in wand_rows] == [r["doc_id"] for r in flat]
+    assert all(math.isclose(a["score"], b["score"], rel_tol=1e-9)
+               for a, b in zip(wand_rows, flat))
     # a match + filter must NOT take the fast path (needs the relation)
     hits2, _, _ = engine.search_df(
         "docs", {"query": {"bool": {"must": [{"match": {"text": "spark"}}],
                                     "filter": [{"term": {"lang": "en"}}]}}, "size": 5})
     assert "/postings" in _executed_plan(hits2)
+
+
+@pytest.mark.parametrize("threshold", [None, 0], ids=["flat", "wand"])
+def test_repeated_query_terms_score_per_occurrence(engine, oracle_small, monkeypatch,
+                                                   threshold):
+    """`match "spark spark"` scores spark twice, as FTS5 does, on both
+    sides of the top-k plan rule; AND still needs each distinct term."""
+    from gopensearch_spark.search import wand
+
+    if threshold is not None:
+        monkeypatch.setattr(wand, "FLAT_TOPK_MAX_POSTINGS", threshold)
+    for text, op in [("spark spark", "and"), ("spark join spark", "and"),
+                     ("spark join spark", "or")]:
+        body = {"query": {"match": {"text": {"query": text, "operator": op}}},
+                "size": 10}
+        got = [(int(h["_id"]), h["_score"])
+               for h in engine.search("docs", body)["hits"]["hits"]]
+        ref = oracle_small.match(text.split(), k=10, mode=op)
+        assert ref and [d for d, _ in got] == [d for d, _ in ref], (text, op)
+        for (_, s1), (_, s2) in zip(got, ref):
+            assert math.isclose(s1, s2, rel_tol=1e-9), (text, op)
 
 
 def test_two_match_clauses_sum_scores(engine, oracle_small):
@@ -1328,6 +1364,34 @@ def test_top_hits_under_terms(engine, duck):
         assert got == by_type[b["key"]], b["key"]
         assert set(hits[0]["_source"]) == {"event_id", "value"}  # _source cut
         assert "value" in b["m"]  # metric sibling still shaped
+
+
+def test_top_hits_dotted_source_field(spark, engine):
+    """Dotted _source fields (struct members) come back nested under
+    their parents, as ES returns them, so two fields that share a leaf
+    name (name, user.name, owner.name) each keep their own value."""
+    users = spark.createDataFrame(
+        [(1, "a", 5, "n1", ("ann",), ("oa",)), (2, "a", 9, "n2", ("bob",), ("ob",)),
+         (3, "b", 7, "n3", ("cy",), ("oc",))],
+        "doc_id long, grp string, value long, name string, "
+        "user struct<name: string>, owner struct<name: string>")
+    engine.create_index("users", users)
+
+    def top(source):
+        r = engine.search("users", {"size": 0, "aggs": {"g": {
+            "terms": {"field": "grp"},
+            "aggs": {"best": {"top_hits": {"size": 1, "sort": [{"value": "desc"}],
+                                           "_source": source}}}}}})
+        return {b["key"]: [h["_source"] for h in b["best"]["hits"]["hits"]]
+                for b in r["aggregations"]["g"]["buckets"]}
+
+    assert top(["user.name", "value"]) == {
+        "a": [{"user": {"name": "bob"}, "value": 9}],
+        "b": [{"user": {"name": "cy"}, "value": 7}]}
+    assert top(["name", "user.name", "owner.name"]) == {
+        "a": [{"name": "n2", "user": {"name": "bob"}, "owner": {"name": "ob"}}],
+        "b": [{"name": "n3", "user": {"name": "cy"}, "owner": {"name": "oc"}}]}
+    assert top(["user.name", "user"])["a"] == [{"user": {"name": "bob"}}]
 
 
 def test_top_hits_requires_sort_when_unscored(engine):

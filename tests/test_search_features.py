@@ -764,6 +764,13 @@ def test_explain_matches_search_score(engine):
     assert math.isclose(ex["explanation"]["value"], h["_score"],
                         rel_tol=1e-12, abs_tol=1e-15)
     assert len(ex["explanation"]["details"]) == 2
+    # a repeated query term counts once per occurrence on both sides
+    q = {"query": {"match": {"text": "spark join spark"}}, "size": 1}
+    h = engine.search("docs", q)["hits"]["hits"][0]
+    ex = engine.explain("docs", h["_id"], q)
+    assert math.isclose(ex["explanation"]["value"], h["_score"],
+                        rel_tol=1e-12, abs_tol=1e-15)
+    assert len(ex["explanation"]["details"]) == 2
     # AND-mode mismatch: a doc without one term doesn't match
     ex2 = engine.explain("docs", h["_id"],
                          {"query": {"match": {"text": {"query": "spark zzzznotaterm",
