@@ -38,9 +38,8 @@ def _index_dir(spark: SparkSession, sf_dir: str) -> str:
         return _INDEX_CACHE[sf_dir]
     from gopensearch_spark.index import build_index, read_corpus_stats
 
-    # v5: round-4 block format (min_tf/max_doc_len per-block lower-bound
-    # metadata for the WAND pre-filter) — a v4 cache lacks the columns
-    out = os.path.join("/tmp/gopensearch_entry_idx_v5", os.path.basename(os.path.normpath(sf_dir)))
+    # v6: flat postings only (no blocks table, no block_codec stat)
+    out = os.path.join("/tmp/gopensearch_entry_idx_v6", os.path.basename(os.path.normpath(sf_dir)))
     if not os.path.exists(os.path.join(out, "corpus_stats.json")):
         build_index(
             spark,
@@ -48,13 +47,11 @@ def _index_dir(spark: SparkSession, sf_dir: str) -> str:
             out,
             slices=1,
             term_buckets=16,
-            num_segments=8,
             with_positions=True,
             input_lineage=f"{sf_dir}/documents.parquet",
         )
-    # serving posture: pin the blocks table in memory partitioned by
-    # seg_id (one-time shuffle) so every wand query is a single
-    # shuffle-free kernel stage over cached batches (readers.warm_index)
+    # serving posture: pin the term -> df map on the driver so every
+    # match resolves its idfs with no Spark job (readers.warm_index)
     from gopensearch_spark.search import warm_index
 
     warm_index(spark, out)
@@ -63,10 +60,8 @@ def _index_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _bm25(terms: list[str], mode: str, k: int):
-    """Serving path: block-max document-at-a-time top-k over the
-    COMPRESSED block index (search/wand.py) — block skipping instead of
-    decoding a head term's full posting list at 10^12 docs. Rank/score
-    identity vs the flat path and FTS5 itself is fuzz-pinned
+    """Serving path: BM25 top-k over the flat postings (``wand_match`` is
+    ``bm25_match``). Rank/score identity with FTS5 itself is fuzz-pinned
     (tests/test_rank_identity.py, tests/test_fuzz_rank_identity.py)."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,8 +78,9 @@ def _bm25(terms: list[str], mode: str, k: int):
 
 
 def _bm25_flat(terms: list[str], mode: str, k: int):
-    """Flat-postings path (search/bm25.py): pure Catalyst plan — kept as
-    a first-class query so BENCH compares both executions per round."""
+    """The unlimited ``bm25_scores`` relation, ordered and limited here
+    (search/bm25.py) — kept as a first-class query so its BENCH row
+    stays comparable across rounds."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gopensearch_spark.search import bm25_scores
@@ -138,7 +134,7 @@ def _lang_index_dir(spark: SparkSession, sf_dir: str) -> str:
     from gopensearch_spark.index import build_index
 
     out = os.path.join(
-        "/tmp/gopensearch_entry_idx_v5",
+        "/tmp/gopensearch_entry_idx_v6",
         os.path.basename(os.path.normpath(sf_dir)) + "_lang",
     )
     if not os.path.exists(os.path.join(out, "corpus_stats.json")):
@@ -148,7 +144,6 @@ def _lang_index_dir(spark: SparkSession, sf_dir: str) -> str:
             out,
             text_col="lang",
             term_buckets=4,
-            num_segments=4,
             input_lineage=f"{sf_dir}/documents.parquet#lang",
         )
     _INDEX_CACHE[key] = out
@@ -375,7 +370,7 @@ def _fuzzy(value: str, k: int, fuzziness="AUTO", prefix_length=0,
            max_expansions=50):
     """ES fuzzy term query: Levenshtein expansion over the term_dict side
     table (df DESC / term ASC, max_expansions truncation), scored as an
-    OR over the expanded terms through block-max WAND."""
+    OR over the expanded terms through the flat BM25 top-k."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gopensearch_spark.search.fuzzy import fuzzy_match
@@ -440,7 +435,7 @@ ORDER BY round(score, {_ROUND}) DESC, doc_id ASC LIMIT {k}
 def _regexp(pattern: str, k: int, max_expansions: int = 1000):
     """ES regexp term query: whole-term-anchored expansion over the
     term_dict side table, scored as an OR over the matching vocabulary
-    terms through block-max WAND."""
+    terms through the flat BM25 top-k."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from gopensearch_spark.search.fuzzy import regexp_match
@@ -1746,7 +1741,7 @@ def _qc_token_stats(spark, sf_dir):
 
 
 def _hybrid_rrf(spark, sf_dir):
-    """Hybrid retrieval: block-max WAND BM25 top-50 fused with exact
+    """Hybrid retrieval: BM25 top-50 fused with exact
     cosine top-50 by Reciprocal Rank Fusion (Cormack & Clarke 2009).
     Each system's rank window runs over its requests-bounded top-N,
     never the corpus; the fused aggregate touches <= N x 2 rows."""
@@ -2493,7 +2488,7 @@ def _dsl_terms_lookup(spark, sf_dir):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the inverted index over sf0.001 documents and run a
-    BM25 match through the block-max WAND serving path, returning top-10
+    BM25 match through the serving path (flat postings), returning top-10
     hits with their text metadata."""
     sf_dir = "/root/testdata/sf0.001"
     from gopensearch_spark.search import wand_match
@@ -2527,7 +2522,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # path), and uncapped dedup_ngram_jaccard. All tail entries keep
     # their oracles for local replica runs.
     return {
-        # full-text BM25 (the FTS5-equivalent core; wand = serving path)
+        # full-text BM25 (the FTS5-equivalent core)
         "bm25_and2": _bm25(["spark", "join"], "and", 10),
         "bm25_or3": _bm25(["merge", "sort", "batch"], "or", 25),
         "bm25_phrase2": _phrase("spark join", 25),
@@ -2692,8 +2687,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-4d displacements (for dsl_top_hits / dsl_significant_terms
         # / dsl_dis_max / dsl_constant_score, four NEW code paths):
         # bm25_head_term_flat (IDENTICAL output to in-window
-        # bm25_head_term by construction — same query, same k; the flat
-        # path's agreement with WAND is fuzz-pinned in
+        # bm25_head_term by construction — same query, same k; its
+        # agreement with FTS5 is fuzz-pinned in
         # tests/test_fuzz_rank_identity.py and its oracle stays live for
         # replica runs), dsl_sort_limit (dsl_search_after composes the
         # same ctx-resolved multi-key orderBy + limit plus the cursor

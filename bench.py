@@ -37,9 +37,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Headline query subset (keys must exist in __spark_entry__.queries()).
-# bm25_* = block-max WAND serving path; *_flat = the flat-postings
-# Catalyst plan, kept side-by-side so every round's BENCH compares the
-# two executions of the same query.
+# bm25_* = the serving path (``bm25_match``); *_flat = the unlimited
+# ``bm25_scores`` relation ordered and limited by the caller. Both run
+# the same flat-postings plan; the names stay so BENCH rows compare
+# across rounds.
 BENCH_QUERIES = [
     "bm25_head_term",
     "bm25_head_term_flat",
@@ -154,7 +155,7 @@ def _build_web_pages(spark, sf_dir: str, copies: int, out: str) -> str:
 
 
 def run_index_build(spark, web_pages_path: str, idx_out: str) -> dict:
-    """End-to-end: read web_pages -> extract -> postings+blocks+stats."""
+    """End-to-end: read web_pages -> extract -> postings+stats."""
     from gopensearch_spark.index import build_index
     from gopensearch_spark.webtext import prepare_corpus
 
@@ -167,7 +168,6 @@ def run_index_build(spark, web_pages_path: str, idx_out: str) -> dict:
         idx_out,
         slices=1,
         term_buckets=None,  # corpus-sized (recommended_term_buckets)
-        num_segments=32,
         with_positions=True,  # FTS5 stores positions (detail=full); so do we
         input_lineage=f"parquet:{web_pages_path}",
     )
@@ -276,52 +276,6 @@ def bench_index_only(copies: int, runs: int = 3) -> dict:
             "sf": _sf_of(SF_DIR), **build}
 
 
-def bench_wand_vs_flat(copies: int) -> dict:
-    """Verdict-r2 task: keep the flat-vs-WAND comparison honest as the
-    corpus grows — the serving-path switch rests on WAND >= flat for
-    head-term and conjunctive queries at scale. Builds a copies x 5k-doc
-    positions-free index and times both paths on the same queries
-    (per-query best-of-3; steal is additive)."""
-    import time as _t
-
-    from gopensearch_spark.search import bm25_match, wand_match
-    from gopensearch_spark.session import get_spark
-
-    spark = get_spark("bench-wvf", master=f"local[{CPUS}]")
-    wp = _build_web_pages(
-        spark, SF_DIR, copies=copies, out=f"/tmp/gopensearch_bench/web_pages_{os.path.basename(os.path.normpath(SF_DIR))}_x{copies}"
-    )
-    idx = f"/tmp/gopensearch_bench/idx_wvf_x{copies}"
-    if not os.path.exists(os.path.join(idx, "corpus_stats.json")):
-        run_index_build(spark, wp, idx)
-    qset = [
-        ("head_term", ["data"], "or", 10),
-        ("and2", ["spark", "join"], "and", 10),
-        ("or3", ["merge", "sort", "batch"], "or", 25),
-        ("or3_k10", ["merge", "sort", "batch"], "or", 10),
-    ]
-    out: dict = {"metric": "wand_vs_flat", "copies": copies, "cpus": CPUS, "queries": {}}
-    # warm both paths once
-    wand_match(spark, idx, ["data"], k=5, mode="or").collect()
-    bm25_match(spark, idx, ["data"], k=5, mode="or").collect()
-    for name, terms, mode, k in qset:
-        res = {}
-        for label, fn in [("wand", wand_match), ("flat", bm25_match)]:
-            runs = []
-            for _ in range(3):
-                t0 = _t.time()
-                rows = fn(spark, idx, terms, k=k, mode=mode).collect()
-                runs.append(_t.time() - t0)
-            res[label] = round(min(runs), 3)
-            res[f"{label}_rows"] = len(rows)
-        res["wand_over_flat"] = round(res["wand"] / res["flat"], 3)
-        out["queries"][name] = res
-    from gopensearch_spark.index.builder import read_corpus_stats
-
-    out["n_docs"] = read_corpus_stats(idx)["n_docs"]
-    return out
-
-
 QSCALE_SET = [
     ("head_term", ["data"], "or", 10),
     ("and2", ["spark", "join"], "and", 10),
@@ -331,21 +285,25 @@ QSCALE_SET = [
 
 
 def bench_query_leg(copies: int) -> dict:
-    """One query-scaling leg at SPARK_GRAFT_CPUS cores against the
-    PREBUILT wand-vs-flat index (run --wand-vs-flat first): the WAND
-    serving set + a prefix query, per-query best-of-3 minima."""
+    """One query-scaling leg at SPARK_GRAFT_CPUS cores against a
+    copies x 5k-doc index (built by the first leg that finds it absent,
+    outside the timed queries): the match serving set + a prefix query,
+    per-query best-of-3 minima."""
     import time as _t
 
     from gopensearch_spark.search import prefix_match, wand_match
     from gopensearch_spark.session import get_spark
 
     spark = get_spark("bench-qleg", master=f"local[{CPUS}]")
-    idx = f"/tmp/gopensearch_bench/idx_wvf_x{copies}"
-    # COLD serving path (parquet pruning + per-query shuffle), matching
-    # the r3/r4 methodology. The hot in-memory cache (readers.warm_index)
-    # wins at sf0.1-scale indexes but is a wash at 6M docs (BENCH.md
-    # round-5 hot-cache section), so scaling legs stay comparable.
-    wand_match(spark, idx, ["data"], k=5, mode="or").collect()  # warm JVM/Arrow
+    idx = f"/tmp/gopensearch_bench/idx_q_x{copies}"
+    if not os.path.exists(os.path.join(idx, "corpus_stats.json")):
+        wp = _build_web_pages(
+            spark, SF_DIR, copies=copies, out=f"/tmp/gopensearch_bench/web_pages_{os.path.basename(os.path.normpath(SF_DIR))}_x{copies}"
+        )
+        run_index_build(spark, wp, idx)
+    # COLD serving path (no warm_index df map), matching the r3/r4
+    # methodology, so scaling legs stay comparable.
+    wand_match(spark, idx, ["data"], k=5, mode="or").collect()  # warm JVM
     times: dict[str, float] = {}
     for name, terms, mode, k in QSCALE_SET:
         runs = []
@@ -402,64 +360,12 @@ def bench_query_scaling(small: int, big: int, copies: int) -> dict:
     }
 
 
-def bench_or_decode(copies: int) -> dict:
-    """Instrument the WAND-OR kernel's block skipping on the
-    wand-vs-flat index: % of block rows DECODED per query shape (the
-    r3 methodology, tests/test_plans.py::test_wand_or_block_skipping...).
-    Run AFTER --wand-vs-flat so the index exists."""
-    from pyspark.sql import functions as F
-
-    from gopensearch_spark.index.builder import read_corpus_stats
-    from gopensearch_spark.search import wand as W
-    from gopensearch_spark.search.bm25 import idf as _idf
-    from gopensearch_spark.session import get_spark
-
-    spark = get_spark("bench-ordec", master=f"local[{CPUS}]")
-    idx = f"/tmp/gopensearch_bench/idx_wvf_x{copies}"
-    stats = read_corpus_stats(idx)
-    out: dict = {"metric": "or3_block_decode", "copies": copies,
-                 "n_docs": stats["n_docs"], "queries": {}}
-    qset = [
-        ("rare_or_heads", ["data", "merge", "dup"], 10),
-        ("or3", ["merge", "sort", "batch"], 25),
-    ]
-    for name, terms, k in qset:
-        blocks = spark.read.parquet(os.path.join(idx, "blocks")).where(
-            F.col("term").isin(terms)).toPandas()
-        tstats = {r["term"]: r["df"]
-                  for r in spark.read.parquet(os.path.join(idx, "term_stats"))
-                  .where(F.col("term").isin(terms)).collect()}
-        idfs = {t: _idf(stats["n_docs"], d) for t, d in tstats.items()}
-        counted = {"n": 0}
-        orig = W._decode_term
-
-        def counting(rows, *a, **kw):
-            counted["n"] += len(rows)
-            return orig(rows, *a, **kw)
-
-        W._decode_term = counting
-        try:
-            total = 0
-            for _, g in blocks.groupby("seg_id"):
-                total += len(g)
-                W._score_segment_or({t: gg for t, gg in g.groupby("term")},
-                                    idfs, stats["avg_doc_len"], k)
-        finally:
-            W._decode_term = orig
-        out["queries"][name] = {
-            "blocks_total": int(total),
-            "blocks_decoded": int(counted["n"]),
-            "decoded_pct": round(100.0 * counted["n"] / max(total, 1), 1),
-        }
-    return out
-
-
 def bench_stream(copies: int, batches: int = 8, compact_every: int | None = None) -> dict:
     """Streaming micro-batch ingest throughput: drain a web_pages inbox
     in ~``batches`` micro-batches (maxFilesPerTrigger over the 64-file
     fixture) and report end-to-end docs/sec INCLUDING per-batch stats
     folds, term_dict rebuilds and (optionally) in-stream compaction,
-    then a WAND query against the finished index."""
+    then a match query against the finished index."""
     import time as _t
 
     from gopensearch_spark.search import wand_match
@@ -477,7 +383,7 @@ def bench_stream(copies: int, batches: int = 8, compact_every: int | None = None
     t0 = _t.time()
     stats = index_stream_available_now(
         spark, inbox, idx, cp,
-        term_buckets=32, num_segments=32,
+        term_buckets=32,
         max_files_per_trigger=max(1, 64 // batches),
         compact_every=compact_every,
     )
@@ -538,7 +444,7 @@ def bench_positions_compare(copies: int, runs: int = 2) -> dict:
             _fresh_dir(idx)
             t0 = time.time()
             stats = build_index(spark, corpus, idx, slices=1, term_buckets=None,
-                                num_segments=32, with_positions=with_pos)
+                                with_positions=with_pos)
             if r > 0:
                 samples.append(round(time.time() - t0, 3))
         out["profiles"][label] = {
@@ -547,7 +453,6 @@ def bench_positions_compare(copies: int, runs: int = 2) -> dict:
             "docs_per_sec": round(stats["n_docs"] / min(samples), 1),
             "bytes_total": _du(idx),
             "bytes_postings": _du(os.path.join(idx, "postings")),
-            "bytes_blocks": _du(os.path.join(idx, "blocks")),
             "n_docs": stats["n_docs"],
         }
     f = out["profiles"]
@@ -592,7 +497,6 @@ if __name__ == "__main__":
     p = argparse.ArgumentParser()
     p.add_argument("--index-only", action="store_true")
     p.add_argument("--scaling", action="store_true")
-    p.add_argument("--wand-vs-flat", action="store_true")
     p.add_argument("--stream", action="store_true")
     p.add_argument("--batches", type=int, default=8)
     p.add_argument("--compact-every", type=int, default=None)
@@ -601,7 +505,6 @@ if __name__ == "__main__":
     p.add_argument("--small", type=int, default=2)
     p.add_argument("--big", type=int, default=8)
     p.add_argument("--positions-compare", action="store_true")
-    p.add_argument("--or-decode", action="store_true")
     p.add_argument("--query-scaling", action="store_true")
     p.add_argument("--query-leg", action="store_true")
     a = p.parse_args()
@@ -613,10 +516,6 @@ if __name__ == "__main__":
         print(json.dumps(bench_query_leg(a.copies)))
     elif a.positions_compare:
         print(json.dumps(bench_positions_compare(a.copies, runs=a.runs)))
-    elif a.or_decode:
-        print(json.dumps(bench_or_decode(a.copies)))
-    elif a.wand_vs_flat:
-        print(json.dumps(bench_wand_vs_flat(a.copies)))
     elif a.stream:
         print(json.dumps(bench_stream(a.copies, batches=a.batches,
                                       compact_every=a.compact_every)))

@@ -4,9 +4,10 @@ A from-scratch reimplementation of the capabilities of atomic77/gopensearch
 (an Elasticsearch-compatible DSL server backed by SQLite FTS5) as an
 idiomatic Spark engine:
 
-- inverted-index build over a web-pages table (tokenize -> postings ->
-  delta+varint compressed blocks -> skew-aware merge), `gopensearch_spark.index`
-- BM25 top-k query engine, rank-identical to SQLite FTS5's bm25()
+- inverted-index build over a web-pages table (tokenize -> flat postings
+  bucketed by term hash -> term/doc/corpus stats), `gopensearch_spark.index`
+- one BM25 top-k query engine over the flat postings, a JVM-only
+  Catalyst plan rank-identical to SQLite FTS5's bm25()
   (the reference's actual ranking backend, reference pkg/server/db.go:49),
   `gopensearch_spark.search`
 - the ES query-DSL surface the reference implements in Go

@@ -64,26 +64,6 @@ def term_freqs(text: str) -> dict[str, int]:
     return tf
 
 
-# --- Arrow-vectorized Spark UDFs -------------------------------------------
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokens_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda s: tokenize(s) if s is not None else [])
-
-
-@F.pandas_udf(T.MapType(T.StringType(), T.IntegerType()))
-def term_freqs_udf(texts: pd.Series) -> pd.Series:
-    """term->tf map per doc. Computing tf inside the UDF (not via
-    explode+groupBy) removes an entire (term, doc_id) shuffle from the
-    index build — each doc's counts are local to its partition."""
-    return texts.map(lambda s: term_freqs(s) if s is not None else {})
-
-
-@F.pandas_udf(T.IntegerType())
-def num_tokens_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda s: len(tokenize(s)) if s is not None else 0)
-
-
 def term_positions(text: str) -> dict[str, list[int]]:
     """term -> sorted 0-based token positions (FTS5 detail=full stores
     the same per-posting position lists for phrase/NEAR matching)."""
@@ -93,22 +73,11 @@ def term_positions(text: str) -> dict[str, list[int]]:
     return pos
 
 
-@F.pandas_udf(T.MapType(T.StringType(), T.ArrayType(T.IntegerType())))
-def term_positions_udf(texts: pd.Series) -> pd.Series:
-    """term->positions map per doc; tf == len(positions), doc_len ==
-    sum of lens — one tokenizer pass feeds tf, doc_len AND positions."""
-    return texts.map(lambda s: term_positions(s) if s is not None else {})
+# --- Arrow-vectorized Spark UDFs -------------------------------------------
 
-
-@F.pandas_udf(T.BinaryType())
-def encode_positions_udf(pos: pd.Series) -> pd.Series:
-    """array<int> positions -> delta+varint bytes (same codec family as
-    posting blocks; Arrow-batched)."""
-    import numpy as np
-
-    from gopensearch_spark import codecs
-
-    return pos.map(lambda p: codecs.delta_encode(np.asarray(p, dtype=np.uint64)))
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def tokens_udf(texts: pd.Series) -> pd.Series:
+    return texts.map(lambda s: tokenize(s) if s is not None else [])
 
 
 def tokenize_with_offsets(text: str) -> list[tuple[str, int, int]]:

@@ -146,196 +146,3 @@ def delta_decode_chunks(bufs: list) -> list[np.ndarray]:
             base = g[s - 1] if s > 0 else np.uint64(0)
             out.append(g[s:s + c] - base)
     return out
-
-
-def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
-    """Encode one posting block: (delta+varint doc_ids, varint tfs)."""
-    return delta_encode(doc_ids), varint_encode(tfs)
-
-
-def decode_postings(doc_ids_buf: bytes, tfs_buf: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return delta_decode(doc_ids_buf), varint_decode(tfs_buf)
-
-
-# --- PForDelta (patched frame-of-reference) ---------------------------------
-#
-# NewPFD-style layout (Zukowski et al. 2006; Yan/Ding/Suel 2009 variant):
-# pick the bit width b covering ~90% of the block's values; pack every
-# value's low b bits in a dense bitstream; values that overflow b bits
-# ("exceptions") keep their low bits in place and store (position-delta,
-# high-bits) patch lists varint-encoded after the bitstream. Wire format:
-#
-#   [b: u8] [n: varint] [n_exc: varint] [packed low bits: ceil(n*b/8) bytes]
-#   [varint exception position deltas] [varint exception high bits]
-#
-# All pack/unpack paths are numpy bit ops — no per-value Python.
-
-_PFOR_TARGET = 0.90
-
-
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Upper bound on bit length per value, one frexp pass.
-
-    frexp's exponent IS the bit length for every exactly-representable
-    value; float64 rounding can only round UP across a power-of-two
-    boundary, so the estimate is >= the true bit length (never under).
-    An overestimate is SAFE here: the value lands in the exception list
-    with high bits 0 and decodes identically — pfor_encode's
-    correctness needs 'no underestimates', not exactness. The previous
-    shift-loop ran max-bitlen full-array passes (~82us per 128-value
-    block — more than an entire varint encode); this is ~5us."""
-    if v.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    _m, e = np.frexp(v.astype(np.float64))
-    # clip: near 2^64 the float rounds to 2^64 (exponent 65); 64 is the
-    # true width, and bl > 64 would make exc_high shift by >= 64 (UB)
-    return np.clip(e.astype(np.int64), 1, 64)  # value 0 still needs 1 bit
-
-
-def _pack_bits(low: np.ndarray, b: int) -> bytes:
-    """Dense little-endian-per-value bit packing via packbits."""
-    # bits[i, j] = bit j of value i (LSB first), flattened then packed
-    bits = ((low[:, None] >> np.arange(b, dtype=np.uint64)) & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits.ravel(), bitorder="little").tobytes()
-
-
-def _unpack_bits(buf: bytes, n: int, b: int) -> np.ndarray:
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), bitorder="little")[: n * b]
-    bits = bits.reshape(n, b).astype(np.uint64)
-    return (bits << np.arange(b, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
-
-
-_PFOR_SMALL = 16  # below this, scalar Python beats numpy's per-call overhead
-
-
-def _varint_encode_scalar(vals) -> bytes:
-    """LEB128 for a small Python-int sequence — byte-identical to
-    varint_encode, ~20x less per-call overhead for a handful of values."""
-    out = bytearray()
-    for x in vals:
-        x = int(x)
-        while True:
-            b = x & 0x7F
-            x >>= 7
-            if x:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                break
-    return bytes(out)
-
-
-def _pfor_encode_small(vals: list) -> bytes:
-    """Scalar pfor_encode for tiny blocks (the Zipf tail: most (term,
-    segment) runs hold a handful of postings). Byte-identical to the
-    vectorized path for values < 2^53 (the float-exponent bit-length
-    estimate is exact there); beyond that both paths produce valid,
-    mutually decodable encodings. ~15 numpy calls -> 0."""
-    n = len(vals)
-    bl = [max(1, v.bit_length()) for v in vals]
-    k = min(n - 1, int(-(-(_PFOR_TARGET * (n - 1)) // 1)))  # ceil
-    b = sorted(bl)[k]
-    b = max(1, min(b, 64))
-    mask = (1 << b) - 1
-    acc = 0
-    for i, v in enumerate(vals):
-        acc |= (v & mask) << (i * b)
-    packed = acc.to_bytes((n * b + 7) // 8, "little")
-    exc = [(i, v >> b) for i, v in enumerate(vals) if bl[i] > b]
-    header = bytes([b]) + _varint_encode_scalar((n, len(exc)))
-    if not exc:
-        return header + packed
-    idx_deltas = [exc[0][0]] + [exc[j][0] - exc[j - 1][0] for j in range(1, len(exc))]
-    return (
-        header
-        + packed
-        + _varint_encode_scalar(idx_deltas)
-        + _varint_encode_scalar([h for _, h in exc])
-    )
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    """PFor-encode a uint64 array (frame of reference = 0; callers delta
-    first for sorted ids)."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    if v.size <= _PFOR_SMALL:
-        return _pfor_encode_small([int(x) for x in v])
-    bl = _bit_lengths(v)
-    # quantile(..., method="higher") == k-th order statistic at
-    # k = ceil(q*(n-1)); np.partition is O(n) and ~10x cheaper than the
-    # general quantile machinery on block-sized arrays
-    k = min(bl.size - 1, int(np.ceil(_PFOR_TARGET * (bl.size - 1))))
-    b = int(np.partition(bl, k)[k])
-    b = max(1, min(b, 64))
-    mask = np.uint64((1 << b) - 1) if b < 64 else np.uint64(0xFFFFFFFFFFFFFFFF)
-    low = v & mask
-    exc_idx = np.flatnonzero(bl > b)
-    exc_high = v[exc_idx] >> np.uint64(b)
-    header = bytes([b]) + varint_encode(np.array([v.size, exc_idx.size], dtype=np.uint64))
-    idx_deltas = np.diff(exc_idx, prepend=0).astype(np.uint64) if exc_idx.size else exc_idx.astype(np.uint64)
-    return (
-        header
-        + _pack_bits(low, b)
-        + varint_encode(idx_deltas)
-        + varint_encode(exc_high)
-    )
-
-
-def pfor_decode(buf: bytes) -> np.ndarray:
-    if not buf:
-        return np.empty(0, dtype=np.uint64)
-    b = buf[0]
-    # parse the two varint header ints by scanning continuation bits
-    pos = 1
-    vals = []
-    for _ in range(2):
-        x, shift = 0, 0
-        while True:
-            byte = buf[pos]
-            pos += 1
-            x |= (byte & 0x7F) << shift
-            shift += 7
-            if not byte & 0x80:
-                break
-        vals.append(x)
-    n, n_exc = vals
-    packed_len = (n * b + 7) // 8
-    if n <= _PFOR_SMALL:
-        # scalar fast path (mirrors _pfor_encode_small): one
-        # int.from_bytes + per-value shifts instead of ~10 numpy calls
-        acc = int.from_bytes(buf[pos : pos + packed_len], "little")
-        mask = (1 << b) - 1
-        out = [(acc >> (i * b)) & mask for i in range(n)]
-        pos += packed_len
-        if n_exc:
-            rest = varint_decode(buf[pos:])
-            j = 0
-            for i in range(n_exc):
-                j += int(rest[i])
-                out[j] |= int(rest[n_exc + i]) << b
-        return np.array(out, dtype=np.uint64)
-    low = _unpack_bits(buf[pos : pos + packed_len], n, b)
-    pos += packed_len
-    if n_exc:
-        rest = varint_decode(buf[pos:])
-        idx = np.cumsum(rest[:n_exc])
-        high = rest[n_exc : 2 * n_exc]
-        low[idx] |= high << np.uint64(b)
-    return low
-
-
-def delta_pfor_encode(sorted_ids: np.ndarray) -> bytes:
-    """Delta + PForDelta for strictly-increasing ids."""
-    ids = np.ascontiguousarray(sorted_ids, dtype=np.uint64)
-    if ids.size == 0:
-        return b""
-    deltas = np.empty(ids.size, dtype=np.uint64)
-    deltas[0] = ids[0]
-    np.subtract(ids[1:], ids[:-1], out=deltas[1:])
-    return pfor_encode(deltas)
-
-
-def delta_pfor_decode(buf: bytes) -> np.ndarray:
-    return np.cumsum(pfor_decode(buf), dtype=np.uint64)

@@ -236,7 +236,7 @@ def rrf_fuse(
     score(d) = sum over systems of 1 / (k + rank_sys(d)).
 
     Each input is an (id, score) relation ALREADY truncated to its
-    engine's top-N (e.g. block-max WAND top-50 and cosine top-50), so
+    engine's top-N (e.g. BM25 top-50 and cosine top-50), so
     the per-system rank window runs over a requests-bounded candidate
     set — never the corpus — and the fused aggregate touches at most
     N x #systems rows. Ranks order by (score DESC, id ASC) for

@@ -210,9 +210,10 @@ def _numeric_or_epoch_millis(ctx: CompileContext, field: str) -> Column:
         # NTZ cannot cast to double directly; via timestamp (session TZ
         # is pinned UTC, so the reinterpretation is the identity)
         return col.cast("timestamp").cast("double") * F.lit(1000.0)
-    if fmt in ("epoch_millis", "epoch_second"):
-        # stored value: raw epoch number OR the write-time RFC3339
-        # string (same coercion rule as _range_bound)
+    if fmt is not None:
+        # any template date format: the stored value is a raw epoch
+        # number OR a date string (the write-time RFC3339 form, or the
+        # format's own text), same coercion rule as _range_bound
         s = col.cast("string")
         num = s.cast("double") * (F.lit(1000.0) if fmt == "epoch_second" else F.lit(1.0))
         return F.when(s.rlike("^-?[0-9]+$"), num).otherwise(

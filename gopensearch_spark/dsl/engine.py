@@ -818,33 +818,54 @@ class Engine:
         _FIELD_LEAVES = (
             "term", "terms", "match", "match_phrase", "match_phrase_prefix",
             "match_bool_prefix", "prefix", "wildcard", "regexp", "fuzzy",
-            "range", "distance_feature", "rank_feature",
+            "range",
         )
 
-        def walk(q: dict, match_fields: set, all_fields: set) -> None:
+        # ES percolation: a leaf on a field the candidate docs don't
+        # carry simply doesn't match (heterogeneous docs are the normal
+        # percolate input), so it is rewritten to this always-false
+        # clause. Compiling it would send an unresolvable column to
+        # Catalyst and fail the WHOLE batch with UNRESOLVED_COLUMN. Only
+        # the leaf is false: under must/filter it fails the query, under
+        # must_not or one should branch the query can still match.
+        _NO_MATCH = {"bool": {"must_not": [{"match_all": {}}]}}
+        doc_cols = {c.split(".")[0] for c in df.columns}
+
+        def leaf_field(k: str, v) -> str | None:
+            if not isinstance(v, dict) or not v:
+                return None
+            if k in ("exists", "distance_feature", "rank_feature"):
+                return strip_keyword(str(v.get("field", ""))) or None
+            if k in _FIELD_LEAVES:
+                return strip_keyword(next(iter(v)))
+            return None
+
+        def prune(q: dict) -> dict:
+            """``q`` with every leaf on a missing field replaced by
+            ``_NO_MATCH``; collects the text fields of ``match`` leaves
+            on the way."""
+            out = {}
             for k, v in q.items():
                 if k in _COMPOSITE_SUBS and isinstance(v, dict):
+                    v = dict(v)
                     for occ in _COMPOSITE_SUBS[k]:
-                        sub = v.get(occ) or []
-                        for s in (sub if isinstance(sub, list) else [sub]):
-                            if isinstance(s, dict):
-                                walk(s, match_fields, all_fields)
-                elif k == "exists" and isinstance(v, dict):
-                    all_fields.add(strip_keyword(str(v.get("field", ""))))
-                elif k in ("distance_feature", "rank_feature") and isinstance(v, dict):
-                    if "field" in v:
-                        all_fields.add(strip_keyword(str(v["field"])))
-                elif k in _FIELD_LEAVES and isinstance(v, dict) and v:
-                    f = strip_keyword(next(iter(v)))
-                    all_fields.add(f)
-                    if k == "match":
-                        match_fields.add(f)
+                        sub = v.get(occ)
+                        if isinstance(sub, dict):
+                            v[occ] = prune(sub)
+                        elif isinstance(sub, list):
+                            v[occ] = [prune(x) if isinstance(x, dict) else x for x in sub]
+                    out[k] = v
+                    continue
+                f = leaf_field(k, v)
+                if f and f.split(".")[0] not in doc_cols:
+                    return _NO_MATCH
+                if f and k == "match":
+                    match_fields.add(f)
+                out[k] = v
+            return out
 
         match_fields: set[str] = set()
-        fields_by_qid: dict[str, set] = {}
-        for qid, q in stored.items():
-            fields_by_qid[qid] = set()
-            walk(q, match_fields, fields_by_qid[qid])
+        pruned = {qid: prune(q) for qid, q in stored.items()}
         tok_cols = {}
         for f in match_fields:
             if f in df.columns and dict(df.dtypes).get(f) == "string":
@@ -862,22 +883,9 @@ class Engine:
             return out
 
         ctx = CompileContext(df=df, fulltext_predicate=fulltext)
-        doc_cols = {c.split(".")[0] for c in df.columns}
         flags = []
-        for qid, raw in stored.items():
-            # ES percolation: a query on a field the candidate docs don't
-            # carry simply doesn't match — heterogeneous docs are the
-            # normal percolate input. Compiling it anyway would send an
-            # unresolvable column reference to Catalyst and fail the
-            # WHOLE batch with UNRESOLVED_COLUMN.
-            missing = {
-                f.split(".")[0] for f in fields_by_qid[qid] if f
-            } - doc_cols
-            if missing:
-                flags.append(F.when(F.lit(False), F.lit(qid)))
-                continue
-            q = model.parse_dsl({"query": raw}).query
-            pred = compile_query(ctx, q, scoring=False)
+        for qid, q in pruned.items():
+            pred = compile_query(ctx, model.parse_dsl({"query": q}).query, scoring=False)
             flags.append(F.when(F.coalesce(pred, F.lit(False)), F.lit(qid)))
         matched = F.array_compact(F.array(*flags)).alias("matched_queries")
         out_rows = (
@@ -1033,10 +1041,9 @@ class Engine:
 
     def _pure_match(self, d: model.Dsl, spec: IndexSpec) -> model.Match | None:
         """The query is EXACTLY one `match` on the indexed text field with
-        no other clause, agg, or sort — the shape ``wand.match_topk``
-        serves as a bare top-k without the general path's relation: from
-        flat postings on the JVM below ``wand.FLAT_TOPK_MAX_POSTINGS``
-        total postings, from the block-max WAND kernel at or above it."""
+        no other clause, agg, or sort — the shape ``bm25_match`` serves
+        as a bare top-k from the flat postings on the JVM, without the
+        general path's relation."""
         q = d.query
         if q is None or d.aggs or d.sort or not spec.index_dir:
             return None
@@ -1055,8 +1062,8 @@ class Engine:
             and q.function_score is None
         ):
             ((field, m),) = q.match.items()
-            # match + fuzziness routes through the expansion path, not
-            # WAND; a boosted match needs the general path's score
+            # match + fuzziness routes through the expansion path; a
+            # boosted match needs the general path's score
             # multiply (ranking would be identical, reported _score not)
             if (strip_keyword(field) == spec.text_field and not m.fuzziness
                     and m.boost == 1.0):
@@ -1160,11 +1167,10 @@ class Engine:
         m = None if needs_general else self._pure_match(d, spec)
         if m is not None:
             # serve a bare top-k straight from the index: only top-k ids
-            # reach the doc join. match_topk picks the JVM-only flat plan
-            # or the block-max WAND kernel by the query's total postings
-            # (the general path below must materialize the whole scoring
-            # relation, because filters need it).
-            from gopensearch_spark.search.wand import match_topk
+            # reach the doc join (the general path below must
+            # materialize the whole scoring relation, because filters
+            # need it).
+            from gopensearch_spark.search.bm25 import bm25_match
 
             size = 10 if d.size is None else d.size
             mode = "and" if m.operator.upper() == "AND" else "or"
@@ -1177,7 +1183,7 @@ class Engine:
                 self._last_prelimit = bm25_scores(
                     self.spark, spec.index_dir, m.query, mode=mode
                 )
-            top = match_topk(
+            top = bm25_match(
                 self.spark, spec.index_dir, m.query,
                 k=size + (d.from_ or 0), mode=mode,
             ).withColumnRenamed("doc_id", "__ft_doc_id")
@@ -1459,8 +1465,8 @@ class Engine:
 
         # aggs see the filtered relation (reference re-scans per agg,
         # sql.go:39-58). Cache it ONLY when recomputing is expensive —
-        # i.e. the relation embeds full-text scoring (posting joins /
-        # WAND kernels). A pure-relational filter recomputes as a
+        # i.e. the relation embeds full-text scoring (posting scans and
+        # aggregates). A pure-relational filter recomputes as a
         # column-pruned parquet scan per consumer, which is CHEAPER than
         # materializing every column of the relation into the cache
         # (measured: a single terms agg over a 6-column table paid more
@@ -1860,12 +1866,13 @@ class Engine:
         indexed field's fragmented posting runs back to one sorted run
         per term — the ES force-merge contract mapped onto this engine's
         generation-pointer compaction. Each field index compacts into
-        `<dir>/gen-{N+1}` (salted repartition-by-term + skew-split block
-        rebuild, see `compact_index`) and COMMITS by atomically writing
-        the `_current` pointer — rename-free, so in-flight readers stay
-        on the old generation and object stores need no directory
-        rename. `max_num_segments` maps to the segment count of the
-        rebuilt index (ES's `1` = one segment)."""
+        `<dir>/gen-{N+1}` (repartition-by-term + sort, see
+        `compact_index`) and COMMITS by atomically writing the `_current`
+        pointer — rename-free, so in-flight readers stay on the old
+        generation and object stores need no directory rename.
+        `max_num_segments` is accepted because ES requests carry it; a
+        force-merge here always leaves one run per term, which is what
+        any value asks for."""
         import shutil
 
         from gopensearch_spark.index.builder import (
@@ -1882,8 +1889,7 @@ class Engine:
             gen = current_generation(idx_dir)
             dst = os.path.join(idx_dir, f"gen-{gen + 1}")
             shutil.rmtree(dst, ignore_errors=True)  # crashed prior attempt
-            kw = {"num_segments": int(max_num_segments)} if max_num_segments else {}
-            compact_index(self.spark, src, dst, **kw)
+            compact_index(self.spark, src, dst)
             _commit_generation(idx_dir, gen + 1)
             merged += 1
         return {"_shards": {"total": merged, "successful": merged, "failed": 0}}

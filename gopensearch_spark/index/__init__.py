@@ -1,5 +1,4 @@
 from gopensearch_spark.index.builder import (  # noqa: F401
-    BLOCK_SIZE,
     build_index,
     build_postings,
     compact_index,
@@ -9,6 +8,5 @@ from gopensearch_spark.index.builder import (  # noqa: F401
     fold_corpus_stats,
     read_corpus_stats,
     rebuild_term_dict,
-    recommended_num_segments,
     resolve_index_dir,
 )

@@ -1,4 +1,4 @@
-"""Inverted-index builder: tokenize -> postings -> compressed blocks.
+"""Inverted-index builder: tokenize -> postings -> term/doc/corpus stats.
 
 Reimplements from scratch what the reference outsources to SQLite FTS5
 (virtual-table creation at reference pkg/server/db.go:46-54; tokenize +
@@ -19,16 +19,6 @@ db.go:16-17). Spark-first design:
   Queries prune to the handful of term_bucket partitions their terms hash
   to — at 10^12 docs this is the difference between scanning the whole
   index and scanning ~q/B of it.
-- **compressed blocks** (``blocks/``): per (segment, term) posting lists,
-  doc_ids delta+varint encoded, tfs/doc_lens varint encoded, chunked into
-  BLOCK_SIZE-entry blocks carrying (max_tf, min_doc_len) so a block-max
-  score upper bound can be computed at query time without decoding
-  (block-max WAND, Ding & Suel 2011). Segments are disjoint doc_id hash
-  classes, so per-segment top-k results combine by a global top-k.
-- **skew**: the segment axis IS the skew-splitting device — a Zipf head
-  term's postings are spread across all ``num_segments`` groups, so no
-  single task ever holds a stopword's full posting list (the salted-merge
-  requirement of BASELINE north_rule; salt == seg_id).
 - **resumability**: `build_index` processes the corpus in ``slices``
   (doc_id hash classes); each slice commits its output and a checkpoint
   record with lineage + doc/term/byte metrics before the next starts.
@@ -50,10 +40,7 @@ from pyspark.sql import functions as F
 
 from gopensearch_spark import codecs
 
-BLOCK_SIZE = 128            # postings per compressed block
 DEFAULT_TERM_BUCKETS = 64   # term_bucket partitions on disk
-DEFAULT_NUM_SEGMENTS = 32   # doc-hash segments (sandbox default; see below)
-TARGET_DOCS_PER_SEGMENT = 250_000  # sizing rule input, recommended_num_segments
 
 
 GEN_POINTER = "_current"  # generation pointer file (rename-free commit)
@@ -99,29 +86,6 @@ def _commit_generation(index_dir: str, gen: int) -> None:
     os.replace(tmp, os.path.join(index_dir, GEN_POINTER))
 
 
-def recommended_num_segments(
-    n_docs: int,
-    parallelism: int = 32,
-    target_docs_per_segment: int = TARGET_DOCS_PER_SEGMENT,
-) -> int:
-    """Segment-count sizing rule: ``max(parallelism, ceil(n_docs /
-    target_docs_per_segment))``.
-
-    Segments are the query kernel's unit of both parallelism AND memory:
-    a worst-case term (df = N, a stopword) contributes ~N/num_segments
-    postings to each per-segment Arrow group, so the per-task bound is
-    ``target_docs_per_segment`` postings per query term regardless of
-    corpus size (~2 MB decoded arrays per term at the default). The
-    parallelism floor keeps small corpora from serializing the kernel.
-    At 10^12 docs this yields 4M segments — rare terms then carry one
-    block row per touched segment, the deliberate trade for a bounded
-    worst case. ``build_index(num_segments=None)`` applies this rule
-    automatically from a corpus count."""
-    import math
-
-    return max(int(parallelism), math.ceil(max(int(n_docs), 1) / target_docs_per_segment))
-
-
 EST_POSTINGS_PER_DOC = 120          # distinct terms per ~400-token web page
 TARGET_POSTINGS_PER_BUCKET = 2_000_000  # ~100-250 MB sorted parquet w/ positions
 MIN_POSTINGS_PER_BUCKET = 25_000    # below this, per-file overhead > sort benefit
@@ -145,8 +109,8 @@ def recommended_term_buckets(n_docs: int) -> int:
     the safe side.
 
     The floor is adaptive for the opposite regime: a hard 64-bucket
-    floor on a 5k-doc corpus means 64 partition dirs × (postings +
-    term_stats + blocks) tiny files, and per-file open/commit overhead
+    floor on a 5k-doc corpus means 64 partition dirs × every bucketed
+    table's tiny files, and per-file open/commit overhead
     dominates the build (measured here: 13.3s vs 5.9s on identical 5k-doc
     input at 64 vs 32 buckets). Buckets therefore never shrink below
     ``est_postings / MIN_POSTINGS_PER_BUCKET``-sized units either —
@@ -165,14 +129,6 @@ def recommended_term_buckets(n_docs: int) -> int:
         max(floor, math.ceil(est_postings / TARGET_POSTINGS_PER_BUCKET)),
         65536,
     )
-
-
-BLOCKS_SCHEMA = (
-    "term string, seg_id int, block_id int, n int, "
-    "min_doc_id long, max_doc_id long, max_tf int, min_doc_len int, "
-    "min_tf int, max_doc_len int, "
-    "doc_ids binary, tfs binary, doc_lens binary"
-)
 
 
 def _flat_postings(
@@ -194,7 +150,7 @@ def _flat_postings(
     zero-token document (empty/whitespace text) — which has no postings
     but IS a document, FTS5 counts every row in N and avgdl (verified
     against SQLite directly; see tests) — needs no special casing: its
-    sentinel is its only row. Postings/blocks/term-stat consumers filter
+    sentinel is its only row. Postings/term-stat consumers filter
     ``term IS NOT NULL``; query-side term-equality/prefix predicates
     never match NULL, so sentinels are invisible to search.
 
@@ -294,116 +250,26 @@ def _sentinel_frame(
     return pd.DataFrame(out)
 
 
-def _encoders(block_codec: str):
-    """(ids_encode, vals_encode) for a block codec name."""
-    if block_codec == "pfor":
-        return codecs.delta_pfor_encode, codecs.pfor_encode
-    if block_codec == "varint":
-        return codecs.delta_encode, codecs.varint_encode
-    raise ValueError(f"unknown block codec {block_codec!r}")
-
-
-def _make_segment_blocks_kernel(block_codec: str = "pfor"):
-    enc_ids, enc_vals = _encoders(block_codec)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _build_segment_blocks(pdf, enc_ids, enc_vals)
-
-    return kernel
-
-
-def _build_segment_blocks(
-    pdf: pd.DataFrame, enc_ids=codecs.delta_encode, enc_vals=codecs.varint_encode
-) -> pd.DataFrame:
-    """applyInPandas kernel: one segment's flat postings -> block rows.
-
-    Sort by (term, doc_id) with numpy, find term boundaries, encode each
-    term's ids/tfs/doc_lens in BLOCK_SIZE chunks with the chosen codec
-    (delta+varint default, delta+PForDelta optional).
-    """
-    seg_id = int(pdf["seg_id"].iloc[0])
-    order = np.lexsort((pdf["doc_id"].to_numpy(), pdf["term"].to_numpy()))
-    terms = pdf["term"].to_numpy()[order]
-    doc_ids = pdf["doc_id"].to_numpy()[order].astype(np.uint64)
-    tfs = pdf["tf"].to_numpy()[order].astype(np.uint64)
-    dls = pdf["doc_len"].to_numpy()[order].astype(np.uint64)
-
-    # term run boundaries
-    change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [len(terms)]))
-
-    # Block tiling + per-block order stats, vectorized across ALL blocks
-    # of the group (a Zipf vocabulary means most runs are a single tiny
-    # block — per-block numpy slicing paid ~25us of call overhead per
-    # block before the three codec calls even started):
-    run_lens = ends - starts
-    nblocks = -(-run_lens // BLOCK_SIZE)
-    run_idx = np.repeat(np.arange(starts.size), nblocks)
-    first_of_run = np.concatenate(([0], np.cumsum(nblocks)[:-1]))
-    block_ids = np.arange(run_idx.size) - first_of_run[run_idx]
-    off = starts[run_idx] + block_ids * BLOCK_SIZE
-    hi = np.minimum(off + BLOCK_SIZE, ends[run_idx])
-    # blocks tile the sorted arrays contiguously, so `off` is a valid
-    # reduceat boundary list: segment i is [off[i], off[i+1]) (last to
-    # end) == exactly block i
-    # (max_tf, min_doc_len) -> per-block BM25 UPPER bound (block-max
-    # WAND); (min_tf, max_doc_len) -> LOWER bound for the query layer's
-    # no-decode top-k floor (wand._prefilter)
-    max_tf = np.maximum.reduceat(tfs, off)
-    min_tf = np.minimum.reduceat(tfs, off)
-    min_dl = np.minimum.reduceat(dls, off)
-    max_dl = np.maximum.reduceat(dls, off)
-    return pd.DataFrame(
-        {
-            "term": pd.Series(terms[off], dtype="object"),
-            "seg_id": pd.Series(np.full(off.size, seg_id, dtype=np.int32), dtype="int32"),
-            "block_id": pd.Series(block_ids.astype(np.int32), dtype="int32"),
-            "n": pd.Series((hi - off).astype(np.int32), dtype="int32"),
-            "min_doc_id": pd.Series(doc_ids[off].astype(np.int64), dtype="int64"),
-            "max_doc_id": pd.Series(doc_ids[hi - 1].astype(np.int64), dtype="int64"),
-            "max_tf": pd.Series(max_tf.astype(np.int32), dtype="int32"),
-            "min_doc_len": pd.Series(min_dl.astype(np.int32), dtype="int32"),
-            "min_tf": pd.Series(min_tf.astype(np.int32), dtype="int32"),
-            "max_doc_len": pd.Series(max_dl.astype(np.int32), dtype="int32"),
-            "doc_ids": pd.Series(
-                [enc_ids(doc_ids[o:h]) for o, h in zip(off, hi)], dtype="object"
-            ),
-            "tfs": pd.Series(
-                [enc_vals(tfs[o:h]) for o, h in zip(off, hi)], dtype="object"
-            ),
-            "doc_lens": pd.Series(
-                [enc_vals(dls[o:h]) for o, h in zip(off, hi)], dtype="object"
-            ),
-        }
-    )
-
-
 def build_postings(
     docs: DataFrame,
     out_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     term_buckets: int = DEFAULT_TERM_BUCKETS,
-    num_segments: int = DEFAULT_NUM_SEGMENTS,
     mode: str = "overwrite",
-    build_blocks: bool = True,
     with_positions: bool = False,
-    block_codec: str = "pfor",
     batch_id: int | None = None,
 ) -> None:
     """One build pass over ``docs``.
 
     BATCH (``batch_id=None``): writes ONLY ``postings/`` (per-doc
     sentinel rows included) in a single persist-free lineage;
-    ``finalize_stats`` derives doc_stats/blocks/term_stats from the
-    written parquet with column-pruned re-reads. ``build_blocks`` /
-    ``num_segments`` are ignored on this path — pass them to
-    ``finalize_stats`` (or use ``build_index``, which wires both).
+    ``finalize_stats`` derives doc_stats/term_stats from the written
+    parquet with column-pruned re-reads.
 
     STREAMING (``batch_id=N``): one persisted pass writes every
-    per-batch table (postings, doc_stats, term-df deltas, batch_stats,
-    blocks). ``batch_id`` makes the pass IDEMPOTENT: every
+    per-batch table (postings, doc_stats, term-df deltas, batch_stats).
+    ``batch_id`` makes the pass IDEMPOTENT: every
     table gains a leading ``batch_id`` partition and is written with
     dynamic partition-overwrite, so a replayed micro-batch (crash after
     the data write, before the commit record) REPLACES its own
@@ -445,7 +311,7 @@ def build_postings(
         # and that disk traffic is exactly what stops the build scaling
         # with cores (measured: 2->8 core efficiency fell 0.81 -> 0.57
         # between 800k and 6M docs with the old persist+re-consume
-        # design). doc_stats, blocks, and term_stats all derive from the
+        # design). doc_stats and term_stats both derive from the
         # WRITTEN postings parquet in ``finalize_stats`` — column-pruned
         # re-reads (never the position bytes) instead of cache hits.
         # Sentinel rows ride along in the postings table; NULLS-FIRST
@@ -463,7 +329,7 @@ def build_postings(
     # STREAMING micro-batch path: batches are small (bounded by the
     # trigger), so one persist + multi-consumer fan-out is cheap and
     # keeps every per-batch table (postings, doc_stats, term-df deltas,
-    # batch_stats, blocks) in a single pass over the batch.
+    # batch_stats) in a single pass over the batch.
     flat = flat.withColumn("batch_id", F.lit(int(batch_id)))
     mode = "overwrite"  # dynamic: replaces only this batch's partitions
 
@@ -516,91 +382,8 @@ def build_postings(
             .partitionBy("batch_id")
             .parquet(os.path.join(out_dir, "batch_stats"))
         )
-        if build_blocks:
-            # blocks carry no positions — select only what the kernel
-            # needs so position bytes never enter the segment shuffle.
-            # Group by (seg_id, term_bucket), NOT seg_id alone: one task
-            # then holds 1/(segments*buckets) of the postings instead of
-            # a whole segment (1/32 of EVERYTHING — OOM at 10^12 docs).
-            # Blocks are per (term, seg), and a term lives in exactly
-            # one bucket, so the finer grouping changes nothing
-            # semantically.
-            seg = posts.select("doc_id", "doc_len", "term", "tf", "term_bucket").withColumn(
-                "seg_id",
-                F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int"),
-            )
-            blocks = seg.groupBy("seg_id", "term_bucket").applyInPandas(
-                _make_segment_blocks_kernel(block_codec), schema=BLOCKS_SCHEMA
-            ).withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
-            ).withColumn("batch_id", F.lit(int(batch_id)))
-            (
-                writer(blocks.repartition(term_buckets, *post_parts))
-                .partitionBy(*post_parts)
-                .parquet(os.path.join(out_dir, "blocks"))
-            )
     finally:
         flat.unpersist()
-
-
-def _write_blocks_from_postings(
-    spark: SparkSession,
-    postings_path: str,
-    blocks_path: str,
-    term_buckets: int,
-    num_segments: int,
-    block_codec: str = "pfor",
-    batch_id: int | None = None,
-) -> None:
-    """Blocks derived from the WRITTEN postings parquet.
-
-    Column-pruned read (doc_id, doc_len, term, tf, term_bucket — never
-    the position bytes; parquet's columnar layout skips them on disk),
-    sentinels filtered, then the (seg_id, term_bucket) grouped kernel.
-    The explicit ``repartition(K, seg_id, term_bucket)`` sizes the
-    shuffle by DATA (one partition per term_bucket floor), not by
-    ``spark.sql.shuffle.partitions``: with the session default (~1 per
-    core) each reduce task would hold corpus_size/cores posting rows —
-    the per-task sort/group spill that erased core scaling at 6M docs.
-    HashPartitioning(seg_id, term_bucket, K) satisfies the groupBy's
-    clustering requirement, so no second shuffle is added.
-
-    Grouping by (seg_id, term_bucket), NOT seg_id alone, keeps one task
-    at 1/(segments*buckets) of the postings — a Zipf-head term is
-    processed as ``num_segments`` independent tasks (the north rule's
-    explicit skew split), never one giant one.
-    """
-    posts = (
-        spark.read.parquet(postings_path)
-        .where(F.col("term").isNotNull())
-        .select("doc_id", "doc_len", "term", "tf", "term_bucket")
-    )
-    k = max(spark.sparkContext.defaultParallelism, term_buckets)
-    blocks = (
-        posts.withColumn(
-            "seg_id", F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int")
-        )
-        .repartition(k, "seg_id", "term_bucket")
-        .groupBy("seg_id", "term_bucket")
-        .applyInPandas(_make_segment_blocks_kernel(block_codec), schema=BLOCKS_SCHEMA)
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")
-        )
-    )
-    parts = ["term_bucket"]
-    if batch_id is not None:
-        blocks = blocks.withColumn("batch_id", F.lit(int(batch_id)))
-        parts = ["batch_id", "term_bucket"]
-    # cluster by the partition column before the partitioned write: the
-    # kernel's (seg_id, term_bucket) tasks each hold rows of EVERY
-    # term_bucket, so a direct write fans out tasks x buckets tiny files
-    # (512 commits at bench scale — the write dominated the whole blocks
-    # phase). One task per bucket writes one file per dir instead; the
-    # blocks relation is ~1/BLOCK_SIZE of the postings, so this shuffle
-    # is noise next to the kernel exchange it follows.
-    blocks = blocks.repartition(term_buckets, *parts)
-    blocks.write.mode("overwrite").partitionBy(*parts).parquet(blocks_path)
 
 
 def finalize_stats(
@@ -608,15 +391,12 @@ def finalize_stats(
     out_dir: str,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
-    block_codec: str = "pfor",
-    num_segments: int = DEFAULT_NUM_SEGMENTS,
-    build_blocks: bool = True,
     derive_doc_stats: bool | None = None,
 ) -> dict:
     """Derive every secondary table from the written postings parquet:
-    doc_stats (per-doc sentinel filter scan), blocks (pruned re-read +
-    segment kernel), term_stats (the only unavoidable full groupBy —
-    map-side combined), then corpus N/avgdl and the sorted term_dict.
+    doc_stats (per-doc sentinel filter scan), term_stats (the only
+    unavoidable full groupBy — map-side combined), then corpus N/avgdl
+    and the sorted term_dict.
 
     ``derive_doc_stats=None`` probes the postings table for sentinel
     rows (one pushdown ``term IS NULL`` row fetch): a fresh batch build
@@ -640,29 +420,19 @@ def finalize_stats(
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "doc_stats"))
         )
-    if build_blocks:
-        _write_blocks_from_postings(
-            spark,
-            postings_path,
-            os.path.join(out_dir, "blocks"),
-            term_buckets=term_buckets,
-            num_segments=num_segments,
-            block_codec=block_codec,
-        )
     (
         postings.where(F.col("term").isNotNull())
         .groupBy("term", "term_bucket")
         .agg(F.count("*").alias("df"))
-        # one writer task per bucket dir (see _write_blocks_from_postings:
-        # an unclustered partitioned write commits tasks x buckets files)
+        # one writer task per bucket dir: an unclustered partitioned
+        # write commits tasks x buckets tiny files
         .repartition(term_buckets, "term_bucket")
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(os.path.join(out_dir, "term_stats"))
     )
     stats = refresh_corpus_stats(
-        spark, out_dir, term_buckets=term_buckets,
-        with_positions=with_positions, block_codec=block_codec,
+        spark, out_dir, term_buckets=term_buckets, with_positions=with_positions,
     )
     rebuild_term_dict(spark, out_dir, n_docs=stats["n_docs"])
     return stats
@@ -715,7 +485,6 @@ def refresh_corpus_stats(
     out_dir: str,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
-    block_codec: str = "pfor",
 ) -> dict:
     """N/avgdl/total_tokens from a FULL scan of doc_stats (one row per
     doc, never the postings) -> corpus_stats.json. This is the batch
@@ -734,7 +503,6 @@ def refresh_corpus_stats(
         "total_tokens": int(row["total_tokens"] or 0),
         "term_buckets": term_buckets,
         "with_positions": with_positions,
-        "block_codec": block_codec,
     }
     _write_corpus_stats(out_dir, stats)
     return stats
@@ -754,7 +522,6 @@ def fold_corpus_stats(
     out_dir: str,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
-    block_codec: str = "pfor",
 ) -> dict:
     """Streaming-path stats refresh: sum the per-batch (n_docs,
     total_tokens) delta rows written by build_postings(batch_id=N) —
@@ -815,7 +582,6 @@ def fold_corpus_stats(
         "total_tokens": total_tokens,
         "term_buckets": term_buckets,
         "with_positions": with_positions,
-        "block_codec": block_codec,
     }
     _write_corpus_stats(out_dir, stats)
     return stats
@@ -869,10 +635,8 @@ def build_index(
     id_col: str = "doc_id",
     slices: int = 1,
     term_buckets: int | None = None,
-    num_segments: int | None = DEFAULT_NUM_SEGMENTS,
-    build_blocks: bool = True,
+    num_segments: int | None = None,
     with_positions: bool = False,
-    block_codec: str = "pfor",
     input_lineage: str = "",
 ) -> dict:
     """Full resumable build: slices -> postings -> derived tables + stats.
@@ -882,29 +646,22 @@ def build_index(
     crashed build resumes by skipping committed slices — the reference
     has no equivalent (its bulk ingest is a sequential HTTP loop,
     reference pkg/server/server.go:253-364). Per slice only the postings
-    table is written (single-pass, persist-free); doc_stats/blocks/
-    term_stats derive from the complete postings parquet in the finalize
-    step — blocks in particular are built ONCE over all slices instead
-    of per-slice incremental runs.
+    table is written (single-pass, persist-free); doc_stats/term_stats
+    derive from the complete postings parquet in the finalize step.
 
-    ``num_segments=None`` / ``term_buckets=None`` (the default) size the
-    segment and bucket counts from the corpus via
-    ``recommended_num_segments`` / ``recommended_term_buckets`` (one
-    shared count job): segments bound the query kernel's worst-case
-    per-task postings, buckets bound the build's per-task sort — both
-    must GROW with the corpus or per-task state eventually outruns each
-    core's memory share and the build stops scaling. Pass explicit
-    values to pin either.
+    ``term_buckets=None`` (the default) sizes the bucket count from the
+    corpus via ``recommended_term_buckets`` (one count job): buckets
+    bound the build's per-task sort, so they must GROW with the corpus
+    or per-task state eventually outruns each core's memory share and
+    the build stops scaling. Pass an explicit value to pin it.
+
+    ``num_segments`` is accepted and ignored: the index has no segment
+    axis any more, and existing callers still pass it.
     """
     n_docs_total = None
-    if num_segments is None or term_buckets is None:
+    if term_buckets is None:
         n_docs_total = docs.count()
-        if num_segments is None:
-            num_segments = recommended_num_segments(
-                n_docs_total, spark.sparkContext.defaultParallelism
-            )
-        if term_buckets is None:
-            term_buckets = recommended_term_buckets(n_docs_total)
+        term_buckets = recommended_term_buckets(n_docs_total)
     os.makedirs(os.path.join(out_dir, "_checkpoints"), exist_ok=True)
     done = completed_slices(out_dir)
     for s in range(slices):
@@ -923,11 +680,8 @@ def build_index(
             text_col=text_col,
             id_col=id_col,
             term_buckets=term_buckets,
-            num_segments=num_segments,
             mode="overwrite" if (s == 0 and not done) else "append",
-            build_blocks=build_blocks,
             with_positions=with_positions,
-            block_codec=block_codec,
         )
         rec = {
             "slice_id": s,
@@ -946,9 +700,7 @@ def build_index(
         os.replace(tmp, _ckpt_path(out_dir, s))
     stats = finalize_stats(
         spark, out_dir, term_buckets=term_buckets,
-        with_positions=with_positions, block_codec=block_codec,
-        num_segments=num_segments, build_blocks=build_blocks,
-        derive_doc_stats=True,
+        with_positions=with_positions, derive_doc_stats=True,
     )
     from gopensearch_spark.search.readers import invalidate
 
@@ -962,21 +714,19 @@ CONSOLIDATED_BATCH_ID = -1  # partition value for compacted streaming runs
 def compact_streaming_index(
     spark: SparkSession,
     index_dir: str,
-    num_segments: int = DEFAULT_NUM_SEGMENTS,
 ) -> dict:
     """Compact a multi-batch STREAMING index in place — RENAME-FREE.
 
-    Every micro-batch appends its own (term, seg) block runs and
-    per-batch delta rows; after B batches a term's postings are spread
-    over B sorted runs and df/stat lookups sum B delta rows. This merges
-    everything back to one run per term — the same salted
-    repartition-by-term + (seg_id, term_bucket) skew-split as
+    Every micro-batch appends its own posting runs and per-batch delta
+    rows; after B batches a term's postings are spread over B sorted
+    runs and df/stat lookups sum B delta rows. This merges everything
+    back to one run per term — the same repartition-by-term + sort as
     ``compact_index`` — while KEEPING the ``batch_id`` partition axis
     (consolidated under ``batch_id=-1``) so the parquet layout stays
     consistent and FUTURE micro-batches keep appending under their own
     ``batch_id=N`` partitions:
 
-    - postings/blocks/doc_stats/term_stats rewritten under
+    - postings/doc_stats/term_stats rewritten under
       ``batch_id=-1``; batch_stats collapses to ONE consolidated row, so
       ``fold_corpus_stats`` stays O(#batches-since-compaction);
     - doc_stats copied from the SOURCE doc_stats (zero-token docs stay
@@ -1000,15 +750,14 @@ def compact_streaming_index(
     gen = current_generation(index_dir)
     src_stats = read_corpus_stats(index_dir)
     term_buckets = src_stats["term_buckets"]
-    block_codec = src_stats.get("block_codec", "varint")
     with_positions = bool(src_stats.get("with_positions"))
     dst = os.path.join(index_dir, f"gen-{gen + 1}")
     shutil.rmtree(dst, ignore_errors=True)  # junk from a crashed attempt
 
     cb = F.lit(int(CONSOLIDATED_BATCH_ID))
     # persist-free merge (same rationale as the batch build): the merged
-    # postings are written once, then term_stats/blocks derive from the
-    # WRITTEN parquet with column-pruned re-reads — a compaction input
+    # postings are written once, then term_stats derives from the
+    # WRITTEN parquet with a column-pruned re-read — a compaction input
     # is O(index), far past what a cached relation holds at scale.
     flat = (
         spark.read.parquet(os.path.join(src, "postings"))
@@ -1052,18 +801,8 @@ def compact_streaming_index(
         .partitionBy("batch_id", "term_bucket")
         .parquet(os.path.join(dst, "term_stats"))
     )
-    _write_blocks_from_postings(
-        spark,
-        os.path.join(dst, "postings"),
-        os.path.join(dst, "blocks"),
-        term_buckets=term_buckets,
-        num_segments=num_segments,
-        block_codec=block_codec,
-        batch_id=CONSOLIDATED_BATCH_ID,
-    )
     stats = fold_corpus_stats(
-        spark, dst, term_buckets=term_buckets,
-        with_positions=with_positions, block_codec=block_codec,
+        spark, dst, term_buckets=term_buckets, with_positions=with_positions,
     )
     rebuild_term_dict(spark, dst, n_docs=stats["n_docs"])
     # THE commit: one atomic pointer write; everything before this line
@@ -1076,6 +815,8 @@ def compact_streaming_index(
     return stats
 
 
+# "blocks" is no longer written; it stays listed so cleanup still removes
+# the blocks dir of an index built before the flat-only layout
 _TABLE_DIRS = ("postings", "blocks", "doc_stats", "term_stats", "batch_stats", "term_dict")
 
 
@@ -1102,35 +843,25 @@ def compact_index(
     src_dir: str,
     dst_dir: str,
     term_buckets: int | None = None,
-    num_segments: int = DEFAULT_NUM_SEGMENTS,
-    block_codec: str | None = None,
 ) -> dict:
     """Merge a multi-slice (fragmented) index into one compacted index.
 
-    Each resumable slice appends its own parquet files per term_bucket
-    and its own (term, seg) block runs, so after S slices a term's
-    postings are spread over S sorted runs. Compaction is the explicit
-    salted segment merge of the north rule:
+    Each resumable slice appends its own parquet files per term_bucket,
+    so after S slices a term's postings are spread over S sorted runs.
+    Compaction repartitions the postings by term (``term_bucket =
+    pmod(xxhash64(term), B)``) and re-sorts them by (term, doc_id)
+    within each bucket — one sorted run per term again.
 
-    - **salted repartition-by-term**: postings shuffle on
-      ``term_bucket = pmod(xxhash64(term), B)`` and are re-sorted by
-      (term, doc_id) within each bucket — one sorted run per term again.
-    - **skew splitting for head terms**: blocks rebuild under the
-      (seg_id, term_bucket) grouping, so a Zipf-head term (a stopword
-      with ~N postings at 10^12 docs) is processed as ``num_segments``
-      independent tasks, never one giant one.
-
-    Writes a complete new index at ``dst_dir`` (postings, blocks,
-    doc_stats, term_stats, corpus_stats) and leaves ``src_dir``
-    untouched — swap-in is the caller's atomic rename.
+    Writes a complete new index at ``dst_dir`` (postings, doc_stats,
+    term_stats, corpus_stats) and leaves ``src_dir`` untouched — swap-in
+    is the caller's atomic rename.
     """
     src_stats = read_corpus_stats(src_dir)
     term_buckets = term_buckets or src_stats["term_buckets"]
-    block_codec = block_codec or src_stats.get("block_codec", "varint")
     with_positions = bool(src_stats.get("with_positions"))
 
     # persist-free merge: write the re-sorted postings once, then derive
-    # blocks/term_stats from the WRITTEN parquet (see build_postings)
+    # term_stats from the WRITTEN parquet (see build_postings)
     flat = (
         spark.read.parquet(os.path.join(src_dir, "postings"))
         .where(F.col("term").isNotNull())  # drop per-doc sentinels
@@ -1156,9 +887,7 @@ def compact_index(
     )
     stats = finalize_stats(
         spark, dst_dir, term_buckets=term_buckets,
-        with_positions=with_positions, block_codec=block_codec,
-        num_segments=num_segments, build_blocks=True,
-        derive_doc_stats=False,
+        with_positions=with_positions, derive_doc_stats=False,
     )
     from gopensearch_spark.search.readers import invalidate
 

@@ -7,7 +7,7 @@ Cluster usage (the north-rule deployment shape):
         gopensearch_spark/jobs/build_index_job.py \\
         --input cat.db.web_pages --format iceberg \\
         --output s3://bucket/index --slices 64 \\
-        --term-buckets 1024 --segments 256
+        --term-buckets 1024
 
 Sandbox usage (no Iceberg catalog jar; same DataFrame program):
 
@@ -18,12 +18,10 @@ The job is resumable: each slice commits a checkpoint with lineage and
 doc/term/byte metrics (gopensearch_spark/index/builder.py); re-running
 after a crash skips committed slices. Prints one JSON metrics line.
 
-Sizing: by default both term_buckets and segments are CORPUS-SIZED
-(recommended_term_buckets / recommended_num_segments — constant per-task
-sort and kernel units at any scale); pass explicit values only to pin a
-layout. slices ~ O(1000) at 10^12 docs so one slice is a few 10^9 docs;
-segments are the skew axis — a stopword's postings split across all of
-them.
+Sizing: by default term_buckets is CORPUS-SIZED
+(recommended_term_buckets — a constant per-task sort unit at any
+scale); pass an explicit value only to pin a layout. slices ~ O(1000)
+at 10^12 docs so one slice is a few 10^9 docs.
 """
 
 from __future__ import annotations
@@ -44,14 +42,8 @@ def main(argv: list[str] | None = None) -> int:
                    help="postings bucket count; default: corpus-sized "
                         "(recommended_term_buckets, ~2M posting rows per "
                         "sorted bucket)")
-    p.add_argument("--segments", type=int, default=None,
-                   help="doc-hash segment count; default: corpus-sized "
-                        "(recommended_num_segments)")
-    p.add_argument("--no-blocks", action="store_true", help="skip compressed block index")
     p.add_argument("--positions", action="store_true",
                    help="store per-posting position lists (phrase queries)")
-    p.add_argument("--block-codec", default="varint", choices=["varint", "pfor"],
-                   help="posting-block compression codec")
     p.add_argument("--master", default=None, help="override master (tests); spark-submit normally provides it")
     args = p.parse_args(argv)
 
@@ -73,10 +65,7 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         slices=args.slices,
         term_buckets=args.term_buckets,
-        num_segments=args.segments,
-        build_blocks=not args.no_blocks,
         with_positions=args.positions,
-        block_codec=args.block_codec,
         input_lineage=f"{args.format}:{args.input}",
     )
     elapsed = time.time() - t0

@@ -1,12 +1,12 @@
-"""spark-submit entrypoint: compact a multi-slice index (segment merge).
+"""spark-submit entrypoint: compact a multi-slice index (run merge).
 
     spark-submit --py-files gopensearch_spark.zip \\
         gopensearch_spark/jobs/compact_index_job.py \\
         --src s3://bucket/index --dst s3://bucket/index_compacted
 
-Performs the salted repartition-by-term merge with (seg_id, term_bucket)
-skew splitting (gopensearch_spark/index/builder.py compact_index) and
-prints one JSON metrics line. The source index is left untouched.
+Performs the repartition-by-term merge back to one sorted run per term
+(gopensearch_spark/index/builder.py compact_index) and prints one JSON
+metrics line. The source index is left untouched.
 """
 
 from __future__ import annotations
@@ -22,8 +22,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--src", required=True)
     p.add_argument("--dst", required=True)
     p.add_argument("--term-buckets", type=int, default=None)
-    p.add_argument("--segments", type=int, default=32)
-    p.add_argument("--block-codec", default=None, choices=[None, "varint", "pfor"])
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
@@ -32,12 +30,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("gopensearch-compact-index", master=args.master)
     t0 = time.time()
-    stats = compact_index(
-        spark, args.src, args.dst,
-        term_buckets=args.term_buckets,
-        num_segments=args.segments,
-        block_codec=args.block_codec,
-    )
+    stats = compact_index(spark, args.src, args.dst, term_buckets=args.term_buckets)
     print(json.dumps({
         "job": "compact_index",
         "src": args.src,

@@ -5,7 +5,7 @@ the build job):
 
     spark-submit --py-files gopensearch_spark.zip \\
         gopensearch_spark/jobs/query_job.py \\
-        --index s3://bucket/index --engine wand \\
+        --index s3://bucket/index \\
         --query "spark join" --mode and --k 10
 
 Batch mode reads one query per line and reports per-query latency plus
@@ -14,11 +14,9 @@ the p50/p95 summary the baseline tracks:
     python gopensearch_spark/jobs/query_job.py \\
         --index /tmp/idx --queries-file queries.txt --repeat 3
 
-`--engine wand` (default) serves through the block-max WAND path —
-block skipping bounds the decode to candidate blocks, so a head term's
-full posting list never materializes; `--engine flat` runs the pure
-Catalyst flat-postings plan (the two are rank-identical, fuzz-pinned).
-`warm_index` is called once up front, exactly like a serving process.
+Each query runs as ``bm25_match``, the flat-postings Catalyst plan
+(rank-identical to FTS5, fuzz-pinned). `warm_index` is called once up
+front, exactly like a serving process.
 Prints one JSON line per query and one summary line.
 """
 
@@ -44,7 +42,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="file with one query per line")
     p.add_argument("--mode", default="and", choices=["and", "or"])
     p.add_argument("--k", type=int, default=10)
-    p.add_argument("--engine", default="wand", choices=["wand", "flat"])
     p.add_argument("--repeat", type=int, default=1,
                    help="timed repetitions per query (latency stats use "
                         "the per-query minimum — steal-robust)")
@@ -59,7 +56,7 @@ def main(argv: list[str] | None = None) -> int:
     if not queries:
         raise SystemExit("no queries: pass --query or --queries-file")
 
-    from gopensearch_spark.search import bm25_scores, wand_match, warm_index
+    from gopensearch_spark.search import bm25_match, warm_index
     from gopensearch_spark.session import get_spark
 
     spark = get_spark("gopensearch-query", master=args.master)
@@ -71,25 +68,18 @@ def main(argv: list[str] | None = None) -> int:
         rows = []
         for _ in range(max(1, args.repeat)):
             t0 = time.time()
-            if args.engine == "wand":
-                df = wand_match(spark, args.index, q, k=args.k, mode=args.mode)
-            else:
-                from pyspark.sql import functions as F
-
-                df = (bm25_scores(spark, args.index, q, mode=args.mode)
-                      .orderBy(F.desc("score"), F.asc("doc_id"))
-                      .limit(args.k))
+            df = bm25_match(spark, args.index, q, k=args.k, mode=args.mode)
             rows = [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         lats.append(best)
         print(json.dumps({
             "query": q, "mode": args.mode, "k": args.k,
-            "engine": args.engine, "latency_sec": round(best, 4),
+            "latency_sec": round(best, 4),
             "hits": [{"doc_id": d, "score": s} for d, s in rows],
         }))
     print(json.dumps({
-        "job": "query", "index": args.index, "engine": args.engine,
+        "job": "query", "index": args.index,
         "n_queries": len(queries),
         "p50_sec": round(_percentile(lats, 0.5), 4),
         "p95_sec": round(_percentile(lats, 0.95), 4),

@@ -8,7 +8,7 @@ Cluster usage (the north-rule deployment shape):
         gopensearch_spark/jobs/stream_index_job.py \\
         --input s3://bucket/web_pages_inbox --index s3://bucket/index \\
         --checkpoint s3://bucket/index_cp --term-buckets 1024 \\
-        --segments 256 --max-files-per-trigger 64
+        --max-files-per-trigger 64
 
 Sandbox usage:
 
@@ -38,9 +38,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--index", required=True)
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--term-buckets", type=int, default=64)
-    p.add_argument("--segments", type=int, default=32)
     p.add_argument("--positions", action="store_true")
-    p.add_argument("--block-codec", default="varint", choices=["varint", "pfor"])
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument("--drain", action="store_true",
                    help="trigger availableNow: index the backlog and exit")
@@ -57,9 +55,7 @@ def main(argv: list[str] | None = None) -> int:
         a.index,
         a.checkpoint,
         term_buckets=a.term_buckets,
-        num_segments=a.segments,
         with_positions=a.positions,
-        block_codec=a.block_codec,
         available_now=a.drain,
         max_files_per_trigger=a.max_files_per_trigger,
     )

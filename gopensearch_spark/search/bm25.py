@@ -25,12 +25,9 @@ A term repeated in the query contributes once per occurrence (its idf
 is weighted by the count), as FTS5 and Lucene's per-token clauses score
 it; AND still requires each distinct term once.
 
-Plan rule for a pure ``match`` top-k (``wand.match_topk``): this
-relation, ordered and limited, serves every query whose total postings
-(the sum of its terms' dfs) stay below ``wand.FLAT_TOPK_MAX_POSTINGS``.
-Up to there it was measured to beat the WAND kernel, whose
-Python-worker round trip and decode cost more than scoring the
-postings on the JVM.
+This relation, ordered and limited (``bm25_match``), is the one BM25
+top-k engine: every ``match`` top-k runs as JVM-only work, with no
+Python worker.
 """
 
 from __future__ import annotations
@@ -85,10 +82,8 @@ def bm25_scores(
     query terms (the Lucene minimum-should-match floor; `more_like_this`
     rides this). Ignored under mode='and' (which already requires all).
 
-    idfs resolve DRIVER-SIDE through the memoized term_dfs lookup (the
-    same values the WAND serving path uses — score identity with FTS5
-    and the flat/WAND cross-check is pinned in the rank-identity
-    suites), riding the postings scan as a literal term->idf map: no
+    idfs resolve DRIVER-SIDE through the memoized term_dfs lookup (score
+    identity with FTS5 is pinned in the rank-identity suites), riding the postings scan as a literal term->idf map: no
     per-query term_stats scan, no broadcast build job."""
     from gopensearch_spark.analysis import normalize_query_terms
     from gopensearch_spark.search.readers import corpus_stats, index_table, term_dfs

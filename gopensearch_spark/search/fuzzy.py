@@ -20,8 +20,8 @@ Semantics (pinned, oracle-checked):
   (`transpositions=true`, Damerau) costs 1 — a documented divergence,
 - scoring = EXACTLY an OR match over the expanded terms: per-term
   df/idf, per-doc contributions sum — the same `a OR b OR c` unit
-  semantics as the rest of this engine (FTS5-pinned), served through
-  block-max WAND for top-k and the flat relation for `k=None`.
+  semantics as the rest of this engine (FTS5-pinned), served by
+  ``bm25_match`` for top-k and the unlimited relation for `k=None`.
 
 Scale shape: the expansion runs on the `term_dict` side table —
 (term, df), O(distinct terms), range-partitioned and sorted — never on
@@ -123,8 +123,7 @@ def fuzzy_match(
     """Top-k BM25 for a fuzzy term (``k=None`` = unordered scoring
     relation for the Engine's filter composition)."""
     from gopensearch_spark.analysis import tokenize
-    from gopensearch_spark.search.bm25 import bm25_scores
-    from gopensearch_spark.search.wand import wand_match
+    from gopensearch_spark.search.bm25 import bm25_match, bm25_scores
 
     toks = tokenize(value)
     if len(toks) != 1:
@@ -141,7 +140,7 @@ def fuzzy_match(
         return spark.createDataFrame([], _EMPTY)
     if k is None:
         return bm25_scores(spark, index_dir, terms, mode="or")
-    return wand_match(spark, index_dir, terms, k=k, mode="or")
+    return bm25_match(spark, index_dir, terms, k=k, mode="or")
 
 
 def regexp_expand(
@@ -186,8 +185,7 @@ def regexp_match(
     scoring relation). Scoring = an OR over the expanded terms, the same
     unit semantics as fuzzy_match (each matched vocabulary term keeps
     its OWN df/idf; per-doc contributions sum)."""
-    from gopensearch_spark.search.bm25 import bm25_scores
-    from gopensearch_spark.search.wand import wand_match
+    from gopensearch_spark.search.bm25 import bm25_match, bm25_scores
 
     terms = regexp_expand(
         spark, index_dir, pattern, case_insensitive, max_expansions
@@ -196,7 +194,7 @@ def regexp_match(
         return spark.createDataFrame([], _EMPTY)
     if k is None:
         return bm25_scores(spark, index_dir, terms, mode="or")
-    return wand_match(spark, index_dir, terms, k=k, mode="or")
+    return bm25_match(spark, index_dir, terms, k=k, mode="or")
 
 
 def term_suggest(

@@ -263,16 +263,14 @@ def _prefix_match(
         if len(expansion) == 1:
             # SINGLE-expansion prefix (common for head-term prefixes):
             # the unit's df and per-doc tf equal the one term's, so BM25
-            # is identical to a plain term query — serve it through the
-            # block-max WAND path instead of shuffling + persisting the
-            # term's full (doc_id, tf) relation (measured 9.8s -> WAND
-            # head-term time on a df=4.7M prefix at 6M docs, local[8]).
-            from gopensearch_spark.search.bm25 import bm25_scores
-            from gopensearch_spark.search.wand import wand_match
+            # is identical to a plain term query — serve it as one
+            # instead of shuffling + persisting the term's full
+            # (doc_id, tf) relation.
+            from gopensearch_spark.search.bm25 import bm25_match, bm25_scores
 
             if k is None:
                 return bm25_scores(spark, index_dir, expansion, mode="or")
-            return wand_match(spark, index_dir, expansion, k=k, mode="or")
+            return bm25_match(spark, index_dir, expansion, k=k, mode="or")
         # resolve the prefix against the SORTED term dictionary first: a
         # tiny job (parquet min/max skipping answers the startswith over
         # sorted runs) yielding the <= n_buckets distinct term_buckets

@@ -42,69 +42,29 @@ class TermDfs(dict):
 _DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 _STATS_CACHE: dict[str, tuple[int, dict]] = {}
 _TERM_DF_CACHE: dict[tuple[int, str], TermDfs] = {}
-_HOT_BLOCKS: dict[tuple[int, str], DataFrame] = {}
 
 
-def warm_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Pin the blocks table in memory, hash-partitioned by seg_id — the
-    serving-cluster posture for a HOT index.
+def warm_index(spark: SparkSession, index_dir: str) -> TermDfs:
+    """Pin the index's full term -> df map on the driver — the
+    serving posture for a HOT index.
 
-    Once warmed, every wand/phrase query's per-segment kernel reads the
-    in-memory relation with NO per-query parquet scan and NO per-query
-    shuffle: HashPartitioning(seg_id) already satisfies the
-    applyInPandas ClusteredDistribution, so the query plan is one
-    kernel stage over cached batches (InMemoryTableScan prunes batches
-    on the pushed term predicate via per-batch column stats). The warm
-    is explicit opt-in — a 10^12-doc index does not fit executor
-    memory, and MEMORY_AND_DISK degrades gracefully for the blocks.
-
-    The warm also pins the index's full term -> df map on the driver
-    (one Arrow collect, see ``_load_term_dfs``), so ``term_dfs``
-    answers every term with no Spark job. That makes a query's total
-    postings (the sum of its terms' dfs) free before planning, and
-    ``wand.match_topk`` plans a pure ``match`` by it: below
-    ``wand.FLAT_TOPK_MAX_POSTINGS`` the JVM-only flat ``bm25_scores``
-    relation serves the top-k (no Python worker), at or above it the
-    block-max WAND kernel does. Unlike the blocks, the map does not
-    spill: it costs driver memory in proportion to the vocabulary
-    (about 130 bytes a term in CPython, ~13 MB for 100k terms, plus
-    the pandas frame while it is collected), so an index whose
-    vocabulary does not fit the driver must not be warmed.
-    Writers invalidate() both caches like every other handle."""
-    from pyspark.storagelevel import StorageLevel
-
+    One Arrow collect (see ``_load_term_dfs``) loads every term, so
+    ``term_dfs`` then answers any query term with no Spark job, and a
+    warm ``match`` runs with no df lookup and no Python worker. The map costs
+    driver memory in proportion to the vocabulary (about 130 bytes a
+    term in CPython, ~13 MB for 100k terms, plus the pandas frame while
+    it is collected), so an index whose vocabulary does not fit the
+    driver must not be warmed. Nothing is persisted on the executors.
+    Writers invalidate() the map like every other handle."""
     corpus_stats(index_dir)  # version check: drops warm state of an older version
     key = (id(spark), resolve_index_dir(index_dir))
     if not _TERM_DF_CACHE.get(key, TermDfs()).complete:
         _TERM_DF_CACHE[key] = _load_term_dfs(spark, index_dir)
-    df = _HOT_BLOCKS.get(key)
-    if df is None:
-        # sortWithinPartitions(term) is what makes the cache PRUNE: the
-        # cached relation keeps per-batch column min/max stats, and a
-        # term-clustered layout lets InMemoryTableScan skip every batch
-        # outside the query's terms (the in-memory analogue of the
-        # term_bucket partition pruning the parquet path gets). Without
-        # it each query scans ALL cached batches — measured 2.8x SLOWER
-        # than the cold path on a 6M-doc index.
-        df = (
-            index_table(spark, index_dir, "blocks")
-            .repartition("seg_id")
-            .sortWithinPartitions("term")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        df.count()  # materialize before first query
-        _HOT_BLOCKS[key] = df
-    return df
-
-
-def hot_blocks(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """The warmed blocks relation, or None when the index isn't hot
-    (queries then read parquet as usual — warming is never implicit)."""
-    return _HOT_BLOCKS.get((id(spark), resolve_index_dir(index_dir)))
+    return _TERM_DF_CACHE[key]
 
 
 def index_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
-    """`postings` / `term_stats` / `blocks` / `doc_stats` reader, memoized.
+    """`postings` / `term_stats` / `doc_stats` reader, memoized.
 
     Cache keys hold the RESOLVED generation dir, so a pointer flip
     (rename-free compaction) naturally misses the stale handle even
@@ -120,8 +80,8 @@ def index_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
 def corpus_stats(index_dir: str) -> dict:
     """The index's corpus stats, memoized on the file's mtime. A changed
     mtime under a cached entry means the directory was rewritten without
-    ``invalidate`` (e.g. by another process): every cached handle, df
-    map and hot relation on it is stale and is dropped here. Query entry
+    ``invalidate`` (e.g. by another process): every cached handle and df
+    map on it is stale and is dropped here. Query entry
     points read the stats before any other cache, so this is the one
     version check they need."""
     resolved = resolve_index_dir(index_dir)
@@ -187,20 +147,14 @@ def invalidate(index_dir: str | None = None) -> None:
     """Drop cached handles (all, or one index) — call after a rebuild.
     Prefix-matched: cache keys may hold generation subdirs of the index
     (``<dir>/gen-N``), which must invalidate with their root."""
-    global _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE, _HOT_BLOCKS
+    global _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE
     if index_dir is None:
-        for df in _HOT_BLOCKS.values():
-            df.unpersist()
-        _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE, _HOT_BLOCKS = {}, {}, {}, {}
+        _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE = {}, {}, {}
         return
 
     def _keep(path: str) -> bool:
         return path != index_dir and not path.startswith(index_dir.rstrip(os.sep) + os.sep)
 
-    for k, df in list(_HOT_BLOCKS.items()):
-        if not _keep(k[1]):
-            df.unpersist()
-            del _HOT_BLOCKS[k]
     _DF_CACHE = {k: v for k, v in _DF_CACHE.items() if _keep(k[1])}
     _STATS_CACHE = {k: v for k, v in _STATS_CACHE.items() if _keep(k)}
     _TERM_DF_CACHE = {k: v for k, v in _TERM_DF_CACHE.items() if _keep(k[1])}

@@ -55,23 +55,10 @@ def _batch_ckpt(index_dir: str, batch_id: int) -> str:
 def _make_batch_handler(
     index_dir: str,
     term_buckets: int,
-    num_segments: int,
     with_positions: bool,
-    block_codec: str,
     compact_every: int | None = None,
 ):
     from gopensearch_spark.webtext import prepare_corpus
-
-    # codec continuity: appending to an EXISTING index must keep writing
-    # that index's block codec — a default flip (varint -> pfor, round 5)
-    # must never mix codecs inside one index, because the reader resolves
-    # ONE codec per index from corpus_stats
-    try:
-        from gopensearch_spark.index.builder import read_corpus_stats
-
-        block_codec = read_corpus_stats(index_dir).get("block_codec", block_codec)
-    except (OSError, ValueError):
-        pass  # fresh index: the requested codec applies
 
     def handle(batch_df, batch_id: int) -> None:
         if os.path.exists(_batch_ckpt(index_dir, batch_id)):
@@ -82,9 +69,7 @@ def _make_batch_handler(
             corpus,
             index_dir,
             term_buckets=term_buckets,
-            num_segments=num_segments,
             with_positions=with_positions,
-            block_codec=block_codec,
             batch_id=batch_id,  # idempotent per-batch partitions + df deltas
         )
         # O(#batches) stats fold — sums the one-row-per-batch deltas
@@ -93,7 +78,7 @@ def _make_batch_handler(
         # tests/test_streaming.py::test_batch_stats_never_rescan_older_batches)
         stats = fold_corpus_stats(
             batch_df.sparkSession, index_dir, term_buckets=term_buckets,
-            with_positions=with_positions, block_codec=block_codec,
+            with_positions=with_positions,
         )
         # incremental term_dict (O(distinct terms)): prefix queries
         # partition-prune on streaming indexes too
@@ -116,17 +101,15 @@ def _make_batch_handler(
         os.replace(tmp, _batch_ckpt(index_dir, batch_id))
         if compact_every and (batch_id + 1) % compact_every == 0:
             # amortized in-stream compaction: merge the accumulated
-            # per-batch runs back to one sorted run per term (salted
-            # repartition-by-term + skew-split blocks) so query-side
+            # per-batch runs back to one sorted run per term
+            # (repartition-by-term + sort) so query-side
             # run counts and df-delta rows stay bounded. Runs AFTER the
             # batch's commit record: a crash mid-compaction replays
             # nothing (the batch is committed; the old index dir is
             # only swapped once the compacted one is complete).
             from gopensearch_spark.index.builder import compact_streaming_index
 
-            compact_streaming_index(
-                batch_df.sparkSession, index_dir, num_segments=num_segments
-            )
+            compact_streaming_index(batch_df.sparkSession, index_dir)
 
     return handle
 
@@ -137,9 +120,7 @@ def start_streaming_index(
     index_dir: str,
     checkpoint_dir: str,
     term_buckets: int = 16,
-    num_segments: int = 8,
     with_positions: bool = False,
-    block_codec: str = "pfor",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
@@ -157,8 +138,7 @@ def start_streaming_index(
     stream = reader.parquet(input_path)
     writer = (
         stream.writeStream.foreachBatch(
-            _make_batch_handler(index_dir, term_buckets, num_segments,
-                                with_positions, block_codec,
+            _make_batch_handler(index_dir, term_buckets, with_positions,
                                 compact_every=compact_every)
         )
         .option("checkpointLocation", checkpoint_dir)

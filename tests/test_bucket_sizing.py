@@ -1,8 +1,8 @@
 """Corpus-sized term buckets + per-doc sentinel invariants.
 
 The single-pass batch build (round 4) writes one NULL-term sentinel row
-per document into the postings table and derives doc_stats/blocks/
-term_stats from the written parquet; term_buckets auto-size with the
+per document into the postings table and derives doc_stats/term_stats
+from the written parquet; term_buckets auto-size with the
 corpus so the per-bucket sort unit stays ~constant at any scale.
 """
 import os
@@ -47,7 +47,7 @@ def test_per_doc_sentinels_and_derived_doc_stats(spark, tmp_path):
     rows = [(i, f"alpha beta w{i % 7}" if i % 5 else "") for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     idx = str(tmp_path / "idx")
-    stats = build_index(spark, docs, idx, term_buckets=8, num_segments=4)
+    stats = build_index(spark, docs, idx, term_buckets=8)
 
     post = spark.read.parquet(os.path.join(idx, "postings"))
     sent = post.where(F.col("term").isNull())
@@ -68,8 +68,6 @@ def test_per_doc_sentinels_and_derived_doc_stats(spark, tmp_path):
     # term-level tables never contain the sentinels
     ts = spark.read.parquet(os.path.join(idx, "term_stats"))
     assert ts.where(F.col("term").isNull()).count() == 0
-    blocks = spark.read.parquet(os.path.join(idx, "blocks"))
-    assert blocks.where(F.col("term").isNull()).count() == 0
 
 
 def test_auto_bucket_build_records_count(spark, tmp_path):
@@ -80,7 +78,7 @@ def test_auto_bucket_build_records_count(spark, tmp_path):
         [(i, f"alpha w{i % 13}") for i in range(300)], "doc_id long, text string"
     )
     idx = str(tmp_path / "idx")
-    build_index(spark, docs, idx, term_buckets=None, num_segments=4)
+    build_index(spark, docs, idx, term_buckets=None)
     # tiny corpus -> the adaptive floor; recorded so query-side bucket
     # hashing (term_buckets_for) agrees with the layout
     expect = recommended_term_buckets(300)

@@ -1,8 +1,8 @@
-"""ES bulk/template protocol parity, driven by the REFERENCE'S OWN
-fixtures (reference pkg/server/testdata/bulk-1.ndjson +
-span.template.json) and reproducing the hit-count assertions of
-reference pkg/server/sql_test.go:108-229 through the equivalent Python
-API (no HTTP layer — SURVEY.md §2.11)."""
+"""ES bulk/template protocol parity, driven by fixtures rebuilt from the
+reference's own (pkg/server/testdata/bulk-1.ndjson + span.template.json,
+see FIXTURES.md §2-4; checked in under tests/fixtures/) and reproducing
+the hit-count assertions of reference pkg/server/sql_test.go:108-229
+through the equivalent Python API (no HTTP layer — SURVEY.md §2.11)."""
 
 import json
 import os
@@ -11,7 +11,7 @@ import pytest
 
 from gopensearch_spark.dsl import Engine
 
-REF_TESTDATA = "/root/reference/pkg/server/testdata"
+REF_TESTDATA = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
 @pytest.fixture(scope="module")

@@ -44,51 +44,6 @@ def test_delta_compression_ratio():
     assert len(buf) < 10_000 * 2
 
 
-def test_postings_roundtrip():
-    rng = np.random.default_rng(42)
-    ids = np.unique(rng.integers(0, 2**32, 1000)).astype(np.uint64)
-    tfs = rng.integers(1, 50, ids.size).astype(np.uint64)
-    ib, tb = codecs.encode_postings(ids, tfs)
-    ids2, tfs2 = codecs.decode_postings(ib, tb)
-    assert (ids2 == ids).all() and (tfs2 == tfs).all()
-
-
-# --- PForDelta ----------------------------------------------------------------
-
-def test_pfor_roundtrip_distributions():
-    import numpy as np
-
-    from gopensearch_spark import codecs
-
-    rng = np.random.default_rng(3)
-    for trial in range(100):
-        n = int(rng.integers(0, 400))
-        kind = trial % 4
-        if kind == 0:
-            v = rng.integers(0, 64, n).astype(np.uint64)
-        elif kind == 1:
-            v = rng.integers(0, 2**45, n).astype(np.uint64)
-        elif kind == 2:  # skewed: mostly tiny, rare huge exceptions
-            v = np.where(rng.random(n) < 0.05,
-                         rng.integers(0, 2**55, n),
-                         rng.integers(0, 8, n)).astype(np.uint64)
-        else:
-            v = np.zeros(n, dtype=np.uint64)
-        assert (codecs.pfor_decode(codecs.pfor_encode(v)) == v).all()
-
-
-def test_delta_pfor_roundtrip_and_size():
-    import numpy as np
-
-    from gopensearch_spark import codecs
-
-    rng = np.random.default_rng(4)
-    ids = np.cumsum(rng.integers(1, 64, 128).astype(np.uint64))
-    assert (codecs.delta_pfor_decode(codecs.delta_pfor_encode(ids)) == ids).all()
-    # dense gaps: bit-packing beats per-byte varint
-    assert len(codecs.delta_pfor_encode(ids)) < len(codecs.delta_encode(ids))
-
-
 def test_delta_encode_chunks_matches_per_chunk():
     import numpy as np
 
@@ -101,23 +56,3 @@ def test_delta_encode_chunks_matches_per_chunk():
     lengths = np.array([c.size for c in chunks])
     got = codecs.delta_encode_chunks(flat, lengths)
     assert got == [codecs.delta_encode(c) for c in chunks]
-
-
-def test_wand_rank_identity_on_pfor_index(spark, docs_small, oracle_small, tmp_path):
-    """Same top-k through a delta+PForDelta-compressed block index."""
-    from gopensearch_spark.index import build_index
-    from gopensearch_spark.search import wand_match
-
-    out = str(tmp_path / "idx_pfor")
-    build_index(spark, docs_small, out, slices=1, term_buckets=16,
-                num_segments=8, block_codec="pfor",
-                input_lineage="sf0.001/documents.parquet")
-    import math
-
-    for terms, mode in [(["spark", "join"], "or"), (["merge", "sort", "batch"], "and"), (["data"], "or")]:
-        ref = oracle_small.match(terms, k=25, mode=mode)
-        got = [(int(r["doc_id"]), float(r["score"]))
-               for r in wand_match(spark, out, terms, k=25, mode=mode).collect()]
-        assert len(got) == len(ref)
-        for (d1, s1), (d2, s2) in zip(got, ref):
-            assert d1 == d2 and math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12)

@@ -56,7 +56,7 @@ def _assert_identical(ours, ref):
 def test_build_counts_empty_docs_like_fts5(spark, tmp_path, oracle):
     out = str(tmp_path / "idx")
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    stats = build_index(spark, docs, out, term_buckets=4, num_segments=2)
+    stats = build_index(spark, docs, out, term_buckets=4)
     assert stats["n_docs"] == 6  # empty docs counted, exactly like FTS5 nRow
     assert math.isclose(stats["avg_doc_len"], 13 / 6)
     for terms, mode in [(["spark"], "or"), (["spark", "data"], "and"),
@@ -70,8 +70,8 @@ def test_build_counts_empty_docs_like_fts5(spark, tmp_path, oracle):
 def test_batch_compaction_preserves_empty_docs(spark, tmp_path, oracle):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    s0 = build_index(spark, docs, src, slices=2, term_buckets=4, num_segments=2)
-    s1 = compact_index(spark, src, dst, num_segments=2)
+    s0 = build_index(spark, docs, src, slices=2, term_buckets=4)
+    s1 = compact_index(spark, src, dst)
     assert (s1["n_docs"], s1["total_tokens"]) == (s0["n_docs"], s0["total_tokens"])
     _assert_identical(
         _ours(wand_match(spark, dst, ["spark"], k=10, mode="or")),
@@ -84,12 +84,12 @@ def test_streaming_compaction_preserves_empty_docs(spark, tmp_path, oracle):
     half = [DOCS[:3], DOCS[3:]]
     for b, chunk in enumerate(half):
         df = spark.createDataFrame(chunk, "doc_id long, text string")
-        build_postings(df, out, term_buckets=4, num_segments=2, batch_id=b)
+        build_postings(df, out, term_buckets=4, batch_id=b)
         stats = fold_corpus_stats(spark, out, term_buckets=4)
         rebuild_term_dict(spark, out, n_docs=stats["n_docs"])
     assert stats["n_docs"] == 6
     before = _ours(wand_match(spark, out, ["spark"], k=10, mode="or"))
-    s1 = compact_streaming_index(spark, out, num_segments=2)
+    s1 = compact_streaming_index(spark, out)
     assert (s1["n_docs"], s1["total_tokens"]) == (6, 13)
     after = _ours(wand_match(spark, out, ["spark"], k=10, mode="or"))
     _assert_identical(after, before)
@@ -105,7 +105,7 @@ def test_fold_corpus_stats_empty_index(spark, tmp_path):
     # a batch with zero rows writes no partitions; fold still works
     build_postings(
         spark.createDataFrame([], "doc_id long, text string"),
-        out, term_buckets=4, num_segments=2, batch_id=0,
+        out, term_buckets=4, batch_id=0,
     )
     stats = fold_corpus_stats(spark, out, term_buckets=4)
     assert stats["n_docs"] == 0 and stats["total_tokens"] == 0

@@ -620,53 +620,46 @@ def test_percentiles_on_json_field(engine, duck):
     assert got["90.0"] == pytest.approx(exp[1])
 
 
-def test_pure_match_serves_from_block_index(engine, monkeypatch):
-    """A bare match query takes the fast path, planned by the query's
-    total postings: past wand.FLAT_TOPK_MAX_POSTINGS (patched to 0 here)
-    the executed plan scans blocks, never flat postings; below it (the
-    default on this small index) it scans flat postings with no Python
-    worker. Either way only top-k ids reach the doc join."""
-    from gopensearch_spark.search import wand
-
+def test_pure_match_serves_from_flat_postings(engine):
+    """A bare match query takes the fast path: the executed plan scans
+    flat postings with no Python worker, and the index side is cut to
+    its top-k before the doc join, so only top-k ids reach it."""
     body = {"query": {"match": {"text": "spark join"}}, "size": 10}
-    default_hits, aggs, _ = engine.search_df("docs", body)
-    plan = _executed_plan(default_hits)
-    assert "/postings" in plan
-    assert "/blocks" not in plan, plan
-    assert "Python" not in plan and "Pandas" not in plan, plan
-    assert aggs == {}
-    monkeypatch.setattr(wand, "FLAT_TOPK_MAX_POSTINGS", 0)
     hits, aggs, _ = engine.search_df("docs", body)
     plan = _executed_plan(hits)
-    assert "/blocks" in plan
-    assert "/postings" not in plan, plan
+    assert "/postings" in plan
+    assert "Python" not in plan and "Pandas" not in plan, plan
+    assert plan.count("TakeOrderedAndProject") == 2, plan  # index top-k + hit page
     assert aggs == {}
-    flat, wand_rows = default_hits.collect(), hits.collect()
-    assert [r["doc_id"] for r in wand_rows] == [r["doc_id"] for r in flat]
-    assert all(math.isclose(a["score"], b["score"], rel_tol=1e-9)
-               for a, b in zip(wand_rows, flat))
     # a match + filter must NOT take the fast path (needs the relation)
     hits2, _, _ = engine.search_df(
         "docs", {"query": {"bool": {"must": [{"match": {"text": "spark"}}],
                                     "filter": [{"term": {"lang": "en"}}]}}, "size": 5})
-    assert "/postings" in _executed_plan(hits2)
+    plan2 = _executed_plan(hits2)
+    assert "/postings" in plan2
+    assert plan2.count("TakeOrderedAndProject") == 1, plan2
 
 
-@pytest.mark.parametrize("threshold", [None, 0], ids=["flat", "wand"])
-def test_repeated_query_terms_score_per_occurrence(engine, oracle_small, monkeypatch,
-                                                   threshold):
-    """`match "spark spark"` scores spark twice, as FTS5 does, on both
-    sides of the top-k plan rule; AND still needs each distinct term."""
-    from gopensearch_spark.search import wand
+@pytest.mark.parametrize("entry", ["flat", "wand"])
+def test_repeated_query_terms_score_per_occurrence(spark, engine, index_small,
+                                                   oracle_small, entry):
+    """`match "spark spark"` scores spark twice, as FTS5 does; AND still
+    needs each distinct term. ``flat`` goes through the Engine's
+    pure-match path; ``wand`` calls the ``wand_match`` name that
+    ``__spark_entry__.py`` and ``bench.py`` serve from."""
+    from gopensearch_spark.search import wand_match
 
-    if threshold is not None:
-        monkeypatch.setattr(wand, "FLAT_TOPK_MAX_POSTINGS", threshold)
     for text, op in [("spark spark", "and"), ("spark join spark", "and"),
                      ("spark join spark", "or")]:
-        body = {"query": {"match": {"text": {"query": text, "operator": op}}},
-                "size": 10}
-        got = [(int(h["_id"]), h["_score"])
-               for h in engine.search("docs", body)["hits"]["hits"]]
+        if entry == "flat":
+            body = {"query": {"match": {"text": {"query": text, "operator": op}}},
+                    "size": 10}
+            got = [(int(h["_id"]), h["_score"])
+                   for h in engine.search("docs", body)["hits"]["hits"]]
+        else:
+            got = [(int(r["doc_id"]), r["score"])
+                   for r in wand_match(spark, index_small, text.split(),
+                                       k=10, mode=op).collect()]
         ref = oracle_small.match(text.split(), k=10, mode=op)
         assert ref and [d for d, _ in got] == [d for d, _ in ref], (text, op)
         for (_, s1), (_, s2) in zip(got, ref):
@@ -733,7 +726,7 @@ def lang_index(spark, docs_small, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("idx") / "lang")
     build_index(spark, docs_small.select("doc_id", "lang"), out,
-                text_col="lang", term_buckets=4, num_segments=2)
+                text_col="lang", term_buckets=4)
     return out
 
 
@@ -845,7 +838,7 @@ def test_multi_match_composes_under_bool(spark, docs_small, index_small, lang_in
 def test_track_total_hits(spark, docs_small, index_small, duck):
     """hits.total: post-limit count by default (reference compat),
     exact pre-limit count with track_total_hits — per request or as the
-    Engine default; both the general path and the pure-match WAND fast
+    Engine default; both the general path and the pure-match fast
     path."""
     e = Engine(spark)
     e.create_index("events", spark.read.parquet(os.path.join(SF, "events.parquet")),
@@ -860,7 +853,7 @@ def test_track_total_hits(spark, docs_small, index_small, duck):
     assert r["hits"]["total"]["value"] == n_err > 2
     assert len(r["hits"]["hits"]) == 2
 
-    # pure-match WAND fast path: total = full match count, page = top-k
+    # pure-match fast path: total = full match count, page = top-k
     n_data = duck.execute(
         "SELECT count(*) FROM documents WHERE list_contains(string_split(text, ' '), 'data')"
     ).fetchone()[0]

@@ -186,3 +186,33 @@ def test_distance_feature_on_template_date_string(spark):
     hits = out["hits"]["hits"]
     assert [str(h["_id"]) for h in hits] == ["1", "2", "3"]
     assert math.isclose(hits[0]["_score"], 1.0, rel_tol=1e-9)
+
+
+def test_distance_feature_on_iso_date_template_field(spark):
+    """A template date field whose format is not an epoch format
+    (strict_date_optional_time) stores date strings; distance_feature
+    must still rank by distance instead of matching nothing."""
+    from gopensearch_spark.dsl import Engine
+
+    e = Engine(spark)
+    e.put_template("iso_dates", {
+        "index_patterns": "iso*",
+        "properties": {"created": {"type": "date",
+                                   "format": "strict_date_optional_time"}},
+    })
+    df = spark.createDataFrame(
+        [(1, "2024-01-03T00:00:00Z"), (2, "2024-01-01T06:00:00Z"),
+         (3, "2024-01-01T00:00:00Z")],
+        "id long, created string",
+    )
+    e.create_index("iso", df, id_col="id")
+    out = e.search("iso", {
+        "query": {"distance_feature": {"field": "created",
+                                       "origin": "2024-01-01T00:00:00Z",
+                                       "pivot": "12h"}},
+        "size": 3,
+    })
+    hits = out["hits"]["hits"]
+    assert [str(h["_id"]) for h in hits] == ["3", "2", "1"]
+    assert math.isclose(hits[0]["_score"], 1.0, rel_tol=1e-9)
+    assert math.isclose(hits[1]["_score"], 12 / 18, rel_tol=1e-9)

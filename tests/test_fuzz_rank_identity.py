@@ -36,8 +36,7 @@ def fuzz_env(spark, tmp_path_factory):
     docs = _mk_corpus(rng, 80)
     df = spark.createDataFrame(docs, "doc_id long, text string")
     out = str(tmp_path_factory.mktemp("fuzz") / "idx")
-    build_index(spark, df, out, slices=1, term_buckets=8, num_segments=4,
-                with_positions=True, block_codec="pfor")
+    build_index(spark, df, out, slices=1, term_buckets=8, with_positions=True)
     oracle = Fts5Oracle()
     oracle.load(docs)
     yield out, oracle, rng

@@ -161,7 +161,7 @@ def test_fuzzy_stale_dict_degrades_to_term_stats(spark, docs_small, tmp_path):
     idx = str(tmp_path / "idx")
     # streaming layout throughout (batch_id partitions), as a streamed
     # index would be; dict fresh after batch 1, stale after batch 77
-    build_postings(docs_small.limit(60), idx, term_buckets=8, num_segments=4,
+    build_postings(docs_small.limit(60), idx, term_buckets=8,
                    with_positions=True, batch_id=1)
     stats = fold_corpus_stats(spark, idx, term_buckets=8, with_positions=True)
     rebuild_term_dict(spark, idx, n_docs=stats["n_docs"])
@@ -169,7 +169,7 @@ def test_fuzzy_stale_dict_degrades_to_term_stats(spark, docs_small, tmp_path):
         [(20_000_001, "zzyzx zzyzx road"), (20_000_002, "plain words")],
         "doc_id long, text string",
     )
-    build_postings(extra, idx, term_buckets=8, num_segments=4,
+    build_postings(extra, idx, term_buckets=8,
                    with_positions=True, batch_id=77)
     fold_corpus_stats(spark, idx, term_buckets=8, with_positions=True)
     invalidate(idx)

@@ -100,3 +100,19 @@ def test_percolate_match_under_composite_tokenizes(perc):
                     "body": "major OUTAGE in progress"}])
     assert "cs_outage" in out[0]["matched_queries"]
     assert "dm_outage" in out[0]["matched_queries"]
+
+
+def test_percolate_must_not_on_absent_field_still_matches(perc):
+    """A field that appears only under must_not (or in one should
+    branch) must not gate the whole stored query: a doc lacking it
+    matches the positive part, as in ES."""
+    perc.register_percolator("alerts", "outage_not_muted", {"bool": {
+        "must": [{"match": {"body": "outage"}}],
+        "must_not": [{"term": {"muted": True}}]}})
+    perc.register_percolator("alerts", "outage_or_flag", {"bool": {
+        "should": [{"match": {"body": "outage"}},
+                   {"term": {"flag": "red"}}]}})
+    out = perc.percolate("alerts", [{"body": "major outage"}, {"body": "all good"}])
+    assert "outage_not_muted" in out[0]["matched_queries"]
+    assert "outage_or_flag" in out[0]["matched_queries"]
+    assert out[1]["matched_queries"] == []

@@ -52,131 +52,6 @@ def test_topk_is_take_ordered(spark, index_small):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_wand_serving_path_reads_blocks_only(spark, index_small):
-    """The entry/serving bm25_* queries route through the compressed
-    block index: the scan must read blocks (never flat postings), with
-    term_bucket pruning + term IN pushdown, ending in a global top-k."""
-    from gopensearch_spark.search import wand_match
-
-    plan = _plan(wand_match(spark, index_small, ["spark", "join"], k=10, mode="or"))
-    assert "/blocks" in plan
-    assert "/postings" not in plan, plan
-    assert "PushedFilters: [In(term" in plan
-    assert "PartitionFilters: [term_bucket" in plan or "term_bucket#" in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_wand_or_block_skipping_under_skewed_idfs(spark, tmp_path):
-    """Round-3 pin: the OR kernel's quit/continue accumulator pruning +
-    per-block bound must actually SKIP blocks when term impacts are
-    skewed (an idf-floored head term alongside a rare term) — and stay
-    rank-identical to the flat path while doing it."""
-    import numpy as np
-    import pandas as pd
-
-    from gopensearch_spark.index.builder import build_postings, finalize_stats
-    from gopensearch_spark.search import bm25_match, wand_match
-    from gopensearch_spark.search import wand as W
-
-    idx = str(tmp_path / "idx")
-    rows = [
-        (i, "common filler words " + ("rare gem " if i % 200 == 0 else "") + "tail" * (i % 3))
-        for i in range(8000)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    build_postings(docs, idx, term_buckets=8)
-    finalize_stats(spark, idx, term_buckets=8, num_segments=4)
-
-    flat = [(r["doc_id"], round(r["score"], 9))
-            for r in bm25_match(spark, idx, ["common", "rare"], k=3, mode="or").collect()]
-    wnd = [(r["doc_id"], round(r["score"], 9))
-           for r in wand_match(spark, idx, ["common", "rare"], k=3, mode="or").collect()]
-    assert wnd == flat and len(wnd) == 3
-
-    # count decoded blocks through the kernel directly
-    from pyspark.sql import functions as F
-    from gopensearch_spark.search.bm25 import idf as _idf
-
-    blocks = spark.read.parquet(f"{idx}/blocks").where(
-        F.col("term").isin(["common", "rare"])).toPandas()
-    tstats = {r["term"]: r["df"] for r in spark.read.parquet(f"{idx}/term_stats")
-              .where(F.col("term").isin(["common", "rare"])).collect()}
-    from gopensearch_spark.index.builder import read_corpus_stats
-    stats = read_corpus_stats(idx)
-    idfs = {t: _idf(stats["n_docs"], d) for t, d in tstats.items()}
-    # direct kernel calls bypass wand_match's codec resolution — pass
-    # the decoders matching the index's block_codec (pfor by default)
-    dec = W._decoders(stats.get("block_codec", "varint"))
-    counted = {"n": 0}
-    orig = W._decode_term
-
-    def counting(r, *a, **kw):
-        counted["n"] += len(r)
-        return orig(r, *a, **kw)
-
-    W._decode_term = counting
-    try:
-        total = 0
-        for _, g in blocks.groupby("seg_id"):
-            total += len(g)
-            W._score_segment_or({t: gg for t, gg in g.groupby("term")},
-                                idfs, stats["avg_doc_len"], 3, dec=dec)
-    finally:
-        W._decode_term = orig
-    # the floored head term's blocks must be (mostly) skipped once the
-    # accumulator set prunes toward the true top-k
-    assert counted["n"] < total * 0.6, (counted["n"], total)
-
-    # AND: rare term first, then ONLY the head blocks containing a
-    # surviving candidate decode (per-block membership, not the global
-    # candidate [min, max] range — which spans everything here)
-    flat_and = [(r["doc_id"], round(r["score"], 9))
-                for r in bm25_match(spark, idx, ["common", "rare"], k=50, mode="and").collect()]
-    wnd_and = [(r["doc_id"], round(r["score"], 9))
-               for r in wand_match(spark, idx, ["common", "rare"], k=50, mode="and").collect()]
-    assert wnd_and == flat_and and len(wnd_and) == 40
-    counted["n"] = 0
-    W._decode_term = counting
-    try:
-        total = 0
-        for _, g in blocks.groupby("seg_id"):
-            total += len(g)
-            W._score_segment_and({t: gg for t, gg in g.groupby("term")},
-                                 idfs, stats["avg_doc_len"], 50, dec=dec)
-    finally:
-        W._decode_term = orig
-    assert counted["n"] < total * 0.6, (counted["n"], total)
-
-
-def test_head_term_postings_split_across_segments(spark, tmp_path):
-    """North-rule skew evidence: a Zipf-head term (present in EVERY doc)
-    must spread across all segments — the seg axis is the salting device,
-    so no single task ever holds a stopword's full posting list. Assert
-    the head term's blocks span every segment with near-uniform load."""
-    from pyspark.sql import functions as F
-
-    from gopensearch_spark.index.builder import build_postings, finalize_stats
-
-    idx = str(tmp_path / "idx")
-    docs = spark.createDataFrame(
-        [(i, "the filler " + f"w{i % 97}") for i in range(4000)],
-        "doc_id long, text string",
-    )
-    build_postings(docs, idx, term_buckets=8)
-    finalize_stats(spark, idx, term_buckets=8, num_segments=8)
-    per_seg = {
-        r["seg_id"]: r["n"]
-        for r in spark.read.parquet(f"{idx}/blocks")
-        .where(F.col("term") == "the")
-        .groupBy("seg_id")
-        .agg(F.sum("n").alias("n"))
-        .collect()
-    }
-    assert len(per_seg) == 8, per_seg            # every segment holds a share
-    assert sum(per_seg.values()) == 4000
-    assert max(per_seg.values()) < 2 * (4000 / 8), per_seg  # near-uniform
-
-
 def test_phrase_candidate_pass_is_position_free(spark, index_small):
     """Round-3 pin: phrase/NEAR grouping is two-pass — a skinny
     (doc_id, term) aggregate finds docs containing ALL terms first, so
@@ -207,116 +82,19 @@ def test_prefix_scan_prunes_buckets_via_term_dict(spark, index_small):
     assert "term_bucket#" in plan.split("PartitionFilters:", 1)[1].split("]", 1)[0], plan
     assert "StringStartsWith(term,s)" in plan
     # SINGLE-expansion prefix ('dat' -> only 'data'): BM25-identical to
-    # a term query, so it serves through the block-max WAND path — the
-    # plan reads the blocks table, not a startswith postings scan
+    # a term query, so it serves as one — an exact-term postings scan,
+    # not a startswith one
     plan1 = _plan(prefix_match(spark, index_small, "dat", k=10))
     assert "StringStartsWith" not in plan1, plan1
-    assert "max_tf" in plan1, plan1  # blocks-table ReadSchema
+    assert "PushedFilters: [In(term" in plan1 or "EqualTo(term,data)" in plan1, plan1
     # unmatched prefix short-circuits to an empty relation, no scan job
     assert prefix_match(spark, index_small, "zzzzqq", k=5).count() == 0
-
-
-def test_wand_prefilter_bounds_segment_rows(spark, tmp_path):
-    """Round-4 pin: the DataFrame-layer block pre-filter bounds what a
-    per-segment Arrow group MATERIALIZES (the kernel's own skipping only
-    bounds what it decodes, after a whole segment's rows already sit in
-    one pandas frame). For a head-term query whose strong postings are
-    doc_id-clustered, surviving rows must be a small fraction of the
-    term's blocks — with rank identity to the unfiltered paths."""
-    from pyspark.sql import functions as F
-
-    from gopensearch_spark.index.builder import build_postings, finalize_stats, read_corpus_stats
-    from gopensearch_spark.search import bm25_match, wand_match
-    from gopensearch_spark.search import wand as W
-    from gopensearch_spark.search.bm25 import idf as _idf
-
-    idx = str(tmp_path / "idx")
-    # 'common' in every doc: tf=30 for doc_id < 500 (clustered strong
-    # region), tf=1 elsewhere; 'rare' clustered in [3000, 3040)
-    rows = [
-        (
-            i,
-            ("common " * 30 if i < 500 else "common ")
-            + ("rare " if 3000 <= i < 3040 else "")
-            + f"w{i % 211}",
-        )
-        for i in range(20_000)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    build_postings(docs, idx, term_buckets=8)
-    finalize_stats(spark, idx, term_buckets=8, num_segments=4)
-    stats = read_corpus_stats(idx)
-    blocks = spark.read.parquet(f"{idx}/blocks")
-
-    def _dfs(terms):
-        return {
-            r["term"]: r["df"]
-            for r in spark.read.parquet(f"{idx}/term_stats")
-            .where(F.col("term").isin(terms)).collect()
-        }
-
-    # --- OR / single head term: theta floor drops weak blocks -----------
-    dfs = _dfs(["common"])
-    idfs = {t: _idf(stats["n_docs"], d) for t, d in dfs.items()}
-    b = blocks.where(F.col("term") == "common")
-    kept = W._prefilter_blocks(b, idfs, dfs, stats["avg_doc_len"], 10, "or")
-    total, surv = b.count(), kept.count()
-    assert surv < total * 0.25, (surv, total)
-    assert surv >= 4  # at least the strong block of each segment
-    # rank identity: pre-filter forced on vs off vs the flat path
-    flat = [(r["doc_id"], round(r["score"], 9))
-            for r in bm25_match(spark, idx, ["common"], k=10, mode="or").collect()]
-    for thresh in (0, 10**9):
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in wand_match(spark, idx, ["common"], k=10, mode="or",
-                                   prefilter_min_postings=thresh).collect()]
-        assert got == flat and len(got) == 10
-
-    # --- AND / rare range overlap: head blocks outside the rare range drop
-    dfs2 = _dfs(["common", "rare"])
-    idfs2 = {t: _idf(stats["n_docs"], d) for t, d in dfs2.items()}
-    b2 = blocks.where(F.col("term").isin(["common", "rare"]))
-    kept2 = W._prefilter_blocks(b2, idfs2, dfs2, stats["avg_doc_len"], 10, "and")
-    total2, surv2 = b2.count(), kept2.count()
-    assert surv2 < total2 * 0.25, (surv2, total2)
-    flat_and = [(r["doc_id"], round(r["score"], 9))
-                for r in bm25_match(spark, idx, ["common", "rare"], k=50, mode="and").collect()]
-    for thresh in (0, 10**9):
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in wand_match(spark, idx, ["common", "rare"], k=50, mode="and",
-                                   prefilter_min_postings=thresh).collect()]
-        assert got == flat_and and len(got) == 40
-
-
-def test_wand_prefilter_or_multi_term_rank_identity(spark, tmp_path):
-    """Multi-term OR with the pre-filter forced on: exact scores vs the
-    flat path (the per-term threshold composes theta with the other
-    terms' tf->inf caps — dropped blocks can never reach the top-k)."""
-    from gopensearch_spark.index.builder import build_postings, finalize_stats
-    from gopensearch_spark.search import bm25_match, wand_match
-
-    idx = str(tmp_path / "idx")
-    rows = [
-        (i, ("alpha " * (1 + i % 7)) + ("beta " if i % 3 == 0 else "")
-            + ("gamma " if i % 50 == 7 else "") + f"w{i % 83}")
-        for i in range(6000)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    build_postings(docs, idx, term_buckets=8)
-    finalize_stats(spark, idx, term_buckets=8, num_segments=4)
-    for k in (5, 25, 100):
-        flat = [(r["doc_id"], round(r["score"], 9))
-                for r in bm25_match(spark, idx, ["alpha", "beta", "gamma"], k=k, mode="or").collect()]
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in wand_match(spark, idx, ["alpha", "beta", "gamma"], k=k, mode="or",
-                                   prefilter_min_postings=0).collect()]
-        assert got == flat, (k, got[:3], flat[:3])
 
 
 def test_significant_text_plan_never_scans_postings(spark, docs_small, index_small):
     """significant_text's background must come from term_stats alone:
     the physical plan reads the term_stats table and NEVER the postings
-    (or blocks) files — at 10^12 docs that is the difference between a
+    files — at 10^12 docs that is the difference between a
     vocabulary-sized scan and an index-sized one."""
     from gopensearch_spark.dsl import Engine
 
@@ -331,7 +109,7 @@ def test_significant_text_plan_never_scans_postings(spark, docs_small, index_sma
     _, df = aggs["s"]
     plan = _plan(df)
     assert "term_stats" in plan
-    assert "/postings" not in plan and "/blocks" not in plan
+    assert "/postings" not in plan
 
 
 def test_top_hits_bounds_rows_before_collect(spark):
@@ -382,33 +160,6 @@ def test_decontaminate_broadcasts_benchmark(spark, docs_small):
     assert "BroadcastHashJoin" in plan
     # the only hash exchange is the final (doc_id, bench_id) aggregate
     assert plan.count("Exchange hashpartitioning") <= 1, plan
-
-
-def test_warm_index_serves_without_per_query_shuffle(spark, index_small):
-    """VERDICT r4 #8: after warm_index, a wand query's plan is ONE
-    kernel stage over the cached seg_id-partitioned relation — no
-    per-query Exchange, no parquet FileScan — and results are identical
-    to the cold path."""
-    from gopensearch_spark.search import wand_match, warm_index
-    from gopensearch_spark.search.readers import invalidate
-
-    cold = [(int(r.doc_id), round(float(r.score), 9))
-            for r in wand_match(spark, index_small, ["spark", "join"],
-                                k=10, mode="and").collect()]
-    warm_index(spark, index_small)
-    try:
-        df = wand_match(spark, index_small, ["spark", "join"], k=10, mode="and")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the only Exchange lives INSIDE the cached InMemoryRelation's
-        # one-time build plan; the query side above the scan has none
-        query_side = plan.split("InMemoryRelation")[0]
-        assert "InMemoryTableScan" in plan
-        assert "Exchange" not in query_side, query_side
-        assert "FileScan" not in query_side, query_side
-        hot = [(int(r.doc_id), round(float(r.score), 9)) for r in df.collect()]
-        assert hot == cold
-    finally:
-        invalidate(index_small)  # leave no hot state for other tests
 
 
 def test_cosine_topk_norms_precomputed_below_join(spark):

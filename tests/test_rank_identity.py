@@ -1,6 +1,6 @@
 """Rank-identity vs SQLite FTS5 (the reference's backend): top-k doc_ids
-AND BM25 scores must match, both for the pure-DataFrame engine and the
-compressed block-max WAND engine. BASELINE.json north_rule's core gate.
+AND BM25 scores must match, through ``bm25_match`` and its
+``wand_match`` alias. BASELINE.json north_rule's core gate.
 """
 
 import math

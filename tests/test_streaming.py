@@ -92,7 +92,7 @@ def test_streaming_batches_are_idempotent_and_incremental(spark, docs_small, tmp
 
     # batch_id partition dirs exist on every table (incl. term-df and
     # corpus-stat deltas)
-    for table in ["postings", "doc_stats", "term_stats", "blocks", "batch_stats"]:
+    for table in ["postings", "doc_stats", "term_stats", "batch_stats"]:
         parts = {os.path.basename(p) for p in glob.glob(os.path.join(idx, table, "batch_id=*"))}
         assert {"batch_id=0", "batch_id=1"} <= parts, (table, parts)
 
@@ -102,8 +102,7 @@ def test_streaming_batches_are_idempotent_and_incremental(spark, docs_small, tmp
 
     # simulate crash-before-commit: drop batch 1's record, replay it
     os.remove(_batch_ckpt(idx, 1))
-    handler = _make_batch_handler(idx, term_buckets=16, num_segments=8,
-                                  with_positions=False, block_codec="varint")
+    handler = _make_batch_handler(idx, term_buckets=16, with_positions=False)
     handler(second, 1)
 
     assert read_corpus_stats(idx)["n_docs"] == stats_before["n_docs"]
@@ -146,8 +145,7 @@ def test_batch_stats_never_rescan_older_batches(spark, docs_small, tmp_path):
 
     shutil.rmtree(os.path.join(idx, "doc_stats", "batch_id=0"))
     os.remove(_batch_ckpt(idx, 1))
-    handler = _make_batch_handler(idx, term_buckets=16, num_segments=8,
-                                  with_positions=False, block_codec="varint")
+    handler = _make_batch_handler(idx, term_buckets=16, with_positions=False)
     handler(second, 1)
     stats = read_corpus_stats(idx)
     assert stats["n_docs"] == total  # batch-0 docs still counted
@@ -186,7 +184,7 @@ def test_prefix_prunes_on_streaming_index(spark, docs_small, tmp_path):
         [(10_000_001, "datums galore datums"), (10_000_002, "nothing here")],
         "doc_id long, text string",
     )
-    build_postings(extra, idx, term_buckets=16, num_segments=8,
+    build_postings(extra, idx, term_buckets=16,
                    with_positions=True, batch_id=99)
     from gopensearch_spark.index.builder import fold_corpus_stats
     from gopensearch_spark.search.readers import invalidate
@@ -220,7 +218,7 @@ def test_fold_backfills_missing_batch_deltas(spark, docs_small, tmp_path):
     corpus = prepare_corpus(pages)
     for b in (0, 1):
         build_postings(corpus.where(f"pmod(xxhash64(doc_id), 2) = {b}"), idx,
-                       term_buckets=8, num_segments=4, batch_id=b)
+                       term_buckets=8, batch_id=b)
     total = corpus.count()
     fold_corpus_stats(spark, idx, term_buckets=8)
     assert read_corpus_stats(idx)["n_docs"] == total
@@ -307,9 +305,9 @@ def F_concat_url():
 
 
 def test_wand_over_streaming_index(spark, docs_small, tmp_path):
-    """Block-max WAND over a MULTI-BATCH streaming index: each micro-batch
-    contributes its own (term, seg) block runs with overlapping block_ids;
-    the DAAT kernels must stay rank-identical to FTS5 over the union."""
+    """Top-k over a MULTI-BATCH streaming index: each micro-batch
+    contributes its own posting runs and df deltas; the ranking must
+    stay identical to FTS5 over the union."""
     from gopensearch_spark.fts5_oracle import Fts5Oracle
     from gopensearch_spark.search import wand_match
     from gopensearch_spark.streaming import index_stream_available_now
@@ -337,29 +335,31 @@ def test_wand_over_streaming_index(spark, docs_small, tmp_path):
 
 def test_wand_and_on_range_split_batches(spark, tmp_path):
     """Regression: time-ordered ingest puts DISJOINT doc-id ranges in
-    different micro-batches, so a term's concatenated block runs are not
-    globally sorted; the AND kernel's block-skip bound must use min/max,
-    not first/last, or it silently drops matches."""
+    different micro-batches, so a term's posting runs are not globally
+    sorted across batches; top-k over such an index must still equal
+    FTS5's over the same docs."""
+    from gopensearch_spark.fts5_oracle import Fts5Oracle
     from gopensearch_spark.index.builder import build_postings, refresh_corpus_stats
-    from gopensearch_spark.search import bm25_match, wand_match
+    from gopensearch_spark.search import wand_match
 
     idx = str(tmp_path / "idx")
+    text = lambda i: "alpha " * (i % 3 + 1) + "beta common" + (" rare" if i % 7 == 0 else "")
     mk = lambda lo, hi: spark.createDataFrame(
-        [(i, "alpha " * (i % 3 + 1) + "beta common" + (" rare" if i % 7 == 0 else ""))
-         for i in range(lo, hi)], "doc_id long, text string")
+        [(i, text(i)) for i in range(lo, hi)], "doc_id long, text string")
     # batch 0 holds the HIGH id range, batch 1 the LOW one
-    build_postings(mk(1000, 1080), idx, term_buckets=4, num_segments=2, batch_id=0)
-    build_postings(mk(1, 60), idx, term_buckets=4, num_segments=2, batch_id=1)
+    build_postings(mk(1000, 1080), idx, term_buckets=4, batch_id=0)
+    build_postings(mk(1, 60), idx, term_buckets=4, batch_id=1)
     refresh_corpus_stats(spark, idx, term_buckets=4)
 
+    o = Fts5Oracle()
+    o.load([(i, text(i)) for i in [*range(1000, 1080), *range(1, 60)]])
     for terms, mode in [(["alpha", "beta"], "and"), (["alpha", "rare"], "and"),
                         (["beta", "rare", "common"], "or")]:
-        flat = [(r["doc_id"], round(r["score"], 9))
-                for r in bm25_match(spark, idx, terms, k=200, mode=mode).collect()]
-        wnd = [(r["doc_id"], round(r["score"], 9))
+        got = [(int(r["doc_id"]), float(r["score"]))
                for r in wand_match(spark, idx, terms, k=200, mode=mode).collect()]
-        assert wnd == flat, (terms, mode, len(wnd), len(flat))
-        assert len(flat) > 100 or mode == "and" and "rare" in terms
+        _assert_identical(got, o.match(terms, k=200, mode=mode))
+        assert len(got) > 100 or mode == "and" and "rare" in terms
+    o.close()
 
 
 def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_small, tmp_path):
@@ -385,7 +385,7 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     pages.coalesce(1).write.mode("append").parquet(inbox)
     index_stream_available_now(spark, inbox, idx, cp, with_positions=True)
 
-    compact_streaming_index(spark, idx, num_segments=4)
+    compact_streaming_index(spark, idx)
     assert current_generation(idx) == 1
 
     rows = prepare_corpus(pages).select("doc_id", "text").collect()
@@ -404,7 +404,7 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     _assert_identical(got, ref)
 
     # the retry rebuilds gen-2 from scratch and commits via the pointer
-    compact_streaming_index(spark, idx, num_segments=4)
+    compact_streaming_index(spark, idx)
     assert current_generation(idx) == 2
     assert resolve_index_dir(idx).endswith("gen-2")
     got = [(int(r.doc_id), float(r.score))
@@ -417,3 +417,43 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     assert os.path.isdir(os.path.join(idx, "_stream_batches"))
     o.close()
     pages.unpersist()
+
+
+def test_index_writes_no_blocks_table(spark, tmp_path):
+    """The flat postings are the only posting layout: a batch build, a
+    streaming micro-batch and a compaction write no blocks/ dir and no
+    codec key in corpus_stats.json, and warm_index persists nothing on
+    the executors."""
+    from gopensearch_spark.index.builder import (
+        build_index,
+        build_postings,
+        compact_streaming_index,
+        fold_corpus_stats,
+        read_corpus_stats,
+        resolve_index_dir,
+    )
+    from gopensearch_spark.search import warm_index
+    from gopensearch_spark.search.readers import invalidate
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta w{i % 5}") for i in range(40)], "doc_id long, text string")
+    built, streamed = str(tmp_path / "built"), str(tmp_path / "streamed")
+    build_index(spark, docs, built, term_buckets=4)
+    build_postings(docs, streamed, term_buckets=4, batch_id=0)
+    fold_corpus_stats(spark, streamed, term_buckets=4)
+    assert not os.path.exists(os.path.join(streamed, "blocks"))
+    compact_streaming_index(spark, streamed)
+    for idx in (built, streamed):
+        root = resolve_index_dir(idx)
+        assert os.path.isdir(os.path.join(root, "postings")), root
+        assert not os.path.exists(os.path.join(root, "blocks")), root
+        assert set(read_corpus_stats(idx)) == {
+            "n_docs", "avg_doc_len", "total_tokens", "term_buckets", "with_positions"}
+
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    before = persisted()
+    try:
+        assert warm_index(spark, built).complete
+        assert persisted() == before
+    finally:
+        invalidate(built)

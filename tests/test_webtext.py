@@ -85,7 +85,7 @@ def test_build_index_job_end_to_end(spark, web_pages_small, tmp_path):
 
     rc = main([
         "--input", wp_path, "--output", idx,
-        "--slices", "2", "--term-buckets", "8", "--segments", "4",
+        "--slices", "2", "--term-buckets", "8",
     ])
     assert rc == 0
     assert os.path.exists(os.path.join(idx, "corpus_stats.json"))
@@ -94,56 +94,27 @@ def test_build_index_job_end_to_end(spark, web_pages_small, tmp_path):
 
     assert completed_slices(idx) == {0, 1}
 
-    from gopensearch_spark.search import bm25_match, wand_match
+    from gopensearch_spark.search import bm25_match
 
-    flat = bm25_match(spark, idx, "data", k=5, mode="or").collect()
-    blocked = wand_match(spark, idx, "data", k=5, mode="or").collect()
-    assert [r["doc_id"] for r in flat] == [r["doc_id"] for r in blocked]
-    assert len(flat) == 5
-
-
-def test_head_term_postings_split_across_segments(spark, index_small):
-    """Skew evidence: a Zipf-head term's postings must be spread over
-    every segment (the salted-merge axis), so no single task ever holds
-    a stopword's full posting list."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    blocks = spark.read.parquet(os.path.join(index_small, "blocks"))
-    # most frequent term by total postings
-    head = (
-        blocks.groupBy("term").agg(F.sum("n").alias("n")).orderBy(F.desc("n")).first()
-    )
-    n_segs = blocks.select("seg_id").distinct().count()
-    head_segs = (
-        blocks.where(F.col("term") == head["term"]).select("seg_id").distinct().count()
-    )
-    assert head_segs == n_segs, (head["term"], head_segs, n_segs)
+    assert len(bm25_match(spark, idx, "data", k=5, mode="or").collect()) == 5
 
 
 def test_compact_index_merges_slices(spark, docs_small, oracle_small, tmp_path):
     """A fragmented 3-slice build compacts into single sorted runs with
     unchanged (rank-identical) query results.
 
-    Since the single-pass restructure, BLOCKS are built once over the
-    complete postings at finalize (never per-slice), so only the
-    postings parquet fragments: each slice appends its own sorted file
-    per term_bucket. Compaction merges those back to one run per bucket;
-    blocks stay duplicate-free on both sides."""
+    Each slice appends its own sorted postings file per term_bucket;
+    compaction merges those back to one run per bucket."""
     import glob
     import math
     import os
 
-    from pyspark.sql import functions as F
-
     from gopensearch_spark.index import build_index, compact_index
-    from gopensearch_spark.search import bm25_match, wand_match
+    from gopensearch_spark.search import bm25_match
 
     src = str(tmp_path / "frag")
     dst = str(tmp_path / "compacted")
-    build_index(spark, docs_small, src, slices=3, term_buckets=8,
-                num_segments=4, with_positions=True,
+    build_index(spark, docs_small, src, slices=3, term_buckets=8, with_positions=True,
                 input_lineage="sf0.001/documents.parquet")
 
     def files_per_bucket(d):
@@ -153,24 +124,17 @@ def test_compact_index_merges_slices(spark, docs_small, oracle_small, tmp_path):
         ]
 
     assert max(files_per_bucket(src)) > 1  # slices really did fragment
-    blocks_frag = spark.read.parquet(os.path.join(src, "blocks"))
-    assert blocks_frag.count() == (
-        blocks_frag.select("term", "seg_id", "block_id").distinct().count()
-    )  # finalize built blocks ONCE over all slices — no per-slice runs
 
-    compact_index(spark, src, dst, num_segments=4)
+    compact_index(spark, src, dst)
     assert max(files_per_bucket(dst)) == 1  # one sorted run per bucket
-    blocks = spark.read.parquet(os.path.join(dst, "blocks"))
-    assert blocks.count() == blocks.select("term", "seg_id", "block_id").distinct().count()
 
     for terms, mode in [(["spark", "join"], "or"), (["merge", "sort", "batch"], "and")]:
         ref = oracle_small.match(terms, k=25, mode=mode)
-        for engine in (bm25_match, wand_match):
-            got = [(int(r["doc_id"]), float(r["score"]))
-                   for r in engine(spark, dst, terms, k=25, mode=mode).collect()]
-            assert len(got) == len(ref)
-            for (d1, s1), (d2, s2) in zip(got, ref):
-                assert d1 == d2 and math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12)
+        got = [(int(r["doc_id"]), float(r["score"]))
+               for r in bm25_match(spark, dst, terms, k=25, mode=mode).collect()]
+        assert len(got) == len(ref)
+        for (d1, s1), (d2, s2) in zip(got, ref):
+            assert d1 == d2 and math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12)
 
     # positions survive compaction -> phrase queries still work
     from gopensearch_spark.search import phrase_match
@@ -184,7 +148,7 @@ def test_compact_index_merges_slices(spark, docs_small, oracle_small, tmp_path):
 def test_positions_optional_profile(spark, docs_small, oracle_small, tmp_path):
     """detail=none analogue (FTS5 has one): with_positions=False (the
     build default) skips per-posting position lists — materially smaller
-    postings at 100 TB — while BM25/WAND/prefix stay fully functional
+    postings at 100 TB — while BM25/prefix stay fully functional
     and rank-identical; phrase/NEAR raise the clear capability error."""
     import math
 
@@ -192,8 +156,7 @@ def test_positions_optional_profile(spark, docs_small, oracle_small, tmp_path):
     from gopensearch_spark.search import near_match, phrase_match, prefix_match, wand_match
 
     idx = str(tmp_path / "nopos")
-    build_index(spark, docs_small, idx, term_buckets=8, num_segments=4,
-                with_positions=False)
+    build_index(spark, docs_small, idx, term_buckets=8, with_positions=False)
     post = spark.read.parquet(os.path.join(idx, "postings"))
     assert "positions" not in post.columns
 
@@ -212,7 +175,7 @@ def test_positions_optional_profile(spark, docs_small, oracle_small, tmp_path):
 
 
 def test_query_job_end_to_end(spark, index_small, oracle_small, tmp_path, capsys):
-    """spark-submit query entrypoint: both engines, batch file, JSON
+    """spark-submit query entrypoint: batch file and single query, JSON
     lines out, rank-identical to the FTS5 oracle."""
     import json as _json
 
@@ -222,7 +185,7 @@ def test_query_job_end_to_end(spark, index_small, oracle_small, tmp_path, capsys
     from gopensearch_spark.jobs.query_job import main
 
     rc = main(["--index", index_small, "--queries-file", str(qf),
-               "--mode", "and", "--k", "5", "--engine", "wand"])
+               "--mode", "and", "--k", "5"])
     assert rc == 0
     lines = [_json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     assert lines[-1]["job"] == "query" and lines[-1]["n_queries"] == 2
@@ -232,7 +195,7 @@ def test_query_job_end_to_end(spark, index_small, oracle_small, tmp_path, capsys
         assert [h["doc_id"] for h in ln["hits"]] == [d for d, _ in ref]
 
     rc = main(["--index", index_small, "--query", "data",
-               "--mode", "or", "--k", "3", "--engine", "flat"])
+               "--mode", "or", "--k", "3"])
     assert rc == 0
     out = [_json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     ref = oracle_small.match(["data"], k=3, mode="or")
