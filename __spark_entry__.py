@@ -38,8 +38,8 @@ def _index_dir(spark: SparkSession, sf_dir: str) -> str:
         return _INDEX_CACHE[sf_dir]
     from gopensearch_spark.index import build_index, read_corpus_stats
 
-    # v6: flat postings only (no blocks table, no block_codec stat)
-    out = os.path.join("/tmp/gopensearch_entry_idx_v6", os.path.basename(os.path.normpath(sf_dir)))
+    # v7: the batch_id-partitioned layout (postings, doc_stats, term_stats)
+    out = os.path.join("/tmp/gopensearch_entry_idx_v7", os.path.basename(os.path.normpath(sf_dir)))
     if not os.path.exists(os.path.join(out, "corpus_stats.json")):
         build_index(
             spark,
@@ -134,7 +134,7 @@ def _lang_index_dir(spark: SparkSession, sf_dir: str) -> str:
     from gopensearch_spark.index import build_index
 
     out = os.path.join(
-        "/tmp/gopensearch_entry_idx_v6",
+        "/tmp/gopensearch_entry_idx_v7",
         os.path.basename(os.path.normpath(sf_dir)) + "_lang",
     )
     if not os.path.exists(os.path.join(out, "corpus_stats.json")):

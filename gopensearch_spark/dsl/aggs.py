@@ -585,13 +585,8 @@ def compile_agg(
             )).alias("key"))
             .groupBy("key").agg(F.count("*").alias("doc_count"))
         )
-        ts = index_table(spark, index_spec.index_dir, "term_stats")
-        if "batch_id" in ts.columns:  # streaming: fold per-batch deltas
-            bg = ts.groupBy(F.col("term").alias("key")).agg(
-                F.sum("df").alias("bg_count")
-            )
-        else:
-            bg = ts.select(F.col("term").alias("key"), F.col("df").alias("bg_count"))
+        bg = index_table(spark, index_spec.index_dir, "term_stats").groupBy(
+            F.col("term").alias("key")).agg(F.sum("df").alias("bg_count"))
         fg_tot = filtered.agg(F.count("*").alias("fg_total"))
         j = bg.join(fg, "key").crossJoin(F.broadcast(fg_tot))
         fg_pct = F.col("doc_count") / F.col("fg_total")

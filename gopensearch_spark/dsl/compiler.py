@@ -161,9 +161,11 @@ class CompileContext:
 def _range_bound(ctx: CompileContext, field: str, value) -> tuple[Column, Column]:
     """Resolve (column, literal) for a range bound, honoring date formats.
 
-    A template-mapped date field (format epoch_millis/epoch_second,
-    reference pkg/date/dates.go) compares as a timestamp; a native
-    TimestampType column accepts epoch-millis numbers the same way.
+    A template-mapped date field of any format (epoch_millis,
+    epoch_second as in reference pkg/date/dates.go, or a date-string
+    format such as strict_date_optional_time) compares as a timestamp;
+    a native TimestampType column accepts epoch-millis numbers the same
+    way.
     """
     col = ctx.resolve(field)
     fmt = ctx.date_fields.get(strip_keyword(field))
@@ -177,11 +179,11 @@ def _range_bound(ctx: CompileContext, field: str, value) -> tuple[Column, Column
         else:
             lit = F.to_timestamp(F.lit(value))
         return col, lit.cast(ftype)
-    if fmt == "epoch_millis" or fmt == "epoch_second":
+    if fmt is not None:
         # the stored value may be a raw epoch NUMBER (parquet/JSON
-        # ingest) or the reference's write-time RFC3339 string
-        # (bulk/single-doc ingest via templateMapDoc); both compare as
-        # timestamps, mirroring the reference's
+        # ingest) or a date string (the reference's write-time RFC3339
+        # form via templateMapDoc, or the format's own text, any UTC
+        # offset); both compare as timestamps, mirroring the reference's
         # DATETIME(JSON_EXTRACT(...), 'auto') coercion (sql.go:164-195)
         def to_ts(c: Column) -> Column:
             c = c.cast("long")

@@ -1864,35 +1864,22 @@ class Engine:
     def force_merge(self, index: str, max_num_segments: int | None = None) -> dict:
         """`POST /{index}/_forcemerge[?max_num_segments=N]`: merge every
         indexed field's fragmented posting runs back to one sorted run
-        per term — the ES force-merge contract mapped onto this engine's
-        generation-pointer compaction. Each field index compacts into
-        `<dir>/gen-{N+1}` (repartition-by-term + sort, see
-        `compact_index`) and COMMITS by atomically writing the `_current`
-        pointer — rename-free, so in-flight readers stay on the old
-        generation and object stores need no directory rename.
+        per term — the ES force-merge contract mapped onto
+        `compact_streaming_index`, the one compaction. Each field index
+        compacts into `<dir>/gen-{N+1}` and COMMITS by atomically writing
+        the `_current` pointer — rename-free, so in-flight readers stay on
+        the old generation and object stores need no directory rename;
+        generations older than the previous one are deleted, and later
+        stream batches append to the merged index.
         `max_num_segments` is accepted because ES requests carry it; a
         force-merge here always leaves one run per term, which is what
         any value asks for."""
-        import shutil
+        from gopensearch_spark.index.builder import compact_streaming_index
 
-        from gopensearch_spark.index.builder import (
-            _commit_generation,
-            compact_index,
-            current_generation,
-            resolve_index_dir,
-        )
-
-        spec = self._spec(index)
-        merged = 0
-        for idx_dir in spec.indexed_fields().values():
-            src = resolve_index_dir(idx_dir)
-            gen = current_generation(idx_dir)
-            dst = os.path.join(idx_dir, f"gen-{gen + 1}")
-            shutil.rmtree(dst, ignore_errors=True)  # crashed prior attempt
-            compact_index(self.spark, src, dst)
-            _commit_generation(idx_dir, gen + 1)
-            merged += 1
-        return {"_shards": {"total": merged, "successful": merged, "failed": 0}}
+        fields = self._spec(index).indexed_fields().values()
+        for idx_dir in fields:
+            compact_streaming_index(self.spark, idx_dir)
+        return {"_shards": {"total": len(fields), "successful": len(fields), "failed": 0}}
 
     def render_template(self, body: str | dict) -> dict:
         """`POST /_render/template`: expand the mustache subset this
@@ -2391,7 +2378,7 @@ class Engine:
         from collections import Counter
 
         from gopensearch_spark.analysis import normalize_query_terms, term_freqs
-        from gopensearch_spark.search.bm25 import B, K1, idf
+        from gopensearch_spark.search.bm25 import B, K1, idf, tf_norm
         from gopensearch_spark.search.readers import corpus_stats, term_dfs
 
         d = model.parse_dsl(body)
@@ -2429,7 +2416,7 @@ class Engine:
             n_matched += 1
             df_t = dfs.get(t, 0)
             i = idf(n_docs, df_t)
-            w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+            w = tf_norm(tf, dl, avgdl)
             c = counts[t] * i * w
             total += c
             details.append({

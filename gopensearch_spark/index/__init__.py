@@ -1,7 +1,6 @@
 from gopensearch_spark.index.builder import (  # noqa: F401
     build_index,
     build_postings,
-    compact_index,
     compact_streaming_index,
     current_generation,
     finalize_stats,

@@ -13,12 +13,16 @@ db.go:16-17). Spark-first design:
   the GC-heavy map-column explode (measured 8x build throughput vs the
   pandas-UDF + explode formulation).
 - **flat postings** (``postings/``): `(term, doc_id, tf, doc_len)` rows,
-  written partitioned by ``term_bucket = pmod(xxhash64(term), B)`` and
-  sorted by (term, doc_id) within files. doc_len is denormalized into the
-  row so BM25 scoring needs NO join against doc_stats at query time.
-  Queries prune to the handful of term_bucket partitions their terms hash
-  to — at 10^12 docs this is the difference between scanning the whole
-  index and scanning ~q/B of it.
+  written partitioned by ``batch_id`` and then by ``term_bucket =
+  pmod(xxhash64(term), B)``, and sorted by (term, doc_id) within files.
+  doc_len is denormalized into the row so BM25 scoring needs NO join
+  against doc_stats at query time. Queries prune to the handful of
+  term_bucket partitions their terms hash to — at 10^12 docs this is the
+  difference between scanning the whole index and scanning ~q/B of it.
+- **one layout**: ``postings``, ``doc_stats`` and ``term_stats`` are
+  partitioned by ``batch_id``, with one ``batch_stats`` row per batch.
+  A build or compaction writes the run ``CONSOLIDATED_BATCH_ID``, each
+  streaming micro-batch its own; readers sum df rows by term.
 - **resumability**: `build_index` processes the corpus in ``slices``
   (doc_id hash classes); each slice commits its output and a checkpoint
   record with lineage + doc/term/byte metrics before the next starts.
@@ -44,12 +48,13 @@ DEFAULT_TERM_BUCKETS = 64   # term_bucket partitions on disk
 
 
 GEN_POINTER = "_current"  # generation pointer file (rename-free commit)
+CONSOLIDATED_BATCH_ID = -1  # batch_id of the run a build or compaction writes
 
 
 def resolve_index_dir(index_dir: str) -> str:
     """Data directory of the CURRENT generation: ``<dir>/gen-N`` when a
-    ``_current`` pointer file exists, else ``<dir>`` itself (flat legacy
-    layout). Idempotent — resolving a generation dir returns it.
+    ``_current`` pointer file exists, else ``<dir>`` itself (never
+    compacted). Idempotent — resolving a generation dir returns it.
 
     The pointer file is the compaction COMMIT: one small atomic write
     (``os.replace`` locally, a single object PUT on S3/GCS), never a
@@ -67,7 +72,7 @@ def resolve_index_dir(index_dir: str) -> str:
 
 
 def current_generation(index_dir: str) -> int:
-    """0 = flat legacy layout (no pointer)."""
+    """0 = the index root itself (no pointer: never compacted)."""
     p = os.path.join(index_dir, GEN_POINTER)
     if not os.path.exists(p):
         return 0
@@ -263,21 +268,18 @@ def build_postings(
     """One build pass over ``docs``.
 
     BATCH (``batch_id=None``): writes ONLY ``postings/`` (per-doc
-    sentinel rows included) in a single persist-free lineage;
-    ``finalize_stats`` derives doc_stats/term_stats from the written
-    parquet with column-pruned re-reads.
+    sentinel rows included) under ``batch_id = CONSOLIDATED_BATCH_ID``
+    in a single persist-free lineage, with write ``mode``; the other
+    tables derive from it with column-pruned re-reads (``build_index``).
 
     STREAMING (``batch_id=N``): one persisted pass writes every
-    per-batch table (postings, doc_stats, term-df deltas, batch_stats).
-    ``batch_id`` makes the pass IDEMPOTENT: every
-    table gains a leading ``batch_id`` partition and is written with
-    dynamic partition-overwrite, so a replayed micro-batch (crash after
-    the data write, before the commit record) REPLACES its own
-    partitions instead of appending duplicate postings. It also writes
-    this batch's term-df deltas into ``term_stats/batch_id=N/`` — the
-    batch-scoped groupBy replaces the full-index re-aggregation that
-    made per-batch stats O(index size); readers SUM df across batch
-    runs (a few rows per query term).
+    per-batch table (postings, doc_stats, term-df deltas, batch_stats)
+    under ``batch_id=N`` with dynamic partition-overwrite, so a replayed
+    micro-batch (crash after the data write, before the commit record)
+    REPLACES its own partitions instead of appending duplicate postings.
+    Its term-df deltas in ``term_stats/batch_id=N/`` come from a
+    batch-scoped groupBy, never a full-index re-aggregation; readers SUM
+    df across batch runs (a few rows per query term).
     """
     # Guard against under-partitioned input (e.g. one small parquet file
     # = ONE scan partition): tokenization is the dominant cost and runs
@@ -312,16 +314,17 @@ def build_postings(
         # with cores (measured: 2->8 core efficiency fell 0.81 -> 0.57
         # between 800k and 6M docs with the old persist+re-consume
         # design). doc_stats and term_stats both derive from the
-        # WRITTEN postings parquet in ``finalize_stats`` — column-pruned
-        # re-reads (never the position bytes) instead of cache hits.
-        # Sentinel rows ride along in the postings table; NULLS-FIRST
-        # sorting clusters them at each file's head so the doc_stats
-        # filter scan row-group-skips the rest.
+        # WRITTEN postings parquet — column-pruned re-reads (never the
+        # position bytes) instead of cache hits. Sentinel rows ride
+        # along in the postings table; NULLS-FIRST sorting clusters them
+        # at each file's head so the doc_stats filter scan
+        # row-group-skips the rest.
         (
-            flat.repartition(term_buckets, "term_bucket")
+            flat.withColumn("batch_id", F.lit(CONSOLIDATED_BATCH_ID))
+            .repartition(term_buckets, "term_bucket")
             .sortWithinPartitions("term", "doc_id")
             .write.mode(mode)
-            .partitionBy("term_bucket")
+            .partitionBy("batch_id", "term_bucket")
             .parquet(os.path.join(out_dir, "postings"))
         )
         return
@@ -391,47 +394,39 @@ def finalize_stats(
     out_dir: str,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
-    derive_doc_stats: bool | None = None,
 ) -> dict:
-    """Derive every secondary table from the written postings parquet:
-    doc_stats (per-doc sentinel filter scan), term_stats (the only
-    unavoidable full groupBy — map-side combined), then corpus N/avgdl
-    and the sorted term_dict.
-
-    ``derive_doc_stats=None`` probes the postings table for sentinel
-    rows (one pushdown ``term IS NULL`` row fetch): a fresh batch build
-    always has them; a compacted index (sentinels dropped at merge, the
-    doc_stats table authoritative) or a pre-sentinel layout keeps its
-    existing doc_stats untouched.
+    """Derive every other table of a built or compacted index from its
+    written ``postings`` and ``doc_stats``: term_stats (the only
+    unavoidable full groupBy, map-side combined), batch_stats, corpus
+    N/avgdl (``fold_corpus_stats``) and the sorted term_dict.
 
     Streaming ingest does NOT use this — build_postings(batch_id=N)
     writes batch-scoped term deltas and ``fold_corpus_stats`` folds
     O(#batches) delta rows, so micro-batch stats never rescan the index.
     """
     out_dir = resolve_index_dir(out_dir)
-    postings_path = os.path.join(out_dir, "postings")
-    postings = spark.read.parquet(postings_path)
-    sentinels = postings.where(F.col("term").isNull())
-    if derive_doc_stats is None:
-        derive_doc_stats = bool(sentinels.select("doc_id").take(1))
-    if derive_doc_stats:
-        (
-            sentinels.select("doc_id", "doc_len")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "doc_stats"))
-        )
+    parts = ["batch_id", "term_bucket"]
     (
-        postings.where(F.col("term").isNotNull())
-        .groupBy("term", "term_bucket")
+        spark.read.parquet(os.path.join(out_dir, "postings"))
+        .where(F.col("term").isNotNull())
+        .groupBy(*parts, "term")
         .agg(F.count("*").alias("df"))
         # one writer task per bucket dir: an unclustered partitioned
         # write commits tasks x buckets tiny files
         .repartition(term_buckets, "term_bucket")
         .write.mode("overwrite")
-        .partitionBy("term_bucket")
+        .partitionBy(*parts)
         .parquet(os.path.join(out_dir, "term_stats"))
     )
-    stats = refresh_corpus_stats(
+    (
+        spark.read.parquet(os.path.join(out_dir, "doc_stats"))
+        .groupBy("batch_id")
+        .agg(F.count("*").alias("n_docs"), F.sum("doc_len").alias("total_tokens"))
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(os.path.join(out_dir, "batch_stats"))
+    )
+    stats = fold_corpus_stats(
         spark, out_dir, term_buckets=term_buckets, with_positions=with_positions,
     )
     rebuild_term_dict(spark, out_dir, n_docs=stats["n_docs"])
@@ -480,34 +475,6 @@ def read_term_dict_meta(out_dir: str) -> dict | None:
         return json.load(f)
 
 
-def refresh_corpus_stats(
-    spark: SparkSession,
-    out_dir: str,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    with_positions: bool = False,
-) -> dict:
-    """N/avgdl/total_tokens from a FULL scan of doc_stats (one row per
-    doc, never the postings) -> corpus_stats.json. This is the batch
-    finalize/compaction path; streaming micro-batches use
-    ``fold_corpus_stats`` (O(#batches) delta rows) instead."""
-    out_dir = resolve_index_dir(out_dir)
-    doc_stats = spark.read.parquet(os.path.join(out_dir, "doc_stats"))
-    row = doc_stats.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doc_len").alias("avg_doc_len"),
-        F.sum("doc_len").alias("total_tokens"),
-    ).collect()[0]
-    stats = {
-        "n_docs": row["n_docs"],
-        "avg_doc_len": float(row["avg_doc_len"] or 0.0),
-        "total_tokens": int(row["total_tokens"] or 0),
-        "term_buckets": term_buckets,
-        "with_positions": with_positions,
-    }
-    _write_corpus_stats(out_dir, stats)
-    return stats
-
-
 def _write_corpus_stats(out_dir: str, stats: dict) -> None:
     out_dir = resolve_index_dir(out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -523,12 +490,13 @@ def fold_corpus_stats(
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
 ) -> dict:
-    """Streaming-path stats refresh: sum the per-batch (n_docs,
-    total_tokens) delta rows written by build_postings(batch_id=N) —
-    O(#batches) rows, NEVER a re-aggregation of doc_stats (O(total
-    docs) per micro-batch, the scale-killer at 10^12 docs). Idempotent:
-    a replayed batch REPLACED its batch_stats partition, so the fold
-    can never double-count.
+    """The one corpus-stats refresh: sum the per-batch (n_docs,
+    total_tokens) rows of ``batch_stats`` — one per batch run, written
+    by build_postings(batch_id=N) or by ``finalize_stats`` for the
+    consolidated run — O(#batches) rows, NEVER a re-aggregation of
+    doc_stats (O(total docs) per micro-batch, the scale-killer at 10^12
+    docs). Idempotent: a replayed batch REPLACED its batch_stats
+    partition, so the fold can never double-count.
 
     Self-healing: a doc_stats batch partition with no batch_stats row
     (an index written by a pre-delta version, or a crash between the
@@ -646,8 +614,9 @@ def build_index(
     crashed build resumes by skipping committed slices — the reference
     has no equivalent (its bulk ingest is a sequential HTTP loop,
     reference pkg/server/server.go:253-364). Per slice only the postings
-    table is written (single-pass, persist-free); doc_stats/term_stats
-    derive from the complete postings parquet in the finalize step.
+    table is written (single-pass, persist-free); doc_stats is then its
+    per-doc sentinel rows and ``finalize_stats`` derives the rest — the
+    layout a compaction leaves, so a stream can append to it.
 
     ``term_buckets=None`` (the default) sizes the bucket count from the
     corpus via ``recommended_term_buckets`` (one count job): buckets
@@ -698,9 +667,18 @@ def build_index(
         with open(tmp, "w") as f:
             json.dump(rec, f)
         os.replace(tmp, _ckpt_path(out_dir, s))
+    # doc_stats = the per-doc sentinel rows (zero-token docs included)
+    live = resolve_index_dir(out_dir)
+    (
+        spark.read.parquet(os.path.join(live, "postings"))
+        .where(F.col("term").isNull())
+        .select("doc_id", "doc_len", "batch_id")
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(os.path.join(live, "doc_stats"))
+    )
     stats = finalize_stats(
-        spark, out_dir, term_buckets=term_buckets,
-        with_positions=with_positions, derive_doc_stats=True,
+        spark, out_dir, term_buckets=term_buckets, with_positions=with_positions,
     )
     from gopensearch_spark.search.readers import invalidate
 
@@ -708,29 +686,27 @@ def build_index(
     return stats
 
 
-CONSOLIDATED_BATCH_ID = -1  # partition value for compacted streaming runs
-
-
 def compact_streaming_index(
     spark: SparkSession,
     index_dir: str,
 ) -> dict:
-    """Compact a multi-batch STREAMING index in place — RENAME-FREE.
+    """Compact an index in place — RENAME-FREE; the one compaction (also
+    behind ``Engine.force_merge`` and ``jobs/compact_index_job.py``).
 
-    Every micro-batch appends its own posting runs and per-batch delta
-    rows; after B batches a term's postings are spread over B sorted
-    runs and df/stat lookups sum B delta rows. This merges everything
-    back to one run per term — the same repartition-by-term + sort as
-    ``compact_index`` — while KEEPING the ``batch_id`` partition axis
-    (consolidated under ``batch_id=-1``) so the parquet layout stays
-    consistent and FUTURE micro-batches keep appending under their own
-    ``batch_id=N`` partitions:
+    Every build slice and micro-batch appends its own posting runs;
+    after B of them a term's postings are spread over B sorted runs and
+    df/stat lookups sum B delta rows. This merges everything back to one
+    run per term (repartition-by-term + sort) under ``batch_id =
+    CONSOLIDATED_BATCH_ID`` — the layout a batch build writes — so
+    FUTURE micro-batches keep appending under their own ``batch_id=N``:
 
-    - postings/doc_stats/term_stats rewritten under
-      ``batch_id=-1``; batch_stats collapses to ONE consolidated row, so
+    - postings/doc_stats are rewritten and ``finalize_stats`` derives
+      the rest: batch_stats collapses to ONE consolidated row, so
       ``fold_corpus_stats`` stays O(#batches-since-compaction);
-    - doc_stats copied from the SOURCE doc_stats (zero-token docs stay
-      in N/avgdl — FTS5 semantics);
+    - doc_stats is copied from the SOURCE doc_stats (zero-token docs
+      stay in N/avgdl — FTS5 semantics), and an index written before
+      the build used this layout compacts too (``drop("batch_id")`` is a
+      no-op on it);
     - ``_stream_batches`` commit records live at the index ROOT, outside
       any generation, so replayed batches still skip;
     - COMMIT = write the next generation dir ``<dir>/gen-{N+1}`` fully,
@@ -761,7 +737,7 @@ def compact_streaming_index(
     # is O(index), far past what a cached relation holds at scale.
     flat = (
         spark.read.parquet(os.path.join(src, "postings"))
-        .where(F.col("term").isNotNull())  # batch-gen per-doc sentinels, if any
+        .where(F.col("term").isNotNull())  # a batch build's per-doc sentinels
         .drop("batch_id", "term_bucket")
         .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"))
         .withColumn("batch_id", cb)
@@ -786,25 +762,9 @@ def compact_streaming_index(
     doc_stats.write.mode("overwrite").partitionBy("batch_id").parquet(
         os.path.join(dst, "doc_stats")
     )
-    (
-        doc_stats.groupBy("batch_id")
-        .agg(F.count("*").alias("n_docs"), F.sum("doc_len").alias("total_tokens"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(os.path.join(dst, "batch_stats"))
-    )
-    merged = spark.read.parquet(os.path.join(dst, "postings"))
-    (
-        merged.groupBy("batch_id", "term_bucket", "term")
-        .agg(F.count("*").alias("df"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id", "term_bucket")
-        .parquet(os.path.join(dst, "term_stats"))
-    )
-    stats = fold_corpus_stats(
+    stats = finalize_stats(
         spark, dst, term_buckets=term_buckets, with_positions=with_positions,
     )
-    rebuild_term_dict(spark, dst, n_docs=stats["n_docs"])
     # THE commit: one atomic pointer write; everything before this line
     # is invisible to readers, everything after is cleanup
     _commit_generation(index_dir, gen + 1)
@@ -822,74 +782,17 @@ _TABLE_DIRS = ("postings", "blocks", "doc_stats", "term_stats", "batch_stats", "
 
 def _cleanup_old_generations(index_dir: str, committed_gen: int) -> None:
     """Keep the committed generation plus ONE predecessor (for in-flight
-    readers); delete anything older. Generation 0 is the flat legacy
-    layout — its table dirs live at the index root, so only those are
-    removed (never ``_stream_batches``/``_checkpoints``/the pointer)."""
+    readers); delete anything older. Generation 0 is the index root
+    itself (no pointer yet) — its table dirs live there, so only those
+    are removed (never ``_stream_batches``/``_checkpoints``/the pointer)."""
     import shutil
 
     for g in range(1, committed_gen - 1):
         shutil.rmtree(os.path.join(index_dir, f"gen-{g}"), ignore_errors=True)
-    if committed_gen >= 2:  # flat layout is now two generations old
+    if committed_gen >= 2:  # the root's tables are now two generations old
         for t in _TABLE_DIRS:
             shutil.rmtree(os.path.join(index_dir, t), ignore_errors=True)
         try:
             os.remove(os.path.join(index_dir, "corpus_stats.json"))
         except OSError:
             pass
-
-
-def compact_index(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    term_buckets: int | None = None,
-) -> dict:
-    """Merge a multi-slice (fragmented) index into one compacted index.
-
-    Each resumable slice appends its own parquet files per term_bucket,
-    so after S slices a term's postings are spread over S sorted runs.
-    Compaction repartitions the postings by term (``term_bucket =
-    pmod(xxhash64(term), B)``) and re-sorts them by (term, doc_id)
-    within each bucket — one sorted run per term again.
-
-    Writes a complete new index at ``dst_dir`` (postings, doc_stats,
-    term_stats, corpus_stats) and leaves ``src_dir`` untouched — swap-in
-    is the caller's atomic rename.
-    """
-    src_stats = read_corpus_stats(src_dir)
-    term_buckets = term_buckets or src_stats["term_buckets"]
-    with_positions = bool(src_stats.get("with_positions"))
-
-    # persist-free merge: write the re-sorted postings once, then derive
-    # term_stats from the WRITTEN parquet (see build_postings)
-    flat = (
-        spark.read.parquet(os.path.join(src_dir, "postings"))
-        .where(F.col("term").isNotNull())  # drop per-doc sentinels
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int")
-        )
-    )
-    (
-        flat.repartition(term_buckets, "term_bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(dst_dir, "postings"))
-    )
-    # source doc_stats, not postings-derived: preserves zero-token
-    # docs' membership in N/avgdl (see compact_streaming_index)
-    (
-        spark.read.parquet(os.path.join(src_dir, "doc_stats"))
-        .drop("batch_id")
-        .dropDuplicates(["doc_id"])
-        .write.mode("overwrite")
-        .parquet(os.path.join(dst_dir, "doc_stats"))
-    )
-    stats = finalize_stats(
-        spark, dst_dir, term_buckets=term_buckets,
-        with_positions=with_positions, derive_doc_stats=False,
-    )
-    from gopensearch_spark.search.readers import invalidate
-
-    invalidate(dst_dir)
-    return stats

@@ -1,12 +1,12 @@
-"""spark-submit entrypoint: compact a multi-slice index (run merge).
+"""spark-submit entrypoint: compact an index in place (run merge).
 
     spark-submit --py-files gopensearch_spark.zip \\
-        gopensearch_spark/jobs/compact_index_job.py \\
-        --src s3://bucket/index --dst s3://bucket/index_compacted
+        gopensearch_spark/jobs/compact_index_job.py --index s3://bucket/index
 
-Performs the repartition-by-term merge back to one sorted run per term
-(gopensearch_spark/index/builder.py compact_index) and prints one JSON
-metrics line. The source index is left untouched.
+Merges the posting runs back to one sorted run per term and commits the
+index's next generation (gopensearch_spark/index/builder.py
+compact_streaming_index). Prints one JSON metrics line with the
+committed ``generation``.
 """
 
 from __future__ import annotations
@@ -19,22 +19,20 @@ import time
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--src", required=True)
-    p.add_argument("--dst", required=True)
-    p.add_argument("--term-buckets", type=int, default=None)
+    p.add_argument("--index", required=True)
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from gopensearch_spark.index import compact_index
+    from gopensearch_spark.index import compact_streaming_index, current_generation
     from gopensearch_spark.session import get_spark
 
     spark = get_spark("gopensearch-compact-index", master=args.master)
     t0 = time.time()
-    stats = compact_index(spark, args.src, args.dst, term_buckets=args.term_buckets)
+    stats = compact_streaming_index(spark, args.index)
     print(json.dumps({
         "job": "compact_index",
-        "src": args.src,
-        "dst": args.dst,
+        "index": args.index,
+        "generation": current_generation(args.index),
         "n_docs": stats["n_docs"],
         "elapsed_sec": round(time.time() - t0, 3),
     }))

@@ -22,7 +22,10 @@ runs until interrupted. Every micro-batch is replay-idempotent
 (batch_id-partitioned dynamic overwrite), folds one (n_docs,
 total_tokens) delta row into corpus stats (O(#batches), never a
 doc_stats re-scan), and rebuilds the sorted term_dict so prefix queries
-keep partition-pruning. Prints one JSON metrics line on exit.
+keep partition-pruning. The bucket count and the positions flag default
+to those of the index already at ``--index`` (a batch build or an
+earlier stream); a conflicting explicit value fails before any write.
+Prints one JSON metrics line on exit.
 """
 
 from __future__ import annotations
@@ -37,8 +40,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", required=True)
     p.add_argument("--index", required=True)
     p.add_argument("--checkpoint", required=True)
-    p.add_argument("--term-buckets", type=int, default=64)
-    p.add_argument("--positions", action="store_true")
+    p.add_argument("--term-buckets", type=int, default=None,
+                   help="default: the existing index's, else 16")
+    p.add_argument("--positions", action="store_true", default=None,
+                   help="default: the existing index's, else off")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument("--drain", action="store_true",
                    help="trigger availableNow: index the backlog and exit")

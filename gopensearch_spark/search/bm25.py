@@ -49,11 +49,16 @@ def idf(n_docs: int, df: int) -> float:
     return x if x > 0.0 else 1e-6
 
 
+def tf_norm(tf, dl, avgdl):
+    """FTS5's per-posting weight ``w(tf, dl)``, the one BM25 tf formula
+    of the engine. Works on floats (``explain``) and on double Columns
+    (the scoring plans) alike."""
+    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
 def bm25_score_expr(avg_doc_len: float, idf_col: Column = None) -> Column:
     """Per-posting BM25 contribution as a codegen-able Column expression."""
-    tf = F.col("tf").cast("double")
-    dl = F.col("doc_len").cast("double")
-    w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avg_doc_len))
+    w = tf_norm(F.col("tf").cast("double"), F.col("doc_len").cast("double"), avg_doc_len)
     return (idf_col if idf_col is not None else F.col("idf")) * w
 
 

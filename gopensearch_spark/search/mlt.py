@@ -10,21 +10,20 @@ min_doc_freq=5, minimum_should_match="30%") with this engine's
 FTS5-pinned BM25 idf as the significance weight.
 
 Scale: term selection is driver-side over the LIKE text only — bounded
-by the like text's vocabulary, never the corpus — plus ONE pruned
-term_stats lookup (partition-pruned IN-list, collect of <= vocab rows).
+by the like text's vocabulary, never the corpus — plus the memoized
+``readers.term_dfs`` lookup (one partition-pruned IN-list job for terms
+not cached yet, none on a warmed index).
 Execution is the ordinary pruned-postings OR relation with a min-match
 filter on the per-doc matched-term count; nothing new shuffles.
 """
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from gopensearch_spark.search.bm25 import bm25_scores
+from gopensearch_spark.search.bm25 import bm25_scores, idf
 
 
 def select_mlt_terms(
@@ -41,7 +40,7 @@ def select_mlt_terms(
     and index df within [min_doc_freq, max_doc_freq or inf], rank by
     tf x idf (ties by term asc), take the top max_query_terms."""
     from gopensearch_spark.analysis import term_freqs
-    from gopensearch_spark.search.readers import corpus_stats, index_table
+    from gopensearch_spark.search.readers import corpus_stats, term_dfs
 
     tf: Counter = Counter()
     for t in like_texts:
@@ -49,20 +48,14 @@ def select_mlt_terms(
     cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
     if not cand:
         return []
-    ts = index_table(spark, index_dir, "term_stats").where(F.col("term").isin(cand))
-    if "batch_id" in ts.columns:  # streaming index: fold per-batch deltas
-        ts = ts.groupBy("term").agg(F.sum("df").alias("df"))
-    dfs = {r["term"]: int(r["df"]) for r in ts.select("term", "df").collect()}
     n_docs = corpus_stats(index_dir)["n_docs"]
+    dfs = term_dfs(spark, index_dir, cand)
     scored: list[tuple[float, str]] = []
     for t in cand:
-        df_ = dfs.get(t, 0)
+        df_ = dfs[t]
         if df_ < min_doc_freq or (max_doc_freq and df_ > max_doc_freq):
             continue
-        idf = math.log((n_docs - df_ + 0.5) / (df_ + 0.5))
-        if idf <= 0.0:
-            idf = 1e-6  # the engine-wide FTS5 idf floor
-        scored.append((tf[t] * idf, t))
+        scored.append((tf[t] * idf(n_docs, df_), t))
     scored.sort(key=lambda x: (-x[0], x[1]))
     return [t for _, t in scored[:max_query_terms]]
 

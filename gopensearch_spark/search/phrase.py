@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from gopensearch_spark import codecs
-from gopensearch_spark.search.bm25 import K1, B, idf, term_buckets_for
+from gopensearch_spark.search.bm25 import idf, term_buckets_for, tf_norm
 
 _EMPTY = "doc_id long, score double"
 
@@ -97,7 +97,7 @@ def _score_topk(matches: DataFrame, n_docs: int, avgdl: float, k: int | None) ->
     idf_u = idf(n_docs, df_unit)
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
-    w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    w = tf_norm(tf, dl, avgdl)
     scores = matches.select("doc_id", (F.lit(idf_u) * w).alias("score"))
     if k is None:
         return scores
@@ -615,7 +615,7 @@ def _near_match(
     score = None
     for i, df_u in enumerate(dfs):
         tf = F.col(f"tf{i}").cast("double")
-        w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+        w = tf_norm(tf, dl, avgdl)
         contrib = F.lit(idf(n_docs, df_u)) * w
         score = contrib if score is None else score + contrib
     scores = hits.select("doc_id", score.alias("score"))

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gopensearch_spark import codecs
-from gopensearch_spark.search.bm25 import B, K1, idf
+from gopensearch_spark.search.bm25 import idf, tf_norm
 from gopensearch_spark.search.phrase import (
     _EMPTY,
     _group_docs_with_all_terms,
@@ -144,7 +144,7 @@ def _span_near_match(
         return spark.createDataFrame([], _EMPTY)
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
-    w = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    w = tf_norm(tf, dl, avgdl)
     scores = matches.select(
         "doc_id", (F.lit(idf(n_docs, df_unit)) * w).alias("score")
     )

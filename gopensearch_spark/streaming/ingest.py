@@ -6,8 +6,13 @@ parquet files landing in a directory are discovered by a file stream
 and folded into the inverted index one micro-batch at a time:
 
     readStream(web_pages) -> foreachBatch:
-        extract text (Arrow UDF) -> build_postings(mode="append")
+        extract text (Arrow UDF) -> build_postings(batch_id=N)
         + a per-batch checkpoint record (lineage + metrics)
+
+A stream may append to a batch build, a compaction or an earlier
+stream: all share one layout (see ``index/builder.py``). An index built
+before the batch build wrote it must be compacted once before a stream
+appends to it.
 
 Exactly-once, by construction not just by checkpoint: every table is
 written under a ``batch_id=N`` partition with DYNAMIC partition
@@ -39,7 +44,9 @@ from pyspark.sql import SparkSession
 
 from gopensearch_spark.index.builder import (
     build_postings,
+    compact_streaming_index,
     fold_corpus_stats,
+    read_corpus_stats,
     rebuild_term_dict,
 )
 
@@ -107,11 +114,29 @@ def _make_batch_handler(
             # batch's commit record: a crash mid-compaction replays
             # nothing (the batch is committed; the old index dir is
             # only swapped once the compacted one is complete).
-            from gopensearch_spark.index.builder import compact_streaming_index
-
             compact_streaming_index(batch_df.sparkSession, index_dir)
 
     return handle
+
+
+def _index_layout(
+    index_dir: str, term_buckets: int | None, with_positions: bool | None
+) -> tuple[int, bool]:
+    """(term_buckets, with_positions) of a stream into ``index_dir``:
+    ``None`` takes the existing index's value (16 and False when there is
+    none). A conflicting value raises, since term lookups hash into the
+    one bucket count the index records."""
+    try:
+        stats = read_corpus_stats(index_dir)
+    except FileNotFoundError:
+        return term_buckets or 16, bool(with_positions)
+    have = (int(stats["term_buckets"]), bool(stats.get("with_positions")))
+    for name, want, got in zip(("term_buckets", "with_positions"),
+                               (term_buckets, with_positions), have):
+        if want is not None and want != got:
+            raise ValueError(
+                f"{name}={want!r} conflicts with the index at {index_dir!r} ({got!r})")
+    return have
 
 
 def start_streaming_index(
@@ -119,19 +144,24 @@ def start_streaming_index(
     input_path: str,
     index_dir: str,
     checkpoint_dir: str,
-    term_buckets: int = 16,
-    with_positions: bool = False,
+    term_buckets: int | None = None,
+    with_positions: bool | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
 ):
     """Start (and return) the streaming query maintaining ``index_dir``.
 
+    ``term_buckets`` and ``with_positions`` default to the existing
+    index's (else 16 and False); a conflicting value raises
+    ``ValueError`` before anything is written.
+
     ``compact_every=N`` opts into amortized in-stream compaction: after
     every N-th committed batch the accumulated per-batch runs merge into
     one consolidated run (``batch_id=-1``) via
     ``builder.compact_streaming_index`` — bounding per-term run counts
     and stat-delta rows on long-lived streams."""
+    term_buckets, with_positions = _index_layout(index_dir, term_buckets, with_positions)
     reader = spark.readStream.schema(WEB_PAGES_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -156,6 +186,4 @@ def index_stream_available_now(spark: SparkSession, input_path: str,
     q = start_streaming_index(spark, input_path, index_dir, checkpoint_dir,
                               available_now=True, **kw)
     q.awaitTermination()
-    from gopensearch_spark.index.builder import read_corpus_stats
-
     return read_corpus_stats(index_dir)

@@ -85,7 +85,7 @@ def test_auto_bucket_build_records_count(spark, tmp_path):
     assert 1 <= expect < DEFAULT_TERM_BUCKETS
     assert read_corpus_stats(idx)["term_buckets"] == expect
     dirs = [
-        d for d in os.listdir(os.path.join(idx, "postings"))
+        d for d in os.listdir(os.path.join(idx, "postings", "batch_id=-1"))
         if d.startswith("term_bucket=")
     ]
     assert 0 < len(dirs) <= expect

@@ -1,7 +1,8 @@
 """Zero-token documents: FTS5 counts EVERY row in N and avgdl (verified
 against SQLite directly below), so an empty/whitespace doc must appear in
 doc_stats and shift BM25 scores exactly like it does in FTS5 — at build
-time, across batch compaction, and across streaming compaction.
+time, across compaction of a sliced build, and across compaction of a
+streaming index.
 
 Regression for the round-3 advisory: compaction rebuilt doc_stats from
 the postings table, silently dropping zero-token docs and changing every
@@ -16,7 +17,6 @@ from gopensearch_spark.fts5_oracle import Fts5Oracle
 from gopensearch_spark.index import (
     build_index,
     build_postings,
-    compact_index,
     compact_streaming_index,
     fold_corpus_stats,
     read_corpus_stats,
@@ -68,13 +68,13 @@ def test_build_counts_empty_docs_like_fts5(spark, tmp_path, oracle):
 
 
 def test_batch_compaction_preserves_empty_docs(spark, tmp_path, oracle):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    out = str(tmp_path / "idx")
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    s0 = build_index(spark, docs, src, slices=2, term_buckets=4)
-    s1 = compact_index(spark, src, dst)
+    s0 = build_index(spark, docs, out, slices=2, term_buckets=4)
+    s1 = compact_streaming_index(spark, out)
     assert (s1["n_docs"], s1["total_tokens"]) == (s0["n_docs"], s0["total_tokens"])
     _assert_identical(
-        _ours(wand_match(spark, dst, ["spark"], k=10, mode="or")),
+        _ours(wand_match(spark, out, ["spark"], k=10, mode="or")),
         oracle.match(["spark"], k=10, mode="or"),
     )
 

@@ -216,3 +216,27 @@ def test_distance_feature_on_iso_date_template_field(spark):
     assert [str(h["_id"]) for h in hits] == ["3", "2", "1"]
     assert math.isclose(hits[0]["_score"], 1.0, rel_tol=1e-9)
     assert math.isclose(hits[1]["_score"], 12 / 18, rel_tol=1e-9)
+
+
+def test_range_on_iso_date_template_field(spark):
+    """A range on a strict_date_optional_time template field compares
+    instants, not strings: 10:00+02:00 is 08:00Z, before the bound."""
+    from gopensearch_spark.dsl import Engine
+
+    e = Engine(spark)
+    e.put_template("iso_range", {
+        "index_patterns": "isorange*",
+        "properties": {"created": {"type": "date",
+                                   "format": "strict_date_optional_time"}},
+    })
+    df = spark.createDataFrame(
+        [(1, "2021-03-01T10:00:00+02:00"), (2, "2021-03-01T08:30:00Z"),
+         (3, "2021-03-01T08:00:00Z")],
+        "id long, created string",
+    )
+    e.create_index("isorange", df, id_col="id")
+    out = e.search("isorange", {
+        "query": {"range": {"created": {"gte": "2021-03-01T08:15:00Z"}}},
+        "size": 10,
+    })
+    assert sorted(str(h["_id"]) for h in out["hits"]["hits"]) == ["2"]

@@ -339,7 +339,7 @@ def test_wand_and_on_range_split_batches(spark, tmp_path):
     sorted across batches; top-k over such an index must still equal
     FTS5's over the same docs."""
     from gopensearch_spark.fts5_oracle import Fts5Oracle
-    from gopensearch_spark.index.builder import build_postings, refresh_corpus_stats
+    from gopensearch_spark.index.builder import build_postings, fold_corpus_stats
     from gopensearch_spark.search import wand_match
 
     idx = str(tmp_path / "idx")
@@ -349,7 +349,7 @@ def test_wand_and_on_range_split_batches(spark, tmp_path):
     # batch 0 holds the HIGH id range, batch 1 the LOW one
     build_postings(mk(1000, 1080), idx, term_buckets=4, batch_id=0)
     build_postings(mk(1, 60), idx, term_buckets=4, batch_id=1)
-    refresh_corpus_stats(spark, idx, term_buckets=4)
+    fold_corpus_stats(spark, idx, term_buckets=4)
 
     o = Fts5Oracle()
     o.load([(i, text(i)) for i in [*range(1000, 1080), *range(1, 60)]])
@@ -419,36 +419,54 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     pages.unpersist()
 
 
+def _assert_one_layout(idx):
+    """The committed generation has the one index layout: postings,
+    doc_stats and term_stats partitioned by batch_id, a batch_stats
+    table, and no blocks/ dir."""
+    import glob
+
+    from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
+
+    root = resolve_index_dir(idx)
+    for table in ("postings", "doc_stats", "term_stats"):
+        assert glob.glob(os.path.join(root, table, "batch_id=*")), (root, table)
+    assert os.path.isdir(os.path.join(root, "batch_stats")), root
+    assert not os.path.exists(os.path.join(root, "blocks")), root
+    assert set(read_corpus_stats(idx)) == {
+        "n_docs", "avg_doc_len", "total_tokens", "term_buckets", "with_positions"}
+
+
 def test_index_writes_no_blocks_table(spark, tmp_path):
-    """The flat postings are the only posting layout: a batch build, a
-    streaming micro-batch and a compaction write no blocks/ dir and no
-    codec key in corpus_stats.json, and warm_index persists nothing on
-    the executors."""
+    """Every writer produces the one layout: a batch build, a streaming
+    micro-batch (into the built index and into a fresh one) and a
+    compaction write batch_id-partitioned tables plus batch_stats, no
+    blocks/ dir and no codec key in corpus_stats.json; warm_index
+    persists nothing on the executors."""
     from gopensearch_spark.index.builder import (
         build_index,
         build_postings,
         compact_streaming_index,
         fold_corpus_stats,
-        read_corpus_stats,
-        resolve_index_dir,
     )
     from gopensearch_spark.search import warm_index
     from gopensearch_spark.search.readers import invalidate
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta w{i % 5}") for i in range(40)], "doc_id long, text string")
+    more = spark.createDataFrame(
+        [(i, f"beta gamma w{i % 3}") for i in range(40, 60)], "doc_id long, text string")
     built, streamed = str(tmp_path / "built"), str(tmp_path / "streamed")
     build_index(spark, docs, built, term_buckets=4)
+    _assert_one_layout(built)
     build_postings(docs, streamed, term_buckets=4, batch_id=0)
     fold_corpus_stats(spark, streamed, term_buckets=4)
-    assert not os.path.exists(os.path.join(streamed, "blocks"))
-    compact_streaming_index(spark, streamed)
+    _assert_one_layout(streamed)
+    build_postings(more, built, term_buckets=4, batch_id=0)
+    assert fold_corpus_stats(spark, built, term_buckets=4)["n_docs"] == 60
+    _assert_one_layout(built)
     for idx in (built, streamed):
-        root = resolve_index_dir(idx)
-        assert os.path.isdir(os.path.join(root, "postings")), root
-        assert not os.path.exists(os.path.join(root, "blocks")), root
-        assert set(read_corpus_stats(idx)) == {
-            "n_docs", "avg_doc_len", "total_tokens", "term_buckets", "with_positions"}
+        compact_streaming_index(spark, idx)
+        _assert_one_layout(idx)
 
     persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     before = persisted()
@@ -457,3 +475,90 @@ def test_index_writes_no_blocks_table(spark, tmp_path):
         assert persisted() == before
     finally:
         invalidate(built)
+
+
+def test_stream_appends_to_built_and_force_merged_index(spark, docs_small, tmp_path):
+    """A stream appends to a batch-built index, and again after
+    Engine.force_merge: match, phrase and prefix results equal FTS5's
+    over the union each time, and n_docs counts the union. With default
+    arguments the stream keeps the build's auto-sized bucket count and
+    its positions. Repeated force_merges keep at most two generations."""
+    import glob
+
+    from gopensearch_spark.dsl import Engine
+    from gopensearch_spark.fts5_oracle import Fts5Oracle
+    from gopensearch_spark.index.builder import (
+        build_index,
+        read_corpus_stats,
+        recommended_term_buckets,
+    )
+    from gopensearch_spark.search import bm25_match, phrase_match, prefix_match
+    from gopensearch_spark.streaming import index_stream_available_now
+    from gopensearch_spark.webtext import prepare_corpus, synth_web_pages
+
+    inbox, idx, cp = (str(tmp_path / d) for d in ("inbox", "idx", "cp"))
+    os.makedirs(inbox)
+    pages = synth_web_pages(spark, docs_small, copies=3).cache()
+    built = pages.where("url LIKE '%/c0' OR url LIKE '%/c1'")
+    waves = [pages.where(f"url LIKE '%/c2' AND pmod(xxhash64(url), 2) = {w}")
+             for w in (0, 1)]
+    corpus = prepare_corpus(built).select("doc_id", "text")
+    n_built = corpus.count()
+    assert n_built >= 1000
+    build_index(spark, corpus, idx, term_buckets=None, with_positions=True)
+    buckets = read_corpus_stats(idx)["term_buckets"]
+    assert buckets == recommended_term_buckets(n_built) != 16
+
+    waves[0].coalesce(1).write.mode("append").parquet(inbox)
+    rows = corpus.collect()
+    e = Engine(spark)
+    e.create_index("d", corpus, text_field="text", index_dir=idx)
+
+    def check(new_pages):
+        rows.extend(prepare_corpus(new_pages).select("doc_id", "text").collect())
+        stats = read_corpus_stats(idx)
+        assert stats["n_docs"] == len(rows)
+        assert (stats["term_buckets"], stats["with_positions"]) == (buckets, True)
+        o = Fts5Oracle()
+        o.load([(int(r.doc_id), r.text) for r in rows])
+        for terms, mode in [(["spark", "join"], "or"), (["data", "merge"], "and")]:
+            got = [(int(r.doc_id), float(r.score))
+                   for r in bm25_match(spark, idx, terms, k=15, mode=mode).collect()]
+            _assert_identical(got, o.match(terms, k=15, mode=mode))
+        for ours, expr in [(phrase_match(spark, idx, "spark join", k=15), '"spark join"'),
+                           (prefix_match(spark, idx, "dat", k=15), "dat*")]:
+            got = [(int(r.doc_id), float(r.score)) for r in ours.collect()]
+            _assert_identical(got, o.match_raw(expr, k=15))
+        o.close()
+
+    index_stream_available_now(spark, inbox, idx, cp)
+    check(waves[0])
+
+    assert e.force_merge("d")["_shards"]["successful"] == 1
+    waves[1].coalesce(1).write.mode("append").parquet(inbox)
+    index_stream_available_now(spark, inbox, idx, cp)
+    check(waves[1])
+
+    for _ in range(2):
+        e.force_merge("d")
+    gens = sorted(os.path.basename(g) for g in glob.glob(os.path.join(idx, "gen-*")))
+    assert gens == ["gen-2", "gen-3"]
+    check(pages.limit(0))
+    pages.unpersist()
+
+
+def test_stream_rejects_conflicting_layout(spark, tmp_path):
+    """An explicit term_buckets or with_positions that differs from the
+    existing index's raises before the stream writes anything."""
+    from gopensearch_spark.index.builder import build_index
+    from gopensearch_spark.streaming import index_stream_available_now
+
+    inbox, idx, cp = (str(tmp_path / d) for d in ("inbox", "idx", "cp"))
+    os.makedirs(inbox)
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    build_index(spark, docs, idx, term_buckets=4)
+    for bad in ({"term_buckets": 8}, {"with_positions": True}):
+        with pytest.raises(ValueError, match="conflicts with the index"):
+            index_stream_available_now(spark, inbox, idx, cp, **bad)
+    assert not os.path.exists(cp)
+    assert not os.path.exists(os.path.join(idx, "_stream_batches"))

@@ -99,50 +99,78 @@ def test_build_index_job_end_to_end(spark, web_pages_small, tmp_path):
     assert len(bm25_match(spark, idx, "data", k=5, mode="or").collect()) == 5
 
 
-def test_compact_index_merges_slices(spark, docs_small, oracle_small, tmp_path):
-    """A fragmented 3-slice build compacts into single sorted runs with
-    unchanged (rank-identical) query results.
-
-    Each slice appends its own sorted postings file per term_bucket;
-    compaction merges those back to one run per bucket."""
+def _files_per_bucket(idx):
+    """Parquet files in each postings bucket dir of the live generation."""
     import glob
+
+    from gopensearch_spark.index import resolve_index_dir
+
+    return [
+        len(glob.glob(os.path.join(b, "*.parquet")))
+        for b in glob.glob(os.path.join(
+            resolve_index_dir(idx), "postings", "batch_id=*", "term_bucket=*"))
+    ]
+
+
+def _assert_matches_oracle(spark, idx, oracle_small):
+    """match (OR and AND) and phrase results equal FTS5's."""
     import math
-    import os
 
-    from gopensearch_spark.index import build_index, compact_index
-    from gopensearch_spark.search import bm25_match
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "compacted")
-    build_index(spark, docs_small, src, slices=3, term_buckets=8, with_positions=True,
-                input_lineage="sf0.001/documents.parquet")
-
-    def files_per_bucket(d):
-        return [
-            len(glob.glob(os.path.join(b, "*.parquet")))
-            for b in glob.glob(os.path.join(d, "postings", "term_bucket=*"))
-        ]
-
-    assert max(files_per_bucket(src)) > 1  # slices really did fragment
-
-    compact_index(spark, src, dst)
-    assert max(files_per_bucket(dst)) == 1  # one sorted run per bucket
+    from gopensearch_spark.search import bm25_match, phrase_match
 
     for terms, mode in [(["spark", "join"], "or"), (["merge", "sort", "batch"], "and")]:
         ref = oracle_small.match(terms, k=25, mode=mode)
         got = [(int(r["doc_id"]), float(r["score"]))
-               for r in bm25_match(spark, dst, terms, k=25, mode=mode).collect()]
+               for r in bm25_match(spark, idx, terms, k=25, mode=mode).collect()]
         assert len(got) == len(ref)
         for (d1, s1), (d2, s2) in zip(got, ref):
             assert d1 == d2 and math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12)
 
     # positions survive compaction -> phrase queries still work
-    from gopensearch_spark.search import phrase_match
-
     ref = oracle_small.match_raw('"spark join"', k=10)
     got = [(int(r["doc_id"]), float(r["score"]))
-           for r in phrase_match(spark, dst, "spark join", k=10).collect()]
+           for r in phrase_match(spark, idx, "spark join", k=10).collect()]
     assert [d for d, _ in got] == [d for d, _ in ref]
+
+
+def test_compact_index_merges_slices(spark, docs_small, oracle_small, tmp_path):
+    """A fragmented 3-slice build compacts in place into single sorted
+    runs with unchanged (rank-identical) query results.
+
+    Each slice appends its own sorted postings file per term_bucket;
+    compaction merges those back to one run per bucket."""
+    from gopensearch_spark.index import build_index, compact_streaming_index
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, docs_small, idx, slices=3, term_buckets=8, with_positions=True,
+                input_lineage="sf0.001/documents.parquet")
+    assert max(_files_per_bucket(idx)) > 1  # slices really did fragment
+
+    compact_streaming_index(spark, idx)
+    assert max(_files_per_bucket(idx)) == 1  # one sorted run per bucket
+    _assert_matches_oracle(spark, idx, oracle_small)
+
+
+def test_compact_index_job_end_to_end(spark, docs_small, oracle_small, tmp_path, capsys):
+    """spark-submit compaction entrypoint: compacts a 3-slice build in
+    place, commits the next generation and reports it in its JSON line."""
+    import json as _json
+
+    from gopensearch_spark.index import build_index, current_generation
+    from gopensearch_spark.jobs.compact_index_job import main
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, docs_small, idx, slices=3, term_buckets=8, with_positions=True)
+    assert max(_files_per_bucket(idx)) > 1
+    capsys.readouterr()
+
+    assert main(["--index", idx]) == 0
+    line = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["job"] == "compact_index" and line["index"] == idx
+    assert line["generation"] == current_generation(idx) == 1
+    assert line["n_docs"] == docs_small.count()
+    assert max(_files_per_bucket(idx)) == 1
+    _assert_matches_oracle(spark, idx, oracle_small)
 
 
 def test_positions_optional_profile(spark, docs_small, oracle_small, tmp_path):
