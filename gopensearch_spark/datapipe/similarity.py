@@ -19,10 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SEED = 7
-_TOPK_SALT = 64  # fan-out of the partial top-k phase
 
 
-def topk_per_query(scored: DataFrame, k: int, n_salt: int = _TOPK_SALT) -> DataFrame:
+def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k without shuffling the full scored relation.
 
     One ``row_number`` window over ``query_id``: Spark's rank-limit
@@ -36,9 +35,6 @@ def topk_per_query(scored: DataFrame, k: int, n_salt: int = _TOPK_SALT) -> DataF
     latency per query at local scale; the pinned plan test
     tests/test_datapipe.py::test_topk_per_query_partial_below_exchange
     keeps the pushdown honest).
-
-    ``n_salt`` is retained for API compatibility; the group-limit
-    pushdown makes explicit salting redundant.
     """
     from pyspark.sql import Window
 

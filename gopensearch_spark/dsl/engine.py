@@ -1689,6 +1689,7 @@ class Engine:
     def _highlight_leaves(self, d: model.Dsl, spec: IndexSpec) -> list:
         """Full-text leaves targeting the index's text field, for
         fetch-phase highlighting (FTS5 highlight() parity)."""
+        from gopensearch_spark.analysis import tokenize
         from gopensearch_spark.search.highlight import leaves_for_match
 
         leaves: list = []
@@ -1701,13 +1702,12 @@ class Engine:
                     leaves.extend(leaves_for_match(m.query, "match"))
             for f, m in q.match_phrase.items():
                 if strip_keyword(f) == spec.text_field:
-                    # slop > 0 matched via a NEAR window, so exact-phrase
-                    # spans may not exist in the hit; highlight each term
-                    # instance instead (approximation: FTS5 would trim to
-                    # instances participating in a valid NEAR selection)
-                    leaves.extend(
-                        leaves_for_match(m.query, "match" if m.slop else "phrase")
-                    )
+                    toks = tokenize(m.query)
+                    if m.slop and len(toks) >= 2:
+                        # scored as NEAR(terms, slop): wrap its kept instances
+                        leaves.append(("near", ([("term", t) for t in toks], m.slop)))
+                    else:
+                        leaves.extend(leaves_for_match(m.query, "phrase"))
             for f, t in q.prefix.items():
                 if strip_keyword(f) == spec.text_field:
                     leaves.extend(leaves_for_match(t.value, "prefix"))

@@ -616,7 +616,9 @@ def build_index(
     reference pkg/server/server.go:253-364). Per slice only the postings
     table is written (single-pass, persist-free); doc_stats is then its
     per-doc sentinel rows and ``finalize_stats`` derives the rest — the
-    layout a compaction leaves, so a stream can append to it.
+    layout a compaction leaves, so a stream can append to it. Re-running
+    a build that already finished returns the live corpus stats and
+    writes nothing.
 
     ``term_buckets=None`` (the default) sizes the bucket count from the
     corpus via ``recommended_term_buckets`` (one count job): buckets
@@ -627,12 +629,18 @@ def build_index(
     ``num_segments`` is accepted and ignored: the index has no segment
     axis any more, and existing callers still pass it.
     """
+    done = completed_slices(out_dir)
+    if done >= set(range(slices)) and read_term_dict_meta(out_dir) is not None:
+        # a re-run of a finalized build (the term_dict meta is the last
+        # file finalize_stats writes): streams and compactions may have
+        # changed the index since, and its postings no longer carry the
+        # sentinels of every doc, so re-deriving would lose documents
+        return read_corpus_stats(out_dir)
     n_docs_total = None
     if term_buckets is None:
         n_docs_total = docs.count()
         term_buckets = recommended_term_buckets(n_docs_total)
     os.makedirs(os.path.join(out_dir, "_checkpoints"), exist_ok=True)
-    done = completed_slices(out_dir)
     for s in range(slices):
         if s in done:
             continue

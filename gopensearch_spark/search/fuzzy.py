@@ -31,8 +31,8 @@ Levenshtein itself is JVM-side (`F.levenshtein` with the threshold
 argument, which exits early past `d`). Only the <= max_expansions
 surviving terms (a driver-side list, bounded by contract) reach the
 postings index, where they serve like any other multi-term OR query.
-When the dict is stale (postings newer than the last finalize — same
-freshness token as prefix_match) we fall back to aggregating
+When the dict is stale (postings newer than the last finalize — the
+freshness rule of ``readers.term_dict``) we fall back to aggregating
 `term_stats`, which is df-delta-sized, never postings-sized.
 """
 
@@ -73,13 +73,11 @@ def _vocabulary(spark: SparkSession, index_dir: str) -> DataFrame:
     """(term, df) over the whole index: the sorted ``term_dict`` side
     table when fresh, else the df-delta ``term_stats`` fold (postings
     appended without finalize must degrade, never silently miss terms)."""
-    from gopensearch_spark.index.builder import read_term_dict_meta
-    from gopensearch_spark.search.readers import corpus_stats, index_table
+    from gopensearch_spark.search.readers import index_table, term_dict
 
-    stats = corpus_stats(index_dir)
-    meta = read_term_dict_meta(index_dir)
-    if meta is not None and meta.get("n_docs") == stats["n_docs"]:
-        return index_table(spark, index_dir, "term_dict")
+    td = term_dict(spark, index_dir)
+    if td is not None:
+        return td
     tstats = index_table(spark, index_dir, "term_stats")
     return tstats.groupBy("term").agg(F.sum("df").alias("df"))
 

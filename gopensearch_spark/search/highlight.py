@@ -10,8 +10,11 @@ phase feature of the reference's backend; probed empirically):
 - a NEAR group wraps only instances participating in a valid NEAR
   selection (the same trimmed-instance set its bm25 tf counts).
 
-Highlighting is a fetch-phase operation over the final top-k hits (like
-ES), so it runs on k rows, never on the corpus.
+Every leaf is read through the same instance rule the scoring kernels
+use (``phrase._instance_intervals`` over the text's token positions;
+NEAR trims with ``phrase._near_kept``), so what is wrapped is what was
+counted. Highlighting is a fetch-phase operation over the final top-k
+hits (like ES), so it runs on k rows, never on the corpus.
 """
 
 from __future__ import annotations
@@ -19,64 +22,21 @@ from __future__ import annotations
 import numpy as np
 
 from gopensearch_spark.analysis import tokenize_with_offsets
+from gopensearch_spark.search.phrase import _instance_intervals, _near_kept
 
 
-def _leaf_spans(toks: list[tuple[str, int, int]], leaf: tuple) -> list[tuple[int, int]]:
+def _leaf_intervals(pos: dict, leaf: tuple) -> list[tuple[np.ndarray, np.ndarray]]:
+    """(start, end) token-index arrays of the instances ``leaf`` wraps."""
     kind, val = leaf
-    if kind == "term":
-        return [(s, e) for t, s, e in toks if t == val]
+    if kind in ("term", "phrase"):
+        return [_instance_intervals(pos, leaf)]
     if kind == "prefix":
-        return [(s, e) for t, s, e in toks if t.startswith(val)]
-    if kind == "phrase":
-        terms = list(val)
-        n = len(terms)
-        out = []
-        for i in range(len(toks) - n + 1):
-            if all(toks[i + j][0] == terms[j] for j in range(n)):
-                out.append((toks[i][1], toks[i + n - 1][2]))
-        return out
+        return [(p, p) for t, p in pos.items() if t.startswith(val)]
     if kind == "near":
         units, dist = val
-        from gopensearch_spark.search.phrase import _instance_intervals, _near_trimmed_tfs
-
-        pos = {}
-        for idx, (t, _, _) in enumerate(toks):
-            pos.setdefault(t, []).append(idx)
-        pos = {t: np.asarray(p, dtype=np.int64) for t, p in pos.items()}
-        ivs = []
-        for u in units:
-            s, e = _instance_intervals(pos, u)
-            if s.size == 0:
-                return []
-            ivs.append((s, e))
-        out = []
-        for u_i, u in enumerate(units):
-            s_arr, e_arr = ivs[u_i]
-            for s_tok, e_tok in zip(s_arr, e_arr):
-                if _unit_instance_kept(ivs, u_i, int(s_tok), int(e_tok), dist):
-                    out.append((toks[s_tok][1], toks[e_tok][2]))
-        return out
+        ivs = [_instance_intervals(pos, u) for u in units]
+        return [(s[m], e[m]) for (s, e), m in zip(ivs, _near_kept(ivs, dist))]
     raise ValueError(f"unsupported highlight leaf {kind!r}")
-
-
-def _unit_instance_kept(ivs, u_i: int, s_i: int, e_i: int, n: int) -> bool:
-    """Same participation rule as phrase._near_trimmed_tfs, one instance."""
-    cand_lo = np.unique(np.concatenate([e for _, e in ivs]))
-    for lo in cand_lo[cand_lo <= e_i]:
-        hi = lo + n + 1
-        if s_i > hi:
-            continue
-        ok = True
-        for v, (s_v, e_v) in enumerate(ivs):
-            if v == u_i:
-                continue
-            sel = s_v[(e_v >= lo) & (s_v <= hi)]
-            if sel.size == 0:
-                ok = False
-                break
-        if ok:
-            return True
-    return False
 
 
 def highlight_text(
@@ -91,9 +51,16 @@ def highlight_text(
     caller can OMIT the highlight field entirely — Elasticsearch emits no
     highlight entry for hits whose match came from other clauses."""
     toks = tokenize_with_offsets(text if text is not None else "")
-    spans: list[tuple[int, int]] = []
-    for leaf in leaves:
-        spans.extend(_leaf_spans(toks, leaf))
+    pos: dict = {}
+    for i, (t, _, _) in enumerate(toks):
+        pos.setdefault(t, []).append(i)
+    pos = {t: np.asarray(p, dtype=np.int64) for t, p in pos.items()}
+    spans = [
+        (toks[s][1], toks[e][2])
+        for leaf in leaves
+        for starts, ends in _leaf_intervals(pos, leaf)
+        for s, e in zip(starts, ends)
+    ]
     if not spans:
         return None
     spans.sort()

@@ -17,7 +17,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
+from gopensearch_spark.index.builder import (
+    read_corpus_stats,
+    read_term_dict_meta,
+    resolve_index_dir,
+)
 
 
 class TermDfs(dict):
@@ -95,6 +99,22 @@ def corpus_stats(index_dir: str) -> dict:
     stats = read_corpus_stats(index_dir)
     _STATS_CACHE[resolved] = (mtime, stats)
     return stats
+
+
+def term_dict(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """The sorted (term, df) dictionary, or ``None`` when it is stale.
+
+    Both finalize_stats and every streaming micro-batch rebuild the
+    dict, and its ``_meta.json`` records the corpus n_docs it was built
+    against. Postings newer than the dict (a raw build_postings append
+    without finalize, a crash between the stats fold and the dict
+    rebuild) show as a mismatch with corpus_stats; callers then fall
+    back to a slower plan — a stale dict must never silently drop
+    matching terms."""
+    meta = read_term_dict_meta(index_dir)
+    if meta is None or meta.get("n_docs") != corpus_stats(index_dir)["n_docs"]:
+        return None
+    return index_table(spark, index_dir, "term_dict")
 
 
 def _load_term_dfs(spark: SparkSession, index_dir: str) -> TermDfs:

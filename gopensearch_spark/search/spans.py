@@ -21,26 +21,23 @@ matches by 1/(distance+1) inside its phrase freq — a documented
 divergence; this contract is exactly replicable in SQL, which is what
 the value-exact oracles pin.
 
-Scale: identical plan to phrase_match — postings pruned to the clause
-terms (partition-pruned scan), per-doc grouping, Arrow kernel only over
-docs containing ALL clause terms; position bytes of other docs never
-shuffle.
+Scale: the one positional path of search/phrase.py — the shared
+candidate pass (partition-pruned scan of the clause terms; only docs
+containing ALL clause terms enter the positions groupBy, so position
+bytes of other docs never shuffle) and the one batch-decoding Arrow
+kernel, to which span_near supplies only its tf.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from gopensearch_spark import codecs
-from gopensearch_spark.search.bm25 import idf, tf_norm
 from gopensearch_spark.search.phrase import (
-    _EMPTY,
-    _group_docs_with_all_terms,
-    _persist_for_query,
-    _pruned_positional_postings,
+    _candidates,
+    _positional_matches,
+    _positional_stats,
+    _score_topk,
     query_scope,
 )
 
@@ -101,53 +98,15 @@ def _span_near_match(
     in_order: bool,
     k: int | None,
 ) -> DataFrame:
-    from gopensearch_spark.search.readers import corpus_stats
-
     if len(terms) < 2:
         raise ValueError("span_near needs at least two clauses")
     if not in_order and len(terms) != 2:
         raise ValueError("unordered span_near supports exactly two clauses")
-    stats = corpus_stats(index_dir)
-    if not stats.get("with_positions"):
-        raise ValueError(f"index at {index_dir} was built without positions")
-    n_docs, avgdl = stats["n_docs"], stats["avg_doc_len"]
+    stats = _positional_stats(index_dir)
 
-    uniq = sorted(set(terms))
-    posts = _pruned_positional_postings(spark, index_dir, uniq, stats)
-    grouped = _group_docs_with_all_terms(posts, len(uniq))
+    def tf_of(pos):
+        lists = [pos[t] for t in terms]
+        return (_ordered_tf(lists, slop) if in_order else _unordered_tf(*lists, slop),)
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, ts, ps, dl in zip(
-                pdf["doc_id"], pdf["terms"], pdf["poss"], pdf["doc_len"]
-            ):
-                pos = {
-                    t: codecs.delta_decode(bytes(p)).astype(np.int64)
-                    for t, p in zip(ts, ps)
-                }
-                lists = [pos[t] for t in terms]
-                tf = (
-                    _ordered_tf(lists, slop)
-                    if in_order
-                    else _unordered_tf(lists[0], lists[1], slop)
-                )
-                if tf > 0:
-                    rows.append((doc_id, dl, tf))
-            yield pd.DataFrame(rows, columns=["doc_id", "doc_len", "tf"])
-
-    matches = _persist_for_query(
-        grouped.mapInPandas(kernel, "doc_id long, doc_len int, tf int")
-    )
-    df_unit = matches.count()
-    if df_unit == 0:
-        return spark.createDataFrame([], _EMPTY)
-    tf = F.col("tf").cast("double")
-    dl = F.col("doc_len").cast("double")
-    w = tf_norm(tf, dl, avgdl)
-    scores = matches.select(
-        "doc_id", (F.lit(idf(n_docs, df_unit)) * w).alias("score")
-    )
-    if k is None:
-        return scores
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    grouped = _candidates(spark, index_dir, stats, sorted(set(terms)))
+    return _score_topk(_positional_matches(grouped, tf_of), stats, k)

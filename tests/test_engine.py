@@ -448,6 +448,25 @@ def test_highlight_phrase(engine, oracle_small):
         assert h["highlight"]["text"][0] == want
 
 
+def test_highlight_phrase_slop_as_near(engine, oracle_small):
+    """match_phrase with slop scores as FTS5 NEAR(terms, slop), so its
+    highlight must wrap exactly the instances FTS5's highlight() wraps
+    for that NEAR group — not every instance of each term."""
+    body = {"query": {"match_phrase": {"text": {"query": "spark data", "slop": 6}}},
+            "size": 10,
+            "highlight": {"fields": {"text": {"pre_tags": ["["], "post_tags": ["]"]}}}}
+    r = engine.search("docs", body)
+    con = oracle_small.con
+    assert r["hits"]["hits"]
+    for h in r["hits"]["hits"]:
+        want = con.execute(
+            "SELECT highlight(t, 0, '[', ']') FROM t WHERE rowid = ? "
+            "AND t MATCH 'NEAR(spark data, 6)'",
+            (int(h["_id"]),),
+        ).fetchone()[0]
+        assert h["highlight"]["text"][0] == want
+
+
 def test_terms_exists_wildcard_matchall(engine, duck):
     r = engine.search("events", {"query": {"terms": {"event_type": ["click", "signup"]}}, "size": 100000})
     n = duck.execute("SELECT count(*) FROM events WHERE event_type IN ('click','signup')").fetchone()[0]

@@ -125,6 +125,11 @@ def test_fuzz_highlight(spark, fuzz_env):
         ("data merge", leaves_for_match("data merge", "match")),
         ('"data merge"', leaves_for_match("data merge", "phrase")),
         ("dat*", leaves_for_match("dat", "prefix")),
+        ("NEAR(data merge, 2)", [("near", ([("term", "data"), ("term", "merge")], 2))]),
+        ("NEAR(alpha beta gamma, 4)",
+         [("near", ([("term", "alpha"), ("term", "beta"), ("term", "gamma")], 4))]),
+        ('NEAR("data merge" zeta, 3)',
+         [("near", ([("phrase", ["data", "merge"]), ("term", "zeta")], 3))]),
     ]:
         match_q = "data OR merge" if q == "data merge" else q
         for rid, want in con.execute(

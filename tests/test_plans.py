@@ -52,21 +52,36 @@ def test_topk_is_take_ordered(spark, index_small):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_phrase_candidate_pass_is_position_free(spark, index_small):
-    """Round-3 pin: phrase/NEAR grouping is two-pass — a skinny
+@pytest.mark.parametrize("query", ["phrase", "phrase_prefix", "near", "span_near"])
+def test_phrase_candidate_pass_is_position_free(spark, index_small, query):
+    """Round-3 pin: positional grouping is two-pass — a skinny
     (doc_id, term) aggregate finds docs containing ALL terms first, so
     the fat ``positions`` bytes of docs holding only SOME query terms
     never enter a shuffle. The plan must show a postings scan whose
     ReadSchema excludes positions (the candidate pass) alongside the
-    positional scan."""
+    positional scan. Every positional query shares that pass and the
+    one Arrow kernel: exactly one MapInPandas node and no
+    ArrowEvalPython (a scalar pandas UDF)."""
     import re
 
-    from gopensearch_spark.search import phrase_match
+    from gopensearch_spark.search import near_match, phrase_match, phrase_prefix_match
+    from gopensearch_spark.search.spans import span_near_match
 
-    plan = _plan(phrase_match(spark, index_small, "spark join", k=10))
+    df = {
+        "phrase": lambda: phrase_match(spark, index_small, "spark join", k=10),
+        "phrase_prefix": lambda: phrase_prefix_match(spark, index_small, "spark jo", k=10),
+        "near": lambda: near_match(
+            spark, index_small, [("term", "spark"), ("term", "join")], n=5, k=10),
+        "span_near": lambda: span_near_match(spark, index_small, ["spark", "join"], slop=2, k=10),
+    }[query]()
+    plan = _plan(df)
     schemas = re.findall(r"ReadSchema: ([^\n]+)", plan)
     assert any("positions" not in s for s in schemas), schemas  # skinny pass
     assert any("positions" in s for s in schemas), schemas      # positional pass
+    # an adaptive plan prints its final and initial plans; a node keeps
+    # its expression id in both
+    assert len(set(re.findall(r"MapInPandas \w+\(.*?\)#(\d+)", plan))) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_prefix_scan_prunes_buckets_via_term_dict(spark, index_small):

@@ -547,6 +547,57 @@ def test_stream_appends_to_built_and_force_merged_index(spark, docs_small, tmp_p
     pages.unpersist()
 
 
+def test_build_rerun_keeps_streamed_and_compacted_index(spark, docs_small, tmp_path):
+    """Re-running a finished build_index (every slice checkpointed)
+    after a stream, and again after a compaction, leaves the index as it
+    was: n_docs keeps the streamed docs, match equals FTS5 over the
+    union, and a further compaction still succeeds."""
+    from gopensearch_spark.fts5_oracle import Fts5Oracle
+    from gopensearch_spark.index.builder import (
+        build_index,
+        compact_streaming_index,
+        read_corpus_stats,
+    )
+    from gopensearch_spark.search import bm25_match
+    from gopensearch_spark.streaming import index_stream_available_now
+    from gopensearch_spark.webtext import prepare_corpus, synth_web_pages
+
+    inbox, idx, cp = (str(tmp_path / d) for d in ("inbox", "idx", "cp"))
+    os.makedirs(inbox)
+    pages = synth_web_pages(spark, docs_small.orderBy("doc_id").limit(20), copies=3).cache()
+    corpus = prepare_corpus(pages.where("url NOT LIKE '%/c2'")).select("doc_id", "text")
+    streamed = pages.where("url LIKE '%/c2'")
+
+    def build():
+        return build_index(spark, corpus, idx, slices=2, term_buckets=4, with_positions=True)
+
+    build()
+    streamed.coalesce(1).write.mode("append").parquet(inbox)
+    index_stream_available_now(spark, inbox, idx, cp)
+    rows = corpus.collect() + prepare_corpus(streamed).select("doc_id", "text").collect()
+    assert len(rows) == 60
+    o = Fts5Oracle()
+    o.load([(int(r.doc_id), r.text) for r in rows])
+
+    def check():
+        assert read_corpus_stats(idx)["n_docs"] == len(rows)
+        for terms, mode in [(["spark", "join"], "or"), (["data"], "and")]:
+            got = [(int(r.doc_id), float(r.score))
+                   for r in bm25_match(spark, idx, terms, k=15, mode=mode).collect()]
+            assert got
+            _assert_identical(got, o.match(terms, k=15, mode=mode))
+
+    assert build()["n_docs"] == len(rows)
+    check()
+    compact_streaming_index(spark, idx)
+    assert build()["n_docs"] == len(rows)
+    check()
+    compact_streaming_index(spark, idx)
+    check()
+    o.close()
+    pages.unpersist()
+
+
 def test_stream_rejects_conflicting_layout(spark, tmp_path):
     """An explicit term_buckets or with_positions that differs from the
     existing index's raises before the stream writes anything."""
