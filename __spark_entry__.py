@@ -38,9 +38,9 @@ def _index_dir(spark: SparkSession, sf_dir: str) -> str:
         return _INDEX_CACHE[sf_dir]
     from gopensearch_spark.index import build_index, read_corpus_stats
 
-    # v7: the batch_id-partitioned layout (postings, doc_stats, term_stats)
-    out = os.path.join("/tmp/gopensearch_entry_idx_v7", os.path.basename(os.path.normpath(sf_dir)))
-    if not os.path.exists(os.path.join(out, "corpus_stats.json")):
+    # v9: tables under gen-N, committed by the `_current` manifest
+    out = os.path.join("/tmp/gopensearch_entry_idx_v9", os.path.basename(os.path.normpath(sf_dir)))
+    if not os.path.exists(os.path.join(out, "_current")):
         build_index(
             spark,
             _docs(spark, sf_dir),
@@ -134,10 +134,10 @@ def _lang_index_dir(spark: SparkSession, sf_dir: str) -> str:
     from gopensearch_spark.index import build_index
 
     out = os.path.join(
-        "/tmp/gopensearch_entry_idx_v7",
+        "/tmp/gopensearch_entry_idx_v9",
         os.path.basename(os.path.normpath(sf_dir)) + "_lang",
     )
-    if not os.path.exists(os.path.join(out, "corpus_stats.json")):
+    if not os.path.exists(os.path.join(out, "_current")):
         build_index(
             spark,
             _docs(spark, sf_dir).select("doc_id", "lang"),

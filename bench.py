@@ -296,7 +296,7 @@ def bench_query_leg(copies: int) -> dict:
 
     spark = get_spark("bench-qleg", master=f"local[{CPUS}]")
     idx = f"/tmp/gopensearch_bench/idx_q_x{copies}"
-    if not os.path.exists(os.path.join(idx, "corpus_stats.json")):
+    if not os.path.exists(os.path.join(idx, "_current")):
         wp = _build_web_pages(
             spark, SF_DIR, copies=copies, out=f"/tmp/gopensearch_bench/web_pages_{os.path.basename(os.path.normpath(SF_DIR))}_x{copies}"
         )

@@ -1867,7 +1867,7 @@ class Engine:
         per term — the ES force-merge contract mapped onto
         `compact_streaming_index`, the one compaction. Each field index
         compacts into `<dir>/gen-{N+1}` and COMMITS by atomically writing
-        the `_current` pointer — rename-free, so in-flight readers stay on
+        the `_current` manifest — rename-free, so in-flight readers stay on
         the old generation and object stores need no directory rename;
         generations older than the previous one are deleted, and later
         stream batches append to the merged index.
@@ -2048,9 +2048,9 @@ class Engine:
             n = int(spec.df.count())
             nbytes = 0
             for idx_dir in spec.indexed_fields().values():
-                # walk only the LIVE generation — after a generation-pointer
-                # compaction the index root still holds the retained previous
-                # generation, which must not double the reported store size
+                # walk only the LIVE generation — after a compaction the
+                # index root still holds the retained previous generation,
+                # which must not double the reported store size
                 from gopensearch_spark.index.builder import resolve_index_dir
                 live = resolve_index_dir(idx_dir)
                 for root, _dirs, files in os.walk(live):

@@ -23,6 +23,12 @@ db.go:16-17). Spark-first design:
   partitioned by ``batch_id``, with one ``batch_stats`` row per batch.
   A build or compaction writes the run ``CONSOLIDATED_BATCH_ID``, each
   streaming micro-batch its own; readers sum df rows by term.
+- **one version**: ``<dir>/_current`` is the index's manifest and its
+  only commit record (``read_manifest``). Tables live in ``<dir>/gen-N``
+  from ``gen-0`` on, never at the root. Builds, streaming micro-batches,
+  compactions, ``fold_corpus_stats`` and ``rebuild_term_dict`` all
+  commit through ``_commit``, and readers key their caches on the
+  version id it writes.
 - **resumability**: `build_index` processes the corpus in ``slices``
   (doc_id hash classes); each slice commits its output and a checkpoint
   record with lineage + doc/term/byte metrics before the next starts.
@@ -35,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from typing import Iterator
 
 import numpy as np
@@ -47,48 +54,61 @@ from gopensearch_spark import codecs
 DEFAULT_TERM_BUCKETS = 64   # term_bucket partitions on disk
 
 
-GEN_POINTER = "_current"  # generation pointer file (rename-free commit)
+MANIFEST = "_current"  # the index's manifest: its one commit record
 CONSOLIDATED_BATCH_ID = -1  # batch_id of the run a build or compaction writes
+_STATS_KEYS = ("n_docs", "avg_doc_len", "total_tokens", "term_buckets", "with_positions")
+
+
+def read_manifest(index_dir: str) -> dict:
+    """The committed manifest: ``generation`` (tables live in
+    ``<dir>/gen-N``), a ``version`` id unique per commit, the corpus
+    stats (``_STATS_KEYS``) and ``term_dict_n_docs``, the n_docs the
+    term_dict was built against. A directory with other entries but no
+    manifest holds an index written before it: ``ValueError``."""
+    try:
+        with open(os.path.join(index_dir, MANIFEST)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        if os.path.isdir(index_dir) and any(
+                not n.startswith(("_", ".", "gen-")) for n in os.listdir(index_dir)):
+            raise ValueError(
+                f"{index_dir!r} holds an index written before the manifest layout "
+                f"(tables but no {MANIFEST} manifest); rebuild it") from None
+        raise
 
 
 def resolve_index_dir(index_dir: str) -> str:
-    """Data directory of the CURRENT generation: ``<dir>/gen-N`` when a
-    ``_current`` pointer file exists, else ``<dir>`` itself (never
-    compacted). Idempotent — resolving a generation dir returns it.
-
-    The pointer file is the compaction COMMIT: one small atomic write
-    (``os.replace`` locally, a single object PUT on S3/GCS), never a
-    directory rename — object stores have no rename, so versioned
-    generation dirs + a pointer are the only deployable in-place swap at
-    100 TB. Readers resolve through this on every table access; a crash
-    while building the next generation leaves the pointer (and every
-    reader) on the committed one.
-    """
-    p = os.path.join(index_dir, GEN_POINTER)
-    if not os.path.exists(p):
-        return index_dir
-    with open(p) as f:
-        return os.path.join(index_dir, f"gen-{json.load(f)['generation']}")
+    """Data directory of the committed generation, ``<dir>/gen-N``."""
+    return os.path.join(index_dir, f"gen-{read_manifest(index_dir)['generation']}")
 
 
-def current_generation(index_dir: str) -> int:
-    """0 = the index root itself (no pointer: never compacted)."""
-    p = os.path.join(index_dir, GEN_POINTER)
-    if not os.path.exists(p):
-        return 0
-    with open(p) as f:
-        return int(json.load(f)["generation"])
+def _live_dir(index_dir: str) -> str:
+    """The generation a writer adds to: the committed one, or ``gen-0``
+    for an index with no commit yet."""
+    try:
+        return resolve_index_dir(index_dir)
+    except FileNotFoundError:
+        return os.path.join(index_dir, "gen-0")
 
 
-def _commit_generation(index_dir: str, gen: int) -> None:
-    tmp = os.path.join(index_dir, GEN_POINTER + ".tmp")
+def _commit(index_dir: str, **fields) -> dict:
+    """THE commit, the only writer of the manifest: ``fields`` replace
+    those of the committed manifest (generation 0 when there is none)
+    under a fresh version id, swapped in with one atomic ``os.replace``,
+    never a directory rename. Readers key every cache on the version, so
+    the next query, from any process, sees the commit."""
+    try:
+        manifest = read_manifest(index_dir)
+    except FileNotFoundError:
+        manifest = {"generation": 0}
+    manifest.update(fields, version=uuid.uuid4().hex,
+                    committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
+    os.makedirs(index_dir, exist_ok=True)
+    tmp = os.path.join(index_dir, MANIFEST + ".tmp")
     with open(tmp, "w") as f:
-        json.dump(
-            {"generation": gen,
-             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())},
-            f,
-        )
-    os.replace(tmp, os.path.join(index_dir, GEN_POINTER))
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(index_dir, MANIFEST))
+    return manifest
 
 
 EST_POSTINGS_PER_DOC = 120          # distinct terms per ~400-token web page
@@ -290,7 +310,7 @@ def build_postings(
     from gopensearch_spark.util import ensure_parallelism
 
     docs = ensure_parallelism(docs)
-    out_dir = resolve_index_dir(out_dir)  # write into the live generation
+    out_dir = _live_dir(out_dir)
     # per-doc sentinels (term NULL) spread by doc hash so they never
     # concentrate in one repartition key / one output dir
     bucket_expr = (
@@ -395,19 +415,28 @@ def finalize_stats(
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
 ) -> dict:
-    """Derive every other table of a built or compacted index from its
-    written ``postings`` and ``doc_stats``: term_stats (the only
-    unavoidable full groupBy, map-side combined), batch_stats, corpus
-    N/avgdl (``fold_corpus_stats``) and the sorted term_dict.
+    """Derive every other table of a built index from its written
+    ``postings`` and ``doc_stats`` (``_derive``) and commit the result
+    with its corpus stats, which it returns.
 
     Streaming ingest does NOT use this — build_postings(batch_id=N)
     writes batch-scoped term deltas and ``fold_corpus_stats`` folds
     O(#batches) delta rows, so micro-batch stats never rescan the index.
     """
-    out_dir = resolve_index_dir(out_dir)
+    fields = _derive(spark, _live_dir(out_dir), term_buckets, with_positions)
+    return _stats(_commit(out_dir, **fields))
+
+
+def _derive(spark: SparkSession, gen_dir: str, term_buckets: int,
+            with_positions: bool) -> dict:
+    """Write term_stats (the only unavoidable full groupBy, map-side
+    combined), batch_stats and the sorted term_dict of the generation
+    ``gen_dir`` from its postings and doc_stats; return its manifest
+    fields. A build commits them to its live generation, a compaction
+    with the next generation."""
     parts = ["batch_id", "term_bucket"]
     (
-        spark.read.parquet(os.path.join(out_dir, "postings"))
+        spark.read.parquet(os.path.join(gen_dir, "postings"))
         .where(F.col("term").isNotNull())
         .groupBy(*parts, "term")
         .agg(F.count("*").alias("df"))
@@ -416,24 +445,37 @@ def finalize_stats(
         .repartition(term_buckets, "term_bucket")
         .write.mode("overwrite")
         .partitionBy(*parts)
-        .parquet(os.path.join(out_dir, "term_stats"))
+        .parquet(os.path.join(gen_dir, "term_stats"))
     )
     (
-        spark.read.parquet(os.path.join(out_dir, "doc_stats"))
+        spark.read.parquet(os.path.join(gen_dir, "doc_stats"))
         .groupBy("batch_id")
         .agg(F.count("*").alias("n_docs"), F.sum("doc_len").alias("total_tokens"))
         .write.mode("overwrite")
         .partitionBy("batch_id")
-        .parquet(os.path.join(out_dir, "batch_stats"))
+        .parquet(os.path.join(gen_dir, "batch_stats"))
     )
-    stats = fold_corpus_stats(
-        spark, out_dir, term_buckets=term_buckets, with_positions=with_positions,
-    )
-    rebuild_term_dict(spark, out_dir, n_docs=stats["n_docs"])
-    return stats
+    fields = _fold(spark, gen_dir)
+    _write_term_dict(spark, gen_dir)
+    return {**fields, "term_buckets": term_buckets, "with_positions": with_positions,
+            "term_dict_n_docs": fields["n_docs"]}
 
 
 def rebuild_term_dict(spark: SparkSession, out_dir: str, n_docs: int) -> None:
+    """Rebuild the live generation's term_dict and commit the corpus
+    ``n_docs`` it was built against as the manifest's
+    ``term_dict_n_docs``.
+
+    readers.term_dict compares that with the manifest's ``n_docs`` and
+    callers fall back to the full postings scan when postings are newer
+    than the dict (a crash between the stats fold and this rebuild, or a
+    raw build_postings append without finalize) — a stale dict must
+    degrade to a slower plan, never silently drop matching terms."""
+    _write_term_dict(spark, _live_dir(out_dir))
+    _commit(out_dir, term_dict_n_docs=int(n_docs))
+
+
+def _write_term_dict(spark: SparkSession, gen_dir: str) -> None:
     """(term, df) dictionary, RANGE-partitioned and sorted by term.
 
     The hash term_bucket layout cannot prune a PREFIX query; this small
@@ -443,45 +485,16 @@ def rebuild_term_dict(spark: SparkSession, out_dir: str, n_docs: int) -> None:
     search/phrase.prefix_match. Size = distinct terms, O(GB) even at web
     scale. Cost = one groupBy over term_stats (df-delta rows, tiny next
     to postings), so streaming ingest rebuilds it EVERY micro-batch and
-    prefix queries partition-prune on streaming indexes too.
-
-    ``_meta.json`` records the corpus n_docs the dict was built against;
-    prefix_match compares it with corpus_stats.json and falls back to
-    the full postings scan when postings are newer than the dict (e.g. a
-    crash between the stats fold and this rebuild, or a raw
-    build_postings append without finalize) — a stale dict must degrade
-    to a slower plan, never silently drop matching terms."""
-    out_dir = resolve_index_dir(out_dir)
+    prefix queries partition-prune on streaming indexes too."""
     (
-        spark.read.parquet(os.path.join(out_dir, "term_stats"))
+        spark.read.parquet(os.path.join(gen_dir, "term_stats"))
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .repartitionByRange(8, "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "term_dict"))
+        .parquet(os.path.join(gen_dir, "term_dict"))
     )
-    tmp = os.path.join(out_dir, "term_dict", "_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"n_docs": int(n_docs)}, f)
-    os.replace(tmp, os.path.join(out_dir, "term_dict", "_meta.json"))
-
-
-def read_term_dict_meta(out_dir: str) -> dict | None:
-    path = os.path.join(resolve_index_dir(out_dir), "term_dict", "_meta.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_corpus_stats(out_dir: str, stats: dict) -> None:
-    out_dir = resolve_index_dir(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, "corpus_stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, os.path.join(out_dir, "corpus_stats.json"))
 
 
 def fold_corpus_stats(
@@ -490,26 +503,35 @@ def fold_corpus_stats(
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     with_positions: bool = False,
 ) -> dict:
-    """The one corpus-stats refresh: sum the per-batch (n_docs,
-    total_tokens) rows of ``batch_stats`` — one per batch run, written
-    by build_postings(batch_id=N) or by ``finalize_stats`` for the
-    consolidated run — O(#batches) rows, NEVER a re-aggregation of
-    doc_stats (O(total docs) per micro-batch, the scale-killer at 10^12
-    docs). Idempotent: a replayed batch REPLACED its batch_stats
-    partition, so the fold can never double-count.
+    """The one corpus-stats refresh (``_fold`` over the live
+    generation), committed with ``term_buckets`` and ``with_positions``;
+    returns the stats."""
+    fields = _fold(spark, _live_dir(out_dir))
+    return _stats(_commit(out_dir, **fields, term_buckets=term_buckets,
+                          with_positions=with_positions))
+
+
+def _fold(spark: SparkSession, gen_dir: str) -> dict:
+    """n_docs, avg_doc_len and total_tokens of the generation
+    ``gen_dir``: the sum of the per-batch (n_docs, total_tokens) rows of
+    ``batch_stats`` — one per batch run, written by
+    build_postings(batch_id=N) or by ``_derive`` for the consolidated
+    run — O(#batches) rows, NEVER a re-aggregation of doc_stats (O(total
+    docs) per micro-batch, the scale-killer at 10^12 docs). Idempotent:
+    a replayed batch REPLACED its batch_stats partition, so the fold can
+    never double-count.
 
     Self-healing: a doc_stats batch partition with no batch_stats row
-    (an index written by a pre-delta version, or a crash between the
-    two writes) would silently UNDERCOUNT the fold. Partition dirs are
-    compared by listing (filesystem-cheap, O(#batches)) and any missing
-    delta is backfilled from ONLY that batch's doc_stats partition.
-    The listing goes through the Hadoop FileSystem API so it works on
-    any scheme Spark can write to (local, HDFS, s3a://, gs://) —
-    ``os.listdir`` would silently no-op on object-store URIs."""
-    out_dir = resolve_index_dir(out_dir)
+    (a crash between the two writes) would silently UNDERCOUNT the fold.
+    Partition dirs are compared by listing (filesystem-cheap,
+    O(#batches)) and any missing delta is backfilled from ONLY that
+    batch's doc_stats partition. The listing goes through the Hadoop
+    FileSystem API so it works on any scheme Spark can write to (local,
+    HDFS, s3a://, gs://) — ``os.listdir`` would silently no-op on
+    object-store URIs."""
 
     def _batch_ids(table: str) -> set[int]:
-        names = _list_dir(spark, os.path.join(out_dir, table))
+        names = _list_dir(spark, os.path.join(gen_dir, table))
         return {
             int(name.split("=", 1)[1])
             for name in names
@@ -519,21 +541,21 @@ def fold_corpus_stats(
     missing = _batch_ids("doc_stats") - _batch_ids("batch_stats")
     for b in sorted(missing):
         (
-            spark.read.parquet(os.path.join(out_dir, "doc_stats"))
+            spark.read.parquet(os.path.join(gen_dir, "doc_stats"))
             .where(F.col("batch_id") == b)
             .groupBy("batch_id")
             .agg(F.count("*").alias("n_docs"), F.sum("doc_len").alias("total_tokens"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "batch_stats"))
+            .parquet(os.path.join(gen_dir, "batch_stats"))
         )
     # empty index (no batch partition ever written — e.g. every batch
-    # empty, or nothing ingested yet): write honest zeros instead of
-    # failing the parquet read / crashing on int(None) / dividing by 0
+    # empty, or nothing ingested yet): honest zeros instead of failing
+    # the parquet read / crashing on int(None) / dividing by 0
     if _batch_ids("batch_stats"):
         row = (
-            spark.read.parquet(os.path.join(out_dir, "batch_stats"))
+            spark.read.parquet(os.path.join(gen_dir, "batch_stats"))
             .agg(
                 F.sum("n_docs").alias("n_docs"),
                 F.sum("total_tokens").alias("total_tokens"),
@@ -544,15 +566,11 @@ def fold_corpus_stats(
         total_tokens = int(row["total_tokens"] or 0)
     else:
         n_docs, total_tokens = 0, 0
-    stats = {
+    return {
         "n_docs": n_docs,
         "avg_doc_len": (total_tokens / n_docs) if n_docs else 0.0,
         "total_tokens": total_tokens,
-        "term_buckets": term_buckets,
-        "with_positions": with_positions,
     }
-    _write_corpus_stats(out_dir, stats)
-    return stats
 
 
 def _list_dir(spark: SparkSession, path: str) -> list[str]:
@@ -573,8 +591,12 @@ def _list_dir(spark: SparkSession, path: str) -> list[str]:
 
 
 def read_corpus_stats(out_dir: str) -> dict:
-    with open(os.path.join(resolve_index_dir(out_dir), "corpus_stats.json")) as f:
-        return json.load(f)
+    """The committed corpus stats: the manifest's ``_STATS_KEYS``."""
+    return _stats(read_manifest(out_dir))
+
+
+def _stats(manifest: dict) -> dict:
+    return {k: manifest[k] for k in _STATS_KEYS}
 
 
 def _ckpt_path(out_dir: str, slice_id: int) -> str:
@@ -630,9 +652,8 @@ def build_index(
     axis any more, and existing callers still pass it.
     """
     done = completed_slices(out_dir)
-    if done >= set(range(slices)) and read_term_dict_meta(out_dir) is not None:
-        # a re-run of a finalized build (the term_dict meta is the last
-        # file finalize_stats writes): streams and compactions may have
+    if done >= set(range(slices)) and os.path.exists(os.path.join(out_dir, MANIFEST)):
+        # a re-run of a committed build: streams and compactions may have
         # changed the index since, and its postings no longer carry the
         # sentinels of every doc, so re-deriving would lose documents
         return read_corpus_stats(out_dir)
@@ -676,7 +697,7 @@ def build_index(
             json.dump(rec, f)
         os.replace(tmp, _ckpt_path(out_dir, s))
     # doc_stats = the per-doc sentinel rows (zero-token docs included)
-    live = resolve_index_dir(out_dir)
+    live = _live_dir(out_dir)
     (
         spark.read.parquet(os.path.join(live, "postings"))
         .where(F.col("term").isNull())
@@ -685,13 +706,9 @@ def build_index(
         .partitionBy("batch_id")
         .parquet(os.path.join(live, "doc_stats"))
     )
-    stats = finalize_stats(
+    return finalize_stats(
         spark, out_dir, term_buckets=term_buckets, with_positions=with_positions,
     )
-    from gopensearch_spark.search.readers import invalidate
-
-    invalidate(out_dir)  # drop stale cached readers for this index
-    return stats
 
 
 def compact_streaming_index(
@@ -708,34 +725,30 @@ def compact_streaming_index(
     CONSOLIDATED_BATCH_ID`` — the layout a batch build writes — so
     FUTURE micro-batches keep appending under their own ``batch_id=N``:
 
-    - postings/doc_stats are rewritten and ``finalize_stats`` derives
-      the rest: batch_stats collapses to ONE consolidated row, so
+    - postings/doc_stats are rewritten and ``_derive`` writes the rest:
+      batch_stats collapses to ONE consolidated row, so
       ``fold_corpus_stats`` stays O(#batches-since-compaction);
     - doc_stats is copied from the SOURCE doc_stats (zero-token docs
-      stay in N/avgdl — FTS5 semantics), and an index written before
-      the build used this layout compacts too (``drop("batch_id")`` is a
-      no-op on it);
+      stay in N/avgdl — FTS5 semantics);
     - ``_stream_batches`` commit records live at the index ROOT, outside
       any generation, so replayed batches still skip;
     - COMMIT = write the next generation dir ``<dir>/gen-{N+1}`` fully,
-      then atomically write the ``_current`` pointer file. No directory
-      rename anywhere — deployable on object stores (S3/GCS have no
-      rename; a small pointer PUT is atomic). A crash mid-build leaves
-      the pointer (and every reader) on the committed generation; the
-      half-built dir is removed and rebuilt by the next attempt. The
-      previous generation is kept for in-flight readers; generations
-      older than that are deleted.
+      then ``_commit`` the manifest naming it, with its stats. No
+      directory rename anywhere — deployable on object stores (S3/GCS
+      have no rename). A crash mid-build leaves the manifest (and every
+      reader) on the committed generation; the half-built dir is removed
+      and rebuilt by the next attempt. The previous generation is kept
+      for in-flight readers; generations older than that are deleted.
 
     Called manually or via ``start_streaming_index(compact_every=N)``.
     """
     import shutil
 
-    src = resolve_index_dir(index_dir)
-    gen = current_generation(index_dir)
-    src_stats = read_corpus_stats(index_dir)
-    term_buckets = src_stats["term_buckets"]
-    with_positions = bool(src_stats.get("with_positions"))
-    dst = os.path.join(index_dir, f"gen-{gen + 1}")
+    manifest = read_manifest(index_dir)
+    gen = manifest["generation"]
+    src, dst = (os.path.join(index_dir, f"gen-{g}") for g in (gen, gen + 1))
+    term_buckets = manifest["term_buckets"]
+    with_positions = bool(manifest["with_positions"])
     shutil.rmtree(dst, ignore_errors=True)  # junk from a crashed attempt
 
     cb = F.lit(int(CONSOLIDATED_BATCH_ID))
@@ -770,37 +783,18 @@ def compact_streaming_index(
     doc_stats.write.mode("overwrite").partitionBy("batch_id").parquet(
         os.path.join(dst, "doc_stats")
     )
-    stats = finalize_stats(
-        spark, dst, term_buckets=term_buckets, with_positions=with_positions,
-    )
-    # THE commit: one atomic pointer write; everything before this line
-    # is invisible to readers, everything after is cleanup
-    _commit_generation(index_dir, gen + 1)
+    fields = _derive(spark, dst, term_buckets, with_positions)
+    # THE commit; everything before it is invisible to readers,
+    # everything after is cleanup
+    stats = _stats(_commit(index_dir, generation=gen + 1, **fields))
     _cleanup_old_generations(index_dir, gen + 1)
-    from gopensearch_spark.search.readers import invalidate
-
-    invalidate(index_dir)
     return stats
-
-
-# "blocks" is no longer written; it stays listed so cleanup still removes
-# the blocks dir of an index built before the flat-only layout
-_TABLE_DIRS = ("postings", "blocks", "doc_stats", "term_stats", "batch_stats", "term_dict")
 
 
 def _cleanup_old_generations(index_dir: str, committed_gen: int) -> None:
     """Keep the committed generation plus ONE predecessor (for in-flight
-    readers); delete anything older. Generation 0 is the index root
-    itself (no pointer yet) — its table dirs live there, so only those
-    are removed (never ``_stream_batches``/``_checkpoints``/the pointer)."""
+    readers); delete anything older."""
     import shutil
 
-    for g in range(1, committed_gen - 1):
+    for g in range(committed_gen - 1):
         shutil.rmtree(os.path.join(index_dir, f"gen-{g}"), ignore_errors=True)
-    if committed_gen >= 2:  # the root's tables are now two generations old
-        for t in _TABLE_DIRS:
-            shutil.rmtree(os.path.join(index_dir, t), ignore_errors=True)
-        try:
-            os.remove(os.path.join(index_dir, "corpus_stats.json"))
-        except OSError:
-            pass

@@ -4,9 +4,9 @@
         gopensearch_spark/jobs/compact_index_job.py --index s3://bucket/index
 
 Merges the posting runs back to one sorted run per term and commits the
-index's next generation (gopensearch_spark/index/builder.py
+index's next generation in its manifest (gopensearch_spark/index/builder.py
 compact_streaming_index). Prints one JSON metrics line with the
-committed ``generation``.
+committed ``generation``, read back from the manifest.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from gopensearch_spark.index import compact_streaming_index, current_generation
+    from gopensearch_spark.index import compact_streaming_index, read_manifest
     from gopensearch_spark.session import get_spark
 
     spark = get_spark("gopensearch-compact-index", master=args.master)
@@ -32,7 +32,7 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps({
         "job": "compact_index",
         "index": args.index,
-        "generation": current_generation(args.index),
+        "generation": read_manifest(args.index)["generation"],
         "n_docs": stats["n_docs"],
         "elapsed_sec": round(time.time() - t0, 3),
     }))

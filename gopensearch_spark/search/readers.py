@@ -4,11 +4,14 @@ Every query used to call `spark.read.parquet(...)` afresh, re-listing
 files and re-reading footers — pure latency on repeated queries against
 the same index. Reusing one DataFrame handle per (session, index_dir,
 table) keeps Spark's FileIndex/schema cache warm; the plan on top is
-rebuilt per query as usual, so correctness is unaffected. Corpus stats
-(a tiny driver-side JSON) are memoized with an mtime guard, and that
-guard is the index's version: when ``corpus_stats.json`` changes under
-a cached entry (a rebuild by another process that never called
-``invalidate`` here), every cached handle on that directory is dropped.
+rebuilt per query as usual, so correctness is unaffected.
+
+The index's manifest (``index/builder.py`` ``read_manifest``) is the
+one version record. Every cache here is keyed on (session, index_dir)
+and its entry stores the manifest version it was filled under; a call
+that reads another version replaces the entry. So a commit by any
+writer, in this process or another (a rebuild copied over the
+directory), is seen by the next query with nothing to invalidate.
 """
 
 from __future__ import annotations
@@ -18,10 +21,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from gopensearch_spark.index.builder import (
-    read_corpus_stats,
-    read_term_dict_meta,
+    read_corpus_stats as corpus_stats,  # noqa: F401  (re-exported)
+    read_manifest,
     resolve_index_dir,
 )
+
+# a cold term -> df map that would grow past this many terms starts
+# afresh (about 13 MB at ~130 bytes a term); a complete map is never cut
+_COLD_TERM_DFS_MAX = 100_000
 
 
 class TermDfs(dict):
@@ -29,9 +36,10 @@ class TermDfs(dict):
     every indexed term (``warm_index`` loads it), so any other term is
     known to be absent: it is "in" the map with df 0."""
 
-    def __init__(self, items=(), complete: bool = False):
+    def __init__(self, items=(), complete: bool = False, version: str | None = None):
         super().__init__(items)
         self.complete = complete
+        self.version = version
 
     def __contains__(self, term) -> bool:
         return self.complete or dict.__contains__(self, term)
@@ -42,10 +50,26 @@ class TermDfs(dict):
         raise KeyError(term)
 
 
-# every cache below is keyed on the RESOLVED generation dir
-_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_STATS_CACHE: dict[str, tuple[int, dict]] = {}
+class _Tables(dict):
+    """table name -> DataFrame handle of one index version."""
+
+    def __init__(self, version: str):
+        super().__init__()
+        self.version = version
+
+
+_DF_CACHE: dict[tuple[int, str], _Tables] = {}
 _TERM_DF_CACHE: dict[tuple[int, str], TermDfs] = {}
+
+
+def _entry(cache: dict, spark: SparkSession, index_dir: str, version: str, make):
+    """``cache``'s entry for (session, index_dir), replaced by
+    ``make(version)`` when it was filled under another version."""
+    key = (id(spark), index_dir)
+    hit = cache.get(key)
+    if hit is None or hit.version != version:
+        hit = cache[key] = make(version)
+    return hit
 
 
 def warm_index(spark: SparkSession, index_dir: str) -> TermDfs:
@@ -59,60 +83,35 @@ def warm_index(spark: SparkSession, index_dir: str) -> TermDfs:
     term in CPython, ~13 MB for 100k terms, plus the pandas frame while
     it is collected), so an index whose vocabulary does not fit the
     driver must not be warmed. Nothing is persisted on the executors.
-    Writers invalidate() the map like every other handle."""
-    corpus_stats(index_dir)  # version check: drops warm state of an older version
-    key = (id(spark), resolve_index_dir(index_dir))
-    if not _TERM_DF_CACHE.get(key, TermDfs()).complete:
-        _TERM_DF_CACHE[key] = _load_term_dfs(spark, index_dir)
-    return _TERM_DF_CACHE[key]
+    The next commit to the index replaces the map with a cold one."""
+    key = (id(spark), index_dir)
+    dfs = _TERM_DF_CACHE.get(key)
+    if dfs is None or not dfs.complete or dfs.version != read_manifest(index_dir)["version"]:
+        dfs = _TERM_DF_CACHE[key] = _load_term_dfs(spark, index_dir)
+    return dfs
 
 
 def index_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
-    """`postings` / `term_stats` / `doc_stats` reader, memoized.
-
-    Cache keys hold the RESOLVED generation dir, so a pointer flip
-    (rename-free compaction) naturally misses the stale handle even
-    before ``invalidate`` runs."""
-    key = (id(spark), resolve_index_dir(index_dir), name)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(key[1], name))
-        _DF_CACHE[key] = df
-    return df
-
-
-def corpus_stats(index_dir: str) -> dict:
-    """The index's corpus stats, memoized on the file's mtime. A changed
-    mtime under a cached entry means the directory was rewritten without
-    ``invalidate`` (e.g. by another process): every cached handle and df
-    map on it is stale and is dropped here. Query entry
-    points read the stats before any other cache, so this is the one
-    version check they need."""
-    resolved = resolve_index_dir(index_dir)
-    path = os.path.join(resolved, "corpus_stats.json")
-    mtime = os.stat(path).st_mtime_ns
-    hit = _STATS_CACHE.get(resolved)
-    if hit is not None and hit[0] == mtime:
-        return hit[1]
-    if hit is not None:
-        invalidate(resolved)
-    stats = read_corpus_stats(index_dir)
-    _STATS_CACHE[resolved] = (mtime, stats)
-    return stats
+    """`postings` / `term_stats` / `doc_stats` reader, memoized per
+    manifest version."""
+    version = read_manifest(index_dir)["version"]
+    tables = _entry(_DF_CACHE, spark, index_dir, version, _Tables)
+    if name not in tables:
+        tables[name] = spark.read.parquet(os.path.join(resolve_index_dir(index_dir), name))
+    return tables[name]
 
 
 def term_dict(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """The sorted (term, df) dictionary, or ``None`` when it is stale.
 
-    Both finalize_stats and every streaming micro-batch rebuild the
-    dict, and its ``_meta.json`` records the corpus n_docs it was built
-    against. Postings newer than the dict (a raw build_postings append
-    without finalize, a crash between the stats fold and the dict
-    rebuild) show as a mismatch with corpus_stats; callers then fall
-    back to a slower plan — a stale dict must never silently drop
-    matching terms."""
-    meta = read_term_dict_meta(index_dir)
-    if meta is None or meta.get("n_docs") != corpus_stats(index_dir)["n_docs"]:
+    Both builds and every streaming micro-batch rebuild the dict and
+    commit the corpus n_docs it was built against. Postings newer than
+    the dict (a raw build_postings append without finalize, a crash
+    between the stats fold and the dict rebuild) show as a mismatch with
+    the committed n_docs; callers then fall back to a slower plan — a
+    stale dict must never silently drop matching terms."""
+    manifest = read_manifest(index_dir)
+    if manifest.get("term_dict_n_docs") != manifest["n_docs"]:
         return None
     return index_table(spark, index_dir, "term_dict")
 
@@ -123,58 +122,57 @@ def _load_term_dfs(spark: SparkSession, index_dir: str) -> TermDfs:
     Arrow."""
     from pyspark.sql import functions as F
 
+    version = read_manifest(index_dir)["version"]
     pdf = (
         index_table(spark, index_dir, "term_stats")
         .groupBy("term").agg(F.sum("df").alias("df"))
         .toPandas()
     )
     return TermDfs(zip(pdf["term"].tolist(), pdf["df"].astype("int64").tolist()),
-                   complete=True)
+                   complete=True, version=version)
 
 
 def term_dfs(spark: SparkSession, index_dir: str, terms: list[str]) -> dict[str, int]:
     """term -> document frequency (delta rows summed on a streaming
-    index), memoized per (session, resolved index dir) and dropped when
-    the index's corpus_stats version changes. A warmed index holds the
-    complete map and never launches a job; otherwise missing terms cost
-    one metrics-sized lookup job, and absent terms cache as 0 (callers
-    drop them). All index writers call ``invalidate``, which clears this
-    cache alongside the DataFrame handles."""
-    stats = corpus_stats(index_dir)  # the version check runs first
-    key = (id(spark), resolve_index_dir(index_dir))
-    cache = _TERM_DF_CACHE.setdefault(key, TermDfs())
-    missing = sorted(t for t in set(terms) if t not in cache)
+    index), memoized per (session, index_dir) for the committed manifest
+    version. A warmed index holds the complete map and never launches a
+    job; otherwise missing terms cost one metrics-sized lookup job, and
+    absent terms cache as 0 (callers drop them). A cold map that would
+    pass ``_COLD_TERM_DFS_MAX`` terms starts afresh, so a stream of
+    distinct query terms cannot grow driver memory without bound."""
+    manifest = read_manifest(index_dir)
+    key = (id(spark), index_dir)
+    cache = _entry(_TERM_DF_CACHE, spark, index_dir, manifest["version"],
+                   lambda v: TermDfs(version=v))
+    uniq = set(terms)
+    dfs = {t: cache[t] for t in uniq if t in cache}
+    missing = sorted(uniq - dfs.keys())
     if missing:
         from pyspark.sql import functions as F
 
         from gopensearch_spark.search.bm25 import term_buckets_for
 
-        buckets = sorted(set(term_buckets_for(spark, missing, stats["term_buckets"]).values()))
-        found: dict[str, int] = {}
+        buckets = sorted(set(term_buckets_for(spark, missing, manifest["term_buckets"]).values()))
+        found = dict.fromkeys(missing, 0)
         for r in (
             index_table(spark, index_dir, "term_stats")
             .where(F.col("term_bucket").isin(buckets) & F.col("term").isin(missing))
             .select("term", "df")
             .collect()
         ):
-            found[r["term"]] = found.get(r["term"], 0) + r["df"]
-        for t in missing:
-            cache[t] = found.get(t, 0)
-    return {t: cache[t] for t in set(terms)}
+            found[r["term"]] += r["df"]
+        dfs.update(found)
+        if len(cache) + len(found) > _COLD_TERM_DFS_MAX:
+            cache = _TERM_DF_CACHE[key] = TermDfs(version=cache.version)
+        if len(found) <= _COLD_TERM_DFS_MAX:
+            cache.update(found)
+    return dfs
 
 
 def invalidate(index_dir: str | None = None) -> None:
-    """Drop cached handles (all, or one index) — call after a rebuild.
-    Prefix-matched: cache keys may hold generation subdirs of the index
-    (``<dir>/gen-N``), which must invalidate with their root."""
-    global _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE
-    if index_dir is None:
-        _DF_CACHE, _STATS_CACHE, _TERM_DF_CACHE = {}, {}, {}
-        return
-
-    def _keep(path: str) -> bool:
-        return path != index_dir and not path.startswith(index_dir.rstrip(os.sep) + os.sep)
-
-    _DF_CACHE = {k: v for k, v in _DF_CACHE.items() if _keep(k[1])}
-    _STATS_CACHE = {k: v for k, v in _STATS_CACHE.items() if _keep(k)}
-    _TERM_DF_CACHE = {k: v for k, v in _TERM_DF_CACHE.items() if _keep(k[1])}
+    """Drop cached handles (all, or one index) to free driver memory.
+    Never needed for correctness: a commit changes the manifest version,
+    which replaces every entry filled under the old one."""
+    for cache in (_DF_CACHE, _TERM_DF_CACHE):
+        for k in [k for k in cache if index_dir is None or k[1] == index_dir]:
+            del cache[k]

@@ -10,9 +10,13 @@ and folded into the inverted index one micro-batch at a time:
         + a per-batch checkpoint record (lineage + metrics)
 
 A stream may append to a batch build, a compaction or an earlier
-stream: all share one layout (see ``index/builder.py``). An index built
-before the batch build wrote it must be compacted once before a stream
-appends to it.
+stream: all share one layout and one manifest (see
+``index/builder.py``). A micro-batch writes its partitions into the
+committed generation (``gen-0`` for a new index); ``fold_corpus_stats``
+then commits the new corpus stats and the term_dict rebuild the dict's
+n_docs, each a new manifest version that drops readers' cached handles.
+An index written before the manifest layout raises ``ValueError``:
+rebuild it.
 
 Exactly-once, by construction not just by checkpoint: every table is
 written under a ``batch_id=N`` partition with DYNAMIC partition
@@ -90,9 +94,6 @@ def _make_batch_handler(
         # incremental term_dict (O(distinct terms)): prefix queries
         # partition-prune on streaming indexes too
         rebuild_term_dict(batch_df.sparkSession, index_dir, n_docs=stats["n_docs"])
-        from gopensearch_spark.search.readers import invalidate
-
-        invalidate(index_dir)
         os.makedirs(os.path.dirname(_batch_ckpt(index_dir, batch_id)), exist_ok=True)
         rec = {
             "batch_id": batch_id,

@@ -42,12 +42,13 @@ def test_recommended_term_buckets_rule():
 
 
 def test_per_doc_sentinels_and_derived_doc_stats(spark, tmp_path):
-    from gopensearch_spark.index import build_index
+    from gopensearch_spark.index import build_index, resolve_index_dir
 
     rows = [(i, f"alpha beta w{i % 7}" if i % 5 else "") for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     idx = str(tmp_path / "idx")
     stats = build_index(spark, docs, idx, term_buckets=8)
+    idx = resolve_index_dir(idx)  # the committed generation's tables
 
     post = spark.read.parquet(os.path.join(idx, "postings"))
     sent = post.where(F.col("term").isNull())
@@ -72,7 +73,7 @@ def test_per_doc_sentinels_and_derived_doc_stats(spark, tmp_path):
 
 def test_auto_bucket_build_records_count(spark, tmp_path):
     from gopensearch_spark.index import build_index
-    from gopensearch_spark.index.builder import read_corpus_stats
+    from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
 
     docs = spark.createDataFrame(
         [(i, f"alpha w{i % 13}") for i in range(300)], "doc_id long, text string"
@@ -85,7 +86,7 @@ def test_auto_bucket_build_records_count(spark, tmp_path):
     assert 1 <= expect < DEFAULT_TERM_BUCKETS
     assert read_corpus_stats(idx)["term_buckets"] == expect
     dirs = [
-        d for d in os.listdir(os.path.join(idx, "postings", "batch_id=-1"))
+        d for d in os.listdir(os.path.join(resolve_index_dir(idx), "postings", "batch_id=-1"))
         if d.startswith("term_bucket=")
     ]
     assert 0 < len(dirs) <= expect

@@ -1,7 +1,11 @@
-"""Driver-side reader caches: the warm term -> df map and the
-corpus_stats version check that keeps every cached handle fresh."""
+"""Driver-side reader caches: the warm term -> df map, its bound, and
+the manifest version that keeps every cached handle fresh."""
 
+import math
+import os
 import shutil
+
+import pytest
 
 from gopensearch_spark.search import bm25_match, warm_index
 from gopensearch_spark.search import readers
@@ -72,3 +76,93 @@ def test_rebuild_without_invalidate_serves_new_dfs(spark, tmp_path):
     assert all(abs(s1 - s2) < 1e-9 for (_, s1), (_, s2) in zip(got, ref))
     assert got != [(int(r.doc_id), float(r.score)) for r in first]
     invalidate(a)
+
+
+def test_stream_merge_stream_seen_without_invalidate(spark, docs_small, tmp_path):
+    """A streamed batch, a force_merge, then another batch, with no
+    invalidate call anywhere: each step is seen by the next term_dfs and
+    bm25_match, equal to FTS5 over the union, and the term -> df cache
+    holds exactly one entry for (session, index root) throughout."""
+    from gopensearch_spark.dsl import Engine
+    from gopensearch_spark.fts5_oracle import Fts5Oracle
+    from gopensearch_spark.streaming import index_stream_available_now
+    from gopensearch_spark.webtext import prepare_corpus, synth_web_pages
+
+    inbox, idx, cp = (str(tmp_path / d) for d in ("inbox", "idx", "cp"))
+    os.makedirs(inbox)
+    pages = synth_web_pages(spark, docs_small.limit(80), copies=1).cache()
+    waves = [pages.where(f"pmod(xxhash64(url), 2) = {w}") for w in (0, 1)]
+    e = Engine(spark)
+    e.create_index("d", prepare_corpus(pages), text_field="text", index_dir=idx)
+    terms = ["spark", "join", "data"]
+    rows, waves_left = [], iter(waves)
+
+    def check():
+        o = Fts5Oracle()
+        o.load([(int(r.doc_id), r.text) for r in rows])
+        vocab = {t: df for t, df, _ in o.vocab()}
+        assert term_dfs(spark, idx, terms) == {t: vocab.get(t, 0) for t in terms}
+        for mode in ("or", "and"):
+            got = [(int(r.doc_id), float(r.score))
+                   for r in bm25_match(spark, idx, terms[:2], k=15, mode=mode).collect()]
+            ref = o.match(terms[:2], k=15, mode=mode)
+            assert [d for d, _ in got] == [d for d, _ in ref]
+            assert all(math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
+                       for (_, a), (_, b) in zip(got, ref))
+        o.close()
+        assert [k for k in readers._TERM_DF_CACHE if k[1].startswith(idx)] == [(id(spark), idx)]
+
+    for step in ("stream", "force_merge", "stream"):
+        if step == "stream":
+            wave = next(waves_left)
+            wave.coalesce(1).write.mode("append").parquet(inbox)
+            index_stream_available_now(spark, inbox, idx, cp)
+            rows.extend(prepare_corpus(wave).select("doc_id", "text").collect())
+        else:
+            e.force_merge("d")
+        check()
+    pages.unpersist()
+
+
+def test_cold_term_df_map_is_bounded(spark, index_small, monkeypatch):
+    """A run of distinct absent terms leaves a cold map at or below the
+    bound with unchanged answers; a complete (warm) map is never cut."""
+    invalidate(index_small)
+    monkeypatch.setattr(readers, "_COLD_TERM_DFS_MAX", 5)
+    key = (id(spark), index_small)
+    spark_df = term_dfs(spark, index_small, ["spark"])["spark"]
+    assert spark_df > 0
+    try:
+        for i in range(4):
+            absent = [f"zzabsent{i}x{j}" for j in range(3)]
+            got = term_dfs(spark, index_small, absent + ["spark"])
+            assert got == {**dict.fromkeys(absent, 0), "spark": spark_df}
+            assert len(readers._TERM_DF_CACHE[key]) <= 5
+        warm = warm_index(spark, index_small)
+        n = len(warm)
+        assert n > 5
+        got = term_dfs(spark, index_small, [f"zzwarm{j}" for j in range(8)] + ["spark"])
+        assert got["spark"] == spark_df and sum(got.values()) == spark_df
+        assert readers._TERM_DF_CACHE[key] is warm and len(warm) == n
+    finally:
+        invalidate(index_small)
+
+
+def test_pre_manifest_index_fails_loudly(spark, tmp_path):
+    """An index written before the manifest layout (tables and a stats
+    file at the root, no _current) raises a ValueError that names the
+    directory and says to rebuild it."""
+    from gopensearch_spark.search.readers import corpus_stats
+
+    old = str(tmp_path / "old")
+    os.makedirs(os.path.join(old, "postings", "batch_id=-1"))
+    with open(os.path.join(old, "corpus_stats.json"), "w") as f:
+        f.write('{"n_docs": 1, "avg_doc_len": 1.0, "total_tokens": 1, '
+                '"term_buckets": 4, "with_positions": false}')
+    for read in (lambda: corpus_stats(old), lambda: term_dfs(spark, old, ["a"]),
+                 lambda: bm25_match(spark, old, "a", k=1)):
+        with pytest.raises(ValueError, match="rebuild it") as err:
+            read()
+        assert old in str(err.value)
+    with pytest.raises(FileNotFoundError):
+        term_dfs(spark, str(tmp_path / "never_built"), ["a"])

@@ -901,18 +901,18 @@ def test_force_merge_compacts_generation_and_preserves_ranking(
     fragmented multi-slice runs merge to one run per term, and BM25
     ranking stays rank-identical to FTS5 across the merge."""
     from gopensearch_spark.index import build_index
-    from gopensearch_spark.index.builder import current_generation
+    from gopensearch_spark.index.builder import read_manifest
 
     out = str(tmp_path_factory.mktemp("fm") / "idx")
     build_index(spark, docs_small, out, slices=3, with_positions=False)
     e = Engine(spark)
     e.create_index("d", docs_small, text_field="text", index_dir=out)
     before = e.search("d", {"query": {"match": {"text": "spark join"}}, "size": 10})
-    g0 = current_generation(out)
+    g0 = read_manifest(out)["generation"]
 
     resp = e.force_merge("d", max_num_segments=1)
     assert resp["_shards"]["failed"] == 0 and resp["_shards"]["successful"] == 1
-    assert current_generation(out) == g0 + 1
+    assert read_manifest(out)["generation"] == g0 + 1
 
     after = e.search("d", {"query": {"match": {"text": "spark join"}}, "size": 10})
     key = lambda h: (h["_id"], round(h["_score"], 9))  # noqa: E731

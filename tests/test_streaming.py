@@ -76,7 +76,7 @@ def test_streaming_batches_are_idempotent_and_incremental(spark, docs_small, tmp
     from gopensearch_spark.streaming import index_stream_available_now
     from gopensearch_spark.streaming.ingest import _batch_ckpt, _make_batch_handler
     from gopensearch_spark.webtext import synth_web_pages, prepare_corpus
-    from gopensearch_spark.index.builder import read_corpus_stats
+    from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
 
     inbox = str(tmp_path / "inbox")
     idx = str(tmp_path / "idx")
@@ -92,13 +92,14 @@ def test_streaming_batches_are_idempotent_and_incremental(spark, docs_small, tmp
 
     # batch_id partition dirs exist on every table (incl. term-df and
     # corpus-stat deltas)
+    data = resolve_index_dir(idx)
     for table in ["postings", "doc_stats", "term_stats", "batch_stats"]:
-        parts = {os.path.basename(p) for p in glob.glob(os.path.join(idx, table, "batch_id=*"))}
+        parts = {os.path.basename(p) for p in glob.glob(os.path.join(data, table, "batch_id=*"))}
         assert {"batch_id=0", "batch_id=1"} <= parts, (table, parts)
 
     stats_before = read_corpus_stats(idx)
-    postings_before = spark.read.parquet(os.path.join(idx, "postings")).count()
-    tstats_before = spark.read.parquet(os.path.join(idx, "term_stats")).groupBy().sum("df").collect()[0][0]
+    postings_before = spark.read.parquet(os.path.join(data, "postings")).count()
+    tstats_before = spark.read.parquet(os.path.join(data, "term_stats")).groupBy().sum("df").collect()[0][0]
 
     # simulate crash-before-commit: drop batch 1's record, replay it
     os.remove(_batch_ckpt(idx, 1))
@@ -106,8 +107,8 @@ def test_streaming_batches_are_idempotent_and_incremental(spark, docs_small, tmp
     handler(second, 1)
 
     assert read_corpus_stats(idx)["n_docs"] == stats_before["n_docs"]
-    assert spark.read.parquet(os.path.join(idx, "postings")).count() == postings_before
-    tstats_after = spark.read.parquet(os.path.join(idx, "term_stats")).groupBy().sum("df").collect()[0][0]
+    assert spark.read.parquet(os.path.join(data, "postings")).count() == postings_before
+    tstats_after = spark.read.parquet(os.path.join(data, "term_stats")).groupBy().sum("df").collect()[0][0]
     assert tstats_after == tstats_before
     with open(_batch_ckpt(idx, 1)) as f:
         assert _json.load(f)["status"] == "committed"
@@ -123,7 +124,7 @@ def test_batch_stats_never_rescan_older_batches(spark, docs_small, tmp_path):
     delta fold they stay exactly right."""
     import shutil
 
-    from gopensearch_spark.index.builder import read_corpus_stats
+    from gopensearch_spark.index.builder import read_corpus_stats, resolve_index_dir
     from gopensearch_spark.streaming import index_stream_available_now
     from gopensearch_spark.streaming.ingest import _batch_ckpt, _make_batch_handler
     from gopensearch_spark.webtext import prepare_corpus, synth_web_pages
@@ -143,7 +144,7 @@ def test_batch_stats_never_rescan_older_batches(spark, docs_small, tmp_path):
     total = prepare_corpus(pages).count()
     assert read_corpus_stats(idx)["n_docs"] == total
 
-    shutil.rmtree(os.path.join(idx, "doc_stats", "batch_id=0"))
+    shutil.rmtree(os.path.join(resolve_index_dir(idx), "doc_stats", "batch_id=0"))
     os.remove(_batch_ckpt(idx, 1))
     handler = _make_batch_handler(idx, term_buckets=16, with_positions=False)
     handler(second, 1)
@@ -155,10 +156,10 @@ def test_batch_stats_never_rescan_older_batches(spark, docs_small, tmp_path):
 def test_prefix_prunes_on_streaming_index(spark, docs_small, tmp_path):
     """Round-3: streaming batches rebuild the sorted term_dict, so a
     prefix query on a streaming-built index partition-prunes the
-    postings scan (no more full term_bucket sweep); and the _meta.json
-    freshness check degrades to the full scan — never wrong results —
-    when postings are newer than the dict."""
-    from gopensearch_spark.index.builder import build_postings, read_term_dict_meta
+    postings scan (no more full term_bucket sweep); and the manifest's
+    term_dict freshness check degrades to the full scan — never wrong
+    results — when postings are newer than the dict."""
+    from gopensearch_spark.index.builder import build_postings, read_manifest
     from gopensearch_spark.search import prefix_match
     from gopensearch_spark.streaming import index_stream_available_now
     from gopensearch_spark.webtext import synth_web_pages
@@ -171,7 +172,7 @@ def test_prefix_prunes_on_streaming_index(spark, docs_small, tmp_path):
     pages.coalesce(1).write.mode("append").parquet(inbox)
     index_stream_available_now(spark, inbox, idx, cp, with_positions=True)
 
-    assert read_term_dict_meta(idx) is not None
+    assert read_manifest(idx).get("term_dict_n_docs") is not None
     res = prefix_match(spark, idx, "dat", k=10)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "term_bucket#" in plan.split("PartitionFilters:", 1)[1].split("]", 1)[0], plan
@@ -187,10 +188,8 @@ def test_prefix_prunes_on_streaming_index(spark, docs_small, tmp_path):
     build_postings(extra, idx, term_buckets=16,
                    with_positions=True, batch_id=99)
     from gopensearch_spark.index.builder import fold_corpus_stats
-    from gopensearch_spark.search.readers import invalidate
 
     fold_corpus_stats(spark, idx, term_buckets=16, with_positions=True)
-    invalidate(idx)
     stale = prefix_match(spark, idx, "dat", k=50)
     stale_plan = stale._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: []" in stale_plan or "term_bucket#" not in \
@@ -209,7 +208,7 @@ def test_fold_backfills_missing_batch_deltas(spark, docs_small, tmp_path):
     import shutil
 
     from gopensearch_spark.index.builder import (
-        build_postings, fold_corpus_stats, read_corpus_stats,
+        build_postings, fold_corpus_stats, read_corpus_stats, resolve_index_dir,
     )
     from gopensearch_spark.webtext import prepare_corpus, synth_web_pages
 
@@ -223,10 +222,11 @@ def test_fold_backfills_missing_batch_deltas(spark, docs_small, tmp_path):
     fold_corpus_stats(spark, idx, term_buckets=8)
     assert read_corpus_stats(idx)["n_docs"] == total
 
-    shutil.rmtree(os.path.join(idx, "batch_stats", "batch_id=0"))
+    data = resolve_index_dir(idx)
+    shutil.rmtree(os.path.join(data, "batch_stats", "batch_id=0"))
     stats = fold_corpus_stats(spark, idx, term_buckets=8)
     assert stats["n_docs"] == total  # backfilled, not undercounted
-    assert os.path.isdir(os.path.join(idx, "batch_stats", "batch_id=0"))
+    assert os.path.isdir(os.path.join(data, "batch_stats", "batch_id=0"))
     pages.unpersist()
 
 
@@ -257,8 +257,8 @@ def test_streaming_auto_compaction(spark, docs_small, tmp_path):
 
     # batches 0..3 drained, compactions fired after batches 1 and 3:
     # everything is consolidated under batch_id=-1, in a GENERATION dir
-    # committed by a pointer write (rename-free: deployable on object
-    # stores) — data paths resolve through the pointer
+    # committed by a manifest write (rename-free: deployable on object
+    # stores) — data paths resolve through the manifest
     from gopensearch_spark.index.builder import resolve_index_dir
     data = resolve_index_dir(idx)
     assert data != idx and os.path.basename(data).startswith("gen-"), data
@@ -364,7 +364,7 @@ def test_wand_and_on_range_split_batches(spark, tmp_path):
 
 def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_small, tmp_path):
     """Rename-free commit crash window: a compaction that dies while
-    building gen-(N+1) must leave the pointer — and every reader — on
+    building gen-(N+1) must leave the manifest — and every reader — on
     generation N; the next compaction attempt rebuilds the junk dir and
     commits atomically. There is no rename anywhere in the flow."""
     import shutil
@@ -372,7 +372,7 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     from gopensearch_spark.fts5_oracle import Fts5Oracle
     from gopensearch_spark.index.builder import (
         compact_streaming_index,
-        current_generation,
+        read_manifest,
         resolve_index_dir,
     )
     from gopensearch_spark.search import wand_match
@@ -386,7 +386,7 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     index_stream_available_now(spark, inbox, idx, cp, with_positions=True)
 
     compact_streaming_index(spark, idx)
-    assert current_generation(idx) == 1
+    assert read_manifest(idx)["generation"] == 1
 
     rows = prepare_corpus(pages).select("doc_id", "text").collect()
     o = Fts5Oracle(); o.load([(int(r.doc_id), r.text) for r in rows])
@@ -397,21 +397,21 @@ def test_compaction_crash_leaves_readers_on_committed_generation(spark, docs_sma
     os.makedirs(junk)
     with open(os.path.join(junk, "part-garbage.parquet"), "wb") as f:
         f.write(b"\x00not a parquet file")
-    # pointer still says gen-1; every read path serves the committed gen
+    # the manifest still says gen-1; every read path serves the committed gen
     assert resolve_index_dir(idx).endswith("gen-1")
     got = [(int(r.doc_id), float(r.score))
            for r in wand_match(spark, idx, ["spark", "join"], k=10, mode="or").collect()]
     _assert_identical(got, ref)
 
-    # the retry rebuilds gen-2 from scratch and commits via the pointer
+    # the retry rebuilds gen-2 from scratch and commits via the manifest
     compact_streaming_index(spark, idx)
-    assert current_generation(idx) == 2
+    assert read_manifest(idx)["generation"] == 2
     assert resolve_index_dir(idx).endswith("gen-2")
     got = [(int(r.doc_id), float(r.score))
            for r in wand_match(spark, idx, ["spark", "join"], k=10, mode="or").collect()]
     _assert_identical(got, ref)
-    # flat-layout tables (two generations old) were cleaned up; gen-1 kept
-    assert not os.path.isdir(os.path.join(idx, "postings"))
+    # gen-0's tables (two generations old) were cleaned up; gen-1 kept
+    assert not os.path.isdir(os.path.join(idx, "gen-0", "postings"))
     assert os.path.isdir(os.path.join(idx, "gen-1"))
     # streaming commit records live at the root, outside generations
     assert os.path.isdir(os.path.join(idx, "_stream_batches"))
@@ -440,7 +440,7 @@ def test_index_writes_no_blocks_table(spark, tmp_path):
     """Every writer produces the one layout: a batch build, a streaming
     micro-batch (into the built index and into a fresh one) and a
     compaction write batch_id-partitioned tables plus batch_stats, no
-    blocks/ dir and no codec key in corpus_stats.json; warm_index
+    blocks/ dir and no codec key in the corpus stats; warm_index
     persists nothing on the executors."""
     from gopensearch_spark.index.builder import (
         build_index,

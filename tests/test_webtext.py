@@ -88,7 +88,7 @@ def test_build_index_job_end_to_end(spark, web_pages_small, tmp_path):
         "--slices", "2", "--term-buckets", "8",
     ])
     assert rc == 0
-    assert os.path.exists(os.path.join(idx, "corpus_stats.json"))
+    assert os.path.exists(os.path.join(idx, "_current"))
     # resumable: both slice checkpoints committed
     from gopensearch_spark.index.builder import completed_slices
 
@@ -156,7 +156,7 @@ def test_compact_index_job_end_to_end(spark, docs_small, oracle_small, tmp_path,
     place, commits the next generation and reports it in its JSON line."""
     import json as _json
 
-    from gopensearch_spark.index import build_index, current_generation
+    from gopensearch_spark.index import build_index, read_manifest
     from gopensearch_spark.jobs.compact_index_job import main
 
     idx = str(tmp_path / "idx")
@@ -167,7 +167,7 @@ def test_compact_index_job_end_to_end(spark, docs_small, oracle_small, tmp_path,
     assert main(["--index", idx]) == 0
     line = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert line["job"] == "compact_index" and line["index"] == idx
-    assert line["generation"] == current_generation(idx) == 1
+    assert line["generation"] == read_manifest(idx)["generation"] == 1
     assert line["n_docs"] == docs_small.count()
     assert max(_files_per_bucket(idx)) == 1
     _assert_matches_oracle(spark, idx, oracle_small)
@@ -180,12 +180,12 @@ def test_positions_optional_profile(spark, docs_small, oracle_small, tmp_path):
     and rank-identical; phrase/NEAR raise the clear capability error."""
     import math
 
-    from gopensearch_spark.index import build_index
+    from gopensearch_spark.index import build_index, resolve_index_dir
     from gopensearch_spark.search import near_match, phrase_match, prefix_match, wand_match
 
     idx = str(tmp_path / "nopos")
     build_index(spark, docs_small, idx, term_buckets=8, with_positions=False)
-    post = spark.read.parquet(os.path.join(idx, "postings"))
+    post = spark.read.parquet(os.path.join(resolve_index_dir(idx), "postings"))
     assert "positions" not in post.columns
 
     got = [(int(r["doc_id"]), float(r["score"]))
