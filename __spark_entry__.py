@@ -32,31 +32,52 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
-def _index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process+sf) the inverted index over documents."""
-    if sf_dir in _INDEX_CACHE:
-        return _INDEX_CACHE[sf_dir]
+# v9: tables under gen-N, committed by the `_current` manifest
+_INDEX_ROOT = "/tmp/gopensearch_entry_idx_v9"
+
+
+def _cached_index(
+    spark: SparkSession, sf_dir: str, field: str, warm: bool = False, **build_kw
+) -> str:
+    """The inverted index over the documents' ``field`` under
+    ``_INDEX_ROOT``, built once per process + sf; a cached index whose
+    corpus stats do not read back is rebuilt. ``warm`` pins its
+    term -> df map on the driver (readers.warm_index)."""
+    import shutil
+
     from gopensearch_spark.index import build_index, read_corpus_stats
 
-    # v9: tables under gen-N, committed by the `_current` manifest
-    out = os.path.join("/tmp/gopensearch_entry_idx_v9", os.path.basename(os.path.normpath(sf_dir)))
-    if not os.path.exists(os.path.join(out, "_current")):
+    tag = "" if field == "text" else field
+    key = f"{sf_dir}#{tag}" if tag else sf_dir
+    if key in _INDEX_CACHE:
+        return _INDEX_CACHE[key]
+    name = os.path.basename(os.path.normpath(sf_dir)) + (f"_{tag}" if tag else "")
+    out = os.path.join(_INDEX_ROOT, name)
+    try:
+        read_corpus_stats(out)
+    except (OSError, ValueError, KeyError):
+        shutil.rmtree(out, ignore_errors=True)
+        docs = _docs(spark, sf_dir)
         build_index(
             spark,
-            _docs(spark, sf_dir),
+            docs.select("doc_id", field) if tag else docs,
             out,
-            slices=1,
-            term_buckets=16,
-            with_positions=True,
-            input_lineage=f"{sf_dir}/documents.parquet",
+            text_col=field,
+            input_lineage=f"{sf_dir}/documents.parquet" + (f"#{tag}" if tag else ""),
+            **build_kw,
         )
-    # serving posture: pin the term -> df map on the driver so every
-    # match resolves its idfs with no Spark job (readers.warm_index)
-    from gopensearch_spark.search import warm_index
+    if warm:
+        from gopensearch_spark.search import warm_index
 
-    warm_index(spark, out)
-    _INDEX_CACHE[sf_dir] = out
+        warm_index(spark, out)
+    _INDEX_CACHE[key] = out
     return out
+
+
+def _index_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The inverted index over the documents' text, warm."""
+    return _cached_index(
+        spark, sf_dir, "text", warm=True, slices=1, term_buckets=16, with_positions=True)
 
 
 def _bm25(terms: list[str], mode: str, k: int):
@@ -128,26 +149,7 @@ ORDER BY round(score, {_ROUND}) DESC, doc_id ASC LIMIT {k}
 def _lang_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Second per-field inverted index (over `lang`) for multi_match —
     each field gets its OWN index with its own df/avgdl stats."""
-    key = sf_dir + "#lang"
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    from gopensearch_spark.index import build_index
-
-    out = os.path.join(
-        "/tmp/gopensearch_entry_idx_v9",
-        os.path.basename(os.path.normpath(sf_dir)) + "_lang",
-    )
-    if not os.path.exists(os.path.join(out, "_current")):
-        build_index(
-            spark,
-            _docs(spark, sf_dir).select("doc_id", "lang"),
-            out,
-            text_col="lang",
-            term_buckets=4,
-            input_lineage=f"{sf_dir}/documents.parquet#lang",
-        )
-    _INDEX_CACHE[key] = out
-    return out
+    return _cached_index(spark, sf_dir, "lang", term_buckets=4)
 
 
 _ENGINE_CACHE: dict[tuple[int, str], object] = {}
@@ -2432,7 +2434,7 @@ def _dsl_metric_aggs2(spark, sf_dir):
 def _dsl_boosting(spark, sf_dir):
     """ES boosting query: positive match('data') ranks normally; docs
     also matching negative match('dup') keep membership with score x
-    0.25 — demote-not-exclude, the spec_score combine family."""
+    0.25 — demote-not-exclude, a compound clause score."""
     body = {
         "query": {"boosting": {
             "positive": {"match": {"text": "data"}},
@@ -2656,7 +2658,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #   zero-filled date axis is in-window via
         #   dsl_date_histogram_calendar
         "dsl_pipeline_aggs": _dsl_pipeline_aggs,
-        # - dsl_dis_max: same spec_score combine fold over the scoring
+        # - dsl_dis_max: same compound-clause score fold over the scoring
         #   join as in-window dsl_function_score; the branch-grouped
         #   greatest+tie_breaker fold is pytest-pinned (test_engine)
         "dsl_dis_max": _dsl_dis_max,
@@ -2805,7 +2807,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dsl_metrics value-checks in-window (exact percentile + max_by
         # builtins); each arm spec-pinned in tests/test_search_features.py
         "dsl_metric_aggs2": _dsl_metric_aggs2,
-        # dsl_boosting (round 5c): same spec_score combine fold over the
+        # dsl_boosting (round 5c): same compound-clause score fold over the
         # scoring join as in-window dsl_function_score (demote-not-
         # exclude arm pytest-pinned vs the FTS5 oracle)
         "dsl_boosting": _dsl_boosting,

@@ -84,12 +84,12 @@ class CompileContext:
     quirk_first_range_only: bool = False
     # the index's document-id column (`_id` analogue), for `ids` queries
     id_col: str | None = None
-    # callback(field, clause, kind, scoring) -> Column predicate,
-    # installed by the Engine to route full-text `match`/`match_phrase`/
-    # `prefix` on indexed fields to the BM25/phrase engines. kind in
-    # {"match", "phrase", "prefix"}; ``scoring`` is False inside
-    # `bool.filter`/`bool.must_not` (ES filter context: the clause
-    # restricts the hit set but contributes NO score).
+    # callback(field, clause, kind, scoring) -> Column predicate or None,
+    # installed by the Engine (`Engine._context`) to register full-text
+    # leaves on indexed fields ("match", "phrase", "fuzzy", ...) and
+    # score clauses ("const", "fnscore", "boosting", "dismax").
+    # ``scoring`` is False inside `bool.filter`/`bool.must_not` (ES filter
+    # context: the clause restricts the hit set but contributes NO score).
     fulltext_predicate: object = None
 
     def resolve(self, field: str) -> Column:
@@ -676,21 +676,6 @@ def compile_query(ctx: CompileContext, q: model.Query | None, scoring: bool = Tr
             # must_not is filter context too (excluded docs never score)
             preds.append(~_or_all([compile_query(ctx, s, False) for s in b.must_not]))
     return _and_all(preds)
-
-
-def compile_search(ctx: CompileContext, d: model.Dsl) -> DataFrame:
-    """Full hits pipeline: filter -> sort -> limit (reference GenPlan's
-    hits subquery, sql.go:50-58)."""
-    out = ctx.df.where(compile_query(ctx, d.query))
-    if d.sort:
-        out = out.orderBy(
-            *[
-                ctx.resolve(s.field).desc() if s.order.lower() == "desc" else ctx.resolve(s.field).asc()
-                for s in d.sort
-            ]
-        )
-    size = 10 if d.size is None else d.size  # default LIMIT 10 (sql.go:326-332)
-    return out.limit(size)
 
 
 # --- painless-arithmetic subset evaluator (shared by bucket_script /

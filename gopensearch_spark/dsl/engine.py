@@ -18,7 +18,9 @@ scoring-exempt exactly like ES filter context (reference dsl.go:52-54).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import time
@@ -30,7 +32,14 @@ from pyspark.sql import functions as F
 
 from gopensearch_spark.dsl import model
 from gopensearch_spark.dsl.aggs import compile_aggs
-from gopensearch_spark.dsl.compiler import CompileContext, compile_query, strip_keyword
+from gopensearch_spark.dsl.compiler import (
+    CompileContext,
+    _or_all,
+    compile_query,
+    eval_doc_script,
+    strip_keyword,
+    tuple_after_predicate,
+)
 
 
 @dataclass
@@ -63,6 +72,67 @@ class Template:
     def matches(self, index: str) -> bool:
         pattern = self.index_patterns.replace("*", ".*")
         return re.search(pattern, index) is not None
+
+
+@dataclass
+class _Clause:
+    """A clause registered by the Engine's full-text callback: a leaf
+    (``kind`` and DSL clause ``q``, the request `Engine._leaf_relation`
+    serves) or a score-only clause (``kind`` None), with its score
+    Column. ``scoring`` is False in filter context and once a compound
+    clause has folded the score into its own."""
+
+    kind: str | None
+    q: object
+    score: Column
+    scoring: bool
+    boost: float = 1.0
+
+
+def _sum0(scores: list[Column]) -> Column:
+    """0.0 + each score, left to right."""
+    return functools.reduce(operator.add, scores, F.lit(0.0))
+
+
+_FVF_MODIFIERS = {
+    "": lambda x: x,
+    "none": lambda x: x,
+    "log1p": lambda x: F.log10(x + F.lit(1.0)),  # ES log* are base 10
+    "ln1p": lambda x: F.log(x + F.lit(1.0)),
+    "sqrt": lambda x: F.sqrt(x),
+    "square": lambda x: x * x,
+    # Spark division by zero yields NULL (which would poison the
+    # score); Lucene's float math gives Infinity — reproduce that
+    "reciprocal": lambda x: F.when(x != 0.0, F.lit(1.0) / x).otherwise(F.lit(float("inf"))),
+}
+
+
+def _function_score(fs: model.FunctionScore, q: Column, ctx: CompileContext) -> Column:
+    """function_score: the query score ``q`` combined (boost_mode) with
+    weight x modifier(factor x field value)."""
+    fv = F.coalesce(ctx.resolve(fs.field).cast("double"), F.lit(float(fs.missing)))
+    modifier = _FVF_MODIFIERS.get(fs.modifier)
+    if modifier is None:
+        raise ValueError(f"unsupported field_value_factor modifier {fs.modifier!r}")
+    fn = F.lit(float(fs.weight)) * modifier(F.lit(float(fs.factor)) * fv)
+    combined = {"multiply": q * fn, "sum": q + fn, "replace": fn}.get(fs.boost_mode)
+    if combined is None:
+        raise ValueError(f"unsupported boost_mode {fs.boost_mode!r}")
+    return combined
+
+
+def _dis_max_score(branches: list[tuple[Column, list[Column]]], tie_breaker: float) -> Column:
+    """dis_max over (predicate, member scores) branches: the best
+    matched branch + tie_breaker x the other matched branches. A branch
+    scores the sum of its members, and only where it MATCHED (else
+    null, so greatest() skips it)."""
+    scores = [
+        F.when(pred, _sum0(members)).otherwise(F.lit(None).cast("double"))
+        for pred, members in branches
+    ]
+    best = F.coalesce(F.greatest(*scores) if len(scores) > 1 else scores[0], F.lit(0.0))
+    total = functools.reduce(operator.add, [F.coalesce(s, F.lit(0.0)) for s in scores])
+    return best + F.lit(tie_breaker) * (total - best)
 
 
 class Engine:
@@ -415,10 +485,8 @@ class Engine:
     def _scroll_targets(self, name: str) -> str:
         """Concrete index a stored scroll cursor resolves to (first
         comma segment, alias resolution; never raises)."""
-        if "," in name:
-            name = name.split(",", 1)[0]
         try:
-            return self._resolve_index(name)[0]
+            return self._resolve_request(name, None)[0]
         except Exception:
             return name
 
@@ -705,8 +773,6 @@ class Engine:
             )
         import dataclasses
 
-        from gopensearch_spark.dsl.compiler import eval_doc_script
-
         _, ctx, _ = self._context(resolved)
         expr = eval_doc_script(rhs, ctx.resolve)
         n = hits.count()
@@ -899,133 +965,93 @@ class Engine:
         ]
 
     # --- search ----------------------------------------------------------
-    def _context(self, index: str) -> tuple[IndexSpec, CompileContext, list]:
+    # search_df's stages: _resolve_request -> _parse -> plan clauses
+    # (_context + compile_query) -> _join_and_score -> _aggs -> _page
+    def _context(
+        self, index: str, runtime_mappings: dict[str, str] | None = None,
+    ) -> tuple[IndexSpec, CompileContext, list[_Clause]]:
+        """A compile context whose full-text callback registers each
+        full-text leaf and score clause as a `_Clause`. Runtime fields
+        (Catalyst projections; later ones may use earlier ones) join the
+        relation first, so every compile and compound sub-query sees them."""
         spec = self.indices[index]
-        # (kind, query, mode, scoring, slop, boost)
-        ft_specs: list[tuple[str, str, str, bool, int, float]] = []
+        clauses: list[_Clause] = []
+
+        def leaf(kind: str, q, scoring: bool, boost: float = 1.0) -> Column:
+            # A REAL boolean predicate over a marker column that
+            # _join_and_score left-joins in from the leaf's scoring
+            # relation. Unlike an inner/anti join, a marker predicate
+            # composes under ANY boolean shape — should-OR, must_not,
+            # arbitrary nesting — with ordinary De Morgan semantics.
+            i = len(clauses)
+            score = F.coalesce(F.col(f"__ft_score_{i}"), F.lit(0.0))
+            if boost != 1.0:
+                score = score * F.lit(boost)
+            clauses.append(_Clause(kind, q, score, scoring, boost))
+            return F.col(f"__ft_id_{i}").isNotNull()
+
+        def group(q: model.Query, scoring: bool) -> tuple[Column, list[Column]]:
+            # Compile a compound's sub-query. Its members' scores feed
+            # the compound's own score, so they leave the additive fold.
+            # Only members SCORING at registration count: filter/
+            # must_not-context clauses stay score-exempt, and a nested
+            # compound's members count only through the compound itself.
+            start = len(clauses)
+            pred = compile_query(ctx, q, scoring)
+            members = [c.score for c in clauses[start:] if c.scoring]
+            for c in clauses[start:]:
+                c.scoring = False
+            return pred, members
+
+        def score_only(score: Column) -> None:
+            clauses.append(_Clause(None, None, score, True))
 
         def fulltext(field: str, m, kind: str = "match", scoring: bool = True):
             if kind == "const":
-                # constant_score: no posting-list relation — score is a
-                # literal gated on the (already compiled) inner predicate
+                # constant_score, rank_feature, distance_feature: no
+                # posting relation — the score (a literal boost or a
+                # Catalyst Column) is gated on the compiled predicate
+                pred, boost = m
                 if scoring:
-                    pred, boost = m
-                    # boost is a literal float (constant_score) or a
-                    # Catalyst Column (rank_feature/distance_feature)
                     if not isinstance(boost, Column):
-                        boost = float(boost)
-                    ft_specs.append(("const", (pred, boost), "", True, 0, 1.0))
+                        boost = F.lit(float(boost))
+                    score_only(F.when(pred, boost).otherwise(F.lit(0.0)))
                 return None  # compiler already has the predicate
             if kind == "fnscore":
-                # compile the inner query, remember which clause entries
-                # belong to it (their scores feed the combine; flipped
-                # non-scoring so the global additive fold skips them)
-                from gopensearch_spark.dsl.compiler import compile_query
-
-                start = len(ft_specs)
-                ipred = compile_query(ctx, m.query, scoring)
-                # only entries that were SCORING at registration feed
-                # the combine: filter/must_not-context clauses stay
-                # score-exempt, and a nested compound's constituents
-                # (already flipped by its own handler) count only
-                # through the compound entry itself — no double count
-                idxs = [i for i in range(start, len(ft_specs))
-                        if ft_specs[i][3]]
-                for i in range(start, len(ft_specs)):
-                    k, qq, mo, _sc, sl, bst = ft_specs[i]
-                    ft_specs[i] = (k, qq, mo, False, sl, bst)
+                pred, members = group(m.query, scoring)
                 if scoring:
-                    ft_specs.append(("fnscore", (m, ipred, idxs), "", True, 0, 1.0))
-                return ipred
+                    # a relational inner query scores 1.0 (ES filter-match)
+                    q = _sum0(members) if members else F.lit(1.0)
+                    score_only(F.when(pred, _function_score(m, q, ctx)).otherwise(F.lit(0.0)))
+                return pred
             if kind == "boosting":
-                # positive = scoring branch; negative = filter-context
-                # compile (its clauses flip non-scoring and never
-                # restrict membership — the predicate is positive-only)
-                from gopensearch_spark.dsl.compiler import compile_query
-
-                start = len(ft_specs)
-                ppred = compile_query(ctx, m.positive, scoring)
-                idxs = [i for i in range(start, len(ft_specs))
-                        if ft_specs[i][3]]
-                for i in range(start, len(ft_specs)):
-                    k, qq, mo, _sc, sl, bst = ft_specs[i]
-                    ft_specs[i] = (k, qq, mo, False, sl, bst)
+                # membership is the positive query alone; the negative is
+                # filter context: it demotes, never excludes
+                pred, members = group(m.positive, scoring)
                 npred = compile_query(ctx, m.negative, False)
                 if scoring:
-                    ft_specs.append((
-                        "boosting",
-                        (ppred, npred, idxs, float(m.negative_boost)),
-                        "", True, 0, 1.0,
-                    ))
-                return ppred
+                    q = _sum0(members) if members else F.lit(1.0)
+                    q = F.when(pred, q).otherwise(F.lit(0.0))
+                    nb = F.lit(float(m.negative_boost))
+                    score_only(F.when(npred, q * nb).otherwise(q))
+                return pred
             if kind == "dismax":
-                # compile each branch here so its scoring clauses can be
-                # grouped: branch score = sum of the branch's clause
-                # scores; dis_max = best branch + tie_breaker x rest.
-                # Branch entries flip to scoring=False so the global
-                # additive fold skips them (they still join; their
-                # marker scores feed the dismax entry below).
-                from gopensearch_spark.dsl.compiler import _or_all, compile_query
-
-                branches = []
-                for bq in m.queries:
-                    start = len(ft_specs)
-                    bpred = compile_query(ctx, bq, scoring)
-                    # same scoring-at-registration rule as fnscore:
-                    # filter-context clauses and nested compounds'
-                    # constituents are excluded from the branch fold
-                    idxs = [i for i in range(start, len(ft_specs))
-                            if ft_specs[i][3]]
-                    for i in range(start, len(ft_specs)):
-                        k, qq, mo, _sc, sl, bst = ft_specs[i]
-                        ft_specs[i] = (k, qq, mo, False, sl, bst)
-                    branches.append((bpred, idxs))
+                branches = [group(bq, scoring) for bq in m.queries]
                 if scoring:
-                    ft_specs.append(
-                        ("dismax", (branches, float(m.tie_breaker)), "", True, 0, 1.0)
-                    )
+                    score_only(_dis_max_score(branches, float(m.tie_breaker)))
                 return _or_all([p for p, _ in branches])
             if kind == "multi":
                 # multi_match: every requested field must be indexed
                 indexed = spec.indexed_fields()
-                from gopensearch_spark.dsl.compiler import strip_keyword as _sk
-
-                missing = [f for f, _ in m.fields if _sk(f) not in indexed]
+                missing = [f for f, _ in m.fields if strip_keyword(f) not in indexed]
                 if missing:
                     raise ValueError(
                         f"multi_match fields {missing!r} have no full-text index "
                         f"(indexed: {sorted(indexed)!r})"
                     )
-                mode = "and" if m.operator.upper() == "AND" else "or"
-                i = len(ft_specs)
-                ft_specs.append(("multi", m, mode, scoring, 0, 1.0))
-                return F.col(f"__ft_id_{i}").isNotNull()
+                return leaf("multi", m, scoring)
             if spec.index_dir and field == spec.text_field:
-                if kind == "span_near":
-                    i = len(ft_specs)
-                    ft_specs.append(("span_near", m, "or", scoring, 0, 1.0))
-                    return F.col(f"__ft_id_{i}").isNotNull()
-                if kind == "mlt":
-                    # more_like_this: m is a model.Mlt; like-doc refs
-                    # resolve at relation time (bounded id fetches)
-                    i = len(ft_specs)
-                    ft_specs.append(("mlt", m, "or", scoring, 0, 1.0))
-                    return F.col(f"__ft_id_{i}").isNotNull()
-                if kind in ("fuzzy", "regexp"):
-                    # m is a model.Fuzzy / model.Regexp; expansion is OR
-                    # by construction
-                    i = len(ft_specs)
-                    ft_specs.append((kind, m, "or", scoring, 0, getattr(m, "boost", 1.0)))
-                    return F.col(f"__ft_id_{i}").isNotNull()
-                mode = "and" if m.operator.upper() == "AND" else "or"
-                i = len(ft_specs)
-                ft_specs.append((kind, m.query, mode, scoring, m.slop, getattr(m, "boost", 1.0)))
-                # A REAL boolean predicate over a marker column that
-                # search_df left-joins in from the index's scoring
-                # relation. Unlike an inner/anti join, a marker predicate
-                # composes under ANY boolean shape — should-OR, must_not,
-                # arbitrary nesting — with ordinary De Morgan semantics.
-                return F.col(f"__ft_id_{i}").isNotNull()
+                return leaf(kind, m, scoring, getattr(m, "boost", 1.0))
             return None
 
         ctx = CompileContext(
@@ -1037,38 +1063,197 @@ class Engine:
             id_col=spec.id_col,
             fulltext_predicate=fulltext,
         )
-        return spec, ctx, ft_specs
+        for name, src in (runtime_mappings or {}).items():
+            ctx.df = ctx.df.withColumn(name, eval_doc_script(src, ctx.resolve))
+        return spec, ctx, clauses
+
+    def _leaf_relation(self, index: str, kind: str, q) -> DataFrame:
+        """A full-text leaf (match, phrase, phrase_prefix, prefix, fuzzy,
+        regexp, span_near, mlt, multi) -> its UNORDERED (doc_id, score)
+        relation (k=None: the Engine filters and top-k's itself)."""
+        from gopensearch_spark.search import (
+            bm25_scores,
+            near_match,
+            phrase_match,
+            phrase_prefix_match,
+            prefix_match,
+        )
+
+        spec = self.indices[index]
+        idx = spec.index_dir
+        mode = "and" if getattr(q, "operator", "").upper() == "AND" else "or"
+        if kind == "multi":
+            # per-field BM25 (each field's OWN index stats) scaled by its
+            # boost; a doc matches when ANY field's subquery matches (ES's
+            # bool-should expansion). most_fields SUMS the boosted field
+            # scores; best_fields (ES default) takes the best field plus
+            # tie_breaker x the rest — both one groupBy over the union.
+            if q.type not in ("best_fields", "most_fields"):
+                raise ValueError(
+                    f"unsupported multi_match type {q.type!r} "
+                    "(best_fields | most_fields)"
+                )
+            indexed = spec.indexed_fields()
+            parts = [
+                bm25_scores(self.spark, indexed[strip_keyword(fname)], q.query, mode=mode)
+                .select("doc_id", (F.col("score") * F.lit(float(boost))).alias("score"))
+                for fname, boost in q.fields
+            ]
+            u = functools.reduce(DataFrame.unionByName, parts)
+            if q.type == "most_fields":
+                return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
+            tb = float(q.tie_breaker)
+            return u.groupBy("doc_id").agg(
+                (F.max("score") + F.lit(tb) * (F.sum("score") - F.max("score"))).alias("score")
+            )
+        if kind == "span_near":
+            from gopensearch_spark.search.spans import span_near_match
+
+            return span_near_match(
+                self.spark, idx, q.terms, slop=q.slop, in_order=q.in_order, k=None)
+        if kind == "mlt":
+            from gopensearch_spark.search.mlt import mlt_scores
+
+            like_texts = []
+            for lk in q.like:
+                if isinstance(lk, dict):
+                    # {"_index","_id"} document ref: ONE pushdown id-scan
+                    # per ref (bounded by the like list)
+                    rspec = self._spec(lk.get("_index", index))
+                    rows = (
+                        rspec.df
+                        .where(F.col(rspec.id_col) == lk["_id"])
+                        .select(F.col(rspec.text_field or spec.text_field))
+                        .collect()
+                    )
+                    if not rows:
+                        raise ValueError(f"more_like_this doc ref {lk!r} not found")
+                    like_texts.append(str(rows[0][0]))
+                else:
+                    like_texts.append(str(lk))
+            return mlt_scores(
+                self.spark, idx, like_texts,
+                max_query_terms=q.max_query_terms,
+                min_term_freq=q.min_term_freq,
+                min_doc_freq=q.min_doc_freq,
+                max_doc_freq=q.max_doc_freq,
+                minimum_should_match=q.minimum_should_match,
+            )
+        if kind == "phrase":
+            from gopensearch_spark.analysis import normalize_query_terms
+
+            terms = normalize_query_terms(q.query)
+            if q.slop > 0 and len(terms) >= 2:
+                # ES match_phrase slop -> FTS5 NEAR(terms, slop): unordered
+                # proximity window with trimmed-tf scoring. Documented
+                # divergence from Lucene's ordered edit-move slop — this
+                # engine's full-text semantics are FTS5-pinned throughout.
+                units = [("term", t) for t in terms]
+                return near_match(self.spark, idx, units, n=q.slop, k=None)
+            return phrase_match(self.spark, idx, q.query, k=None)
+        if kind == "phrase_prefix":
+            return phrase_prefix_match(self.spark, idx, q.query, k=None)
+        if kind == "prefix":
+            return prefix_match(self.spark, idx, q.query, k=None)
+        if kind == "fuzzy":
+            from gopensearch_spark.search.fuzzy import fuzzy_match
+
+            return fuzzy_match(
+                self.spark, idx, q.value,
+                fuzziness=q.fuzziness, prefix_length=q.prefix_length,
+                max_expansions=q.max_expansions, k=None,
+            )
+        if kind == "regexp":
+            from gopensearch_spark.search.fuzzy import regexp_match
+
+            return regexp_match(
+                self.spark, idx, q.value,
+                case_insensitive=q.case_insensitive,
+                max_expansions=q.max_expansions, k=None,
+            )
+        return bm25_scores(self.spark, idx, q.query, mode=mode)
+
+    def _resolve_request(self, index: str, body: str | dict) -> tuple[str, str | dict]:
+        """Concrete index and body of a request. `GET /a,b,c/_search`
+        degrades to the FIRST index, exactly like the reference's route
+        capture (server.go:38: the mux binds {index} to the first comma
+        segment only); an alias resolves to its target, and a filtered
+        alias adds its filter in filter context."""
+        index, alias_filter = self._resolve_index(index.split(",", 1)[0])
+        if alias_filter is not None:
+            body = self._alias_filtered_body(body, alias_filter)
+        return index, body
+
+    def _parse(self, index: str, body: str | dict) -> model.Dsl:
+        """Parse a body and fill its `terms` lookups."""
+        d = model.parse_dsl(body)
+        self._resolve_terms_lookups(index, d.query)
+        if d.rescore is not None:
+            self._resolve_terms_lookups(index, d.rescore.query)
+        if d.knn is not None and d.query is not None:
+            raise ValueError(
+                "knn cannot be combined with a query section; fuse the "
+                "two rankings externally (datapipe.rrf_fuse) or move the "
+                "restriction into knn.filter"
+            )
+        return d
 
     def _pure_match(self, d: model.Dsl, spec: IndexSpec) -> model.Match | None:
-        """The query is EXACTLY one `match` on the indexed text field with
-        no other clause, agg, or sort — the shape ``bm25_match`` serves
-        as a bare top-k from the flat postings on the JVM, without the
+        """The request is EXACTLY one `match` on the indexed text field:
+        no other clause, agg, sort, cursor, collapse, rescore, script,
+        runtime field or min_score — the shape ``bm25_match`` serves as a
+        bare top-k from the flat postings on the JVM, without the
         general path's relation."""
         q = d.query
-        if q is None or d.aggs or d.sort or not spec.index_dir:
-            return None
-        if d.search_after is not None:  # needs the general path's checks
-            return None
         if (
-            len(q.match) == 1
-            and not (q.term or q.terms or q.wildcard or q.match_phrase or q.prefix)
-            and not (q.match_phrase_prefix or q.fuzzy or q.regexp)
-            and not (q.range or q.query_string or q.bool_ or q.match_all)
-            and q.exists is None
-            and q.ids is None
-            and q.multi_match is None
-            and q.constant_score is None
-            and q.dis_max is None
-            and q.function_score is None
+            q is None or len(q.match) != 1 or q != model.Query(match=q.match)
+            or not spec.index_dir or d.aggs or d.sort or d.search_after is not None
+            or d.collapse or d.rescore or d.script_fields or d.runtime_mappings
+            or d.min_score is not None
         ):
-            ((field, m),) = q.match.items()
-            # match + fuzziness routes through the expansion path; a
-            # boosted match needs the general path's score
-            # multiply (ranking would be identical, reported _score not)
-            if (strip_keyword(field) == spec.text_field and not m.fuzziness
-                    and m.boost == 1.0):
-                return m
+            return None
+        ((field, m),) = q.match.items()
+        # match + fuzziness routes through the expansion path; a boosted
+        # match needs the general path's score multiply (ranking would
+        # be identical, reported _score not)
+        if strip_keyword(field) == spec.text_field and not m.fuzziness and m.boost == 1.0:
+            return m
         return None
+
+    def _match_top_k(self, spec: IndexSpec, d: model.Dsl, m: model.Match) -> DataFrame:
+        """Serve a pure `match` as a bare top-k straight from the index:
+        only top-k ids reach the doc join (the general path materializes
+        the whole scoring relation, because filters need it)."""
+        from gopensearch_spark.search.bm25 import bm25_match
+
+        mode = "and" if m.operator.upper() == "AND" else "or"
+        track = d.track_total_hits if d.track_total_hits is not None else self.track_total_hits
+        if track:
+            # exact total needs the full (unordered) match relation — a
+            # count-only aggregate, no corpus-wide sort; the hit page is
+            # still the bare top-k below
+            from gopensearch_spark.search import bm25_scores
+
+            self._last_prelimit = bm25_scores(self.spark, spec.index_dir, m.query, mode=mode)
+        size = 10 if d.size is None else d.size
+        top = bm25_match(self.spark, spec.index_dir, m.query, k=size + (d.from_ or 0), mode=mode)
+        return self._from_size(self._hits_join(spec, top), d)
+
+    @staticmethod
+    def _hits_join(spec: IndexSpec, scores: DataFrame) -> DataFrame:
+        """Documents joined to a (doc_id, score) relation, best first."""
+        scores = scores.withColumnRenamed("doc_id", "__ft_doc_id")
+        return (
+            spec.df.join(scores, spec.df[spec.id_col] == F.col("__ft_doc_id"))
+            .drop("__ft_doc_id")
+            .orderBy(F.desc("score"), F.asc(spec.id_col))
+        )
+
+    @staticmethod
+    def _from_size(hits: DataFrame, d: model.Dsl) -> DataFrame:
+        if d.from_:
+            hits = hits.offset(d.from_)
+        return hits.limit(10 if d.size is None else d.size)
 
     def _knn_search(
         self, index: str, d: model.Dsl
@@ -1088,11 +1273,11 @@ class Engine:
         from gopensearch_spark.datapipe.similarity import _dot, _norm
 
         kn = d.knn
-        spec, ctx, ft_specs = self._context(index)
+        spec, ctx, clauses = self._context(index)
         base = ctx.df
         if kn.filter is not None:
             fpred = compile_query(ctx, kn.filter, scoring=False)
-            if ft_specs:
+            if clauses:
                 raise ValueError(
                     "knn.filter must be relational (term/range/bool/...); "
                     "full-text clauses are not supported as knn pre-filters"
@@ -1107,392 +1292,121 @@ class Engine:
             (F.lit(1.0) + cos) / F.lit(2.0) * F.lit(float(kn.boost)),
         )
         top = scored.orderBy(F.desc("score"), F.asc(spec.id_col)).limit(kn.k)
-        aggs_out = {}
-        if d.aggs:
-            # ES computes aggs over the k retrieved knn hits (a bounded
-            # relation), not the whole candidate set
-            top = top.cache()
-            self._last_cached = top
-            agg_ctx = CompileContext(
-                df=top, json_col=ctx.json_col,
-                date_fields=ctx.date_fields, id_col=ctx.id_col,
-            )
-            aggs_out = compile_aggs(agg_ctx, top, d.aggs,
-                                    background=spec.df, index_spec=spec)
+        # ES computes aggs over the k retrieved knn hits (a bounded
+        # relation), not the whole candidate set
+        top, aggs_out = self._aggs(spec, ctx, top, d, cache=True)
         # hits.total under track_total_hits counts the knn result set
         # (<= k), the ES contract for a knn-only search
         self._last_prelimit = top
-        size = 10 if d.size is None else d.size
-        hits = top
-        if d.from_:
-            hits = hits.offset(d.from_)
-        return hits.limit(size), aggs_out, d
+        return self._from_size(top, d), aggs_out, d
 
     def search_df(self, index: str, body: str | dict) -> tuple[DataFrame, dict, model.Dsl]:
-        """Compile to DataFrames without collecting: (hits, {label: (kind, df)})."""
-        if "," in index:
-            # `GET /a,b,c/_search` degrades to the FIRST index, exactly
-            # like the reference's route capture (server.go:38: the mux
-            # pattern binds {index} to the first comma segment only)
-            index = index.split(",", 1)[0]
-        index, _alias_filter = self._resolve_index(index)
-        if _alias_filter is not None:
-            body = self._alias_filtered_body(body, _alias_filter)
+        """Compile one request to DataFrames without collecting:
+        (hits, {label: (kind, df)}, parsed request). A `knn` section and
+        a pure `match` take their own top-k and share the later stages
+        (`_aggs`, `_from_size`)."""
+        from gopensearch_spark.search.phrase import query_scope
+
+        index, body = self._resolve_request(index, body)
         # release the previous search's agg cache FIRST — every exit path
-        # (including the pure-match fast path below) must not leak it
+        # (the knn and pure-match paths included) must not leak it
         if self._last_cached is not None:
             self._last_cached.unpersist()
             self._last_cached = None
         self._last_prelimit = None
-        d = model.parse_dsl(body)
+        d = self._parse(index, body)
         spec = self.indices[index]
-        self._resolve_terms_lookups(index, d.query)
-        if d.rescore is not None:
-            self._resolve_terms_lookups(index, d.rescore.query)
-        track = d.track_total_hits if d.track_total_hits is not None else self.track_total_hits
-
         if d.knn is not None:
-            if d.query is not None:
-                raise ValueError(
-                    "knn cannot be combined with a query section; fuse the "
-                    "two rankings externally (datapipe.rrf_fuse) or move the "
-                    "restriction into knn.filter"
-                )
             return self._knn_search(index, d)
-
-        needs_general = bool(
-            d.collapse or d.rescore or d.script_fields or d.runtime_mappings
-            or d.min_score is not None
-        )
-        m = None if needs_general else self._pure_match(d, spec)
+        m = self._pure_match(d, spec)
         if m is not None:
-            # serve a bare top-k straight from the index: only top-k ids
-            # reach the doc join (the general path below must
-            # materialize the whole scoring relation, because filters
-            # need it).
-            from gopensearch_spark.search.bm25 import bm25_match
+            return self._match_top_k(spec, d, m), {}, d
+        _, ctx, clauses = self._context(index, d.runtime_mappings)
+        pred = compile_query(ctx, d.query)  # registers the clauses
+        scored = bool(clauses)
+        # One query_scope spans every relation of the request, rescore's
+        # included, so a later phrase/prefix relation doesn't release an
+        # earlier one mid-query (they are released on the NEXT query).
+        with query_scope():
+            filtered = self._join_and_score(index, ctx, clauses, pred, d)
+            # Aggs see the filtered relation (the reference re-scans per
+            # agg, sql.go:39-58). It is cached ONLY when it embeds
+            # full-text scoring (posting scans and aggregates): a
+            # pure-relational filter recomputes as a column-pruned
+            # parquet scan per consumer, which is CHEAPER than caching
+            # every column (measured: a single terms agg over a 6-column
+            # table paid more for the cache write of the 5 unused
+            # columns than for the agg).
+            filtered, aggs_out = self._aggs(spec, ctx, filtered, d, cache=scored)
+            self._last_prelimit = filtered  # pre-sort/offset/limit relation
+            hits = self._page(index, ctx, filtered, d, scored)
+        return hits, aggs_out, d
 
-            size = 10 if d.size is None else d.size
-            mode = "and" if m.operator.upper() == "AND" else "or"
-            if track:
-                # exact total needs the full (unordered) match relation —
-                # a count-only aggregate, no corpus-wide sort; the hit
-                # page is still the bare top-k below
-                from gopensearch_spark.search import bm25_scores
-
-                self._last_prelimit = bm25_scores(
-                    self.spark, spec.index_dir, m.query, mode=mode
-                )
-            top = bm25_match(
-                self.spark, spec.index_dir, m.query,
-                k=size + (d.from_ or 0), mode=mode,
-            ).withColumnRenamed("doc_id", "__ft_doc_id")
-            hits = (
-                spec.df.join(top, spec.df[spec.id_col] == F.col("__ft_doc_id"))
-                .drop("__ft_doc_id")
-                .orderBy(F.desc("score"), F.asc(spec.id_col))
-            )
-            if d.from_:
-                hits = hits.offset(d.from_)
-            return hits.limit(size), {}, d
-
-        spec, ctx, ft_specs = self._context(index)
-        if d.runtime_mappings:
-            # runtime fields join the relation BEFORE query compile, so
-            # the query/sort/agg compilers resolve them like stored
-            # columns; each script is a Catalyst projection (row-local,
-            # whole-stage codegen — never a Python UDF), and later
-            # runtime fields may reference earlier ones
-            import dataclasses
-
-            from gopensearch_spark.dsl.compiler import eval_doc_script
-
-            for name, src in d.runtime_mappings.items():
-                ctx = dataclasses.replace(
-                    ctx, df=ctx.df.withColumn(name, eval_doc_script(src, ctx.resolve))
-                )
-        pred = compile_query(ctx, d.query)  # populates ft_specs via callback
-
-        scored = ft_specs != []
+    def _join_and_score(
+        self, index: str, ctx: CompileContext, clauses: list[_Clause],
+        pred: Column, d: model.Dsl,
+    ) -> DataFrame:
+        """Left-join each leaf's (doc_id, score) relation as marker
+        columns and keep the rows the compiled predicate accepts, so a
+        leaf can sit under must/should/must_not alike. Catalyst's
+        EliminateOuterJoin turns a left join into an inner one whenever
+        the predicate is null-rejecting (the plain must-match case).
+        The score is the FTS5/ES-style sum over SCORING-context clauses:
+        unmatched should branches add 0; filter/must_not clauses are
+        score-exempt (ES filter context)."""
+        id_col = self.indices[index].id_col
         base = ctx.df
-        if ft_specs:
-            from gopensearch_spark.search import (
-                bm25_scores,
-                near_match,
-                phrase_match,
-                phrase_prefix_match,
-                prefix_match,
-            )
-
-            def relation(kind: str, q, mode: str, slop: int) -> DataFrame:
-                # k=None returns the UNORDERED scoring relation — no
-                # corpus-wide sort; the Engine filters and top-k's itself.
-                if kind == "multi":
-                    # per-field BM25 (each field's OWN index stats)
-                    # scaled by its boost; a doc matches when ANY
-                    # field's subquery matches (ES's bool-should
-                    # expansion). Combination by type: most_fields SUMS
-                    # the boosted field scores; best_fields (ES default)
-                    # takes the best field plus tie_breaker x the rest —
-                    # both one groupBy over the unioned relations.
-                    if q.type not in ("best_fields", "most_fields"):
-                        raise ValueError(
-                            f"unsupported multi_match type {q.type!r} "
-                            "(best_fields | most_fields)"
-                        )
-                    indexed = spec.indexed_fields()
-                    parts = []
-                    for fname, boost in q.fields:
-                        idx = indexed[strip_keyword(fname)]
-                        r = bm25_scores(self.spark, idx, q.query, mode=mode)
-                        parts.append(r.select(
-                            "doc_id", (F.col("score") * F.lit(float(boost))).alias("score")
-                        ))
-                    u = parts[0]
-                    for p in parts[1:]:
-                        u = u.unionByName(p)
-                    if q.type == "most_fields":
-                        return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
-                    tb = float(q.tie_breaker)
-                    return u.groupBy("doc_id").agg(
-                        (F.max("score")
-                         + F.lit(tb) * (F.sum("score") - F.max("score"))
-                         ).alias("score")
-                    )
-                if kind == "span_near":
-                    from gopensearch_spark.search.spans import span_near_match
-
-                    return span_near_match(
-                        self.spark, spec.index_dir, q.terms,
-                        slop=q.slop, in_order=q.in_order, k=None)
-                if kind == "mlt":
-                    from gopensearch_spark.search.mlt import mlt_scores
-
-                    like_texts = []
-                    for lk in q.like:
-                        if isinstance(lk, dict):
-                            # {"_index","_id"} document ref: ONE pushdown
-                            # id-scan per ref (bounded by the like list)
-                            ridx = lk.get("_index", index)
-                            rspec = self._spec(ridx)
-                            rows = (
-                                rspec.df
-                                .where(F.col(rspec.id_col) == lk["_id"])
-                                .select(F.col(rspec.text_field or spec.text_field))
-                                .collect()
-                            )
-                            if not rows:
-                                raise ValueError(
-                                    f"more_like_this doc ref {lk!r} not found")
-                            like_texts.append(str(rows[0][0]))
-                        else:
-                            like_texts.append(str(lk))
-                    return mlt_scores(
-                        self.spark, spec.index_dir, like_texts,
-                        max_query_terms=q.max_query_terms,
-                        min_term_freq=q.min_term_freq,
-                        min_doc_freq=q.min_doc_freq,
-                        max_doc_freq=q.max_doc_freq,
-                        minimum_should_match=q.minimum_should_match,
-                    )
-                if kind == "phrase":
-                    from gopensearch_spark.analysis import normalize_query_terms
-
-                    terms = normalize_query_terms(q)
-                    if slop > 0 and len(terms) >= 2:
-                        # ES match_phrase slop -> FTS5 NEAR(terms, slop):
-                        # unordered proximity window with trimmed-tf
-                        # scoring. Documented divergence from Lucene's
-                        # ordered edit-move slop — this engine's
-                        # full-text semantics are FTS5-pinned throughout.
-                        units = [("term", t) for t in terms]
-                        return near_match(self.spark, spec.index_dir, units, n=slop, k=None)
-                    return phrase_match(self.spark, spec.index_dir, q, k=None)
-                if kind == "phrase_prefix":
-                    return phrase_prefix_match(self.spark, spec.index_dir, q, k=None)
-                if kind == "prefix":
-                    return prefix_match(self.spark, spec.index_dir, q, k=None)
-                if kind == "fuzzy":
-                    from gopensearch_spark.search.fuzzy import fuzzy_match
-
-                    return fuzzy_match(
-                        self.spark, spec.index_dir, q.value,
-                        fuzziness=q.fuzziness, prefix_length=q.prefix_length,
-                        max_expansions=q.max_expansions, k=None,
-                    )
-                if kind == "regexp":
-                    from gopensearch_spark.search.fuzzy import regexp_match
-
-                    return regexp_match(
-                        self.spark, spec.index_dir, q.value,
-                        case_insensitive=q.case_insensitive,
-                        max_expansions=q.max_expansions, k=None,
-                    )
-                return bm25_scores(self.spark, spec.index_dir, q, mode=mode)
-
-            # Left-join each clause's (doc_id, score) relation as marker
-            # columns; the compiled predicate decides membership, so a
-            # clause can sit under must/should/must_not alike. Catalyst's
-            # EliminateOuterJoin turns the left join into an inner one
-            # whenever the predicate is null-rejecting (the plain
-            # must-match case), so the common path costs the same as the
-            # old hand-written inner join. One query_scope spans all
-            # clauses so a later phrase/prefix relation doesn't release
-            # an earlier one mid-query (released on the NEXT query).
-            from gopensearch_spark.search.phrase import query_scope
-
-            with query_scope():
-                for i, (kind, q, mode, _scoring, slop, _boost) in enumerate(ft_specs):
-                    if kind in ("const", "dismax", "fnscore", "boosting"):
-                        continue  # no posting relation — score-only entries
-                    rel = relation(kind, q, mode, slop).select(
-                        F.col("doc_id").alias(f"__ft_id_{i}"),
-                        F.col("score").alias(f"__ft_score_{i}"),
-                    )
-                    base = base.join(rel, base[spec.id_col] == rel[f"__ft_id_{i}"], "left")
+        for i, c in enumerate(clauses):
+            if c.kind is not None:
+                rel = self._leaf_relation(index, c.kind, c.q).select(
+                    F.col("doc_id").alias(f"__ft_id_{i}"),
+                    F.col("score").alias(f"__ft_score_{i}"),
+                )
+                base = base.join(rel, base[id_col] == rel[f"__ft_id_{i}"], "left")
         filtered = base.where(pred)
-        if ft_specs:
-            # FTS5/ES-style additive score over SCORING-context clauses
-            # only: unmatched should branches contribute 0; filter/
-            # must_not clauses are score-exempt (ES filter context).
-            def spec_score(i: int, sp) -> Column:
-                kind = sp[0]
-                if kind == "const":
-                    cpred, boost = sp[1]
-                    bexpr = boost if isinstance(boost, Column) else F.lit(boost)
-                    return F.when(cpred, bexpr).otherwise(F.lit(0.0))
-                if kind == "fnscore":
-                    fs, ipred, idxs = sp[1]
-                    if idxs:
-                        q = F.lit(0.0)
-                        for j in idxs:
-                            q = q + spec_score(j, ft_specs[j])
-                    else:
-                        # relational inner query: ES filter-match
-                        # convention scores it 1.0
-                        q = F.lit(1.0)
-                    fv = F.coalesce(
-                        ctx.resolve(fs.field).cast("double"),
-                        F.lit(float(fs.missing)),
-                    )
-                    x = F.lit(float(fs.factor)) * fv
-                    mod = fs.modifier
-                    if mod in ("", "none"):
-                        val = x
-                    elif mod == "log1p":  # ES log* are base 10
-                        val = F.log10(x + F.lit(1.0))
-                    elif mod == "ln1p":
-                        val = F.log(x + F.lit(1.0))
-                    elif mod == "sqrt":
-                        val = F.sqrt(x)
-                    elif mod == "square":
-                        val = x * x
-                    elif mod == "reciprocal":
-                        # Spark division by zero yields NULL (which
-                        # would poison the score); Lucene's float math
-                        # gives Infinity — reproduce that
-                        val = F.when(
-                            x != 0.0, F.lit(1.0) / x
-                        ).otherwise(F.lit(float("inf")))
-                    else:
-                        raise ValueError(
-                            f"unsupported field_value_factor modifier {mod!r}"
-                        )
-                    fn = F.lit(float(fs.weight)) * val
-                    if fs.boost_mode == "multiply":
-                        combined = q * fn
-                    elif fs.boost_mode == "sum":
-                        combined = q + fn
-                    elif fs.boost_mode == "replace":
-                        combined = fn
-                    else:
-                        raise ValueError(
-                            f"unsupported boost_mode {fs.boost_mode!r}"
-                        )
-                    return F.when(ipred, combined).otherwise(F.lit(0.0))
-                if kind == "boosting":
-                    ppred, npred, idxs, nb = sp[1]
-                    if idxs:
-                        qsc = F.lit(0.0)
-                        for j in idxs:
-                            qsc = qsc + spec_score(j, ft_specs[j])
-                    else:
-                        # purely relational positive: ES filter-match
-                        # convention scores it 1.0
-                        qsc = F.lit(1.0)
-                    qsc = F.when(ppred, qsc).otherwise(F.lit(0.0))
-                    # negative demotes, never excludes
-                    return F.when(npred, qsc * F.lit(nb)).otherwise(qsc)
-                if kind == "dismax":
-                    branches, tb = sp[1]
-                    # branch score only where the branch MATCHED (else
-                    # null, so greatest() skips it); dis_max = best
-                    # branch + tie_breaker x the other matched branches
-                    bexprs = []
-                    for bpred, idxs in branches:
-                        s = F.lit(0.0)
-                        for j in idxs:
-                            s = s + spec_score(j, ft_specs[j])
-                        bexprs.append(
-                            F.when(bpred, s).otherwise(F.lit(None).cast("double"))
-                        )
-                    mx = F.greatest(*bexprs) if len(bexprs) > 1 else bexprs[0]
-                    total = None
-                    for be in bexprs:
-                        c = F.coalesce(be, F.lit(0.0))
-                        total = c if total is None else total + c
-                    mx0 = F.coalesce(mx, F.lit(0.0))
-                    return mx0 + F.lit(tb) * (total - mx0)
-                base = F.coalesce(F.col(f"__ft_score_{i}"), F.lit(0.0))
-                boost = float(sp[5])
-                return base if boost == 1.0 else base * F.lit(boost)
+        if not clauses:
+            return filtered
+        scores = [c.score for c in clauses if c.scoring]
+        # no scoring clause: a filter-only full-text query scores 0
+        score = functools.reduce(operator.add, scores) if scores else F.lit(0.0)
+        filtered = filtered.withColumn("score", score).drop(
+            *[f"__ft_{x}_{i}" for x in ("id", "score") for i in range(len(clauses))]
+        )
+        if d.min_score is not None:
+            # ES min_score: filters the hit set BEFORE aggregations
+            filtered = filtered.where(F.col("score") >= F.lit(float(d.min_score)))
+        return filtered
 
-            score_expr = None
-            for i, sp in enumerate(ft_specs):
-                if not sp[3]:  # scoring flag
-                    continue
-                c = spec_score(i, sp)
-                score_expr = c if score_expr is None else score_expr + c
-            if score_expr is None:
-                score_expr = F.lit(0.0)  # filter-only full-text query
-            filtered = filtered.withColumn("score", score_expr).drop(
-                *[f"__ft_id_{i}" for i in range(len(ft_specs))],
-                *[f"__ft_score_{i}" for i in range(len(ft_specs))],
-            )
-            if d.min_score is not None:
-                # ES min_score: filters the hit set BEFORE aggregations
-                filtered = filtered.where(F.col("score") >= F.lit(float(d.min_score)))
-
-        # aggs see the filtered relation (reference re-scans per agg,
-        # sql.go:39-58). Cache it ONLY when recomputing is expensive —
-        # i.e. the relation embeds full-text scoring (posting scans and
-        # aggregates). A pure-relational filter recomputes as a
-        # column-pruned parquet scan per consumer, which is CHEAPER than
-        # materializing every column of the relation into the cache
-        # (measured: a single terms agg over a 6-column table paid more
-        # for the cache write of the 5 unused columns than for the agg).
-        aggs_out = {}
-        if d.aggs:
-            if scored:
-                filtered = filtered.cache()
-                self._last_cached = filtered
-            agg_ctx = ctx if not scored else CompileContext(
-                df=filtered, json_col=ctx.json_col, date_fields=ctx.date_fields,
+    def _aggs(
+        self, spec: IndexSpec, ctx: CompileContext, rel: DataFrame,
+        d: model.Dsl, cache: bool,
+    ) -> tuple[DataFrame, dict]:
+        """The request's aggs over ``rel``, cached first with ``cache``
+        (released once collected, or by the next search)."""
+        if not d.aggs:
+            return rel, {}
+        if cache:
+            rel = rel.cache()
+            self._last_cached = rel
+            ctx = CompileContext(
+                df=rel, json_col=ctx.json_col, date_fields=ctx.date_fields,
                 id_col=ctx.id_col,
             )
-            aggs_out = compile_aggs(agg_ctx, filtered, d.aggs,
-                                    background=spec.df, index_spec=spec)
+        return rel, compile_aggs(ctx, rel, d.aggs, background=spec.df, index_spec=spec)
 
-        self._last_prelimit = filtered  # pre-sort/offset/limit relation
-        hits = filtered
+    def _page(
+        self, index: str, ctx: CompileContext, hits: DataFrame, d: model.Dsl,
+        scored: bool,
+    ) -> DataFrame:
+        """search_after, collapse, rescore or sort, from/size, then the
+        script_fields of the page."""
+        id_col = self.indices[index].id_col
         if d.search_after is not None:
             # cursor pagination: a strictly-after predicate on the sort
             # tuple — the rows of every previous page are FILTERED OUT
             # before the top-k (from/size re-sorts and discards
             # offset+size rows per page; at page depth 10^6 that is the
             # difference between a pushdown range scan and a full sort)
-            from gopensearch_spark.dsl.compiler import tuple_after_predicate
-
             if not d.sort:
                 raise ValueError("search_after requires an explicit sort")
             if d.from_:
@@ -1506,7 +1420,6 @@ class Engine:
                 (self._sort_col(ctx, s.field, scored), s.order, v)
                 for s, v in zip(d.sort, d.search_after)
             ]))
-        size = 10 if d.size is None else d.size
         if d.collapse is not None:
             # ES field collapsing: one best hit per collapse-key value,
             # best under the request's order (with an id tiebreak so
@@ -1514,13 +1427,8 @@ class Engine:
             # key; per-group state is one row.
             from pyspark.sql.window import Window
 
-            corder = [
-                self._sort_col(ctx, s.field, scored).desc()
-                if s.order.lower() == "desc"
-                else self._sort_col(ctx, s.field, scored).asc()
-                for s in d.sort
-            ] or ([F.desc("score")] if scored else [])
-            corder.append(F.asc(F.col(spec.id_col)))
+            corder = self._sort_cols(ctx, d, scored) or ([F.desc("score")] if scored else [])
+            corder.append(F.asc(F.col(id_col)))
             w = Window.partitionBy(ctx.resolve(d.collapse.field)).orderBy(*corder)
             hits = (
                 hits.withColumn("__collapse_rn", F.row_number().over(w))
@@ -1528,81 +1436,92 @@ class Engine:
                 .drop("__collapse_rn")
             )
         if d.rescore is not None:
-            rs = d.rescore
-            if d.sort:
-                raise ValueError(
-                    "rescore cannot be combined with an explicit sort (ES contract)")
-            if d.search_after is not None or d.collapse is not None:
-                raise ValueError(
-                    "rescore cannot be combined with search_after or collapse")
-            if not scored:
-                raise ValueError("rescore requires a scoring primary query")
-            if size + (d.from_ or 0) > rs.window_size:
-                raise ValueError(
-                    f"rescore window_size {rs.window_size} must cover "
-                    f"from+size {size + (d.from_ or 0)}")
-            # bound FIRST: only the top-window hits are rescored. The
-            # secondary scoring relation is semi-joined against the
-            # broadcast window ids before the outer join, so its posting
-            # lists never flow past the bounded candidate set.
-            window = hits.orderBy(F.desc("score"), F.asc(spec.id_col)) \
-                         .limit(rs.window_size)
-            sec = self._scoring_relation(spec, rs.query).select(
-                F.col("doc_id").alias("__rs_id"),
-                F.col("score").alias("__rs_score"),
-            )
-            sec = sec.join(
-                F.broadcast(window.select(F.col(spec.id_col).alias("__rs_id"))),
-                "__rs_id",
-            )
-            j = window.join(
-                F.broadcast(sec), window[spec.id_col] == sec["__rs_id"], "left"
-            ).drop("__rs_id")
-            orig = F.col("score") * F.lit(float(rs.query_weight))
-            secs = F.col("__rs_score") * F.lit(float(rs.rescore_query_weight))
-            mode = rs.score_mode
-            if mode == "total":
-                comb = orig + secs
-            elif mode == "multiply":
-                comb = orig * secs
-            elif mode == "avg":
-                comb = (orig + secs) / 2
-            elif mode == "max":
-                comb = F.greatest(orig, secs)
-            elif mode == "min":
-                comb = F.least(orig, secs)
-            else:
-                raise ValueError(f"unsupported rescore score_mode {mode!r}")
-            # ES: a window doc the rescore query does NOT match keeps
-            # query_weight x its original score
-            comb = F.when(F.col("__rs_score").isNotNull(), comb).otherwise(orig)
-            hits = (
-                j.withColumn("score", comb)
-                .drop("__rs_score")
-                .orderBy(F.desc("score"), F.asc(spec.id_col))
-            )
+            hits = self._rescore(index, hits, d, scored)
         elif d.sort:
-            hits = hits.orderBy(
-                *[
-                    self._sort_col(ctx, s.field, scored).desc()
-                    if s.order.lower() == "desc"
-                    else self._sort_col(ctx, s.field, scored).asc()
-                    for s in d.sort
-                ]
-            )
+            hits = hits.orderBy(*self._sort_cols(ctx, d, scored))
         elif scored:
-            hits = hits.orderBy(F.desc("score"), F.asc(spec.id_col))
-        if d.from_:
-            hits = hits.offset(d.from_)
-        hits = hits.limit(size)
-        if d.script_fields:
-            # fetch-phase computed columns: Catalyst projections over
-            # the ALREADY-limited page (≤ size rows)
-            from gopensearch_spark.dsl.compiler import eval_doc_script
+            hits = hits.orderBy(F.desc("score"), F.asc(id_col))
+        hits = self._from_size(hits, d)
+        # fetch-phase computed columns: Catalyst projections over the
+        # ALREADY-limited page (≤ size rows)
+        for name, src in d.script_fields.items():
+            hits = hits.withColumn(name, eval_doc_script(src, ctx.resolve))
+        return hits
 
-            for name, src in d.script_fields.items():
-                hits = hits.withColumn(name, eval_doc_script(src, ctx.resolve))
-        return hits, aggs_out, d
+    def _rescore(self, index: str, hits: DataFrame, d: model.Dsl, scored: bool) -> DataFrame:
+        """ES rescore: the top `window_size` hits re-ranked by
+        query_weight x their score combined (score_mode) with
+        rescore_query_weight x the rescore query's score."""
+        rs = d.rescore
+        id_col = self.indices[index].id_col
+        if d.sort:
+            raise ValueError(
+                "rescore cannot be combined with an explicit sort (ES contract)")
+        if d.search_after is not None or d.collapse is not None:
+            raise ValueError(
+                "rescore cannot be combined with search_after or collapse")
+        if not scored:
+            raise ValueError("rescore requires a scoring primary query")
+        size = 10 if d.size is None else d.size
+        if size + (d.from_ or 0) > rs.window_size:
+            raise ValueError(
+                f"rescore window_size {rs.window_size} must cover "
+                f"from+size {size + (d.from_ or 0)}")
+        # bound FIRST: only the top-window hits are rescored. The
+        # secondary scoring relation is semi-joined against the
+        # broadcast window ids before the outer join, so its posting
+        # lists never flow past the bounded candidate set.
+        window = hits.orderBy(F.desc("score"), F.asc(id_col)).limit(rs.window_size)
+        sec = self._rescore_relation(index, rs.query).select(
+            F.col("doc_id").alias("__rs_id"),
+            F.col("score").alias("__rs_score"),
+        )
+        sec = sec.join(
+            F.broadcast(window.select(F.col(id_col).alias("__rs_id"))), "__rs_id")
+        j = window.join(
+            F.broadcast(sec), window[id_col] == sec["__rs_id"], "left"
+        ).drop("__rs_id")
+        orig = F.col("score") * F.lit(float(rs.query_weight))
+        secs = F.col("__rs_score") * F.lit(float(rs.rescore_query_weight))
+        comb = {"total": orig + secs, "multiply": orig * secs, "avg": (orig + secs) / 2,
+                "max": F.greatest(orig, secs), "min": F.least(orig, secs)}.get(rs.score_mode)
+        if comb is None:
+            raise ValueError(f"unsupported rescore score_mode {rs.score_mode!r}")
+        # ES: a window doc the rescore query does NOT match keeps
+        # query_weight x its original score
+        comb = F.when(F.col("__rs_score").isNotNull(), comb).otherwise(orig)
+        return (
+            j.withColumn("score", comb)
+            .drop("__rs_score")
+            .orderBy(F.desc("score"), F.asc(id_col))
+        )
+
+    def _rescore_relation(self, index: str, q: model.Query) -> DataFrame:
+        """(doc_id, score) relation of a rescore query, scored as the
+        same clause in a primary query: a single `match` or
+        `match_phrase` on the indexed text field, the classic
+        cheap-match-then-phrase two-phase ranking."""
+        spec = self.indices[index]
+        if len(q.match) == 1 and not q.match_phrase:
+            what, leaf = "match", model.Query(match=q.match)
+        elif len(q.match_phrase) == 1 and not q.match:
+            what, leaf = "match_phrase", model.Query(match_phrase=q.match_phrase)
+        else:
+            raise ValueError(
+                "rescore supports a single match or match_phrase on the "
+                "indexed text field")
+        (f,) = leaf.match or leaf.match_phrase
+        if not spec.index_dir or strip_keyword(f) != spec.text_field:
+            raise ValueError(
+                f"rescore {what} field {f!r} is not the indexed text "
+                f"field {spec.text_field!r}")
+        _, ctx, clauses = self._context(index)
+        compile_query(ctx, leaf)
+        (c,) = clauses
+        rel = self._leaf_relation(index, c.kind, c.q)
+        if c.boost == 1.0:
+            return rel
+        return rel.withColumn("score", F.col("score") * F.lit(c.boost))
 
     def _resolve_terms_lookups(self, index: str, q: model.Query | None) -> None:
         """ES `terms` LOOKUP ({"index","id","path"}): fill the clause's
@@ -1649,34 +1568,6 @@ class Engine:
             for sub in q.dis_max.queries:
                 self._resolve_terms_lookups(index, sub)
 
-    def _scoring_relation(self, spec: IndexSpec, q: model.Query) -> DataFrame:
-        """Unordered (doc_id, score) relation for a rescore query. The
-        supported secondary shapes are a single `match` or
-        `match_phrase` on the indexed text field — the classic
-        cheap-match-then-phrase two-phase ranking (Lucene's
-        QueryRescorer reruns an arbitrary query; these are the shapes
-        with a posting-backed scoring relation here)."""
-        from gopensearch_spark.search import bm25_scores, phrase_match
-
-        if q.match and len(q.match) == 1 and not q.match_phrase:
-            (f, m), = q.match.items()
-            if strip_keyword(f) != spec.text_field:
-                raise ValueError(
-                    f"rescore match field {f!r} is not the indexed text "
-                    f"field {spec.text_field!r}")
-            mode = "and" if m.operator.upper() == "AND" else "or"
-            return bm25_scores(self.spark, spec.index_dir, m.query, mode=mode)
-        if q.match_phrase and len(q.match_phrase) == 1 and not q.match:
-            (f, m), = q.match_phrase.items()
-            if strip_keyword(f) != spec.text_field:
-                raise ValueError(
-                    f"rescore match_phrase field {f!r} is not the indexed "
-                    f"text field {spec.text_field!r}")
-            return phrase_match(self.spark, spec.index_dir, m.query, k=None)
-        raise ValueError(
-            "rescore supports a single match or match_phrase on the "
-            "indexed text field")
-
     @staticmethod
     def _sort_col(ctx: CompileContext, field: str, scored: bool) -> Column:
         """Resolve a sort field; `_score` maps to the scoring column."""
@@ -1685,6 +1576,11 @@ class Engine:
                 raise ValueError("sort by _score requires a scoring query")
             return F.col("score")
         return ctx.resolve(field)
+
+    def _sort_cols(self, ctx: CompileContext, d: model.Dsl, scored: bool) -> list[Column]:
+        """The request's sort as ordering Columns."""
+        cols = [(self._sort_col(ctx, s.field, scored), s.order.lower()) for s in d.sort]
+        return [c.desc() if order == "desc" else c.asc() for c, order in cols]
 
     def _highlight_leaves(self, d: model.Dsl, spec: IndexSpec) -> list:
         """Full-text leaves targeting the index's text field, for
@@ -1720,23 +1616,20 @@ class Engine:
 
     def search(self, index: str, body: str | dict) -> dict:
         """`POST /{index}/_search` -> ES-shaped response dict."""
+        return self._finish_search(*self._compile_request(index, body))
+
+    def _compile_request(self, index: str, body: str | dict) -> tuple:
+        """One request compiled into `_finish_search`'s arguments, its
+        alias resolved HERE so hits report the concrete `_index`. The
+        request OWNS the compile's cache handles: the next search_df must
+        not release what it still has to collect (msearch compiles all
+        its requests, then collects them concurrently)."""
         t0 = time.time()
-        index = index.split(",", 1)[0]  # multi-index degrades (server.go:38)
-        # resolve aliases HERE so hits report the concrete `_index`
-        # (ES's contract for reads through an alias); search_df's own
-        # resolution then no-ops
-        index, _af = self._resolve_index(index)
-        if _af is not None:
-            body = self._alias_filtered_body(body, _af)
+        index, body = self._resolve_request(index, body)
         hits, aggs_out, d = self.search_df(index, body)
-        prelimit, cached = self._last_prelimit, self._last_cached
-        # take OWNERSHIP of the compile's cache handles: the next
-        # search_df call must not release what this request still has to
-        # collect (msearch compiles all its requests first, then runs
-        # the collect phases concurrently)
-        self._last_prelimit = None
-        self._last_cached = None
-        return self._finish_search(index, hits, aggs_out, d, prelimit, cached, t0)
+        req = (index, hits, aggs_out, d, self._last_prelimit, self._last_cached, t0)
+        self._last_prelimit = self._last_cached = None
+        return req
 
     def _finish_search(
         self, index: str, hits: DataFrame, aggs_out: dict, d: model.Dsl,
@@ -2470,57 +2363,36 @@ class Engine:
         quoted phrases, trailing-star prefixes) over the index's built
         full-text index — the query surface the reference's backend
         accepts through `content MATCH ?` but its own DSL never emits."""
-        from gopensearch_spark.dsl.response import shape_response
         from gopensearch_spark.search import match_expr_scores
 
-        spec = self._spec(index)
+        index = self._resolve_index(index)[0]
+        spec = self.indices[index]
         if not spec.index_dir:
             raise ValueError(f"index {index!r} has no full-text index")
         t0 = time.time()
-        scores = match_expr_scores(self.spark, spec.index_dir, expr).withColumnRenamed(
-            "doc_id", "__ft_doc_id"
-        )
-        hits = (
-            spec.df.join(scores, spec.df[spec.id_col] == scores["__ft_doc_id"])
-            .drop("__ft_doc_id")
-            .orderBy(F.desc("score"), F.asc(spec.id_col))
-            .limit(size)
-        )
-        return shape_response(
-            index=index,
-            rows=hits.collect(),
-            agg_rows={},
-            id_col=spec.id_col,
-            took_ms=int((time.time() - t0) * 1000),
-        )
+        hits = self._hits_join(spec, match_expr_scores(self.spark, spec.index_dir, expr))
+        return self._finish_search(
+            index, hits.limit(size), {}, model.Dsl(size=size), None, None, t0)
 
     def msearch(self, lines: list[dict], max_concurrency: int = 8) -> list[dict]:
         """`POST /_msearch`: alternating header/body pairs. Multi-index
         headers degrade to the first index like the reference
         (server.go:407-410).
 
-        Round 5c: requests COMPILE serially (cheap driver-only Catalyst
-        work; the compile stage owns the engine's mutable cache slots)
-        and COLLECT concurrently — each request's Spark jobs overlap in
-        the scheduler, amortizing the fixed per-query driver fraction
-        (the Amdahl term BENCH.md's query-latency-scaling table
-        measures). Result order is preserved."""
-        reqs = []
-        for header, body in zip(lines[::2], lines[1::2]):
-            index = header.get("index") or (header.get("indices") or [None])[0]
-            index = index.split(",", 1)[0]
-            index, _af = self._resolve_index(index)
-            if _af is not None:
-                body = self._alias_filtered_body(body, _af)
-            t0 = time.time()
-            hits, aggs_out, d = self.search_df(index, body)
-            reqs.append(
-                (index, hits, aggs_out, d,
-                 self._last_prelimit, self._last_cached, t0))
-            # ownership transfer, exactly like search(): the next
-            # compile must not release this request's cache
-            self._last_prelimit = None
-            self._last_cached = None
+        Requests COMPILE serially (cheap driver-only Catalyst work that
+        owns the engine's cache slots), all in one query_scope so no
+        request releases another's phrase/prefix/NEAR relation, and
+        COLLECT concurrently: their Spark jobs overlap in the scheduler,
+        amortizing the fixed per-query driver fraction (BENCH.md's
+        query-latency-scaling table). Result order is preserved."""
+        from gopensearch_spark.search.phrase import query_scope
+
+        with query_scope():
+            reqs = [
+                self._compile_request(
+                    header.get("index") or (header.get("indices") or [None])[0], body)
+                for header, body in zip(lines[::2], lines[1::2])
+            ]
         if len(reqs) <= 1:
             return [self._finish_search(*r) for r in reqs]
         from concurrent.futures import ThreadPoolExecutor

@@ -83,7 +83,7 @@ def highlight_text(
 
 
 def leaves_for_match(query: str, kind: str = "match") -> list[tuple]:
-    """ft_specs entry -> highlight leaves (mirrors Engine routing)."""
+    """A full-text clause -> highlight leaves (mirrors the Engine's leaf routing)."""
     from gopensearch_spark.analysis import tokenize
 
     toks = tokenize(query)

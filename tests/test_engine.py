@@ -196,6 +196,54 @@ def test_msearch(engine):
     assert len(out[1]["hits"]["hits"]) == 2
 
 
+def _hit_scores(resp) -> list[tuple[str, float]]:
+    return [(h["_id"], h["_score"]) for h in resp["hits"]["hits"]]
+
+
+def test_msearch_keeps_each_requests_positional_relation(engine):
+    """A later msearch request's phrase relation must not release an
+    earlier one's before it is collected."""
+    from gopensearch_spark.search import phrase
+
+    bodies = [{"query": {"match_phrase": {"text": t}}, "size": 5}
+              for t in ("spark join", "merge data")]
+    singles, persisted = [], 0
+    for b in bodies:
+        singles.append(_hit_scores(engine.search("docs", b)))
+        persisted += len(phrase._live_persists)
+    out = engine.msearch([x for b in bodies for x in ({"index": "docs"}, b)])
+    assert [_hit_scores(r) for r in out] == singles
+    assert len(phrase._live_persists) == persisted >= 2
+    assert all(df.is_cached for df in phrase._live_persists)
+
+
+@pytest.mark.parametrize("other", [
+    {"rank_feature": {"field": "n_chars", "saturation": {"pivot": 200}}},
+    {"distance_feature": {"field": "n_chars", "origin": 300, "pivot": 50}},
+    {"nested": {"path": "tags", "query": {"term": {"tags.k": "en"}}}},
+    {"span_near": {"clauses": [{"span_term": {"text": "spark"}},
+                               {"span_term": {"text": "join"}}], "slop": 4}},
+    {"boosting": {"positive": {"term": {"lang": "en"}},
+                  "negative": {"term": {"source": "src1"}}, "negative_boost": 0.5}},
+    {"more_like_this": {"fields": ["text"], "like": ["spark join merge"],
+                        "min_term_freq": 1, "min_doc_freq": 1}},
+], ids=lambda o: next(iter(o)))
+def test_match_beside_another_clause_keeps_both(spark, docs_small, index_small, other):
+    """`match` and another clause in one query object AND like their
+    `bool.must`; the bare-match top-k must not drop the second clause."""
+    from pyspark.sql import functions as F
+
+    e = Engine(spark)
+    tagged = docs_small.withColumn("tags", F.array(F.struct(F.col("lang").alias("k"))))
+    e.create_index("docs", tagged, text_field="text", index_dir=index_small)
+    match = {"match": {"text": "spark"}}
+    got = _hit_scores(e.search("docs", {"query": {**match, **other}, "size": 20}))
+    exp = _hit_scores(e.search("docs", {"query": {"bool": {"must": [match, other]}},
+                                        "size": 20}))
+    assert exp and [d for d, _ in got] == [d for d, _ in exp]
+    assert [s for _, s in got] == pytest.approx([s for _, s in exp], rel=1e-9)
+
+
 def test_template_date_mapping(spark):
     e = Engine(spark)
     e.put_template("spans", {

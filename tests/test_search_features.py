@@ -8,8 +8,11 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from gopensearch_spark.dsl import Engine
+from gopensearch_spark.search import bm25_scores, near_match
+from gopensearch_spark.search.fuzzy import fuzzy_match
 
 SF = os.path.join(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"), "sf0.001")
 
@@ -160,6 +163,50 @@ def test_rescore_rejects_sort_and_small_window(engine):
                         "query": {"rescore_query": {"match_phrase": {"text": "spark join"}}}},
             "size": 10,
         })
+
+
+@pytest.mark.parametrize("rescore_query, expected", [
+    ({"match_phrase": {"text": {"query": "spark join", "slop": 2}}},
+     lambda spark, idx: near_match(
+         spark, idx, [("term", "spark"), ("term", "join")], n=2, k=None)),
+    ({"match": {"text": {"query": "dat", "fuzziness": 1}}},
+     lambda spark, idx: fuzzy_match(spark, idx, "dat", fuzziness="1", k=None)),
+    ({"match": {"text": {"query": "join", "boost": 3.0}}},
+     lambda spark, idx: bm25_scores(spark, idx, "join").withColumn(
+         "score", F.col("score") * 3.0)),
+], ids=["phrase_slop", "fuzziness", "boost"])
+def test_rescore_leaf_scores_like_the_primary_query(
+        spark, engine, index_small, rescore_query, expected):
+    """A rescore query scores as it would as a primary query: slop is
+    NEAR, fuzziness expands, boost multiplies. With query_weight 0 a
+    window hit's score is its rescore score."""
+    body = {"query": {"match": {"text": "spark join data"}}, "size": 60,
+            "rescore": {"window_size": 60, "query": {
+                "rescore_query": rescore_query, "query_weight": 0.0}}}
+    got = {int(h["_id"]): h["_score"] for h in engine.search("docs", body)["hits"]["hits"]}
+    rel = {int(r["doc_id"]): r["score"] for r in expected(spark, index_small).collect()}
+    exp = {d: rel.get(d, 0.0) for d in got}
+    assert len(got) == 60 and any(exp.values())
+    assert got == pytest.approx(exp, rel=1e-9, abs=1e-12)
+
+
+def test_runtime_field_inside_function_score_query(engine, duck):
+    """Runtime fields exist before the compile: a function_score's inner
+    query (compiled by the Engine, not the compiler) resolves them."""
+    body = {
+        "query": {"function_score": {
+            "query": {"range": {"vk": {"gte": 1}}},
+            "field_value_factor": {"field": "vk"},
+            "boost_mode": "replace",
+        }},
+        "runtime_mappings": {"vk": {"script": "doc['user_id'].value % 3"}},
+        "track_total_hits": True,
+        "size": 5,
+    }
+    r = engine.search("events", body)
+    n = duck.execute("SELECT count(*) FROM events WHERE fmod(user_id, 3) >= 1").fetchone()[0]
+    assert r["hits"]["total"]["value"] == n > 0
+    assert [h["_score"] for h in r["hits"]["hits"]] == [2.0] * 5
 
 
 # --- script_fields / runtime_mappings --------------------------------------
