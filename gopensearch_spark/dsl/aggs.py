@@ -715,7 +715,7 @@ def compile_agg(
                                   set(metric_subs))
             if any(s.bucket_sort is not None for s in pipe_subs.values()):
                 return "buckets", out
-        return "buckets", out.orderBy(F.asc("key"))
+        return "buckets", _in_key_order(out)
     if agg.histogram is not None:
         h = agg.histogram
         col = ctx.resolve(h.field).cast("double")
@@ -752,7 +752,7 @@ def compile_agg(
                                   set(metric_subs))
             if any(s.bucket_sort is not None for s in pipe_subs.values()):
                 return "buckets", out
-        return "buckets", out.orderBy(F.asc("key"))
+        return "buckets", _in_key_order(out)
     if agg.variable_width_histogram is not None:
         vw = agg.variable_width_histogram
         col = ctx.resolve(vw.field).cast("double")
@@ -1149,6 +1149,14 @@ def compile_agg(
     if agg.top_hits is not None:
         raise ValueError("top_hits is supported as a sub-aggregation of `terms`")
     raise ValueError("empty aggregation")
+
+
+def _in_key_order(buckets: DataFrame) -> DataFrame:
+    """Histogram buckets in key order. A bucket set is small (bounded by
+    the field's range over the interval, never by the data volume), so
+    one partition sorts it: a global ``orderBy`` would add a
+    range-partitioning sample job and a shuffle to every request."""
+    return buckets.coalesce(1).sortWithinPartitions(F.asc("key"))
 
 
 def _zero_fill_buckets(out: DataFrame, dh: model.DateHistogram) -> DataFrame:

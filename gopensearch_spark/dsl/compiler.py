@@ -91,6 +91,9 @@ class CompileContext:
     # ``scoring`` is False inside `bool.filter`/`bool.must_not` (ES filter
     # context: the clause restricts the hit set but contributes NO score).
     fulltext_predicate: object = None
+    # True while compiling under a `bool.must_not`: a full-text leaf
+    # registered there never matches a hit (highlight skips it)
+    negated: bool = False
 
     def resolve(self, field: str) -> Column:
         field = strip_keyword(field)
@@ -674,7 +677,9 @@ def compile_query(ctx: CompileContext, q: model.Query | None, scoring: bool = Tr
                 preds.append(_and_all(should) if ctx.quirk_should_is_and else _or_all(should))
         if b.must_not:
             # must_not is filter context too (excluded docs never score)
+            outer, ctx.negated = ctx.negated, True
             preds.append(~_or_all([compile_query(ctx, s, False) for s in b.must_not]))
+            ctx.negated = outer
     return _and_all(preds)
 
 

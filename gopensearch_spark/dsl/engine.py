@@ -27,7 +27,8 @@ import time
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gopensearch_spark.dsl import model
@@ -54,6 +55,9 @@ class IndexSpec:
     # multi_match surface: each field has its OWN inverted index with
     # its own df/avgdl stats, exactly like per-field Lucene indexes
     extra_text_fields: dict[str, str] = dc_field(default_factory=dict)
+    # a delete_by_query rewrote ``df``; the inverted index still holds
+    # the deleted docs' postings
+    has_deletes: bool = False
 
     def indexed_fields(self) -> dict[str, str]:
         out = dict(self.extra_text_fields)
@@ -80,13 +84,38 @@ class _Clause:
     (``kind`` and DSL clause ``q``, the request `Engine._leaf_relation`
     serves) or a score-only clause (``kind`` None), with its score
     Column. ``scoring`` is False in filter context and once a compound
-    clause has folded the score into its own."""
+    clause has folded the score into its own; ``negated`` is True under
+    a must_not, where the leaf never matches a hit."""
 
     kind: str | None
     q: object
     score: Column
     scoring: bool
     boost: float = 1.0
+    negated: bool = False
+
+
+@dataclass
+class _Total:
+    """The exact hits.total of one request: its pre-limit relation and,
+    when the page reads every row of it, the Observation that counts it
+    inside the hits action. Without one (a size-0 request,
+    `Engine.count`, knn) the relation is counted by its own action."""
+
+    rel: DataFrame
+    obs: Observation | None = None
+
+    def value(self) -> int:
+        """Read after the hits action succeeded."""
+        if self.obs is not None:
+            try:
+                return int(self.obs.get["n"])
+            except Py4JJavaError:
+                # the action ran without the observed node: adaptive
+                # execution dropped it with a join whose side came out
+                # empty (a query matching nothing)
+                pass
+        return int(self.rel.count())
 
 
 def _sum0(scores: list[Column]) -> Column:
@@ -152,7 +181,7 @@ class Engine:
         # pre-limit count of the filtered relation. A per-request
         # `track_total_hits` in the body overrides this default.
         self.track_total_hits = track_total_hits
-        self._last_prelimit: DataFrame | None = None
+        self._last_total: _Total | None = None
         # Template persistence (reference pkg/server/template.go:101-161
         # keeps templates in a __templates SQLite table so they survive
         # restarts): with a meta_dir, put/delete_template write
@@ -711,7 +740,8 @@ class Engine:
         resolved, _af = self._resolve_index(index)
         spec = self.indices[resolved]
         q = {"bool": {"filter": [query]}} if query else {"match_all": {}}
-        hits, _aggs, _d = self.search_df(index, {"query": q, "size": (1 << 30)})
+        hits, _aggs, _d = self.search_df(
+            index, {"query": q, "size": (1 << 30), "track_total_hits": False})
         return resolved, spec, hits
 
     def delete_by_query(self, index: str, body: str | dict | None = None) -> dict:
@@ -721,7 +751,9 @@ class Engine:
         filter their driver-resident row list. Like ES before a merge,
         the on-disk inverted index is untouched: deleted docs drop out
         of every hit set through the doc join, while corpus-level df/
-        avgdl stats reflect the pre-delete corpus until a rebuild."""
+        avgdl stats reflect the pre-delete corpus until a rebuild. The
+        spec records the delete, so a bare `match` takes the general
+        path (its index top-k would spend slots on deleted docs)."""
         import dataclasses
 
         raw = json.loads(body) if isinstance(body, str) else (body or {})
@@ -737,7 +769,8 @@ class Engine:
         else:
             n = ids.count()
             self.indices[resolved] = dataclasses.replace(
-                spec, df=spec.df.join(ids, on=spec.id_col, how="left_anti")
+                spec, df=spec.df.join(ids, on=spec.id_col, how="left_anti"),
+                has_deletes=True,
             )
         return {"took": 1, "total": n, "deleted": n, "failures": []}
 
@@ -942,6 +975,8 @@ class Engine:
             if kind != "match" or field not in tok_cols:
                 return None  # fall through to the relational compile
             terms = normalize_query_terms(m.query)
+            if not terms:
+                return F.lit(False)  # ES zero_terms_query "none"
             parts = [F.array_contains(F.col(tok_cols[field]), t) for t in terms]
             out = parts[0]
             for p in parts[1:]:
@@ -987,7 +1022,7 @@ class Engine:
             score = F.coalesce(F.col(f"__ft_score_{i}"), F.lit(0.0))
             if boost != 1.0:
                 score = score * F.lit(boost)
-            clauses.append(_Clause(kind, q, score, scoring, boost))
+            clauses.append(_Clause(kind, q, score, scoring, boost, ctx.negated))
             return F.col(f"__ft_id_{i}").isNotNull()
 
         def group(q: model.Query, scoring: bool) -> tuple[Column, list[Column]]:
@@ -1201,15 +1236,16 @@ class Engine:
     def _pure_match(self, d: model.Dsl, spec: IndexSpec) -> model.Match | None:
         """The request is EXACTLY one `match` on the indexed text field:
         no other clause, agg, sort, cursor, collapse, rescore, script,
-        runtime field or min_score — the shape ``bm25_match`` serves as a
-        bare top-k from the flat postings on the JVM, without the
-        general path's relation."""
+        runtime field or min_score — the shape served as a bare top-k
+        from the flat postings on the JVM, without the general path's
+        relation. A spec with deletes declines: its index still holds
+        the deleted docs."""
         q = d.query
         if (
             q is None or len(q.match) != 1 or q != model.Query(match=q.match)
-            or not spec.index_dir or d.aggs or d.sort or d.search_after is not None
-            or d.collapse or d.rescore or d.script_fields or d.runtime_mappings
-            or d.min_score is not None
+            or not spec.index_dir or spec.has_deletes or d.aggs or d.sort
+            or d.search_after is not None or d.collapse or d.rescore
+            or d.script_fields or d.runtime_mappings or d.min_score is not None
         ):
             return None
         ((field, m),) = q.match.items()
@@ -1223,21 +1259,31 @@ class Engine:
     def _match_top_k(self, spec: IndexSpec, d: model.Dsl, m: model.Match) -> DataFrame:
         """Serve a pure `match` as a bare top-k straight from the index:
         only top-k ids reach the doc join (the general path materializes
-        the whole scoring relation, because filters need it)."""
-        from gopensearch_spark.search.bm25 import bm25_match
+        the whole scoring relation, because filters need it). The top-k
+        reads every scored row, so its action can count the total."""
+        from gopensearch_spark.search import bm25_scores
+        from gopensearch_spark.search.bm25 import top_k
 
         mode = "and" if m.operator.upper() == "AND" else "or"
-        track = d.track_total_hits if d.track_total_hits is not None else self.track_total_hits
-        if track:
-            # exact total needs the full (unordered) match relation — a
-            # count-only aggregate, no corpus-wide sort; the hit page is
-            # still the bare top-k below
-            from gopensearch_spark.search import bm25_scores
-
-            self._last_prelimit = bm25_scores(self.spark, spec.index_dir, m.query, mode=mode)
+        scores = bm25_scores(self.spark, spec.index_dir, m.query, mode=mode)
+        self._last_total, scores = self._total(scores, d)
         size = 10 if d.size is None else d.size
-        top = bm25_match(self.spark, spec.index_dir, m.query, k=size + (d.from_ or 0), mode=mode)
+        top = top_k(scores, size + (d.from_ or 0))
         return self._from_size(self._hits_join(spec, top), d)
+
+    def _tracks_total(self, d: model.Dsl) -> bool:
+        return d.track_total_hits if d.track_total_hits is not None else self.track_total_hits
+
+    def _total(self, rel: DataFrame, d: model.Dsl) -> tuple[_Total, DataFrame]:
+        """The request's total over the pre-limit ``rel``, and ``rel`` to
+        page from: observed when the total is tracked and the page is
+        not empty, so the hits action counts it. Every page over it must
+        then read all its rows (a top-k, a sort, a window), never a
+        bare limit that stops early."""
+        if not self._tracks_total(d) or d.size == 0:
+            return _Total(rel), rel
+        obs = Observation()
+        return _Total(rel, obs), rel.observe(obs, F.count(F.lit(1)).alias("n"))
 
     @staticmethod
     def _hits_join(spec: IndexSpec, scores: DataFrame) -> DataFrame:
@@ -1297,7 +1343,7 @@ class Engine:
         top, aggs_out = self._aggs(spec, ctx, top, d, cache=True)
         # hits.total under track_total_hits counts the knn result set
         # (<= k), the ES contract for a knn-only search
-        self._last_prelimit = top
+        self._last_total = _Total(top)
         return self._from_size(top, d), aggs_out, d
 
     def search_df(self, index: str, body: str | dict) -> tuple[DataFrame, dict, model.Dsl]:
@@ -1313,7 +1359,7 @@ class Engine:
         if self._last_cached is not None:
             self._last_cached.unpersist()
             self._last_cached = None
-        self._last_prelimit = None
+        self._last_total = None
         d = self._parse(index, body)
         spec = self.indices[index]
         if d.knn is not None:
@@ -1338,8 +1384,9 @@ class Engine:
             # table paid more for the cache write of the 5 unused
             # columns than for the agg).
             filtered, aggs_out = self._aggs(spec, ctx, filtered, d, cache=scored)
-            self._last_prelimit = filtered  # pre-sort/offset/limit relation
-            hits = self._page(index, ctx, filtered, d, scored)
+            self._last_total, filtered = self._total(filtered, d)
+            hits = self._page(
+                index, ctx, filtered, d, scored, self._last_total.obs is not None)
         return hits, aggs_out, d
 
     def _join_and_score(
@@ -1396,10 +1443,12 @@ class Engine:
 
     def _page(
         self, index: str, ctx: CompileContext, hits: DataFrame, d: model.Dsl,
-        scored: bool,
+        scored: bool, observed: bool,
     ) -> DataFrame:
         """search_after, collapse, rescore or sort, from/size, then the
-        script_fields of the page."""
+        script_fields of the page. An ``observed`` page with no order
+        of its own takes id order (ES `_doc` order), so the hits action
+        reads every row and counts the total."""
         id_col = self.indices[index].id_col
         if d.search_after is not None:
             # cursor pagination: a strictly-after predicate on the sort
@@ -1441,6 +1490,8 @@ class Engine:
             hits = hits.orderBy(*self._sort_cols(ctx, d, scored))
         elif scored:
             hits = hits.orderBy(F.desc("score"), F.asc(id_col))
+        elif observed:
+            hits = hits.orderBy(F.asc(id_col))
         hits = self._from_size(hits, d)
         # fetch-phase computed columns: Catalyst projections over the
         # ALREADY-limited page (≤ size rows)
@@ -1582,36 +1633,30 @@ class Engine:
         cols = [(self._sort_col(ctx, s.field, scored), s.order.lower()) for s in d.sort]
         return [c.desc() if order == "desc" else c.asc() for c, order in cols]
 
-    def _highlight_leaves(self, d: model.Dsl, spec: IndexSpec) -> list:
-        """Full-text leaves targeting the index's text field, for
-        fetch-phase highlighting (FTS5 highlight() parity)."""
+    def _highlight_leaves(self, index: str, d: model.Dsl) -> list:
+        """Highlight leaves (FTS5 highlight() parity) of the match,
+        match_phrase and prefix clauses on the index's text field, at
+        any depth: the clauses the request's compile registers, except
+        those under a must_not, whose terms never match. A fuzzy clause
+        highlights its literal terms only."""
         from gopensearch_spark.analysis import tokenize
         from gopensearch_spark.search.highlight import leaves_for_match
 
+        _, ctx, clauses = self._context(index, d.runtime_mappings)
+        compile_query(ctx, d.query)
         leaves: list = []
-
-        def walk(q: model.Query | None):
-            if q is None:
-                return
-            for f, m in q.match.items():
-                if strip_keyword(f) == spec.text_field:
-                    leaves.extend(leaves_for_match(m.query, "match"))
-            for f, m in q.match_phrase.items():
-                if strip_keyword(f) == spec.text_field:
-                    toks = tokenize(m.query)
-                    if m.slop and len(toks) >= 2:
-                        # scored as NEAR(terms, slop): wrap its kept instances
-                        leaves.append(("near", ([("term", t) for t in toks], m.slop)))
-                    else:
-                        leaves.extend(leaves_for_match(m.query, "phrase"))
-            for f, t in q.prefix.items():
-                if strip_keyword(f) == spec.text_field:
-                    leaves.extend(leaves_for_match(t.value, "prefix"))
-            if q.bool_:
-                for sub in q.bool_.must + q.bool_.should + q.bool_.filter:
-                    walk(sub)  # must_not excluded: its terms never match
-
-        walk(d.query)
+        for c in clauses:
+            if c.negated or c.kind not in ("match", "fuzzy", "phrase", "prefix"):
+                continue
+            if c.kind == "fuzzy":
+                leaves.extend(leaves_for_match(c.q.value, "match"))
+                continue
+            toks = tokenize(c.q.query)
+            if c.kind == "phrase" and c.q.slop and len(toks) >= 2:
+                # scored as NEAR(terms, slop): wrap its kept instances
+                leaves.append(("near", ([("term", t) for t in toks], c.q.slop)))
+            else:
+                leaves.extend(leaves_for_match(c.q.query, c.kind))
         return leaves
 
     def search(self, index: str, body: str | dict) -> dict:
@@ -1627,28 +1672,27 @@ class Engine:
         t0 = time.time()
         index, body = self._resolve_request(index, body)
         hits, aggs_out, d = self.search_df(index, body)
-        req = (index, hits, aggs_out, d, self._last_prelimit, self._last_cached, t0)
-        self._last_prelimit = self._last_cached = None
+        req = (index, hits, aggs_out, d, self._last_total, self._last_cached, t0)
+        self._last_total = self._last_cached = None
         return req
 
     def _finish_search(
         self, index: str, hits: DataFrame, aggs_out: dict, d: model.Dsl,
-        prelimit: DataFrame | None, cached: DataFrame | None, t0: float,
+        total: _Total | None, cached: DataFrame | None, t0: float,
     ) -> dict:
         """Collect + shape ONE compiled search — the Spark-action phase.
         Safe to run concurrently across requests: it reads only
-        immutable engine state and owns its cache handles."""
+        immutable engine state and owns its cache handles. A tracked
+        total comes from the hits action's observation when the page
+        has one (`_total`), else from a count of the pre-limit relation."""
         from gopensearch_spark.dsl.response import shape_response
 
         spec = self.indices[index]
         try:
             rows = hits.collect()
             agg_rows = {label: (kind, df.collect()) for label, (kind, df) in aggs_out.items()}
-            track = d.track_total_hits if d.track_total_hits is not None else self.track_total_hits
-            total = None
-            if track and prelimit is not None:
-                # counted while the agg cache (if any) is still live
-                total = int(prelimit.count())
+            # read while the agg cache (if any) is still live
+            n_total = total.value() if total is not None and self._tracks_total(d) else None
         finally:
             if cached is not None:  # everything is collected now
                 cached.unpersist()
@@ -1659,8 +1703,8 @@ class Engine:
             id_col=spec.id_col,
             took_ms=int((time.time() - t0) * 1000),
         )
-        if total is not None:
-            resp["hits"]["total"] = {"value": total, "relation": "eq"}
+        if n_total is not None:
+            resp["hits"]["total"] = {"value": n_total, "relation": "eq"}
         if d.script_fields:
             # ES shape: script-field values live under hit["fields"],
             # not _source (extracted BEFORE doc-backed unmarshal
@@ -1678,7 +1722,7 @@ class Engine:
             fspec = d.highlight["fields"][spec.text_field] or {}
             pre = (fspec.get("pre_tags") or d.highlight.get("pre_tags") or ["<em>"])[0]
             post = (fspec.get("post_tags") or d.highlight.get("post_tags") or ["</em>"])[0]
-            leaves = self._highlight_leaves(d, spec)
+            leaves = self._highlight_leaves(index, d)
             if leaves:
                 for h in resp["hits"]["hits"]:
                     src = h["_source"].get(spec.text_field)
@@ -2208,7 +2252,7 @@ class Engine:
             raw = body if isinstance(body, dict) else json.loads(body or "{}")
             req["query"] = raw["query"]
         self.search_df(index, req)
-        n = int(self._last_prelimit.count())
+        n = self._last_total.value()
         if self._last_cached is not None:
             self._last_cached.unpersist()
             self._last_cached = None

@@ -16,10 +16,12 @@ Plan shape (verified via .explain in tests):
   partitions with `term IN (...)` pushed to the scan
   -> broadcast hash join against the (tiny) filtered term_stats
   -> whole-stage-codegen'd score expression
-  -> partial+final hash aggregate on doc_id
+  -> partial+final hash aggregate on doc_id (two or more present terms)
   -> TakeOrderedAndProject(k)
-No pandas UDF, no driver-side data, one shuffle (the doc_id agg) whose
-input is only the query terms' postings.
+No pandas UDF, no driver-side data. A multi-term query has one shuffle
+(the doc_id agg) whose input is only the query terms' postings; a query
+with one present term has none, because its postings already hold one
+row per doc.
 
 A term repeated in the query contributes once per occurrence (its idf
 is weighted by the count), as FTS5 and Lucene's per-token clauses score
@@ -89,7 +91,15 @@ def bm25_scores(
 
     idfs resolve DRIVER-SIDE through the memoized term_dfs lookup (score
     identity with FTS5 is pinned in the rank-identity suites), riding the postings scan as a literal term->idf map: no
-    per-query term_stats scan, no broadcast build job."""
+    per-query term_stats scan, no broadcast build job.
+
+    With one present term each posting is already one doc's score, so
+    the relation has no doc_id aggregate and no Exchange. That plan, the
+    AND count and the positional kernel all rely on (term, doc_id) being
+    unique among postings. A doc re-ingested by a stream breaks this
+    today: both versions' postings stay in the index, so the doc scores
+    twice, and a one-term query returns it twice and counts it twice in
+    an exact total."""
     from gopensearch_spark.analysis import normalize_query_terms
     from gopensearch_spark.search.readers import corpus_stats, index_table, term_dfs
 
@@ -101,9 +111,14 @@ def bm25_scores(
     n_docs, avgdl = stats["n_docs"], stats["avg_doc_len"]
     all_dfs = term_dfs(spark, index_dir, terms)
     idfs = {t: counts[t] * idf(n_docs, d) for t, d in all_dfs.items() if d > 0}
-    if not idfs or (mode == "and" and len(idfs) < len(terms)):
+    if (
+        not idfs
+        or (mode == "and" and len(idfs) < len(terms))
+        or (mode != "and" and (min_match or 0) > len(idfs))
+    ):
         # absent term: AND can never satisfy all terms; OR over only
-        # absent terms matches nothing
+        # absent terms, or over fewer present terms than min_match,
+        # matches nothing
         return spark.createDataFrame([], "doc_id long, score double")
     present = sorted(idfs)
     buckets = sorted(set(
@@ -116,6 +131,8 @@ def bm25_scores(
     for t in present:
         kv += [F.lit(t), F.lit(float(idfs[t]))]
     idf_col = F.create_map(*kv)[F.col("term")]
+    if len(present) == 1:
+        return post.select("doc_id", bm25_score_expr(avgdl, idf_col).alias("score"))
     scored = post.withColumn("contrib", bm25_score_expr(avgdl, idf_col))
     agg = scored.groupBy("doc_id").agg(
         F.sum("contrib").alias("score"), F.count("*").alias("n_terms")
@@ -140,8 +157,9 @@ def bm25_match(
     term); ``mode='or'`` = ``a OR b``. Returns (doc_id, score) ordered by
     score desc, doc_id asc (FTS5 tie order = rowid).
     """
-    return (
-        bm25_scores(spark, index_dir, query, mode=mode)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return top_k(bm25_scores(spark, index_dir, query, mode=mode), k)
+
+
+def top_k(scores: DataFrame, k: int) -> DataFrame:
+    """The best ``k`` rows of a (doc_id, score) relation, in FTS5 order."""
+    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

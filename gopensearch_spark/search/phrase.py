@@ -22,8 +22,9 @@ Execution shape (all sizes bounded by the query terms' postings):
   keeps the instances ``_near_kept`` marks, and highlight.py wraps the
   same ones.
 - prefix: `term LIKE 'p%'` is pushed to the parquet scan as
-  StringStartsWith, pruned to the term buckets the sorted term
-  dictionary resolves; per-doc tf is a plain sum.
+  StringStartsWith, pruned to the term buckets of its expansions (read
+  from the driver's term map on a warm index, else from the sorted term
+  dictionary); per-doc tf is a plain sum.
 - all need the unit's df for the final score; the match relation is
   persisted, counted (a metrics-sized job), then top-k'd — at cluster
   scale this is one extra pass over an already-filtered, in-memory
@@ -83,8 +84,24 @@ def query_scope():
         _scope_depth -= 1
 
 
+# Spark keeps the output partitioning of a plan it caches, so adaptive
+# execution may not coalesce the shuffle that feeds a match relation:
+# the kernel then runs one task (and one Python worker hand-off) per
+# shuffle partition of a relation bounded by its query terms' postings
+_COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
 def _persist_for_query(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    """Persist a match relation for the current query, letting adaptive
+    execution coalesce its final shuffle like any other query's. The
+    cached plan is fixed at ``persist``, so the setting is scoped to it."""
+    conf = df.sparkSession.conf
+    old = conf.get(_COALESCE_CACHED)
+    conf.set(_COALESCE_CACHED, "true")
+    try:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    finally:
+        conf.set(_COALESCE_CACHED, old)
     _live_persists.append(df)
     return df
 
@@ -117,16 +134,30 @@ def _score_topk(matches: DataFrame, stats: dict, k: int | None) -> DataFrame:
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _prefix_buckets(term_dict: DataFrame, prefix: str, n_buckets: int) -> set[int]:
-    """The term_buckets holding a term that starts with ``prefix``.
+def _prefix_buckets(
+    spark: SparkSession, index_dir: str, prefix: str, n_buckets: int
+) -> set[int] | None:
+    """The term_buckets holding a term that starts with ``prefix``, or
+    ``None`` when the term dictionary is stale (the caller then scans
+    every bucket: a stale dict must never drop terms).
 
-    A tiny job on the SORTED term dictionary (parquet min/max skipping
-    answers the startswith over sorted runs), so the postings scan is
-    partition-pruned like an exact-term query instead of reading every
-    bucket (the hash layout's blind spot for prefixes)."""
+    A warm index hashes its expansions on the driver, with no job.
+    Otherwise a tiny job on the SORTED term dictionary (parquet min/max
+    skipping answers the startswith over sorted runs). Either way the
+    postings scan is partition-pruned like an exact-term query instead
+    of reading every bucket (the hash layout's blind spot for
+    prefixes)."""
+    from gopensearch_spark.search.readers import term_dict, warm_prefix_terms
+
+    terms = warm_prefix_terms(spark, index_dir, prefix)
+    if terms is not None:
+        return set(term_buckets_for(spark, terms, n_buckets).values())
+    td = term_dict(spark, index_dir)
+    if td is None:
+        return None
     return {
         r["b"]
-        for r in term_dict.where(F.col("term").startswith(prefix))
+        for r in td.where(F.col("term").startswith(prefix))
         .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
         .distinct()
         .collect()
@@ -155,7 +186,7 @@ def _candidates(
     then carries candidates only (the candidate side usually
     broadcasts — AQE decides).
     """
-    from gopensearch_spark.search.readers import index_table, term_dict
+    from gopensearch_spark.search.readers import index_table
 
     is_exact = F.col("term").isin(exact)
     wanted = is_exact
@@ -170,13 +201,12 @@ def _candidates(
         is_pref = F.col("term").startswith(prefix)
         wanted = is_exact | is_pref
         has_all = (F.count(F.when(is_exact, 1)) == len(exact)) & F.bool_or(is_pref)
-        td = term_dict(spark, index_dir)
-        if td is None:
+        pref_buckets = _prefix_buckets(spark, index_dir, prefix, stats["term_buckets"])
+        if pref_buckets is None:
             buckets = None  # a stale dict widens the scan, never drops terms
+        elif not pref_buckets:
+            return None
         else:
-            pref_buckets = _prefix_buckets(td, prefix, stats["term_buckets"])
-            if not pref_buckets:
-                return None
             buckets |= pref_buckets
     posts = index_table(spark, index_dir, "postings")
     if buckets is not None:
@@ -291,7 +321,12 @@ def _prefix_match(
     spark: SparkSession, index_dir: str, prefix: str, k: int | None
 ) -> DataFrame:
     from gopensearch_spark.analysis import tokenize
-    from gopensearch_spark.search.readers import corpus_stats, index_table, term_dict
+    from gopensearch_spark.search.readers import (
+        corpus_stats,
+        index_table,
+        term_dict,
+        warm_prefix_terms,
+    )
 
     toks = tokenize(prefix)
     if len(toks) != 1:
@@ -299,12 +334,16 @@ def _prefix_match(
     prefix = toks[0]
     stats = corpus_stats(index_dir)
     posts = index_table(spark, index_dir, "postings")
-    td = term_dict(spark, index_dir)
+    # a warm index knows every expansion with no job; a cold one asks
+    # the term dictionary whether there are none, one or more
+    expansion = warm_prefix_terms(spark, index_dir, prefix)
+    td = term_dict(spark, index_dir) if expansion is None else None
     if td is not None:
         expansion = [
             r["term"]
             for r in td.where(F.col("term").startswith(prefix)).select("term").limit(2).collect()
         ]
+    if expansion is not None:
         if not expansion:
             return spark.createDataFrame([], _EMPTY)
         if len(expansion) == 1:
@@ -318,7 +357,7 @@ def _prefix_match(
             if k is None:
                 return bm25_scores(spark, index_dir, expansion, mode="or")
             return bm25_match(spark, index_dir, expansion, k=k, mode="or")
-        buckets = _prefix_buckets(td, prefix, stats["term_buckets"])
+        buckets = _prefix_buckets(spark, index_dir, prefix, stats["term_buckets"])
         posts = posts.where(F.col("term_bucket").isin(sorted(buckets)))
     posts = (
         posts.where(F.col("term").startswith(prefix))

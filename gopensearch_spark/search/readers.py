@@ -16,6 +16,7 @@ directory), is seen by the next query with nothing to invalidate.
 
 from __future__ import annotations
 
+import bisect
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +41,22 @@ class TermDfs(dict):
         super().__init__(items)
         self.complete = complete
         self.version = version
+        self._sorted: list[str] | None = None
+
+    def sorted_terms(self) -> list[str]:
+        """The terms of the map (df > 0), sorted; built once."""
+        if self._sorted is None:
+            self._sorted = sorted(t for t, d in dict.items(self) if d > 0)
+        return self._sorted
+
+    def with_prefix(self, prefix: str) -> list[str]:
+        """The terms of the map (df > 0) that start with ``prefix``,
+        sorted. Only a complete map holds them all."""
+        keys = self.sorted_terms()
+        lo = hi = bisect.bisect_left(keys, prefix)
+        while hi < len(keys) and keys[hi].startswith(prefix):
+            hi += 1
+        return keys[lo:hi]
 
     def __contains__(self, term) -> bool:
         return self.complete or dict.__contains__(self, term)
@@ -78,7 +95,9 @@ def warm_index(spark: SparkSession, index_dir: str) -> TermDfs:
 
     One Arrow collect (see ``_load_term_dfs``) loads every term, so
     ``term_dfs`` then answers any query term with no Spark job, and a
-    warm ``match`` runs with no df lookup and no Python worker. The map costs
+    warm ``match`` runs with no df lookup and no Python worker. Its
+    sorted term list (``warm_prefix_terms``) is built here too, so no
+    query pays for it. The map costs
     driver memory in proportion to the vocabulary (about 130 bytes a
     term in CPython, ~13 MB for 100k terms, plus the pandas frame while
     it is collected), so an index whose vocabulary does not fit the
@@ -88,7 +107,19 @@ def warm_index(spark: SparkSession, index_dir: str) -> TermDfs:
     dfs = _TERM_DF_CACHE.get(key)
     if dfs is None or not dfs.complete or dfs.version != read_manifest(index_dir)["version"]:
         dfs = _TERM_DF_CACHE[key] = _load_term_dfs(spark, index_dir)
+        dfs.sorted_terms()  # prefix expansion's view, built here, not by the first query
     return dfs
+
+
+def warm_prefix_terms(spark: SparkSession, index_dir: str, prefix: str) -> list[str] | None:
+    """The indexed terms that start with ``prefix``, sorted, read from
+    the complete term -> df map of a warm index (``warm_index``) with no
+    Spark job. ``None`` when the index is not warm: callers then ask the
+    term dictionary."""
+    dfs = _TERM_DF_CACHE.get((id(spark), index_dir))
+    if dfs is None or not dfs.complete or dfs.version != read_manifest(index_dir)["version"]:
+        return None
+    return dfs.with_prefix(prefix)
 
 
 def index_table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:

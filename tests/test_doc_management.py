@@ -139,6 +139,30 @@ def test_delete_by_fulltext_match(spark, docs_small, index_small):
     assert out["hits"]["hits"] == []
 
 
+def test_pure_match_after_delete_skips_deleted_docs(spark, docs_small, index_small):
+    """Deleting a match's top hits leaves the index untouched, so a bare
+    `match` must not take its top-k from the index: the same request
+    returns the next hits and a total without the deleted docs, exactly
+    as its `bool.must` form does."""
+    from gopensearch_spark.dsl import Engine
+
+    e = Engine(spark)
+    e.create_index("docs", docs_small, id_col="doc_id",
+                   text_field="text", index_dir=index_small)
+    body = {"query": {"match": {"text": "spark"}}, "size": 6, "track_total_hits": True}
+    before = e.search("docs", body)
+    n = before["hits"]["total"]["value"]
+    ids = [int(h["_id"]) for h in before["hits"]["hits"]]
+    r = e.delete_by_query("docs", {"query": {"terms": {"doc_id": ids[:3]}}})
+    assert r["deleted"] == 3
+    body["size"] = 3
+    after = e.search("docs", body)
+    assert after["hits"]["total"]["value"] == n - 3
+    assert [int(h["_id"]) for h in after["hits"]["hits"]] == ids[3:]
+    must = e.search("docs", {**body, "query": {"bool": {"must": [body["query"]]}}})
+    assert must["hits"] == after["hits"]
+
+
 def test_index_exists_and_delete(spark, events):
     from gopensearch_spark.dsl import Engine
 

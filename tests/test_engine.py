@@ -124,6 +124,26 @@ def test_date_histogram_fixed_interval(engine, duck):
     assert got == [(int(k), int(n)) for k, n in exp]
 
 
+def test_date_histogram_sorts_buckets_without_a_global_sort(spark, engine):
+    """Buckets come back in key order from one partition: the request
+    runs the aggregate's shuffle and the collect, with no
+    range-partitioning sample job or sort shuffle on top."""
+    import uuid
+
+    body = {"size": 0, "aggs": {"hist": {"date_histogram": {"field": "ts", "fixed_interval": "1h"}}}}
+    engine.search("events", body)
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        r = engine.search("events", body)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    keys = [b["key"] for b in r["aggregations"]["hist"]["buckets"]]
+    assert keys == sorted(keys) and len(keys) > 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_avg_max_metrics(engine, duck):
     r = engine.search("events", '{"size": 0, "aggs": {"a": {"avg": {"field": "value"}}, "m": {"max": {"field": "value"}}}}')
     ea, em = duck.execute("SELECT avg(value), max(value) FROM events").fetchone()
@@ -673,6 +693,27 @@ def test_highlight_omitted_for_nonmatching_hits(engine):
     r = engine.search("docs", body)
     assert r["hits"]["hits"], "should-clause must still return hits"
     assert all("highlight" not in h for h in r["hits"]["hits"])
+
+
+@pytest.mark.parametrize("wrap", [
+    lambda m: {"dis_max": {"queries": [m, {"term": {"lang": "zz"}}]}},
+    lambda m: {"constant_score": {"filter": m}},
+    lambda m: {"bool": {"filter": [{"bool": {"should": [m]}}]}},
+], ids=["dis_max", "constant_score", "bool_filter"])
+def test_highlight_reaches_compound_leaves(engine, wrap):
+    """A match under any compound highlights as many hits as the bare
+    match; under must_not it highlights none."""
+    m = {"match": {"text": "spark"}}
+    hl = {"highlight": {"fields": {"text": {}}}, "size": 3}
+    bare = engine.search("docs", {"query": m, **hl})
+    wrapped = engine.search("docs", {"query": wrap(m), **hl})
+    n = sum("highlight" in h for h in bare["hits"]["hits"])
+    assert n == 3
+    assert sum("highlight" in h for h in wrapped["hits"]["hits"]) == n
+    neg = engine.search("docs", {"query": {"bool": {
+        "must": [{"term": {"lang": "en"}}], "must_not": [wrap(m)]}}, **hl})
+    assert neg["hits"]["hits"]
+    assert all("highlight" not in h for h in neg["hits"]["hits"])
 
 
 def test_percentiles_on_json_field(engine, duck):

@@ -116,3 +116,15 @@ def test_percolate_must_not_on_absent_field_still_matches(perc):
     assert "outage_not_muted" in out[0]["matched_queries"]
     assert "outage_or_flag" in out[0]["matched_queries"]
     assert out[1]["matched_queries"] == []
+
+
+def test_percolate_match_with_no_tokens_matches_nothing(perc):
+    """A stored `match` whose query analyzes to no tokens matches no doc
+    (ES zero_terms_query "none"); under must_not it excludes none."""
+    perc.register_percolator("alerts", "punct", {"match": {"body": "!!!"}})
+    perc.register_percolator("alerts", "not_punct", {"bool": {
+        "must": [{"match": {"body": "outage"}}],
+        "must_not": [{"match": {"body": "!!!"}}]}})
+    out = perc.percolate("alerts", [{"body": "major outage !!!"}])
+    assert "punct" not in out[0]["matched_queries"]
+    assert "not_punct" in out[0]["matched_queries"]

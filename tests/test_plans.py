@@ -7,7 +7,8 @@ around must actually appear in the executed plan, not just in comments.
 - the positions column is pruned out of BM25 scans (ReadSchema);
 - term stats join is a broadcast hash join (no shuffle of postings for
   the join);
-- exactly ONE exchange (the doc_id aggregation) in the scoring plan;
+- exactly ONE exchange (the doc_id aggregation) in a multi-term
+  scoring plan, and none in a one-term plan;
 - top-k compiles to TakeOrderedAndProject, not a global sort.
 """
 
@@ -43,6 +44,19 @@ def test_no_join_and_single_shuffle(scores_plan):
     assert "Join" not in scores_plan, scores_plan
     n_exchanges = scores_plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, scores_plan
+
+
+@pytest.mark.parametrize("query,mode", [("spark", "or"), ("spark", "and"),
+                                        ("spark spark", "or")])
+def test_one_term_scores_have_no_exchange(spark, index_small, query, mode):
+    """One term's postings already hold one row per doc: its scoring
+    plan has no doc_id aggregate and no Exchange at all."""
+    from gopensearch_spark.search import bm25_scores
+
+    plan = _plan(bm25_scores(spark, index_small, query, mode=mode))
+    assert "Exchange" not in plan and "Aggregate" not in plan, plan
+    assert "PushedFilters: [IsNotNull(term), EqualTo(term,spark)]" in plan or \
+           "PushedFilters: [In(term" in plan, plan
 
 
 def test_topk_is_take_ordered(spark, index_small):

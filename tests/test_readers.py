@@ -4,6 +4,7 @@ the manifest version that keeps every cached handle fresh."""
 import math
 import os
 import shutil
+import uuid
 
 import pytest
 
@@ -15,10 +16,11 @@ from gopensearch_spark.search.readers import invalidate, term_dfs
 def _jobs_during(spark, fn):
     """(fn's result, the Spark job ids it launched)."""
     sc = spark.sparkContext
-    sc.setJobGroup("readers-test", "jobs launched by one call")
+    group = f"readers-test-{uuid.uuid4().hex}"  # this call's jobs only
+    sc.setJobGroup(group, "jobs launched by one call")
     try:
         out = fn()
-        return out, list(sc.statusTracker().getJobIdsForGroup("readers-test"))
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -46,6 +48,39 @@ def test_warm_term_df_map_equals_fts5_vocab(spark, index_small, oracle_small):
     full = readers._load_term_dfs(spark, index_small)
     assert full.complete
     assert dict(full) == {t: df for t, df, _ in oracle_small.vocab()}
+
+
+@pytest.mark.parametrize("prefix", ["spar", "dat", "s", "zzz"])
+def test_warm_prefix_expands_without_dictionary_jobs(spark, index_small, prefix):
+    """A warm index expands a prefix from the driver's term map: the
+    terms the sorted term dictionary holds, found with no job, so
+    prefix and phrase-prefix queries run fewer jobs and rank exactly as
+    on the cold index (whose ranking the FTS5 suites pin)."""
+    from pyspark.sql import functions as F
+
+    from gopensearch_spark.search import phrase_prefix_match, prefix_match
+    from gopensearch_spark.search.readers import term_dict, warm_prefix_terms
+
+    def ranked(df):
+        return [(int(r.doc_id), float(r.score)) for r in df.collect()]
+
+    invalidate(index_small)
+    assert warm_prefix_terms(spark, index_small, prefix) is None
+    cold, cold_jobs = _jobs_during(spark, lambda: prefix_match(spark, index_small, prefix, k=25))
+    cold, cold_phrase = ranked(cold), ranked(phrase_prefix_match(
+        spark, index_small, f"spark {prefix}", k=25))
+    want = sorted(r.term for r in term_dict(spark, index_small)
+                  .where(F.col("term").startswith(prefix)).select("term").collect())
+    warm_index(spark, index_small)
+    try:
+        terms, jobs = _jobs_during(spark, lambda: warm_prefix_terms(spark, index_small, prefix))
+        assert terms == want and jobs == []
+        warm, warm_jobs = _jobs_during(spark, lambda: prefix_match(spark, index_small, prefix, k=25))
+        assert len(warm_jobs) < len(cold_jobs)
+        assert ranked(warm) == cold
+        assert ranked(phrase_prefix_match(spark, index_small, f"spark {prefix}", k=25)) == cold_phrase
+    finally:
+        invalidate(index_small)
 
 
 def test_rebuild_without_invalidate_serves_new_dfs(spark, tmp_path):
